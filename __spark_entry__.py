@@ -1451,17 +1451,18 @@ def q_grouping_sets_volume(spark, sf_dir):
 
 def q_user_value_deciles(spark, sf_dir):
     """ntile/percent_rank analytic over per-user purchase totals,
-    computed on the DISTRIBUTED global-rank primitive (ext/ranks.py:
-    range-repartition + per-partition row_number + broadcast block
-    prefix) — exact tile boundaries with no single-partition window
-    even when the aggregated user frame itself is huge. Bit-identical
+    computed on the global-rank primitive (ext/ranks.py) at a width
+    sized from the MEASURED per-user row count, as ``rfm_segments``
+    does: a fixture-sized table takes the lazy single-partition path,
+    while a corpus-sized one still fans out linearly (range-repartition
+    + per-partition row_number + broadcast block prefix). Bit-identical
     to the built-in ntile/percent_rank under this total order (user_id
     tiebreaker)."""
     from iotstream.ext.ranks import (
+        adaptive_rank_width,
         ntile_expr,
         percent_rank_expr,
         with_global_row_number,
-        with_scalar_total,
     )
 
     from iotstream.schemas import finite_measures
@@ -1477,11 +1478,14 @@ def q_user_value_deciles(spark, sf_dir):
             .cast("double")
             .alias("total_value")
         )
-    )
+    ).localCheckpoint()
+    n = totals.count()
     ranked = with_global_row_number(
-        with_scalar_total(totals),
+        totals.withColumn("_total", F.lit(n)),
         [F.desc("total_value"), F.asc("user_id")],
         out="_rn",
+        num_partitions=adaptive_rank_width(spark, n),
+        materialize_input=False,
     )
     rn, total = F.col("_rn"), F.col("_total")
     return ranked.select(

@@ -180,10 +180,3 @@ def percent_rank_expr(rn: Column, total: Column) -> Column:
     """Spark-equivalent ``percent_rank`` under a total order (rank ==
     row_number): (rn − 1) / (N − 1), 0.0 when N == 1."""
     return F.when(total > 1, (rn - 1) / (total - 1)).otherwise(F.lit(0.0))
-
-
-def with_scalar_total(df: DataFrame, out: str = "_total") -> DataFrame:
-    """Broadcast the row count onto every row (scalar agg + broadcast
-    cross join — never an unpartitioned window)."""
-    total = df.select(F.count(F.lit(1)).alias(out))
-    return df.crossJoin(F.broadcast(total))

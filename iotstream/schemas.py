@@ -41,19 +41,47 @@ SENSOR_EVENT = StructType(
     ]
 )
 
-#: Fixture tables the driver provides at /root/testdata/sf*/ (TESTDATA.md).
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: Declared schema of every fixture table (TESTDATA.md), as Spark DDL,
+#: so that no load pays a schema-inference job. Each equals what Spark
+#: infers from the committed files (their pyarrow ``timestamp[us]``
+#: columns, TIMESTAMP(MICROS) without UTC adjustment, infer as
+#: ``TIMESTAMP_NTZ``); ``tests/test_fixture_schemas.py`` holds that
+#: equality for every scale and for the benchmark's fixture writer.
+FIXTURE_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+FIXTURE_TABLES = tuple(FIXTURE_SCHEMAS)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -61,36 +89,38 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain parquet scan → full Catalyst
-    pushdown/pruning applies to whatever the caller selects/filters."""
-    if name not in FIXTURE_TABLES:
+    """Load one fixture table under its declared schema: a plain parquet
+    scan, so Catalyst pushdown/pruning applies to whatever the caller
+    selects/filters, and building it fires no Spark job (no schema
+    inference). ``events.ts`` comes back as TimestampType.
+
+    The declaration is the contract: a file whose column types differ
+    from it fails at read time with ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``
+    (it is never re-inferred), and a declared column missing from the
+    file reads as NULL."""
+    if name not in FIXTURE_SCHEMAS:
         raise KeyError(f"unknown fixture table {name!r}; one of {FIXTURE_TABLES}")
     if name == "events":
         return normalize_ns_timestamp(load_events_raw(spark, sf_dir))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(table_path(sf_dir, name))
 
 
 def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet stores TIMESTAMP(NANOS), which Spark's reader
-    rejects; read nanos as long (runtime-settable legacy conf) and let
-    ``normalize_ns_timestamp`` truncate to microseconds — exactly what
-    DuckDB does on the same file, keeping oracle parity."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(table_path(sf_dir, "events"))
+    """events.parquet under its declared schema, ``ts`` as stored:
+    TIMESTAMP(MICROS) read as ``timestamp_ntz``. Streaming sources take
+    their schema from here; ``normalize_ns_timestamp`` turns ``ts`` into
+    the TimestampType event-time operators need."""
+    return spark.read.schema(FIXTURE_SCHEMAS["events"]).parquet(
+        table_path(sf_dir, "events")
+    )
 
 
 def normalize_ns_timestamp(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the fixture ``ts`` column to TimestampType regardless of
-    how the reader surfaced TIMESTAMP(NANOS): as bigint nanos (with
-    ``nanosAsLong``) or as TIMESTAMP_NTZ (newer readers ignore the legacy
-    conf). Watermarks and ``unix_micros`` require TimestampType; under the
-    session-UTC discipline (``use_utc``) the NTZ→TZ cast is a value no-op."""
-    dtype = dict(df.dtypes).get(col)
-    if dtype in ("bigint", "long"):
-        return df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    if dtype == "timestamp_ntz":
-        return df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+    """Cast the fixture ``ts`` column from ``timestamp_ntz`` (as declared)
+    to TimestampType. Watermarks and ``unix_micros`` require
+    TimestampType; under the session-UTC discipline (``use_utc``) the
+    NTZ→TZ cast is a value no-op."""
+    return df.withColumn(col, F.col(col).cast("timestamp"))
 
 
 def normalize_event_time(df: DataFrame, epoch_str_col: str = "timestamp") -> DataFrame:

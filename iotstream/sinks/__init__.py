@@ -112,23 +112,24 @@ class ParquetUpsertSink:
 
         self.key_cols = key_cols
         self.path = path or ephemeral_dir("iotstream-upsert-")
-        self._got_batch = False
+        # schema of the appended log, ``__epoch`` included; set by the
+        # first batch, it lets ``to_df`` read the log without inference
+        self._schema = None
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         def write(batch: DataFrame, epoch_id: int) -> None:
-            self._got_batch = True
-            batch.withColumn("__epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(self.path)
+            out = batch.withColumn("__epoch", F.lit(epoch_id))
+            self._schema = out.schema
+            out.write.mode("append").parquet(self.path)
 
         return write
 
     def to_df(self, spark) -> DataFrame:
         from pyspark.sql.window import Window
 
-        if not self._got_batch:
+        if self._schema is None:
             raise RuntimeError("sink never received a batch")
-        log = spark.read.parquet(self.path)
+        log = spark.read.schema(self._schema).parquet(self.path)
         w = Window.partitionBy(*self.key_cols).orderBy(F.desc("__epoch"))
         return (
             log.withColumn("__rn", F.row_number().over(w))

@@ -24,8 +24,11 @@ from tests.conftest import SF_DIR
 
 def _null_bearing_events_dir(tmp_path) -> str:
     """Copy the fixture events.parquet and append NULL-bearing rows,
-    preserving the TIMESTAMP(NANOS) schema byte-for-byte so Spark's
-    nanosAsLong path and DuckDB read identically."""
+    preserving its TIMESTAMP(MICROS) schema byte-for-byte: Spark reads
+    the copy under the declared fixture schema (``FIXTURE_SCHEMAS``,
+    which a file whose column types differ would fail at read time with
+    ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``, never re-inferred) and DuckDB
+    reads it as stored, so both see identical values."""
     src = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
     k = 9
     head = src.slice(0, k).to_pydict()

@@ -11,7 +11,6 @@ from iotstream.ext.ranks import (
     ntile_expr,
     percent_rank_expr,
     with_global_row_number,
-    with_scalar_total,
 )
 
 
@@ -40,7 +39,7 @@ def test_global_row_number_matches_builtin(spark):
 
 def test_ntile_and_percent_rank_match_builtin(spark):
     for n_rows, tiles in ((137, 10), (7, 10), (1, 4), (40, 4)):
-        df = with_scalar_total(_frame(spark, n_rows))
+        df = _frame(spark, n_rows).withColumn("_total", F.lit(n_rows))
         order = [F.desc("v"), F.asc("id")]
         ranked = with_global_row_number(df, order, num_partitions=5)
         got = {
