@@ -58,30 +58,42 @@ DRIVER_WINDOW = 50
 #: (a never-expiring pin would reintroduce the exact manual-cleanup
 #: discipline the rotation removes). The chronic lever (grades aging
 #: out) needs no bookkeeping at all: queries() auto-rotates the
-#: stalest grades into the window (see _rotate_window). The r17 pins
-#: (7 kernel-restructured queries) all landed green in
-#: CORRECTNESS_r17.json and were pruned here — expired pins carry no
-#: behavior, but a live list must describe only live pins (VERDICT
-#: r17 item 2 / ADVICE r17). r18 pins below follow the same rule:
-#: each names a query whose kernel this optimization round
-#: restructures under a fresh green grade, and expires when its r18
-#: re-grade lands.
+#: stalest grades into the window (see _rotate_window). Pins whose
+#: re-grade has landed green are pruned: expired pins carry no
+#: behavior, but a live list must describe only live pins.
 FORCE_WINDOW: tuple[tuple[str, int], ...] = (
-    # r18 pins (walker-flagged stale greens after this optimization
-    # round's kernel restructurings; each expires when its r18
-    # re-grade lands):
-    #   - neardup_jaccard_exact (iotstream/ext/dedup.py): collect_set
-    #     over pre-hashed shingles replaces distinct+count+join;
-    #   - lsh_candidate_pairs banding (same file): direct array hash
-    #     replaces the transform()+to_json lambda;
-    #   - neardup_embedding_lsh (iotstream/ext/similarity.py): one
-    #     combined count+dim sizing aggregate.
-    ("dedup_clusters", 18),
-    ("dedup_clusters_lsh", 18),
-    ("dedup_report", 18),
-    ("neardup_embedding_lsh", 18),
-    ("neardup_jaccard", 18),
-    ("neardup_minhash", 18),
+    # r19 pins: iotstream/ext/similarity.py now runs every top-k variant
+    # through one scan (_topk_scan) and every exact pair verify through
+    # _pairs_above, and its probe path is gone; dedup_report composes
+    # neardup_embedding. stateful_quality_monitor is the r18 carry-over
+    # (its run-length scan changed under a stale green grade).
+    ("similarity_topk", 19),
+    ("similarity_topk_lsh", 19),
+    ("similarity_topk_ivf", 19),
+    ("neardup_embedding", 19),
+    ("neardup_embedding_lsh", 19),
+    ("dedup_report", 19),
+    ("stateful_quality_monitor", 19),
+    # r19 pins for the walker's other stale greens: fixture tables now
+    # load under declared schemas (iotstream/schemas.py), the upsert
+    # sink reads its log under the schema it wrote, and
+    # user_value_deciles ranks from a measured count.
+    ("streaming_window_agg", 19),
+    ("streaming_dedup", 19),
+    ("streaming_dedup_wm", 19),
+    ("streaming_enrich", 19),
+    ("streaming_interval_join", 19),
+    ("revenue_rollup", 19),
+    ("revenue_share", 19),
+    ("revenue_forecast", 19),
+    ("dormant_customers", 19),
+    ("large_quantity_orders", 19),
+    ("local_supplier_volume", 19),
+    ("shipping_priority", 19),
+    ("topk_per_group", 19),
+    ("enrichment_join", 19),
+    ("user_value_deciles", 19),
+    ("grouping_sets_volume", 19),
 )
 
 
@@ -1995,8 +2007,8 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardup_editdist": q_neardup_editdist,
         "similarity_topk": q_similarity_topk,
         "neardup_embedding": q_neardup_embedding,
-        # --- r9 window C: guards on similarity.py code touched THIS
-        # round (recall-honesty auto-multiprobe + ADVICE guard_stats/
+        # --- r9 window C: guards on similarity.py code touched THAT
+        # round (recall-honesty sizing stats + ADVICE guard_stats/
         # gate-docstring fixes) — keeps their r8 grades from going
         # code-stale the way B did
         "similarity_topk_lsh": q_similarity_topk_lsh,

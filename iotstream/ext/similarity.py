@@ -1,11 +1,12 @@
 """E3 — similarity search over the ``embeddings`` table.
 
-Brute-force cosine top-k is the correctness baseline (exact, oracle-
-checkable); the scale paths are (a) random-hyperplane LSH bucketing and
-(b) a one-iteration IVF coarse quantizer — both prune the candidate set
-so a 100 TB corpus is probed per-bucket, never all-pairs. All dot
-products are higher-order array functions (zip_with/aggregate) — JVM
-expressions, no Python in the row path.
+Exact cosine top-k is the correctness baseline (oracle-checkable); the
+scale paths are (a) random-hyperplane LSH bucketing and (b) an IVF
+coarse quantizer. An index only narrows the candidate set: every top-k
+variant runs the same scan (``_topk_scan``: the query block broadcast
+as a float64 matrix, one BLAS matmul per Arrow batch, a lossless local
+top-k, a global ``row_number`` rank), and every exact near-dup path
+verifies pairs with the same predicate (``_pairs_above``).
 """
 
 from __future__ import annotations
@@ -13,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_TOPK_SCHEMA = "query_id bigint, vec_id bigint, cosine double"
+_PAIR_SCHEMA = "id_a bigint, id_b bigint, cosine double"
 
 
 def as_double_vec(col: str | Column, name: str = "v") -> Column:
@@ -70,73 +74,94 @@ def drop_null_vectors(emb: DataFrame, col: str = "embedding") -> DataFrame:
     return emb.filter(c.isNotNull() & ~poison & (sq_norm > 0))
 
 
-def similarity_topk(
-    emb: DataFrame, n_queries: int = 10, k: int = 5
-) -> DataFrame:
-    """Exact top-k neighbors for the first ``n_queries`` vectors —
-    vectorized: queries broadcast as a dense float64 matrix, the corpus
-    streams through Arrow-batched ``mapInPandas`` doing ONE BLAS matmul
-    per batch and keeping only each batch's local top-k, so the final
-    shuffle carries ≤ k rows per (query, partition) instead of the full
-    N×Q similarity matrix. Global top-k via row_number on that tiny
-    candidate set. Values identical to the expression twin
-    (``similarity_topk_expr``) after round(6)."""
-    import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
-    emb = drop_null_vectors(emb)
+def _vectors(pdf, col: str = "embedding"):
+    """``(ids, float64 matrix, row norms)`` of a pandas vector frame."""
+    import numpy as np
+
+    ids = pdf["vec_id"].to_numpy()
+    mat = np.stack(pdf[col].to_numpy()).astype("float64")
+    return ids, mat, np.sqrt((mat * mat).sum(axis=1))
+
+
+def _query_block(emb: DataFrame, n: int):
+    """The vectors with ``vec_id < n``, sorted by id, as ``(ids, float64
+    matrix, norms)`` on the driver; None when there are none."""
     qpdf = (
-        emb.filter(F.col("vec_id") < n_queries)
+        emb.filter(F.col("vec_id") < n)
         .select("vec_id", "embedding")
         .toPandas()
         .sort_values("vec_id")
     )
-    if not len(qpdf):
-        # empty query set (empty corpus, or no vec_id < n_queries):
-        # np.stack raises on zero arrays — the 100 TB empty-partition
-        # shape must yield an empty frame, not a driver crash
-        return spark.createDataFrame(
-            [], "query_id bigint, vec_id bigint, cosine double, rank int"
-        )
-    qids = qpdf["vec_id"].to_numpy()
-    qmat = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qnrm = np.sqrt((qmat * qmat).sum(axis=1))
-    b = spark.sparkContext.broadcast((qids, qmat, qnrm))
+    return _vectors(qpdf) if len(qpdf) else None
 
-    def block(batches):
-        bqids, bqmat, bqnrm = b.value
-        for pa in batches:
-            ids = pa["vec_id"].to_numpy()
-            mat = np.stack(pa["embedding"].to_numpy()).astype("float64")
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            cos = (mat @ bqmat.T) / np.outer(nrm, bqnrm)  # rows × queries
-            out = []
-            for j, qid in enumerate(bqids):
-                col = cos[:, j]
-                mask = ids != qid
-                cand_ids, cand_cos = ids[mask], col[mask]
-                if len(cand_ids) > k:  # local top-k prune per batch,
-                    # same (cosine desc, vec_id asc) tie-break as the
-                    # global window so the prune is exactly lossless
-                    idx = np.lexsort((cand_ids, -cand_cos))[:k]
-                    cand_ids, cand_cos = cand_ids[idx], cand_cos[idx]
-                out.append(
-                    pd.DataFrame(
-                        {"query_id": qid, "vec_id": cand_ids, "cosine": cand_cos}
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
 
-    cands = emb.select("vec_id", "embedding").mapInPandas(
-        block, schema="query_id bigint, vec_id bigint, cosine double"
-    )
+def _ranked(cands: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query under (cosine desc, vec_id asc), cosine
+    rounded to 6 places."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
     )
+
+
+def _topk_scan(
+    corpus: DataFrame, vec_col: str, queries, k: int, allowed=None
+) -> DataFrame:
+    """The one top-k scan. ``queries`` is a ``_query_block`` result,
+    broadcast; the corpus (``vec_id``, ``vec_col`` and whatever columns
+    ``allowed`` reads) streams through ``mapInPandas`` doing one BLAS
+    matmul per Arrow batch. ``allowed(batch, mat)`` returns a rows ×
+    queries candidate mask (None: every row but the query itself). Each
+    batch keeps its local top-k per query under the same (cosine desc,
+    vec_id asc) order as the global rank, so the prune loses nothing."""
+    import numpy as np
+    import pandas as pd
+
+    b = corpus.sparkSession.sparkContext.broadcast(queries)
+
+    def block(batches):
+        qids, qmat, qnrm = b.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids, mat, nrm = _vectors(pdf, vec_col)
+            cos = (mat @ qmat.T) / np.outer(nrm, qnrm)  # rows × queries
+            ok = ids[:, None] != qids[None, :]
+            if allowed is not None:
+                ok &= allowed(pdf, mat)
+            out = []
+            for j, qid in enumerate(qids):
+                cand_ids, cand_cos = ids[ok[:, j]], cos[ok[:, j], j]
+                if len(cand_ids) > k:
+                    idx = np.lexsort((cand_ids, -cand_cos))[:k]
+                    cand_ids, cand_cos = cand_ids[idx], cand_cos[idx]
+                if len(cand_ids):
+                    out.append(
+                        pd.DataFrame(
+                            {"query_id": qid, "vec_id": cand_ids, "cosine": cand_cos}
+                        )
+                    )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return _ranked(corpus.mapInPandas(block, schema=_TOPK_SCHEMA), k)
+
+
+def similarity_topk(
+    emb: DataFrame, n_queries: int = 10, k: int = 5
+) -> DataFrame:
+    """Exact top-k neighbors for the first ``n_queries`` vectors, by
+    ``_topk_scan`` over the whole corpus. Values identical to the
+    expression twin (``similarity_topk_expr``) after round(6); an empty
+    query set yields an empty frame."""
+    emb = drop_null_vectors(emb).select("vec_id", "embedding")
+    queries = _query_block(emb, n_queries)
+    if queries is None:
+        return emb.sparkSession.createDataFrame([], _TOPK_SCHEMA + ", rank int")
+    return _topk_scan(emb, "embedding", queries, k)
 
 
 def similarity_topk_expr(
@@ -166,11 +191,20 @@ def similarity_topk_expr(
             (dot("v", "qv") / (F.col("nrm") * F.col("qnrm"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
+    return _ranked(sims, k)
+
+
+def _pairs_above(ids_a, mat_a, nrm_a, ids_b, mat_b, nrm_b, threshold: float):
+    """The one pair verify: every (a, b) with ``id_a < id_b`` and float64
+    cosine ≥ ``threshold``, as a pandas frame (id_a, id_b, cosine
+    rounded to 6 places), from one matmul."""
+    import numpy as np
+    import pandas as pd
+
+    cos = (mat_a @ mat_b.T) / np.outer(nrm_a, nrm_b)
+    ia, ib = np.nonzero((cos >= threshold) & (ids_a[:, None] < ids_b[None, :]))
+    return pd.DataFrame(
+        {"id_a": ids_a[ia], "id_b": ids_b[ib], "cosine": np.round(cos[ia, ib], 6)}
     )
 
 
@@ -187,25 +221,18 @@ def neardup_embedding(
     threshold: float = 0.4,
     max_broadcast_rows: int = NEARDUP_EXACT_MAX_ROWS,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs (exact), as a distributed block
-    matmul: one side is broadcast as a dense float64 matrix, the other
-    streams through Arrow-batched ``mapInPandas``, each batch doing a
-    single BLAS matmul instead of millions of interpreted per-pair dot
-    products (~10× over expression-based pairing).
-
-    100 TB shape: the broadcast side is BOUNDED — the collect is
-    limit()-guarded and raises past ``max_broadcast_rows`` with a
-    pointer at ``neardup_embedding_lsh``, which runs the same BLAS
-    kernel per LSH bucket so no matrix ever exceeds executor memory.
-    The exact kernel is for query/eval-set-sized corpora; it can never
-    silently pull an unbounded table onto the driver.
+    """Embedding-cosine near-dup pairs (exact): all pairs with cosine ≥
+    ``threshold`` through ``_pairs_above``. The corpus is collected
+    once (limit-guarded: past ``max_broadcast_rows`` it raises with a
+    pointer at ``neardup_embedding_lsh``, so it never pulls an
+    unbounded table onto the driver). Up to 4096 rows the driver
+    verifies it in one matmul; above that it is broadcast and the
+    corpus streams through Arrow-batched ``mapInPandas``, one matmul
+    per batch. Both regimes give the same pairs.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = emb.sparkSession
-    emb = drop_null_vectors(emb)
-    pdf = emb.select("vec_id", "embedding").limit(max_broadcast_rows + 1).toPandas()
+    emb = drop_null_vectors(emb).select("vec_id", "embedding")
+    pdf = emb.limit(max_broadcast_rows + 1).toPandas()
     if len(pdf) > max_broadcast_rows:
         raise ValueError(
             f"neardup_embedding broadcasts the corpus as a dense matrix and "
@@ -214,54 +241,19 @@ def neardup_embedding(
             f"for large corpora."
         )
     if not len(pdf):
-        # empty corpus: np.stack raises on zero arrays — yield the
-        # empty pair frame (the shape an empty partition/filter result
-        # produces at scale), same schema as the populated path
-        return spark.createDataFrame([], "id_a bigint, id_b bigint, cosine double")
-    ids = pdf["vec_id"].to_numpy()
-    mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    nrm = np.sqrt((mat * mat).sum(axis=1))
-    if len(pdf) <= 4096:
-        # r18 (guide §1.2/§5): the corpus is ALREADY on the driver —
-        # for small n the distributed pass re-scanned the table and
-        # paid a Python-worker round trip just to redo the matmul the
-        # driver can run in milliseconds (n²·dim ≤ 4096²·dim flops,
-        # cos matrix ≤ 134 MB). Same expression per pair (row·row
-        # float64 dot, identical regardless of batching), same
-        # ordering predicate, same round(6) — bit-identical output to
-        # the mapInPandas path, which remains the shape for corpora
-        # between this bound and max_broadcast_rows.
-        cos = (mat @ mat.T) / np.outer(nrm, nrm)
-        ia, ib = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
-        out = pd.DataFrame(
-            {
-                "id_a": ids[ia],
-                "id_b": ids[ib],
-                "cosine": np.round(cos[ia, ib], 6),
-            }
+        return spark.createDataFrame([], _PAIR_SCHEMA)
+    corpus = _vectors(pdf)
+    if len(pdf) <= 4096:  # the n × n cosine matrix stays ≤ 134 MB
+        return spark.createDataFrame(
+            _pairs_above(*corpus, *corpus, threshold), schema=_PAIR_SCHEMA
         )
-        return spark.createDataFrame(out, schema="id_a bigint, id_b bigint, cosine double")
-    b = spark.sparkContext.broadcast((ids, mat, nrm))
+    b = spark.sparkContext.broadcast(corpus)
 
     def block(batches):
-        bids, bmat, bnrm = b.value
-        for pa in batches:
-            aids = pa["vec_id"].to_numpy()
-            amat = np.stack(pa["embedding"].to_numpy()).astype("float64")
-            anrm = np.sqrt((amat * amat).sum(axis=1))
-            cos = (amat @ bmat.T) / np.outer(anrm, bnrm)
-            ia, ib = np.nonzero((cos >= threshold) & (aids[:, None] < bids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_a": aids[ia],
-                    "id_b": bids[ib],
-                    "cosine": np.round(cos[ia, ib], 6),
-                }
-            )
+        for pdf in batches:
+            yield _pairs_above(*_vectors(pdf), *b.value, threshold)
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        block, schema="id_a bigint, id_b bigint, cosine double"
-    )
+    return emb.mapInPandas(block, schema=_PAIR_SCHEMA)
 
 
 def lsh_auto_params(
@@ -272,132 +264,69 @@ def lsh_auto_params(
     nbits: int | None = None,
     tables: int | None = None,
     caller: str = "lsh_auto_params",
-    multiprobe: int = 0,
     max_tables: int = 128,
     stats: dict | None = None,
 ) -> tuple[int, int]:
-    """THE corpus-aware hyperplane-LSH sizing formula — the single
-    source of truth shared by the library auto path AND the graded
-    ``queries()`` entries, so the declared plan is the production plan
-    (VERDICT r6: a graded fixed-``nbits`` pin is a measured
-    scale-killer — 16 buckets per table put ∝n rows in each bucket and
-    the per-bucket verify matmul is bucket²).
+    """Corpus-aware hyperplane-LSH sizing, shared by the library auto
+    path and the graded ``queries()`` entries, so the declared plan is
+    the production plan.
 
-    - ``nbits = max(4, ceil(log2(n / target_bucket)))`` keeps expected
-      bucket size ≈ target_bucket at ANY corpus size, so Σ bucket² ≈
-      tables · n · target_bucket — linear in n.
-    - ``tables`` from the recall identity L = ln(1-recall)/ln(1-p1^nbits)
-      with p1 = 1-θ/π at the design ``threshold``; floored at 16,
-      capped at 128 with a RuntimeWarning stating the achievable recall
-      when the cap binds (low thresholds at large n are intrinsically
-      expensive for hyperplane LSH). An explicit ``max_tables`` BELOW
-      the floor wins — a caller whose index-memory budget caps tables
-      at 8 gets 8, never a silently doubled footprint.
+    - ``nbits = max(4, ceil(log2(n / target_bucket)))`` keeps the
+      expected bucket at ≈ target_bucket, so Σ bucket² ≈ tables · n ·
+      target_bucket is linear in n.
+    - ``tables`` comes from the recall identity
+      L = ln(1-recall) / ln(1-p1^nbits), p1 = 1-θ/π at ``threshold``,
+      floored at 16 and capped at ``max_tables`` (an explicit cap below
+      16 wins). When the cap binds, a RuntimeWarning states the
+      achievable recall; raising ``max_tables`` buys recall at linear
+      cost. (Probing neighbouring buckets instead was measured and
+      rejected: SCALE_PROBE_r9.json.)
 
     Pass ``nbits``/``tables`` to pin one side and derive the other.
 
-    ``multiprobe`` (the tables↔probes trade): with ``m`` probed bit
-    flips per (vector, table), a pair collides in a table when their
-    signatures agree on all bits OR differ only in probed positions —
-    per-table collision prob is at least
-    ``p1^nbits + m · p1^(nbits-1) · (1-p1)`` (the single-side Hamming-1
-    lower bound; both-side probing also reaches some Hamming-2
-    patterns, so true recall is ≥ the sized target). The identity then
-    needs FEWER tables for the same recall — the point of probing —
-    at the cost of (1+m)× candidate rows per table, i.e. (1+m)² the
-    per-bucket verify flops. Measured on this workload (verify-
-    dominated batch self-join, ``tools/scale_probe.py``): probes cost
-    more verify work than the tables they save, so the integer default
-    stays 0 and probing is for table-capped regimes where recall — not
-    compute — is the binding constraint. r9 measured the obvious
-    next step — AUTO-engaging probes whenever the cap binds — and
-    REJECTED it: (a) at any cosine threshold ≥ 0, p1 ≥ 0.5, so the
-    per-table collision gain from m probes is ≤ (1+m) while verify
-    flops grow (1+m)² — probing never reduces net verify work in this
-    batch self-join; (b) worse, probing forfeits the broadcast
-    regime's first-collision pair ownership (ownership is ill-defined
-    under probing), so on a dense corpus every true pair is
-    re-emitted, float64-rescored, and ``distinct()``-ed once per
-    colliding (table, probe) — the ×256 probe corpus (512k vecs,
-    67.3M true pairs) measured the m=2-probed production config at
-    ~3-5 MINUTES per (table, shard) unit vs 53 s for the ENTIRE
-    probe-free run of the same config (SCALE_PROBE_r9.json). The
-    honest lever when the cap binds is
-    ``max_tables``: table count is LINEAR in both work and recall
-    identity (lifting 128 → 229 tables buys recall 0.72 → 0.9 at
-    1.8× runtime, vs ~40× via probes). Probing remains for
-    serving-style deployments where table count — index memory — is
-    the binding constraint, not flops.
-
-    ``max_tables`` (default 128): the recall-identity cap. Σ bucket²
-    ≈ tables · n · target_bucket, so cost is linear in it — raise it
-    deliberately to buy recall at a stated price; the default keeps
-    the r7 scale guard (need grows ~n^0.66 at fixed threshold/recall,
-    so an uncapped identity at web scale demands thousands of
-    tables).
-
-    ``stats`` (optional out-param, same pattern as ``guard_stats``):
-    filled with ``{"nbits", "tables", "need", "multiprobe",
-    "achievable_recall", "cap_bound"}`` so callers can gate on the
-    DELIVERED recall programmatically instead of parsing a
-    RuntimeWarning — ``achievable_recall`` is the design-threshold
-    expectation 1-(1-p)^tables (true pairs sit above the threshold, so
-    their per-pair recall is ≥ this number); ``cap_bound`` is True
-    when even the final sizing misses the asked-for target.
+    ``stats`` (optional out-param) gets ``{"nbits", "tables", "need",
+    "achievable_recall", "cap_bound"}``. ``achievable_recall`` is
+    1-(1-p)^tables at the design threshold; pairs above it are found
+    at least that often. ``cap_bound`` is True when the sizing misses
+    the target. With ``tables`` pinned, ``need`` and
+    ``achievable_recall`` are None.
     """
     import math
     import warnings
 
     if nbits is None:
         nbits = max(4, math.ceil(math.log2(max(n, 1) / target_bucket)))
-    m = min(int(multiprobe), nbits)
     if tables is None:
         theta = math.acos(min(max(threshold, -1.0), 1.0))
-        p1 = max(1e-9, 1.0 - theta / math.pi)
-        p = p1**nbits
-        if m:
-            p = min(1.0, p + m * p1 ** (nbits - 1) * (1.0 - p1))
+        p = max(1e-9, 1.0 - theta / math.pi) ** nbits
         need = (
             1
             if p >= 1.0
             else math.ceil(math.log(max(1e-12, 1.0 - recall)) / math.log(1.0 - p))
         )
-        # floor at 16 tables, but NEVER above the caller's explicit cap:
-        # a serving-style deployment whose index-memory budget caps
-        # tables at 8 must get 8, not a silently doubled footprint
         tables = min(max(1, int(max_tables)), max(16, need))
         achievable = 1.0 - (1.0 - p) ** tables
         cap_bound = need > tables
         if cap_bound:
-            probed = f" with {m} probe(s)" if m else ""
             warnings.warn(
                 f"{caller}: {need} tables needed for "
                 f"recall {recall} at threshold {threshold} with "
-                f"{nbits} bits{probed}; capped at {tables} (expected "
+                f"{nbits} bits; capped at {tables} (expected "
                 f"recall ≈ {achievable:.2f}). Raise max_tables (cost "
                 "is linear in it) or target_bucket or the threshold, "
                 "or pin tables explicitly.",
                 RuntimeWarning,
                 stacklevel=3,
             )
-        if stats is not None:
-            stats.update(
-                nbits=nbits,
-                tables=tables,
-                need=need,
-                multiprobe=m,
-                achievable_recall=achievable,
-                cap_bound=cap_bound,
-            )
-    elif stats is not None:
-        # pinned tables: no identity to rebalance — auto resolves to 0
+    else:
+        need, achievable, cap_bound = None, None, False
+    if stats is not None:
         stats.update(
             nbits=nbits,
             tables=tables,
-            need=None,
-            multiprobe=m,
-            achievable_recall=None,
-            cap_bound=False,
+            need=need,
+            achievable_recall=achievable,
+            cap_bound=cap_bound,
         )
     return nbits, tables
 
@@ -410,166 +339,80 @@ def neardup_embedding_lsh(
     max_bucket: int | None = 4096,
     target_bucket: int = 512,
     recall: float = 0.9,
-    multiprobe: int = 0,
     max_tables: int = 128,
     vectors: str = "auto",
     vec_broadcast_bytes: int = 256 << 20,
     guard_stats: dict | None = None,
 ) -> DataFrame:
-    """E2/E3 scale path for embedding near-dup: NEVER all-pairs.
+    """E2/E3 scale path for embedding near-dup: never all-pairs.
     ``tables`` independent hyperplane-LSH tables of ``nbits`` bits
-    each; vectors land in one bucket per table, candidate pairs form
-    only WITHIN a (table, bucket) group, each group verified by one
-    BLAS matmul in ``applyInPandas``. Collision prob per table is
-    (1-θ/π)^nbits, across tables 1-(1-p)^L — at cosine 0.45 with
-    (4 bits, 16 tables) recall ≈ 0.95 (pytest asserts vs the exact
-    kernel). Work scales with Σ bucket², bounded by data density —
-    the exact kernel's N² never appears at any corpus size.
+    each; candidate pairs form only within a (table, bucket) group and
+    every candidate is verified exactly, so the output is a subset of
+    ``neardup_embedding`` (precision 1). Collision probability is
+    p = (1-θ/π)^nbits per table and 1-(1-p)^tables across tables; work
+    scales with Σ bucket², never N².
 
-    ``max_bucket`` guards the Σ bucket² term against skew: a (table,
-    bucket) group bigger than the cap (mass-duplicated embedding, or a
-    region of embedding space the hyperplanes fail to split) lands in
-    ONE applyInPandas group and its verify matmul is bucket² — so
-    over-cap groups are dropped from candidate generation, same
-    rationale and trade as ``lsh_candidate_pairs``: pairs those
-    vectors share through OTHER tables still surface. ON by default
-    since r7 (cap 4096, 8× the auto-sizing bucket target): identical
-    VECTORS collide in every table at any nbits, so auto-sizing alone
-    cannot defuse a mass-duplicated embedding — the same reasoning
-    that turned the MinHash guard on by default. Auto-sized organic
-    buckets sit ≈ target_bucket (fixture max ≪ the cap at every SF,
-    so graded outputs are provably unchanged); pass ``None`` for
-    uncapped exact-recall semantics.
+    ``nbits``/``tables`` left as None are sized by ``lsh_auto_params``
+    from one count of the corpus (with ``target_bucket``, ``recall``
+    and ``max_tables``); pinned values are used as given.
 
-    AUTO-SIZING (``nbits``/``tables`` = None, the default): a fixed
-    bit width does not survive corpus growth — at 4 bits a table has
-    16 buckets, so buckets grow ∝ n and the per-bucket verify goes
-    quadratic (tools/scale_probe.py measured the pinned graded config
-    at 268 s for a ×64 corpus vs ~2 s at ×1). One count() sizes
-    ``nbits = max(4, ceil(log2(n / target_bucket)))`` so expected
-    bucket size stays ≈ target_bucket at ANY corpus size (Σ bucket²
-    ≈ tables·n·target_bucket — linear in n); ``tables`` then comes
-    from the recall identity  L = ln(1-recall) / ln(1-p1^nbits)  with
-    p1 = 1-θ/π, floored at 16 (today's fixture behavior — recall can
-    only go UP vs the old default) and capped at 128 — when the cap
-    binds, expected recall at the threshold is below target and a
-    RuntimeWarning says so with the achievable number (low thresholds
-    at large n are intrinsically expensive for hyperplane LSH; raise
-    target_bucket, accept the recall, or raise the threshold).
-    Explicitly pinned values (graded queries, recall-gate tests)
-    skip the count() and behave exactly as before.
+    ``max_bucket`` (None = uncapped) drops over-cap (table, bucket)
+    groups from candidate generation: identical vectors collide in
+    every table at any nbits, and one group's verify costs bucket².
+    Pairs those vectors share through other tables still surface.
 
-    TWO EXECUTION REGIMES (r8, ``vectors``): the r7 layout carried the
-    vector as a per-row Python list duplicated ``tables`` times through
-    the (t, bucket) exchange; at ×256 (512k vecs × 128 tables) that is
-    65M Python-object cells / ~33 GB shuffled, and SCALE_PROBE_r7
-    measured the declared entry at 350 s. Profiling the rebuild showed
-    three stacked constants: object-cell serialization, per-group
-    Arrow framing (131k groups → ~90 s JVM CPU/task on socket
-    flushes), and — on a dense corpus where a true pair collides in
-    many tables — a 488M-row duplicate-candidate ``distinct()``
-    (~123 s alone). The r8 regimes remove all three:
+    ``vectors`` picks the execution regime; both give the same pairs:
 
-    - ``"broadcast"`` (auto when corpus ≤ ``vec_broadcast_bytes`` at
-      its SOURCE element width — 4 B/elem for the float32 fixture,
-      8 B/elem for a double corpus, since ``smat`` is stored at source
-      precision and that is the true driver footprint — the
-      FAISS-style fits-in-RAM regime): ONE bounded
-      driver-side Arrow collect builds the dense float32 matrix AND
-      the full n×tables bucket matrix (same bounded-numpy rationale
-      as the IVF codebook; the 84 GFLOP signature build multithreads
-      driver-side in ~2 s at ×256), broadcasts both, and the job is a
-      SINGLE stage over (table, shard) work units — no corpus
-      shuffle. Each unit verifies its buckets with float32 sgemm plus
-      a candidate margin, keeps a pair only in its FIRST kept
-      colliding table (ownership is decidable locally from the bucket
-      matrix, cap-aware), and rescores survivors in exact float64 —
-      every output pair is emitted exactly once, so there is NO
-      distinct and no second shuffle. Outputs equal the all-float64
-      kernel up to float64 summation-order ulps (the margin, 1e-3 ≫
-      dim·eps32 ≈ 4e-6, cannot miss a true pair, and the final
-      threshold/round(6) applies to an exact float64 cosine — but the
-      rescore reduces row-wise dots while the exact kernel uses a gram
-      matrix, so a cosine sitting exactly on the threshold or a
-      round(6) midpoint could in principle differ by an ulp across
-      regimes; identical on all fixtures/tests).
-    - ``"ship"`` (auto above the gate — the 100 TB path): narrow
-      (vec_id, t, bucket) rows shuffle on (t, bucket), the window cap
-      guards skew, vectors join back by vec_id as NATIVE float32
-      arrays (no object cells), per-group float64 verify emits
-      cosines, and ``distinct()`` collapses cross-table duplicates.
-      This pays the honest tables·n·dim shuffle that an over-RAM
-      corpus requires.
+    - ``"broadcast"`` (auto when the corpus fits ``vec_broadcast_bytes``
+      at its source element width): one bounded driver collect builds
+      the vector and signature matrices, both broadcast. One stage over
+      (table, shard) units verifies each kept bucket with a float32
+      candidate margin, keeps a pair only in its first kept colliding
+      table and rescores it in float64, so each pair is emitted once
+      and there is no ``distinct``. A cosine exactly at the threshold
+      or at a round(6) midpoint may differ from the gram-matrix kernel
+      by an ulp. A pin whose dense (tables × 2^nbits) bookkeeping
+      exceeds 2^28 cells warns and falls back to ship.
+    - ``"ship"`` (auto above the gate): narrow (vec_id, t, bucket) rows
+      shuffle on (t, bucket), vectors join back by vec_id, each group
+      is verified by ``_pairs_above``, and ``distinct()`` collapses
+      cross-table duplicates.
 
-    ``multiprobe`` > 0 additionally lands every (vector, table) in the
-    ``multiprobe`` buckets at Hamming distance 1 on the lowest probed
-    bits — more collisions per table, so ``lsh_auto_params`` needs
-    fewer tables for the same recall. Measured trade on this batch
-    self-join: verify flops grow (1+m)² per table while tables shrink
-    ~(1 + m·(1-p1)/p1)⁻¹ — a net LOSS when verify dominates. r9
-    measured the obvious extension — auto-engaging probes when the
-    128-table cap binds — and REJECTED it: probing forfeits
-    first-collision ownership (ill-defined under probing, so the
-    multiprobe broadcast path must emit candidates, distinct, and
-    rescore), and on the dense ×256 probe corpus (512k vecs, 67.3M
-    true pairs) the m=2-probed production config ran ~3-5 min PER
-    (table, shard) unit vs 53 s for the ENTIRE probe-free run of the
-    same config (SCALE_PROBE_r9.json). When the cap binds, the
-    honest lever is ``max_tables`` —
-    cost and recall identity are both LINEAR in tables (128 → 229
-    buys recall 0.72 → 0.9 at 1.8×, vs ~40× through probes). The
-    recall-honesty contract (VERDICT r8 item 4) is instead delivered
-    programmatically: ``guard_stats["sizing"]`` exposes
-    ``achievable_recall``/``cap_bound`` and the capped-regime pytest
-    asserts delivered ≥ achievable vs the exact kernel. Candidate
-    sets with probes are strict supersets; every candidate is exactly
-    verified either way.
+    ``guard_stats`` (optional out-param) always gets ``"regime"``: the
+    regime that ran, ``"broadcast"``, ``"ship"`` or ``"empty"`` (no
+    vectors; empty pair frame). Broadcast and empty fill
+    ``"dropped_rows"`` (rows in over-cap buckets, eagerly); ship fills
+    ``"observation"``, a ``pyspark.sql.Observation`` whose
+    ``dropped_rows`` is available after an action. When auto-sizing
+    ran, ``"sizing"`` holds the ``lsh_auto_params`` stats."""
+    import warnings
 
-    ``guard_stats``: optional dict making ``max_bucket`` drops
-    observable instead of silent (ADVICE r7). Always filled with
-    ``{"regime": "broadcast" | "ship" | "empty"}`` — the regime that
-    actually RAN ("empty" = zero-vector corpus, empty pair frame,
-    zero drops), which a pinned ``vectors="broadcast"`` call cannot assume
-    (the dense-bookkeeping sanity bound below can fall it back to
-    ship); branch on it before reading the regime-specific key.
-    Broadcast path: filled EAGERLY with ``{"dropped_rows": int}`` —
-    MEMBERSHIP rows (home + probe occurrences) landing in over-cap
-    buckets, exactly the metric the ship path's Observation reports,
-    so the two regimes agree (ADVICE r8). Ship path: filled with
-    ``{"observation": pyspark.sql.Observation}`` whose
-    ``dropped_rows`` metric is available after an action runs. Zero
-    on every fixture corpus.
-    When the auto-sizing path ran, both regimes also fill
-    ``guard_stats["sizing"]`` with the ``lsh_auto_params`` outcome —
-    ``achievable_recall`` / ``cap_bound`` / engaged ``multiprobe`` —
-    so callers can gate on delivered recall programmatically."""
     import numpy as np
-    import pandas as pd
     import pyarrow as pa_mod
+    from pyspark.sql import Observation
+    from pyspark.sql.types import DoubleType
 
+    if vectors not in ("auto", "broadcast", "ship"):
+        raise ValueError(
+            f"neardup_embedding_lsh: vectors must be auto|broadcast|ship, got {vectors!r}"
+        )
     spark = emb.sparkSession
-    emb = drop_null_vectors(emb)
+    emb = drop_null_vectors(emb).select("vec_id", "embedding")
     n_vecs = None
-    dim0 = None
-    # r18 (guide §1/§5): one sizing pass instead of two driver jobs.
-    # Auto-sizing needs the corpus COUNT and hyperplane construction
-    # needs the DIMENSION; the old flow paid a count() job and then a
-    # separate head() job for dim. One aggregate returns both — and
-    # only runs when n is actually needed (auto params or auto
-    # regime); a fully pinned call keeps the short-circuiting head()
-    # probe so a 100 TB ship-regime caller never pays a full corpus
-    # pass just to learn dim.
+    # One aggregate gives the count (for sizing and the regime gate) and
+    # the dimension; a fully pinned call only reads one row for the
+    # dimension, so a ship-regime caller never pays a corpus pass.
     if nbits is None or tables is None or vectors == "auto":
-        _row = emb.agg(
+        row = emb.agg(
             F.count(F.lit(1)).alias("n"),
             F.first(F.size("embedding")).alias("dim"),
         ).first()
-        n_vecs, dim0 = _row["n"], _row["dim"]
+        n_vecs, dim = row["n"], row["dim"]
     else:
-        _first = emb.select(F.size("embedding")).head()
-        dim0 = _first[0] if _first is not None else None
-    sizing: dict = {}
+        first = emb.select(F.size("embedding")).head()
+        dim = first[0] if first is not None else None
     if nbits is None or tables is None:
+        sizing: dict = {}
         nbits, tables = lsh_auto_params(
             n_vecs,
             threshold,
@@ -578,58 +421,31 @@ def neardup_embedding_lsh(
             nbits=nbits,
             tables=tables,
             caller="neardup_embedding_lsh",
-            multiprobe=multiprobe,
             max_tables=max_tables,
             stats=sizing,
         )
-    if guard_stats is not None and sizing:
-        # expose the sizing outcome (achievable_recall, cap_bound,
-        # engaged probes) so callers can gate on delivered recall
-        # programmatically — VERDICT r8 item 4
-        guard_stats["sizing"] = dict(sizing)
-    if vectors not in ("auto", "broadcast", "ship"):
-        raise ValueError(
-            f"neardup_embedding_lsh: vectors must be auto|broadcast|ship, got {vectors!r}"
-        )
-
-    # Hyperplanes from one seeded RNG stream (deterministic, no state
-    # to ship); bucket assignment always computes in float64 so the
-    # assignment is bit-identical across releases and regimes.
-    if dim0 is None:
-        # empty corpus: no dim to size hyperplanes from, and both
-        # regimes' kernels assume >=1 vector — the 100 TB
-        # empty-partition shape must yield an empty pair frame
         if guard_stats is not None:
-            guard_stats["regime"] = "empty"
-            guard_stats["dropped_rows"] = 0
-        return spark.createDataFrame([], "id_a bigint, id_b bigint, cosine double")
-    dim = int(dim0)
+            guard_stats["sizing"] = sizing
+    if dim is None:
+        if guard_stats is not None:
+            guard_stats.update(regime="empty", dropped_rows=0)
+        return spark.createDataFrame([], _PAIR_SCHEMA)
+    dim = int(dim)
+    # Hyperplanes from one seeded RNG stream; bucket assignment is
+    # always float64, so it is identical across regimes.
     planes = np.random.default_rng(20240101).standard_normal(
         (tables * nbits, dim)
     )
     bits_w = (1 << np.arange(nbits)).astype("int64")
-    m_probe = min(multiprobe, nbits)
-
-    from pyspark.sql.types import DoubleType
-
     elem_bytes = (
         8
         if isinstance(emb.schema["embedding"].dataType.elementType, DoubleType)
         else 4
     )
-    use_broadcast = vectors == "broadcast"
-    if vectors == "auto":
-        # the combined sizing pass above always ran for auto mode
-        use_broadcast = n_vecs * dim * elem_bytes <= vec_broadcast_bytes
+    use_broadcast = vectors == "broadcast" or (
+        vectors == "auto" and n_vecs * dim * elem_bytes <= vec_broadcast_bytes
+    )
     if use_broadcast and tables * (1 << nbits) > (1 << 28):
-        # The broadcast regime's cap/ownership bookkeeping is dense in
-        # (tables, 2**nbits); auto-sizing bounds nbits (the byte gate
-        # caps n, so nbits ≈ ≤14), but a caller pinning nbits ≈ 28+
-        # with vectors="broadcast" would allocate multi-GiB driver
-        # arrays before any useful work (ADVICE r8). Ship sharding is
-        # sparse in occupied buckets — use it instead.
-        import warnings
-
         warnings.warn(
             f"neardup_embedding_lsh: dense broadcast bookkeeping for "
             f"{tables} tables × 2^{nbits} buckets exceeds the sanity "
@@ -639,19 +455,12 @@ def neardup_embedding_lsh(
         )
         use_broadcast = False
     if guard_stats is not None:
-        # record which regime actually RAN: a pinned vectors="broadcast"
-        # call can land on ship via the sanity fallback above, and the
-        # two regimes fill different drop keys (eager "dropped_rows" vs
-        # lazy "observation") — callers branch on this instead of
-        # KeyError-ing on the key the other regime fills
         guard_stats["regime"] = "broadcast" if use_broadcast else "ship"
 
     if use_broadcast:
-        # ---- fits-in-RAM regime: one bounded collect, one stage ----
-        # vectors stored at SOURCE precision (float32 for the float
-        # fixture, float64 for double corpora) so the exact rescore
-        # sees the same bits the ship path and exact kernel see
-        cols = emb.select("vec_id", "embedding").toArrow()
+        # vectors stay at source precision, so the float64 rescore sees
+        # the same bits as the ship path and the exact kernel
+        cols = emb.toArrow()
         b_ids = cols.column(0).to_numpy(zero_copy_only=False)
         n = len(b_ids)
         b_mat = (
@@ -665,8 +474,8 @@ def neardup_embedding_lsh(
         order = np.argsort(b_ids, kind="stable")
         sids = np.ascontiguousarray(b_ids[order])
         smat = np.ascontiguousarray(b_mat[order])
-        # full signature matrix, per-table to bound temporaries (the
-        # n×(tables·nbits) float64 projection would be GiBs at once)
+        # signatures one table at a time, bounding the float64
+        # projection temporaries
         bdt = np.int16 if nbits <= 14 else np.int32
         sig = np.empty((n, tables), dtype=bdt)
         mat64 = smat.astype("float64")
@@ -674,105 +483,54 @@ def neardup_embedding_lsh(
             pl = planes[t * nbits : (t + 1) * nbits]
             sig[:, t] = ((mat64 @ pl.T > 0) * bits_w).sum(axis=1).astype(bdt)
         del mat64
-        # cap decision from the exact global histogram; with probing,
-        # group mass includes probe copies (same semantics as counting
-        # the fanned-out rows)
-        ok = np.ones((tables, 1 << nbits), dtype=bool)
+        ok = np.ones((tables, 1 << nbits), dtype=bool)  # kept (t, bucket)
         dropped = 0
         if max_bucket is not None:
             for t in range(tables):
                 cnt = np.bincount(sig[:, t], minlength=1 << nbits)
-                if m_probe:
-                    total = cnt.copy()
-                    for j in range(m_probe):
-                        idx = np.arange(1 << nbits)
-                        total += cnt[idx ^ (1 << j)]
-                    over = total > max_bucket
-                    # membership rows landing in over-cap buckets —
-                    # the SAME metric the ship path's Observation
-                    # reports (ADVICE r8: cnt[over]·(1+m) counted home
-                    # occupants m extra times instead)
-                    dropped += int(total[over].sum())
-                else:
-                    over = cnt > max_bucket
-                    dropped += int(cnt[over].sum())
-                ok[t] = ~over
+                ok[t] = cnt <= max_bucket
+                dropped += int(cnt[~ok[t]].sum())
         if guard_stats is not None:
             guard_stats["dropped_rows"] = dropped
         bc = spark.sparkContext.broadcast((sids, smat, sig, ok))
-        margin = np.float32(threshold - 1e-3)
+        margin = np.float32(threshold - 1e-3)  # ≫ dim·eps32
         par = spark.sparkContext.defaultParallelism
         spt = max(1, -(-3 * par // tables))  # shards per table
         n_units = tables * spt
-
-        def _bucket_groups(col):
-            order_t = np.argsort(col, kind="stable")
-            sc_ = col[order_t]
-            starts = np.flatnonzero(np.r_[True, sc_[1:] != sc_[:-1]])
-            ends = np.append(starts[1:], len(sc_))
-            return order_t, sc_, starts, ends
 
         def verify_units(batches):
             sids_, smat_, sig_, ok_ = bc.value
             for batch in batches:
                 oa, ob, oc = [], [], []
                 for unit in batch.column(0).to_numpy(zero_copy_only=False):
-                    t, shard = int(unit) // spt, int(unit) % spt
-                    col = sig_[:, t]
-                    if m_probe:
-                        # membership = home + Hamming-1 probe copies
-                        parts = [col.astype("int64")] + [
-                            (col.astype("int64") ^ (1 << j))
-                            for j in range(m_probe)
-                        ]
-                        memb_val = np.concatenate(parts)
-                        memb_idx = np.tile(
-                            np.arange(n, dtype="int64"), 1 + m_probe
-                        )
-                        order_t, sc_, starts, ends = _bucket_groups(memb_val)
-                        rows_of = lambda s, e: memb_idx[order_t[s:e]]
-                    else:
-                        order_t, sc_, starts, ends = _bucket_groups(col)
-                        rows_of = lambda s, e: order_t[s:e]
+                    t, shard = divmod(int(unit), spt)
+                    order_t = np.argsort(sig_[:, t], kind="stable")
+                    sc_ = sig_[order_t, t]
+                    starts = np.flatnonzero(np.r_[True, sc_[1:] != sc_[:-1]])
+                    ends = np.append(starts[1:], len(sc_))
                     for s, e in zip(starts, ends):
-                        if e - s < 2:
-                            continue
                         v = int(sc_[s])
-                        if spt > 1 and v % spt != shard:
+                        if e - s < 2 or v % spt != shard or not ok_[t, v]:
                             continue
-                        if max_bucket is not None and not ok_[t, v]:
-                            continue
-                        idx = rows_of(s, e)
+                        idx = order_t[s:e]
                         gids = sids_[idx]
-                        # candidate detection in float32 regardless of
-                        # storage precision; exact rescore below reads
-                        # the source-precision rows
-                        mat = smat_[idx]
-                        if mat.dtype != np.float32:
-                            mat = mat.astype("float32")
+                        mat = smat_[idx].astype("float32", copy=False)
                         nrm = np.sqrt((mat * mat).sum(axis=1))
                         cos = (mat @ mat.T) / np.outer(nrm, nrm)
                         ia, ib = np.nonzero(
                             (cos >= margin) & (gids[:, None] < gids[None, :])
                         )
-                        if not len(ia):
-                            continue
                         ra, rb = idx[ia], idx[ib]
-                        if m_probe == 0 and t > 0:
-                            # FIRST-collision ownership: emit only if no
-                            # earlier table holds both in one KEPT
-                            # bucket — each pair surfaces exactly once
-                            # globally, so no distinct pass exists.
-                            eq = sig_[ra, :t] == sig_[rb, :t]
-                            if max_bucket is not None:
-                                eq &= ok_[
-                                    np.arange(t)[None, :], sig_[ra, :t]
-                                ]
+                        if t > 0 and len(ra):
+                            # first-collision ownership: skip the pair if
+                            # an earlier table holds both in one kept
+                            # bucket, so each pair is emitted exactly once
+                            prev = sig_[ra, :t]
+                            eq = (prev == sig_[rb, :t]) & ok_[np.arange(t), prev]
                             own = ~eq.any(axis=1)
                             ra, rb = ra[own], rb[own]
-                            if not len(ra):
-                                continue
-                        # exact float64 rescore + final threshold
+                        if not len(ra):
+                            continue
                         ma = smat_[ra].astype("float64")
                         mb = smat_[rb].astype("float64")
                         cosx = (ma * mb).sum(axis=1) / (
@@ -789,28 +547,14 @@ def neardup_embedding_lsh(
                         [
                             pa_mod.array(np.concatenate(oa), pa_mod.int64()),
                             pa_mod.array(np.concatenate(ob), pa_mod.int64()),
-                            pa_mod.array(
-                                np.concatenate(oc), pa_mod.float64()
-                            ),
+                            pa_mod.array(np.concatenate(oc), pa_mod.float64()),
                         ],
                         names=["id_a", "id_b", "cosine"],
                     )
 
         seed = spark.range(n_units).repartition(min(n_units, 4 * par))
-        pairs = seed.mapInArrow(
-            verify_units, schema="id_a bigint, id_b bigint, cosine double"
-        )
-        if m_probe:
-            # probe copies break single-ownership → collapse duplicates
-            # (identical rounded cosine by construction)
-            pairs = pairs.distinct()
-        return pairs
+        return seed.mapInArrow(verify_units, schema=_PAIR_SCHEMA)
 
-    # ---- ship path (corpus above the broadcast gate — 100 TB shape):
-    # narrow (vec_id, t, bucket) rows shuffle on (t, bucket); vectors
-    # join back as native float32 arrays; per-group exact float64
-    # verify emits cosines; distinct collapses cross-table duplicates
-    # (identical rounded cosine by construction).
     def assign(batches):
         t_ids = np.arange(tables, dtype="int32")
         for batch in batches:
@@ -819,100 +563,41 @@ def neardup_embedding_lsh(
             mat = flat.reshape(len(ids), dim).astype("float64")
             signs = (mat @ planes.T > 0).reshape(len(ids), tables, nbits)
             buckets = (signs * bits_w).sum(axis=2)  # rows × tables
-            fan = 1 + m_probe
-            if m_probe:
-                # home bucket + its Hamming-1 neighbors on the lowest
-                # probed bits (hyperplanes are random, so ANY fixed
-                # probe-bit choice is unbiased)
-                probed = np.concatenate(
-                    [buckets[..., None]]
-                    + [
-                        (buckets ^ (1 << j))[..., None]
-                        for j in range(m_probe)
-                    ],
-                    axis=2,
-                )  # rows × tables × (1+m)
-            else:
-                probed = buckets[..., None]
             yield pa_mod.RecordBatch.from_arrays(
                 [
-                    pa_mod.array(np.repeat(ids, tables * fan), pa_mod.int64()),
-                    pa_mod.array(
-                        np.tile(np.repeat(t_ids, fan), len(ids)), pa_mod.int32()
-                    ),
-                    pa_mod.array(probed.reshape(-1), pa_mod.int64()),
+                    pa_mod.array(np.repeat(ids, tables), pa_mod.int64()),
+                    pa_mod.array(np.tile(t_ids, len(ids)), pa_mod.int32()),
+                    pa_mod.array(buckets.reshape(-1), pa_mod.int64()),
                 ],
                 names=["vec_id", "t", "bucket"],
             )
 
-    tabbed = emb.select("vec_id", "embedding").mapInArrow(
-        assign, schema="vec_id bigint, t int, bucket bigint"
-    )
+    tabbed = emb.mapInArrow(assign, schema="vec_id bigint, t int, bucket bigint")
     if max_bucket is not None:
-        # Window count over the (t, bucket) partition applyInPandas
-        # groups on anyway: one pass — an agg+join-back would run the
-        # mapInArrow hyperplane assignment twice.
-        from pyspark.sql import Window
-
-        _bsz = F.count(F.lit(1)).over(Window.partitionBy("t", "bucket"))
-        tabbed = tabbed.withColumn("_bsz", _bsz)
+        # a window count over the (t, bucket) partition applyInPandas
+        # groups on anyway: an agg + join-back would run the hyperplane
+        # assignment twice
+        tabbed = tabbed.withColumn(
+            "_bsz", F.count(F.lit(1)).over(Window.partitionBy("t", "bucket"))
+        )
         if guard_stats is not None:
-            from pyspark.sql import Observation
-
             obs = Observation("neardup_embedding_lsh_guard")
             guard_stats["observation"] = obs
             tabbed = tabbed.observe(
                 obs,
-                F.sum(
-                    (F.col("_bsz") > max_bucket).cast("long")
-                ).alias("dropped_rows"),
+                F.sum((F.col("_bsz") > max_bucket).cast("long")).alias("dropped_rows"),
             )
         tabbed = tabbed.filter(F.col("_bsz") <= max_bucket).drop("_bsz")
 
-    def block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-        nrm = np.sqrt((mat * mat).sum(axis=1))
-        cos = (mat @ mat.T) / np.outer(nrm, nrm)
-        ia, ib = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {
-                "id_a": ids[ia],
-                "id_b": ids[ib],
-                "cosine": np.round(cos[ia, ib], 6),
-            }
-        )
+    def block(pdf):
+        group = _vectors(pdf)
+        return _pairs_above(*group, *group, threshold)
 
-    grouped = tabbed.join(emb.select("vec_id", "embedding"), "vec_id")
-    pairs = grouped.groupBy("t", "bucket").applyInPandas(
-        block, schema="id_a bigint, id_b bigint, cosine double"
-    )
-    return pairs.distinct()
-
-
-def lsh_buckets(emb: DataFrame, nbits: int = 8) -> DataFrame:
-    """Random-hyperplane LSH: bucket = sign bits of ``nbits`` pseudo-
-    random hyperplane projections. Hyperplane component (b, j) derives
-    deterministically from xxhash64(b, j) — reproducible across runs
-    with no RNG state to ship. Cosine-similar vectors collide with prob
-    (1 − θ/π)^nbits; probe only matching buckets at query time."""
-    e = drop_null_vectors(emb).select("vec_id", as_double_vec("embedding", "v"))
-    proj = F.expr(
-        f"transform(sequence(0, {nbits - 1}), b -> "
-        "aggregate(zip_with(v, sequence(0, size(v) - 1), (x, j) -> "
-        "x * (CAST(pmod(xxhash64(b, j), 2000003) AS DOUBLE) / 1000001.0 - 1.0)), "
-        "CAST(0.0 AS DOUBLE), (s, x) -> s + x))"
-    )
     return (
-        e.withColumn("proj", proj)
-        .withColumn(
-            "bucket",
-            F.expr(
-                "aggregate(sequence(0, size(proj) - 1), 0L, "
-                "(acc, b) -> acc + IF(element_at(proj, b + 1) > 0, shiftleft(1L, b), 0L))"
-            ),
-        )
-        .select("vec_id", "v", "bucket")
+        tabbed.join(emb, "vec_id")
+        .groupBy("t", "bucket")
+        .applyInPandas(block, schema=_PAIR_SCHEMA)
+        .distinct()
     )
 
 
@@ -920,40 +605,23 @@ def similarity_topk_lsh(
     emb: DataFrame, n_queries: int = 10, k: int = 5, nbits: int = 4,
     tables: int = 1,
 ) -> DataFrame:
-    """ANN variant: candidates limited to the query's LSH bucket in ANY
-    of ``tables`` independent hyperplane tables, then exact cosine +
-    top-k within the candidate union. Single-table recall < 1 by
-    construction; pytest asserts recall vs the exact baseline. More
-    tables raise recall toward 1 at linear candidate cost — per-item
-    miss prob is (1-p^nbits)^tables for collision prob p = 1-θ/π, so a
-    table count can be PINNED high enough that recall is deterministic
-    1 on a given corpus (the graded-query configuration; planes are
-    hash-derived, so "verified zero misses" is reproducible).
-
-    Same single-pass BLAS shape as ``similarity_topk``/``..._ivf``: the
-    hyperplane matrix (``lsh_buckets``' exact xxhash64-derived planes,
-    materialized once via a 1-row local job) and the bounded query set
-    ship as a broadcast; the corpus streams through ONE Arrow
-    ``mapInPandas`` pass that computes batch buckets and the cosine
-    matrix with two matmuls, masks each query to its own bucket, and
-    prunes to a lossless local top-k. Replaces the bucket-equality
-    broadcast join with an interpreted HOF cosine per candidate — no
-    join, no shuffle of vectors, one corpus scan. (Projection sums are
-    BLAS-ordered rather than the HOF's sequential order; a projection
-    within float-epsilon of 0 may flip bucket — recall-neutral.)"""
+    """ANN top-k: a corpus row is a candidate for a query when the two
+    share a bucket in ANY of ``tables`` independent hyperplane tables
+    of ``nbits`` bits; candidates are scored exactly by ``_topk_scan``.
+    Per-item miss probability is (1-p^nbits)^tables for p = 1-θ/π, so
+    enough tables make recall 1 on a given corpus (the graded
+    configuration). Hyperplane component (b, j) is derived from
+    xxhash64(b, j), table t owning planes [t·nbits, (t+1)·nbits), so
+    planes are reproducible with no RNG state. Projections are summed
+    in BLAS order; one within float epsilon of 0 may flip its bucket."""
     import numpy as np
-    import pandas as pd
 
     spark = emb.sparkSession
-    emb = drop_null_vectors(emb)
-    out_schema = "query_id bigint, vec_id bigint, cosine double"
-    head = emb.select("embedding").head()
-    if head is None:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    dim = len(head[0])
-    # tables*nbits planes from the same xxhash64 derivation (table t
-    # owns plane indices [t*nbits, (t+1)*nbits)); tables=1 reproduces
-    # the original single-table planes exactly.
+    emb = drop_null_vectors(emb).select("vec_id", "embedding")
+    queries = _query_block(emb, n_queries)
+    if queries is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA + ", rank int")
+    dim = queries[1].shape[1]
     planes = np.array(
         spark.range(1)
         .selectExpr(
@@ -969,54 +637,12 @@ def similarity_topk_lsh(
         signs = (mat @ planes.T > 0).reshape(len(mat), tables, nbits)
         return (signs * bits_w).sum(axis=2)  # rows × tables
 
-    qpdf = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    if qpdf.empty:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    qids = qpdf["vec_id"].to_numpy()
-    qmat = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qnrm = np.sqrt((qmat * qmat).sum(axis=1))
-    qbuck = bucketize(qmat)  # queries × tables
-    b = spark.sparkContext.broadcast((qids, qmat, qnrm, qbuck))
+    qbuck = bucketize(queries[1])  # queries × tables
 
-    def block(batches):
-        bqids, bqmat, bqnrm, bqbuck = b.value
-        for pa in batches:
-            if pa.empty:
-                continue
-            ids = pa["vec_id"].to_numpy()
-            mat = np.stack(pa["embedding"].to_numpy()).astype("float64")
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            buck = bucketize(mat)  # rows × tables
-            cos = (mat @ bqmat.T) / np.outer(nrm, bqnrm)  # rows × queries
-            out = []
-            for j, qid in enumerate(bqids):
-                # candidate iff the pair collides in ANY table
-                mask = (buck == bqbuck[j]).any(axis=1) & (ids != qid)
-                cand_ids, cand_cos = ids[mask], cos[mask, j]
-                if len(cand_ids) > k:
-                    idx = np.lexsort((cand_ids, -cand_cos))[:k]
-                    cand_ids, cand_cos = cand_ids[idx], cand_cos[idx]
-                if len(cand_ids):
-                    out.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "vec_id": cand_ids, "cosine": cand_cos}
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def collides(pdf, mat):
+        return (bucketize(mat)[:, None, :] == qbuck[None, :, :]).any(axis=2)
 
-    cands = emb.select("vec_id", "embedding").mapInPandas(block, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk_scan(emb, "embedding", queries, k, collides)
 
 
 def _sq_dists(a, b):
@@ -1126,6 +752,7 @@ def ivf_centroids(
     return cents, _ivf_assign(emb, present, cmat)
 
 
+
 def similarity_topk_ivf(
     emb: DataFrame,
     n_queries: int = 10,
@@ -1135,80 +762,40 @@ def similarity_topk_ivf(
     train_cap: int = 100_000,
     sizing_stats: dict | None = None,
 ) -> DataFrame:
-    """ANN via IVF: assign corpus to nlist coarse cells, probe the
-    nprobe cells nearest each query, exact cosine within probed cells.
+    """ANN top-k via IVF: the corpus is assigned to coarse cells
+    (``ivf_centroids``' codebook, trained on a bounded sample), and each
+    query's candidates are the rows in the ``nprobe`` cells nearest it
+    by (L2 distance, list_id), scored exactly by ``_topk_scan``.
 
-    The scoring pass is the SAME shape as ``similarity_topk``'s BLAS
-    kernel: queries (bounded by ``n_queries``) and the codebook
-    (bounded by ``nlist``) are driver-sized by definition, so probe
-    selection happens in numpy on the driver and ships as a broadcast;
-    the corpus then streams through ONE Arrow ``mapInPandas`` pass
-    doing a single matmul per batch, masked per query to its probed
-    cells, with a lossless local top-k prune (same (cosine desc,
-    vec_id asc) tie-break as the global window). Replaces the earlier
-    interpreted zip_with/aggregate cosine per candidate pair — the
-    slowest query in the round-3 bench (2.96s driver-measured) — with
-    the vectorized path the LSH variant already used. Probe tie-break
-    unchanged: nearest ``nprobe`` cells by (L2 distance, list_id).
+    ``nlist=None`` derives ``max(8, ceil(sqrt(n)))``, keeping cells at
+    ≈ √n rows. ``nprobe=None`` derives ``max(1, nlist // 4)``;
+    ``nprobe="all"`` probes every cell, the only configuration whose
+    recall is 1 a priori (the one the graded query pins). Integers pin
+    either knob.
 
-    AUTO-SIZING (``nlist=None``, the default): ``nlist = max(8,
-    ceil(sqrt(n)))`` — the standard IVF rule (FAISS guidance: nlist
-    between sqrt(n) and 4·sqrt(n)) keeps expected cell size ≈ sqrt(n),
-    so per-query probe cost is nprobe·sqrt(n); a FIXED cell count at
-    1000× the corpus puts ∝n vectors in every cell and degenerates to
-    a full scan per query. ``nprobe=None`` derives ``max(1, nlist//4)``
-    (the recall/cost production trade — pytest gates its recall);
-    ``nprobe="all"`` probes every cell: the exhaustive-candidate
-    configuration the GRADED query pins, because it is the only one
-    whose recall is 1 a priori (probe selection by centroid distance
-    can always exclude a true neighbor's cell, so no nprobe<nlist
-    config can share the exact twin's oracle deterministically).
-    Explicit integers pin both knobs exactly as before.
-
-    ``sizing_stats`` (optional out-param, the `lsh_auto_params
-    stats`/``guard_stats["sizing"]`` symmetry the LSH path has had
-    since r9 — VERDICT r9 item 4 / r10 item 2): filled with
-    ``{"n", "nlist", "nlist_auto", "nprobe", "nprobe_auto",
-    "cells_present", "probe_coverage", "exhaustive", "train_cap",
-    "train_sample"}`` so a production caller can gate on the DELIVERED
-    probe configuration programmatically instead of re-deriving it —
-    ``cells_present`` is the non-empty codebook size after Lloyd
-    (empty cells drop out, so it can be < nlist and is what
-    ``probe_coverage = nprobe / cells_present`` is measured against);
-    ``exhaustive`` is True exactly when every present cell is probed
-    (the recall-1-a-priori configuration the graded query pins);
-    ``train_sample = min(n, train_cap)`` is the deterministic
-    hash-ordered codebook training draw. Requesting stats with an
-    explicit ``nlist`` adds one corpus count() job (the auto path
-    already pays it)."""
+    ``sizing_stats`` (optional out-param) gets ``{"n", "nlist",
+    "nlist_auto", "nprobe", "nprobe_auto", "cells_present",
+    "probe_coverage", "exhaustive", "train_cap", "train_sample"}``:
+    ``cells_present`` is the non-empty codebook size (≤ nlist),
+    ``probe_coverage = nprobe / cells_present``, ``exhaustive`` is True
+    when every present cell is probed, ``train_sample = min(n,
+    train_cap)``. Only the derived ``nprobe`` default counts as auto;
+    ``"all"`` is a caller pin. Asking for stats with an explicit
+    ``nlist`` costs one count job."""
     import math
 
     import numpy as np
-    import pandas as pd
 
     spark = emb.sparkSession
     emb = drop_null_vectors(emb)
-    out_schema = "query_id bigint, vec_id bigint, cosine double"
-    n = None
-    if nlist is None:
-        n = emb.count()
+    nlist_auto, nprobe_auto = nlist is None, nprobe is None
+    n = emb.count() if nlist_auto or sizing_stats is not None else None
+    if nlist_auto:
         nlist = max(8, math.ceil(math.sqrt(n)))
-        nlist_auto = True
-    else:
-        nlist_auto = False
-        if sizing_stats is not None:
-            n = emb.count()
-    # Only the genuinely derived nlist//4 default is "auto": an explicit
-    # caller pin of nprobe='all' (the graded exhaustive config) is a
-    # requested configuration and must be reported as such, or a
-    # production gate reading sizing_stats misattributes it.
-    nprobe_auto = nprobe is None
     if nprobe == "all":
         nprobe = nlist
-    elif nprobe is None:
+    elif nprobe_auto:
         nprobe = max(1, nlist // 4)
-    # Codebook stays in numpy on the driver (it is ≤ nlist rows by
-    # definition) — no createDataFrame/collect round-trip.
     clist, cmat = _ivf_codebook(emb, nlist, iters=2, train_cap=train_cap)
     if sizing_stats is not None:
         cells = 0 if clist is None else int(len(clist))
@@ -1224,59 +811,15 @@ def similarity_topk_ivf(
             train_cap=int(train_cap),
             train_sample=int(min(n, train_cap)),
         )
-    # Query vectors come straight from the source scan (pushed-down
-    # vec_id filter), NOT from `assigned` — they don't need a cell id,
-    # and reading them through `assigned` would run the full-corpus
-    # assignment pass a second time.
-    qpdf = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", as_double_vec("embedding", "v"))
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    if clist is None or qpdf.empty:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    assigned = _ivf_assign(emb, clist, cmat)
-    qids = qpdf["vec_id"].to_numpy()
-    qmat = np.stack(qpdf["v"].to_numpy()).astype("float64")
-    qnrm = np.sqrt((qmat * qmat).sum(axis=1))
+    queries = None if clist is None else _query_block(emb, n_queries)
+    if queries is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA + ", rank int")
+    qmat = queries[1]
     d = ((qmat[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-    probed = {}  # query_id -> array of its nprobe nearest cell ids
-    for i, qid in enumerate(qids):
-        order = np.lexsort((clist, d[i]))[:nprobe]
-        probed[int(qid)] = clist[order]
-    b = spark.sparkContext.broadcast((qids, qmat, qnrm, probed))
+    probed = [clist[np.lexsort((clist, d[i]))[:nprobe]] for i in range(len(qmat))]
 
-    def block(batches):
-        bqids, bqmat, bqnrm, bprobed = b.value
-        for pa in batches:
-            if pa.empty:
-                continue
-            ids = pa["vec_id"].to_numpy()
-            cells = pa["list_id"].to_numpy()
-            mat = np.stack(pa["v"].to_numpy()).astype("float64")
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            cos = (mat @ bqmat.T) / np.outer(nrm, bqnrm)  # rows × queries
-            out = []
-            for j, qid in enumerate(bqids):
-                mask = np.isin(cells, bprobed[int(qid)]) & (ids != qid)
-                cand_ids, cand_cos = ids[mask], cos[mask, j]
-                if len(cand_ids) > k:
-                    idx = np.lexsort((cand_ids, -cand_cos))[:k]
-                    cand_ids, cand_cos = cand_ids[idx], cand_cos[idx]
-                if len(cand_ids):
-                    out.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "vec_id": cand_ids, "cosine": cand_cos}
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def in_probed(pdf, mat):
+        cells = pdf["list_id"].to_numpy()
+        return np.stack([np.isin(cells, p) for p in probed], axis=1)
 
-    cands = assigned.mapInPandas(block, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk_scan(_ivf_assign(emb, clist, cmat), "v", queries, k, in_probed)

@@ -12,7 +12,6 @@ across the batch — the per-record overhead disappears structurally.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -59,53 +58,16 @@ def kafka_json_writer(df: DataFrame, conf: EngineConfig, checkpoint: str):
     )
 
 
-class UpsertSink:
+class ParquetUpsertSink:
     """K4 — keyed upsert of a streaming aggregate's changelog.
 
     KSQL's MAX_TABLE is a continuously-updated table: each window emits
     updated rows which the Connect sink upserts into Mongo keyed by
-    (window, id) (README.md:87-107). In update output mode each
-    micro-batch delivers the changed rows; we upsert them into a keyed
-    store. This in-memory dict is the UNIT-TEST backend only — no
-    declared query uses it (``q_streaming_window_agg`` and every other
-    graded streaming path run on ``ParquetUpsertSink`` below, which
-    never collects a batch to the driver). At scale the same callable
-    body targets any upsert-capable store (Delta MERGE, JDBC upsert,
-    key-value store) one batch at a time.
-    """
-
-    def __init__(self, key_cols: list[str]):
-        self.key_cols = key_cols
-        self.state: dict[tuple, tuple] = {}
-        self._lock = threading.Lock()
-        self._schema = None
-
-    def writer(self) -> Callable[[DataFrame, int], None]:
-        def write(batch: DataFrame, epoch_id: int) -> None:
-            if self._schema is None:
-                self._schema = batch.schema
-            cols = batch.columns
-            key_idx = [cols.index(k) for k in self.key_cols]
-            rows = batch.collect()  # changed rows only (update mode)
-            with self._lock:
-                for r in rows:
-                    self.state[tuple(r[i] for i in key_idx)] = tuple(r)
-
-        return write
-
-    def to_df(self, spark) -> DataFrame:
-        if self._schema is None:
-            raise RuntimeError("sink never received a batch")
-        return spark.createDataFrame(list(self.state.values()), self._schema)
-
-
-class ParquetUpsertSink:
-    """K4 at scale — the same keyed-upsert contract as ``UpsertSink``
-    but fully distributed: each micro-batch APPENDS its changed rows
-    (update mode) to a parquet log stamped with the epoch, and the
-    merged view dedups per key keeping the highest epoch — exactly a
-    changelog-table compaction (Delta MERGE / RocksDB last-write-wins),
-    with no rows ever collected to the driver."""
+    (window, id) (README.md:87-107). Here each micro-batch APPENDS its
+    changed rows (update mode) to a parquet log stamped with the epoch,
+    and the merged view dedups per key keeping the highest epoch —
+    exactly a changelog-table compaction (Delta MERGE / RocksDB
+    last-write-wins), with no rows ever collected to the driver."""
 
     def __init__(self, key_cols: list[str], path: str | None = None):
         from iotstream.streaming import ephemeral_dir

@@ -61,13 +61,15 @@ def test_randomized_generator_matches_mix_shape(spark):
 def test_rate_source_smoke(spark):
     """S4 streaming: the rate-source generator emits parseable sensor
     JSON payloads continuously."""
+    import time
+
     from iotstream.operators.parse import parse_sensor_json
-    from iotstream.sinks import UpsertSink
+    from iotstream.sinks import ParquetUpsertSink
     from iotstream.sources import RateSensorSource
 
     stream = RateSensorSource(rows_per_second=200, n_sensors=5).load(spark)
     parsed = parse_sensor_json(stream)
-    sink = UpsertSink(key_cols=["messageId"])
+    sink = ParquetUpsertSink(key_cols=["messageId"])
     q = (
         parsed.writeStream.outputMode("append")
         .foreachBatch(sink.writer())
@@ -75,13 +77,13 @@ def test_rate_source_smoke(spark):
         .start()
     )
     try:
-        import time
-
         deadline = time.time() + 15
-        while time.time() < deadline and not sink.state:
+        while time.time() < deadline and not any(
+            p["numInputRows"] > 0 for p in q.recentProgress
+        ):
             time.sleep(0.5)
     finally:
         q.stop()
-    assert sink.state, "rate source produced no parsed rows"
-    row = next(iter(sink.state.values()))
+    row = sink.to_df(spark).first()
+    assert row is not None, "rate source produced no parsed rows"
     assert row[0].startswith("sensor")  # id column

@@ -182,11 +182,8 @@ def test_embedding_lsh_auto_sizing_floor_and_cap_warning(spark):
     recall target is unreachable, stating the achievable recall, with
     the programmatic twin in guard_stats["sizing"], and (c) deliver
     the target via the ``max_tables`` cap-lift — the honest lever
-    (cost linear in tables); r9 MEASURED auto-engaging multiprobe on
-    cap-bind and REJECTED it (~40× on the dense ×256 corpus:
-    ownership forfeited → duplicate emission), so probing stays an
-    explicit opt-in int and there is no "auto" value (VERDICT r8
-    item 4 — no silent sub-target recall)."""
+    (cost linear in tables; VERDICT r8 item 4 — no silent sub-target
+    recall)."""
     import warnings
 
     from iotstream.ext.similarity import neardup_embedding_lsh
@@ -287,18 +284,12 @@ def test_embedding_lsh_capped_regime_delivers_achievable_recall(spark):
     assert got <= got2
 
 
-def test_embedding_lsh_regimes_agree_and_multiprobe_recall(spark):
+def test_embedding_lsh_regimes_agree(spark):
     """r8: the broadcast regime (first-collision ownership, NO distinct
     pass) and the ship regime (narrow shuffle + distinct) must produce
     identical verified pairs — ownership exactness is what lets the
-    broadcast path skip dedup entirely. Multiprobe sizes FEWER tables
-    for the same recall target and, since every candidate is exactly
-    verified, stays a subset of the exact kernel with high recall."""
-    from iotstream.ext.similarity import (
-        lsh_auto_params,
-        neardup_embedding,
-        neardup_embedding_lsh,
-    )
+    broadcast path skip dedup entirely."""
+    from iotstream.ext.similarity import neardup_embedding_lsh
 
     emb = load_table(spark, SF_DIR, "embeddings")
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
@@ -307,21 +298,6 @@ def test_embedding_lsh_regimes_agree_and_multiprobe_recall(spark):
         neardup_embedding_lsh(emb, 0.4, recall=0.99999, vectors="ship")
     )
     assert ship == base
-
-    # multiprobe: measurably fewer tables at equal recall target...
-    plain_tables = lsh_auto_params(500, 0.4, recall=0.99999)[1]
-    probe_tables = lsh_auto_params(500, 0.4, recall=0.99999, multiprobe=2)[1]
-    assert probe_tables < plain_tables
-    # ...and the probing config keeps precision 1.0 + high recall
-    exact = {(r.id_a, r.id_b) for r in neardup_embedding(emb, 0.4).collect()}
-    mp = {
-        (r.id_a, r.id_b)
-        for r in neardup_embedding_lsh(
-            emb, 0.4, recall=0.99999, multiprobe=2
-        ).collect()
-    }
-    assert mp <= exact
-    assert len(mp & exact) / len(exact) >= 0.9
 
 
 def test_embedding_lsh_dense_bookkeeping_falls_back_to_ship(spark):
@@ -480,3 +456,54 @@ def test_ivf_sizing_stats_symmetry(spark):
     similarity_topk_ivf(emb, 5, 3, nlist=4, nprobe=2, sizing_stats=st3)
     assert not st3["nlist_auto"] and not st3["nprobe_auto"]
     assert st3["nlist"] == 4 and st3["nprobe"] == min(2, st3["cells_present"])
+
+
+def test_topk_local_prune_is_lossless(spark):
+    """The top-k scan keeps only each Arrow batch's local top-k before
+    the global rank. With 7-row batches over 4 partitions and k=3, every
+    variant whose candidate set covers the corpus must still equal the
+    expression twin row for row."""
+    from iotstream.ext.similarity import similarity_topk_expr
+
+    emb = load_table(spark, SF_DIR, "embeddings").repartition(4)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    expected = rows(similarity_topk_expr(emb, 10, 3))
+    assert len(expected) == 30
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "7")
+    try:
+        assert rows(similarity_topk(emb, 10, 3)) == expected
+        assert rows(similarity_topk_lsh(emb, 10, 3, nbits=4, tables=64)) == expected
+        assert (
+            rows(similarity_topk_ivf(emb, 10, 3, nlist=None, nprobe="all"))
+            == expected
+        )
+    finally:
+        spark.conf.unset(key)
+
+
+def test_neardup_embedding_distributed_regime_matches_driver(spark):
+    """Above 4096 rows ``neardup_embedding`` verifies in a distributed
+    mapInPandas pass against the broadcast corpus instead of on the
+    driver. On 5000 vectors built as near-twin pairs, its pairs among
+    vec_id < 4096 must equal the driver path's result on that prefix."""
+    import numpy as np
+
+    from iotstream.ext.similarity import neardup_embedding
+
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((2500, 8))
+    vecs = base[np.arange(5000) // 2] + 0.01 * rng.standard_normal((5000, 8))
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    )
+    distributed = {
+        tuple(r) for r in neardup_embedding(emb, 0.995).collect() if r.id_b < 4096
+    }
+    driver = {
+        tuple(r)
+        for r in neardup_embedding(emb.filter("vec_id < 4096"), 0.995).collect()
+    }
+    assert driver
+    assert distributed == driver

@@ -72,7 +72,7 @@ def test_session_window_stream_matches_batch_session_count(spark, tmp_path):
     same (user, session) partitioning as the batch lag/cumsum method."""
     from iotstream.schemas import load_events_raw, normalize_ns_timestamp, table_path
     from iotstream.sources import FileStreamSource
-    from iotstream.sinks import UpsertSink
+    from iotstream.sinks import ParquetUpsertSink
     from iotstream.streaming import run_available_now
     from iotstream.sensorize import sensorize
 
@@ -81,7 +81,7 @@ def test_session_window_stream_matches_batch_session_count(spark, tmp_path):
     sensor = sensorize(normalize_ns_timestamp(stream))
     sess = session_window_stream(sensor, key="id", gap="30 minutes",
                                  watermark="3650 days")
-    sink = UpsertSink(key_cols=["session_start", "id"])
+    sink = ParquetUpsertSink(key_cols=["session_start", "id"])
     # session windows support append (finalized-only) or complete;
     # complete re-emits full state each batch → final batch = all sessions
     run_available_now(
