@@ -38,7 +38,7 @@ from iotstream.operators.parse import parse_sensor_json, to_sensor_json
 from iotstream.operators.project import raw_archive_projection
 from iotstream.operators.throughput import throughput
 from iotstream.operators.windows import tumbling_agg
-from iotstream.schemas import load_table, table_path, use_utc
+from iotstream.schemas import load_events_stream, load_table, use_utc
 from iotstream.sensorize import sensor_cte, sensorize
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
@@ -75,9 +75,12 @@ FORCE_WINDOW: tuple[tuple[str, int], ...] = (
     ("dedup_report", 19),
     ("stateful_quality_monitor", 19),
     # r19 pins for the walker's other stale greens: fixture tables now
-    # load under declared schemas (iotstream/schemas.py), the upsert
-    # sink reads its log under the schema it wrote, and
-    # user_value_deciles ranks from a measured count.
+    # load under declared schemas (iotstream/schemas.py), and
+    # user_value_deciles ranks from a measured count. Every streaming
+    # query now reads the events through schemas.load_events_stream and
+    # drains through streaming.drain (stateful_quality_monitor above
+    # too).
+    ("streaming_sessionize", 19),
     ("streaming_window_agg", 19),
     ("streaming_dedup", 19),
     ("streaming_dedup_wm", 19),
@@ -409,24 +412,16 @@ def q_throughput_count(spark, sf_dir):
 
 def q_streaming_window_agg(spark, sf_dir):
     """The same flagship aggregate executed as a REAL streaming query:
-    file-stream source → watermark → update-mode windowed agg →
-    foreachBatch keyed upsert (the KSQL MAX_TABLE → Connect → Mongo
-    path); returns the final upserted state, which equals the batch
-    result under the unbounded correctness watermark."""
-    from iotstream.schemas import (
-        load_events_raw,
-        nonnegative_event_time,
-        normalize_ns_timestamp,
-    )
-    from iotstream.sources import FileStreamSource
+    file-stream source → watermark → update-mode windowed agg → keyed
+    upsert (the KSQL MAX_TABLE → Connect → Mongo path); returns the
+    final upserted state, which equals the batch result under the
+    unbounded correctness watermark."""
+    from iotstream.schemas import nonnegative_event_time
     from iotstream.streaming import scoped_shuffle_partitions, windowed_agg_final_state
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema  # ts as raw nanos
-    stream = FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
     # watermarked op: non-negative event-time domain (see schemas)
     valid = nonnegative_event_time(
-        validity_filter(sensorize(normalize_ns_timestamp(stream)))
+        validity_filter(sensorize(load_events_stream(spark, sf_dir)))
     )
     with scoped_shuffle_partitions(spark, 8):
         return windowed_agg_final_state(
@@ -474,17 +469,12 @@ def q_stateful_quality_monitor(spark, sf_dir):
     per-sensor quality monitor (totals + longest consecutive-invalid
     run). Runs as a real streaming query; final upserted state is
     oracle-checked against a gaps-and-islands SQL formulation."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming import scoped_shuffle_partitions
-    from iotstream.streaming.stateful import run_quality_monitor_final
+    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming.stateful import quality_monitor
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
-    sensor = sensorize(normalize_ns_timestamp(stream))
+    sensor = sensorize(load_events_stream(spark, sf_dir))
     with scoped_shuffle_partitions(spark, 8):
-        return run_quality_monitor_final(spark, sensor)
+        return drain(spark, quality_monitor(sensor), "update", ["id"])
 
 
 def q_sessionize(spark, sf_dir):
@@ -501,18 +491,15 @@ def q_streaming_sessionize(spark, sf_dir):
     complete-mode; oracle is the lag/cumsum SQL twin restated with
     session_window's boundary semantics (gap >= threshold splits,
     session_end = last event + gap)."""
-    from iotstream.ext.sessions import run_session_window_final
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming import scoped_shuffle_partitions
+    from iotstream.ext.sessions import session_window_stream
+    from iotstream.streaming import UNBOUNDED_WATERMARK, drain, scoped_shuffle_partitions
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = normalize_ns_timestamp(
-        FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
-    ).select("user_id", "ts")
+    stream = load_events_stream(spark, sf_dir).select("user_id", "ts")
+    sessions = session_window_stream(
+        stream, key="user_id", watermark=UNBOUNDED_WATERMARK
+    )
     with scoped_shuffle_partitions(spark, 8):
-        return run_session_window_final(spark, stream, key="user_id")
+        return drain(spark, sessions, "complete")
 
 
 def q_distinct_users(spark, sf_dir):
@@ -953,40 +940,25 @@ def q_streaming_dedup(spark, sf_dir):
     """Streaming exact dedup: dropDuplicates on the event key inside a
     real micro-batch stream (state-store backed), drained availableNow;
     oracle is batch DISTINCT. The streaming twin of E1."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sinks import ParquetUpsertSink
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming import run_available_now, scoped_shuffle_partitions
+    from iotstream.streaming import drain, scoped_shuffle_partitions
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
     deduped = (
-        normalize_ns_timestamp(stream)
+        load_events_stream(spark, sf_dir)
         .select("event_id", "user_id", "event_type", "value")
         .dropDuplicates(["event_id"])
     )
-    sink = ParquetUpsertSink(key_cols=["event_id"])
     with scoped_shuffle_partitions(spark, 8):
-        writer = deduped.writeStream.outputMode("append").foreachBatch(sink.writer())
-        run_available_now(writer)
-    return sink.to_df(spark)
+        return drain(spark, deduped, "append")
 
 
 def q_streaming_enrich(spark, sf_dir):
     """Stream×static broadcast enrichment join (dim never shuffles the
     stream) → running per-segment totals; final upserted state equals
     the batch join+agg (the oracle)."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sources import FileStreamSource
     from iotstream.streaming import scoped_shuffle_partitions
     from iotstream.streaming.joins import enrich_against_dim_final
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = normalize_ns_timestamp(
-        FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
-    ).select("user_id", "value")
+    stream = load_events_stream(spark, sf_dir).select("user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -1001,21 +973,11 @@ def q_streaming_interval_join(spark, sf_dir):
     per-user events within 30 min after each error, as pairs; drained
     append-mode — inner-join matches emit eagerly, so the finite run
     is complete. Oracle is the batch pair join."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sources import FileStreamSource
     from iotstream.streaming import scoped_shuffle_partitions
     from iotstream.streaming.joins import interval_join_pairs
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-
-    def _stream():
-        return normalize_ns_timestamp(
-            FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
-        )
-
     left = (
-        _stream()
+        load_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "error")
         .select(
             F.col("event_id").alias("error_event_id"),
@@ -1023,7 +985,7 @@ def q_streaming_interval_join(spark, sf_dir):
             F.col("ts").alias("e_ts"),
         )
     )
-    right = _stream().select(
+    right = load_events_stream(spark, sf_dir).select(
         F.col("event_id").alias("follow_event_id"),
         F.col("user_id"),
         F.col("ts").alias("r_ts"),
@@ -1761,18 +1723,12 @@ def q_streaming_status_change(spark, sf_dir):
     per-sensor valid↔invalid edge detector, drained availableNow;
     emitted transitions are oracle-checked against the batch lag()
     formulation of the same predicate."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming import ephemeral_dir, scoped_shuffle_partitions
-    from iotstream.streaming.stateful import run_status_changes_final
+    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming.stateful import status_changes
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
-    sensor = sensorize(normalize_ns_timestamp(stream))
-    tmp = ephemeral_dir("iotstream-status-")
+    sensor = sensorize(load_events_stream(spark, sf_dir))
     with scoped_shuffle_partitions(spark, 8):
-        return run_status_changes_final(spark, sensor, tmp)
+        return drain(spark, status_changes(sensor), "append")
 
 
 def q_status_change(spark, sf_dir):
@@ -1895,31 +1851,19 @@ def q_streaming_dedup_wm(spark, sf_dir):
     so an epoch-EXACT row is silently dropped
     (schemas.positive_event_time; the hostile gate measured 1040 vs
     1041 rows under the previous >= contract)."""
-    from iotstream.schemas import (
-        load_events_raw,
-        normalize_ns_timestamp,
-        positive_event_time,
-    )
-    from iotstream.sinks import ParquetUpsertSink
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming import run_available_now, scoped_shuffle_partitions
+    from iotstream.schemas import positive_event_time
+    from iotstream.streaming import drain, scoped_shuffle_partitions
 
-    use_utc(spark)
-    raw_schema = load_events_raw(spark, sf_dir).schema
-    stream = FileStreamSource(table_path(sf_dir, "events"), raw_schema).load(spark)
     deduped = (
         # watermarked dedup: STRICTLY-positive event-time domain (the
         # late-input filter drops ts <= the epoch-0 watermark, r14)
-        positive_event_time(normalize_ns_timestamp(stream))
+        positive_event_time(load_events_stream(spark, sf_dir))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    sink = ParquetUpsertSink(key_cols=["event_id"])
     with scoped_shuffle_partitions(spark, 8):
-        writer = deduped.writeStream.outputMode("append").foreachBatch(sink.writer())
-        run_available_now(writer)
-    return sink.to_df(spark)
+        return drain(spark, deduped, "append")
 
 
 # ------------------------------------------------------------- contract

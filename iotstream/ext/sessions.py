@@ -47,42 +47,6 @@ def sessionize_batch(events: DataFrame, gap_seconds: int = GAP_SECONDS) -> DataF
     )
 
 
-def run_session_window_final(
-    spark,
-    stream: DataFrame,
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "3650 days",
-) -> DataFrame:
-    """Drain a streaming ``session_window`` aggregate and return the
-    final session table. Complete output mode with a full-overwrite
-    writer: session windows MERGE as events arrive (a keyed upsert
-    would strand partial sessions that later merged away), so each
-    micro-batch rewrites the result and the last batch is the answer.
-    Correctness harness — production uses append mode with a finite
-    watermark, where sessions finalize incrementally and merging is
-    confined to open state.
-
-    Session-window semantics (vs the batch lag/cumsum twin): windows
-    merge on inclusive overlap (an event at exactly last_ts + gap still
-    extends the session), so a new session starts only when the
-    full-precision microsecond gap is STRICTLY greater than the
-    threshold; session_end = last event + gap.
-    """
-    from iotstream.streaming import ephemeral_dir, run_available_now
-
-    agg = session_window_stream(stream, key=key, gap=gap, watermark=watermark)
-    out = ephemeral_dir("iotstream-sessions-")
-
-    def _overwrite(df, _epoch):
-        df.write.mode("overwrite").parquet(out)
-
-    run_available_now(
-        agg.writeStream.outputMode("complete").foreachBatch(_overwrite)
-    )
-    return spark.read.schema(agg.schema).parquet(out)
-
-
 def session_window_stream(
     sensor_stream: DataFrame,
     key: str = "id",
@@ -95,15 +59,23 @@ def session_window_stream(
     by session_window itself; the explicit filter keeps the contract
     visible and the batch twin byte-identical.
 
+    Boundary semantics (vs the batch lag/cumsum twin): windows merge on
+    inclusive overlap (an event at exactly last_ts + gap still extends
+    the session), so a new session starts only when the full-precision
+    microsecond gap is STRICTLY greater than the threshold;
+    session_end = last event + gap. Sessions MERGE as events arrive, so
+    a keyed upsert would strand partial sessions that later merged
+    away: drain in complete mode (the last micro-batch is the whole
+    table), or in append mode under a finite watermark, where sessions
+    finalize incrementally and merging is confined to open state.
+
     This is a WATERMARKED operator, so the non-negative event-time
     contract applies (schemas.nonnegative_event_time): Spark's
     watermark initializes at epoch 0 and evicts any session whose END
     does not cross it — a pre-epoch event whose session ends at or
     before 1970-01-01 silently vanishes while one ending a second
-    later survives (r13 reach audit: a 23:30:00+30min session dropped
-    where the 23:59:59 one had survived grading by luck). The explicit
-    ts >= epoch filter, mirrored in the oracle, turns that boundary
-    into the declared rule."""
+    later survives. The explicit ts >= epoch filter, mirrored in the
+    oracle, turns that boundary into the declared rule."""
     from iotstream.schemas import nonnegative_event_time
 
     return (

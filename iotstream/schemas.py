@@ -107,12 +107,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet under its declared schema, ``ts`` as stored:
-    TIMESTAMP(MICROS) read as ``timestamp_ntz``. Streaming sources take
-    their schema from here; ``normalize_ns_timestamp`` turns ``ts`` into
-    the TimestampType event-time operators need."""
+    TIMESTAMP(MICROS) read as ``timestamp_ntz``; ``normalize_ns_timestamp``
+    turns ``ts`` into the TimestampType event-time operators need."""
     return spark.read.schema(FIXTURE_SCHEMAS["events"]).parquet(
         table_path(sf_dir, "events")
     )
+
+
+def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a streaming file source under its declared
+    schema, with ``ts`` as TimestampType (``normalize_ns_timestamp``)
+    and the session pinned to UTC (``use_utc``) — the input of every
+    streaming query over the fixtures."""
+    from iotstream.sources import FileStreamSource
+
+    use_utc(spark)
+    source = FileStreamSource(table_path(sf_dir, "events"), FIXTURE_SCHEMAS["events"])
+    return normalize_ns_timestamp(source.load(spark))
 
 
 def normalize_ns_timestamp(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -16,30 +16,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from iotstream.config import EngineConfig
 from iotstream.operators.project import raw_archive_projection
-
-
-def raw_archive_writer(path: str) -> Callable[[DataFrame, int], None]:
-    """K1 — append the flattened PRE-filter frame to the archive table.
-    (The reference archives every event before filtering,
-    StreamProcessor.java:58.)"""
-
-    def write(batch: DataFrame, epoch_id: int) -> None:
-        raw_archive_projection(batch).write.mode("append").parquet(path)
-
-    return write
-
-
-def clean_parquet_writer(path: str) -> Callable[[DataFrame, int], None]:
-    """K3 — passthrough clean-stream table (the Kafka-Connect
-    ``mongodb-connect`` collection equivalent, README.md:59-70)."""
-
-    def write(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("append").parquet(path)
-
-    return write
 
 
 def kafka_json_writer(df: DataFrame, conf: EngineConfig, checkpoint: str):
@@ -67,31 +47,33 @@ class ParquetUpsertSink:
     changed rows (update mode) to a parquet log stamped with the epoch,
     and the merged view dedups per key keeping the highest epoch —
     exactly a changelog-table compaction (Delta MERGE / RocksDB
-    last-write-wins), with no rows ever collected to the driver."""
+    last-write-wins), with no rows ever collected to the driver.
 
-    def __init__(self, key_cols: list[str], path: str | None = None):
+    ``schema`` is the drained frame's schema: the log is read under it
+    (plus the bigint ``__epoch``), so an empty log reads as an empty
+    table and no read infers a schema. A replayed micro-batch appends
+    the same rows again under the same epoch, so the merged view does
+    not change."""
+
+    def __init__(self, schema: StructType, key_cols):
         from iotstream.streaming import ephemeral_dir
 
-        self.key_cols = key_cols
-        self.path = path or ephemeral_dir("iotstream-upsert-")
-        # schema of the appended log, ``__epoch`` included; set by the
-        # first batch, it lets ``to_df`` read the log without inference
-        self._schema = None
+        self.key_cols = list(key_cols)
+        self.path = ephemeral_dir("iotstream-upsert-")
+        self.schema = StructType([*schema.fields, StructField("__epoch", LongType())])
 
     def writer(self) -> Callable[[DataFrame, int], None]:
         def write(batch: DataFrame, epoch_id: int) -> None:
-            out = batch.withColumn("__epoch", F.lit(epoch_id))
-            self._schema = out.schema
-            out.write.mode("append").parquet(self.path)
+            batch.withColumn("__epoch", F.lit(epoch_id).cast("bigint")).write.mode(
+                "append"
+            ).parquet(self.path)
 
         return write
 
     def to_df(self, spark) -> DataFrame:
         from pyspark.sql.window import Window
 
-        if self._schema is None:
-            raise RuntimeError("sink never received a batch")
-        log = spark.read.schema(self._schema).parquet(self.path)
+        log = spark.read.schema(self.schema).parquet(self.path)
         w = Window.partitionBy(*self.key_cols).orderBy(F.desc("__epoch"))
         return (
             log.withColumn("__rn", F.row_number().over(w))

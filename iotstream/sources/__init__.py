@@ -51,7 +51,7 @@ class FileStreamSource(Source):
     (HiveMQSource.java:86-93) paces message delivery."""
 
     path: str
-    schema: StructType
+    schema: StructType | str  # a StructType or a DDL string
     max_files_per_trigger: int | None = None
 
     def load(self, spark: SparkSession) -> DataFrame:

@@ -6,9 +6,14 @@
 - T3: watermarks bound state; the reference has no late-data policy
   (KSQL 0.6 retains windows indefinitely), so correctness runs use an
   effectively-unbounded watermark and production runs a finite one.
-- T4: every query gets a ``checkpointLocation`` → restartable,
-  exactly-once into file sinks (strictly stronger than the reference's
-  unchckpointed fire-and-forget, StreamProcessor.java:126).
+- T4: every query gets a ``checkpointLocation`` → restartable
+  (the reference checkpoints nothing, StreamProcessor.java:126). What
+  a replayed micro-batch leaves behind depends on the output mode of
+  ``drain``: append drains are exactly-once through the file sink's
+  ``_spark_metadata`` log; update drains deduplicate a replayed epoch
+  when the upsert table is read; complete drains overwrite, so a
+  replay is harmless. ``sinks.dual_sink_writer`` is still
+  at-least-once: a replayed epoch appends its raw and clean rows again.
 - T5: streaming aggregation state lives in the state store.
 - T6: pacing via triggers (availableNow in tests, processingTime in
   production) instead of the reference's 100 ms sleep poll
@@ -106,6 +111,39 @@ class scoped_shuffle_partitions:
         return False
 
 
+def drain(
+    spark: SparkSession, df: DataFrame, output_mode: str, keys=()
+) -> DataFrame:
+    """Run the streaming frame ``df`` over all available input
+    (availableNow) and return the table it leaves behind:
+
+    - ``"append"``: every emitted row, through Spark's parquet file sink;
+    - ``"update"``: the latest row per ``keys``, through
+      ``ParquetUpsertSink`` (the KSQL MAX_TABLE → Connect → Mongo
+      keyed upsert, README.md:87-107);
+    - ``"complete"``: the result table of the last micro-batch (each
+      batch overwrites the previous one).
+
+    With no input at all, every mode returns an empty table with
+    ``df``'s columns."""
+    writer = df.writeStream.outputMode(output_mode)
+    if output_mode == "update":
+        sink = ParquetUpsertSink(df.schema, keys)
+        run_available_now(writer.foreachBatch(sink.writer()))
+        return sink.to_df(spark)
+    path = ephemeral_dir(f"iotstream-{output_mode}-")
+    if output_mode == "append":
+        writer = writer.format("parquet").option("path", path)
+    elif output_mode == "complete":
+        writer = writer.foreachBatch(
+            lambda batch, _epoch: batch.write.mode("overwrite").parquet(path)
+        )
+    else:
+        raise ValueError(f"unknown output mode {output_mode!r}")
+    run_available_now(writer)
+    return spark.read.schema(df.schema).parquet(path)
+
+
 def windowed_agg_final_state(
     spark: SparkSession,
     stream: DataFrame,
@@ -116,9 +154,9 @@ def windowed_agg_final_state(
     watermark: str = UNBOUNDED_WATERMARK,
     round_avg: int | None = 6,
 ) -> DataFrame:
-    """Run the A1-A3 windowed aggregate as a REAL streaming query
-    (update mode + keyed upsert, exactly the KSQL MAX_TABLE → Connect →
-    Mongo path, README.md:87-107) and return the final upserted state.
+    """Run the A1-A3 windowed aggregate as a REAL streaming query and
+    return its final state: an update-mode ``drain`` keyed on
+    (window_start, keys).
 
     With the unbounded correctness watermark the final state equals the
     batch aggregate bit-for-bit — the batch-stream equivalence that
@@ -134,7 +172,4 @@ def windowed_agg_final_state(
     )
     if round_avg is not None:
         agg = agg.withColumn("avg_temperature", F.round("avg_temperature", round_avg))
-    sink = ParquetUpsertSink(key_cols=["window_start", *keys])
-    writer = agg.writeStream.outputMode("update").foreachBatch(sink.writer())
-    run_available_now(writer)
-    return sink.to_df(spark)
+    return drain(spark, agg, "update", ["window_start", *keys])

@@ -24,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iotstream.sinks import ParquetUpsertSink
-from iotstream.streaming import (
-    UNBOUNDED_WATERMARK,
-    ephemeral_dir,
-    run_available_now,
-)
+from iotstream.streaming import UNBOUNDED_WATERMARK, drain
 
 
 def enrich_against_dim_final(
@@ -40,8 +35,9 @@ def enrich_against_dim_final(
     segment_col: str,
 ) -> DataFrame:
     """Stream×static broadcast join → running per-segment totals,
-    drained availableNow; returns the final upserted state. The dim is
-    explicitly broadcast: the join never shuffles the stream."""
+    drained in update mode keyed on ``segment_col``; returns the final
+    state. The dim is explicitly broadcast: the join never shuffles the
+    stream."""
     from iotstream.schemas import finite_measures
 
     # finite-measures contract: value feeds the exact-decimal total
@@ -53,10 +49,7 @@ def enrich_against_dim_final(
         .cast("double")
         .alias("total_value"),
     )
-    sink = ParquetUpsertSink(key_cols=[segment_col])
-    writer = agg.writeStream.outputMode("update").foreachBatch(sink.writer())
-    run_available_now(writer)
-    return sink.to_df(spark)
+    return drain(spark, agg, "update", [segment_col])
 
 
 def interval_join_pairs(
@@ -72,32 +65,22 @@ def interval_join_pairs(
     """Stream-stream inner interval join: right rows in
     ``(left_ts, left_ts + max_gap]`` per key. Both sides watermarked —
     the time-range predicate lets Spark evict state once the watermark
-    passes ``left_ts + max_gap``. Output drained append-mode to parquet
-    and read back (finite correctness run).
-
-    Cost floor, profiled r9 (PROFILE_r9_streaming_interval_join.json):
-    an availableNow stream-stream join always runs TWO micro-batches —
-    batch 0 joins, batch 1 emits nothing and exists to commit the
-    advanced watermark (~1 s fixed) — plus two incremental plannings
-    and per-partition state-store open/commit on both sides. The join
-    itself adds only ~0.65 s over a trivial drain of the same source
-    at sf0.1; state width beyond ~8 strictly hurts (w16/w32 measured
-    worse), w4 vs w8 is noise. All of it is per-QUERY fixed cost that
-    amortizes under a continuous trigger at production scale — the
-    bench number is micro-batch machinery, not a row-scaling term.
+    passes ``left_ts + max_gap``. Returns every pair, drained in
+    append mode: inner-join matches are emitted eagerly, so the finite
+    run is complete. An availableNow drain always runs two
+    micro-batches: the second emits nothing and commits the advanced
+    watermark.
 
     WATERMARKED operator → STRICTLY-positive event-time contract on
     BOTH sides (schemas.positive_event_time): Spark initializes every
     watermark at epoch 0 and the join's late-input filter tests
     ``ts <= watermark``, so a row at or before epoch on either side is
     "late" to the very first micro-batch and silently dropped
-    regardless of the configured delay — measured r14 (generalizing
-    the r13 session_window finding): a 1969-12-31 23:50 error with a
-    00:05 follower lost its pair, and so did an error at EXACTLY
-    1970-01-01T00:00:00, while one at 00:00:01 kept it (strict, unlike
-    the >= contract of windowed aggs whose eviction keys on window
-    END). The explicit filter, mirrored in the oracle, turns the
-    silent drop into the declared rule."""
+    regardless of the configured delay — an error at EXACTLY
+    1970-01-01T00:00:00 loses its pair while one at 00:00:01 keeps it
+    (strict, unlike the >= contract of windowed aggs whose eviction
+    keys on window END). The explicit filter, mirrored in the oracle,
+    turns the silent drop into the declared rule."""
     from iotstream.schemas import positive_event_time
 
     lw = positive_event_time(left_stream, left_ts).withWatermark(
@@ -111,12 +94,4 @@ def interval_join_pairs(
         & (F.col(right_ts) > F.col(left_ts))
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(max_gap))
     )
-    joined = lw.join(rw, cond, "inner").drop(rw[key])
-    out_dir = ephemeral_dir("iotstream-ssj-")
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-    )
-    run_available_now(writer)
-    return spark.read.schema(joined.schema).parquet(out_dir)
+    return drain(spark, lw.join(rw, cond, "inner").drop(rw[key]), "append")

@@ -13,7 +13,6 @@ state is bounded by key cardinality, not event count.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -104,9 +103,10 @@ def _monitor(
 def quality_monitor(sensor_stream: DataFrame) -> DataFrame:
     """Per-sensor stateful quality totals over a SensorEvent stream.
 
-    Input needs columns id, ts, metrics.{temperature, humidity}; each
-    micro-batch emits the updated per-sensor totals (update semantics,
-    like the reference's continuously-updated KSQL table).
+    Input needs columns id, ts, messageId, metrics.{temperature,
+    humidity}; each micro-batch emits the updated per-sensor totals
+    (update semantics, like the reference's continuously-updated KSQL
+    table) — drain it in update mode keyed on ``id``.
     """
     from pyspark.sql import functions as F
 
@@ -124,24 +124,6 @@ def quality_monitor(sensor_stream: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_quality_monitor_final(
-    spark: Any, sensor_stream: DataFrame
-) -> DataFrame:
-    """Drain the stream (availableNow) through the monitor and return
-    the final per-sensor state via keyed upsert."""
-    from iotstream.sinks import ParquetUpsertSink
-    from iotstream.streaming import run_available_now
-
-    sink = ParquetUpsertSink(key_cols=["id"])
-    writer = (
-        quality_monitor(sensor_stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(sink.writer())
-    )
-    run_available_now(writer)
-    return sink.to_df(spark)
 
 
 # ---------------------------------------------------------------------
@@ -205,6 +187,9 @@ class StatusChangeProcessor(StatefulProcessor):
 
 
 def status_changes(sensor_stream: DataFrame) -> DataFrame:
+    """Per-sensor validity transitions via ``StatusChangeProcessor``;
+    append semantics (every batch's edges accumulate), so drain it in
+    append mode."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampType
 
@@ -230,24 +215,3 @@ def status_changes(sensor_stream: DataFrame) -> DataFrame:
         outputMode="Append",
         timeMode="None",
     )
-
-
-def run_status_changes_final(spark: Any, sensor_stream: DataFrame, out_dir: str):
-    """Drain the stream (availableNow) and return all emitted
-    transitions (append semantics — every batch's edges accumulate)."""
-    import os
-
-    from iotstream.streaming import run_available_now
-
-    path = os.path.join(out_dir, "transitions")
-
-    def _write(batch_df, _epoch: int) -> None:
-        batch_df.write.mode("append").parquet(path)
-
-    writer = (
-        status_changes(sensor_stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(_write)
-    )
-    run_available_now(writer)
-    return spark.read.parquet(path)

@@ -69,7 +69,7 @@ def test_rate_source_smoke(spark):
 
     stream = RateSensorSource(rows_per_second=200, n_sensors=5).load(spark)
     parsed = parse_sensor_json(stream)
-    sink = ParquetUpsertSink(key_cols=["messageId"])
+    sink = ParquetUpsertSink(parsed.schema, ["messageId"])
     q = (
         parsed.writeStream.outputMode("append")
         .foreachBatch(sink.writer())

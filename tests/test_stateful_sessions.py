@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from iotstream.ext.sessions import session_window_stream, sessionize_batch
 from iotstream.generator import synthetic_sensor_events
 from iotstream.schemas import load_table
-from iotstream.streaming.stateful import run_quality_monitor_final
+from iotstream.streaming import UNBOUNDED_WATERMARK, drain
+from iotstream.streaming.stateful import quality_monitor
 from tests.conftest import SF_DIR
 
 
@@ -24,7 +25,7 @@ def test_quality_monitor_totals_match_batch(spark, tmp_path):
     from iotstream.sources import FileStreamSource
 
     stream = FileStreamSource(path, gen.schema, max_files_per_trigger=1).load(spark)
-    final = run_quality_monitor_final(spark, stream)
+    final = drain(spark, quality_monitor(stream), "update", ["id"])
     rows = {r.id: r for r in final.collect()}
 
     batch = gen.groupBy("id").agg(
@@ -70,24 +71,14 @@ def test_sessionize_batch_invariants(spark):
 def test_session_window_stream_matches_batch_session_count(spark, tmp_path):
     """Streaming session_window over a drained file stream produces the
     same (user, session) partitioning as the batch lag/cumsum method."""
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp, table_path
-    from iotstream.sources import FileStreamSource
-    from iotstream.sinks import ParquetUpsertSink
-    from iotstream.streaming import run_available_now
+    from iotstream.schemas import load_events_stream
     from iotstream.sensorize import sensorize
 
-    raw_schema = load_events_raw(spark, SF_DIR).schema
-    stream = FileStreamSource(table_path(SF_DIR, "events"), raw_schema).load(spark)
-    sensor = sensorize(normalize_ns_timestamp(stream))
+    sensor = sensorize(load_events_stream(spark, SF_DIR))
     sess = session_window_stream(sensor, key="id", gap="30 minutes",
-                                 watermark="3650 days")
-    sink = ParquetUpsertSink(key_cols=["session_start", "id"])
-    # session windows support append (finalized-only) or complete;
-    # complete re-emits full state each batch → final batch = all sessions
-    run_available_now(
-        sess.writeStream.outputMode("complete").foreachBatch(sink.writer())
-    )
-    stream_sessions = sink.to_df(spark)
+                                 watermark=UNBOUNDED_WATERMARK)
+    # complete re-emits the full state each batch → last batch = all sessions
+    stream_sessions = drain(spark, sess, "complete")
 
     batch = sessionize_batch(
         sensorize(load_table(spark, SF_DIR, "events")).select(
@@ -224,18 +215,12 @@ def test_transform_with_state_status_changes_match_batch_lag(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from iotstream.schemas import load_events_raw, normalize_ns_timestamp, use_utc
+    from iotstream.schemas import load_events_raw, load_events_stream, normalize_ns_timestamp
     from iotstream.sensorize import sensorize
-    from iotstream.sources import FileStreamSource
-    from iotstream.streaming.stateful import run_status_changes_final
-    from tests.conftest import SF_DIR
+    from iotstream.streaming.stateful import status_changes
 
-    use_utc(spark)
-    raw = load_events_raw(spark, SF_DIR)
-    stream = FileStreamSource(SF_DIR + "/events.parquet", raw.schema).load(spark)
-    got = run_status_changes_final(
-        spark, sensorize(normalize_ns_timestamp(stream)), str(tmp_path)
-    )
+    stream = sensorize(load_events_stream(spark, SF_DIR))
+    got = drain(spark, status_changes(stream), "append")
     sensor = sensorize(load_events_raw(spark, SF_DIR).transform(normalize_ns_timestamp))
     t, h = F.col("metrics.temperature"), F.col("metrics.humidity")
     status = F.when(
@@ -261,7 +246,6 @@ def test_session_window_epoch_boundary_contract(spark, tmp_path):
     import datetime as dt
 
     from iotstream.sources import FileStreamSource
-    from iotstream.streaming import run_available_now
 
     rows = [
         # session ending exactly AT epoch (23:30 + 30min gap)
@@ -279,13 +263,5 @@ def test_session_window_epoch_boundary_contract(spark, tmp_path):
     df.coalesce(1).write.mode("overwrite").parquet(path)
     stream = FileStreamSource(path, df.schema).load(spark)
     sess = session_window_stream(stream, key="user_id")
-    out_dir = str(tmp_path / "sessions-out")
-
-    def _overwrite(batch_df, _epoch):
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    run_available_now(
-        sess.writeStream.outputMode("complete").foreachBatch(_overwrite)
-    )
-    got = spark.read.schema(sess.schema).parquet(out_dir).collect()
+    got = drain(spark, sess, "complete").collect()
     assert {r.user_id for r in got} == {9}

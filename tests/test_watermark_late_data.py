@@ -9,8 +9,7 @@ import time
 from pyspark.sql import functions as F
 
 from iotstream.operators.windows import tumbling_agg
-from iotstream.sinks import ParquetUpsertSink
-from iotstream.streaming import run_available_now, scoped_shuffle_partitions
+from iotstream.streaming import drain, scoped_shuffle_partitions
 
 SCHEMA = "id string, ts timestamp, value double"
 
@@ -50,14 +49,11 @@ def test_late_row_beyond_watermark_is_dropped(spark, tmp_path):
     agg = tumbling_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
-    sink = ParquetUpsertSink(key_cols=["window_start", "id"])
     with scoped_shuffle_partitions(spark, 4):
-        run_available_now(
-            agg.writeStream.outputMode("update").foreachBatch(sink.writer())
-        )
+        final = drain(spark, agg, "update", ["window_start", "id"])
     out = {
         (r.window_start.isoformat(), r.id): r.max_value
-        for r in sink.to_df(spark).collect()
+        for r in final.collect()
     }
     # the late 99 must NOT have re-opened or raised the 12:00 window
     assert out[("2024-01-01T12:00:00", "x")] == 50.0
@@ -83,14 +79,11 @@ def test_same_data_with_unbounded_watermark_keeps_late_row(spark, tmp_path):
     agg = tumbling_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
-    sink = ParquetUpsertSink(key_cols=["window_start", "id"])
     with scoped_shuffle_partitions(spark, 4):
-        run_available_now(
-            agg.writeStream.outputMode("update").foreachBatch(sink.writer())
-        )
+        final = drain(spark, agg, "update", ["window_start", "id"])
     out = {
         (r.window_start.isoformat(), r.id): r.max_value
-        for r in sink.to_df(spark).collect()
+        for r in final.collect()
     }
     assert out[("2024-01-01T12:00:00", "x")] == 99.0
 
@@ -144,21 +137,9 @@ def test_stream_stream_join_drops_rows_at_or_before_epoch(spark, tmp_path):
         & (F.col("r_ts") > F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 MINUTES"))
     )
-    out_dir = str(tmp_path / "out")
     with scoped_shuffle_partitions(spark, 4):
-        run_available_now(
-            left.join(right, cond, "inner")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-        )
-    got = sorted(
-        r.lid for r in spark.read.schema(
-            "lid string, l_ts timestamp, lv double, rid string, "
-            "r_ts timestamp, rv double"
-        ).parquet(out_dir).collect()
-    )
+        pairs = drain(spark, left.join(right, cond, "inner"), "append")
+    got = sorted(r.lid for r in pairs.collect())
     assert got == ["ctrl", "plus"]  # 'pre' and 'exact' dropped by Spark
 
 
@@ -172,12 +153,8 @@ def test_dedup_within_watermark_drops_rows_at_or_before_epoch(spark, tmp_path):
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark(["id", "ts"])
     )
-    sink = ParquetUpsertSink(key_cols=["id", "ts"])
     with scoped_shuffle_partitions(spark, 4):
-        run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(sink.writer())
-        )
-    kept = sorted((r.id, r.ts) for r in sink.to_df(spark).collect())
+        kept = sorted((r.id, r.ts) for r in drain(spark, stream, "append").collect())
     ids = [i for i, _ in kept]
     assert "pre" not in ids
     assert (
@@ -213,12 +190,8 @@ def test_session_window_keeps_epoch_exact_event(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("s"), "id", "n")
     )
-    sink = ParquetUpsertSink(key_cols=["s", "id"])
     with scoped_shuffle_partitions(spark, 4):
-        run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(sink.writer())
-        )
-    got = {(r.id, r.s) for r in sink.to_df(spark).collect()}
+        got = {(r.id, r.s) for r in drain(spark, stream, "append").collect()}
     # epoch-exact event's session survives (end = epoch+gap > 0)
     assert ("exact", dt.datetime(1970, 1, 1)) in got
     # the epoch-CROSSING pre-epoch session survives too (end +25 min)
