@@ -93,10 +93,39 @@ FORCE_WINDOW: tuple[tuple[str, int], ...] = (
     ("large_quantity_orders", 19),
     ("local_supplier_volume", 19),
     ("shipping_priority", 19),
+    ("pricing_summary", 19),
     ("topk_per_group", 19),
     ("enrichment_join", 19),
     ("user_value_deciles", 19),
     ("grouping_sets_volume", 19),
+    # r19 pins: one kernel per decision in ext/. Word n-grams come from
+    # text.word_ngrams and the hashed shingle set from
+    # dedup.shingle_sets (simhash now votes over distinct shingles);
+    # the over-cap guard is dedup.drop_overcap_groups; the temporal
+    # bucket parser is one _bucket and gap-fill segments one helper;
+    # the quality score builds its stop-word count once. The rest
+    # (dedup_exact, asof_join, interval_join, continuous_rollup,
+    # rate_of_change, ewma_smooth) share a module preamble that changed.
+    ("quality_score", 19),
+    ("ngram_counts", 19),
+    ("corpus_curate", 19),
+    ("lm_bigram_xent", 19),
+    ("decontaminate_ngram", 19),
+    ("dedup_exact", 19),
+    ("neardup_editdist", 19),
+    ("simhash", 19),
+    ("neardup_jaccard", 19),
+    ("neardup_minhash", 19),
+    ("dedup_clusters", 19),
+    ("dedup_clusters_lsh", 19),
+    ("gapfill_locf", 19),
+    ("interpolate_linear", 19),
+    ("time_weighted_avg", 19),
+    ("asof_join", 19),
+    ("interval_join", 19),
+    ("continuous_rollup", 19),
+    ("rate_of_change", 19),
+    ("ewma_smooth", 19),
 )
 
 

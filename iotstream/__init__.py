@@ -15,7 +15,7 @@ Layout:
     sensorize   — deterministic events→sensor-event derivation (test parity)
     operators   — parse (F1/C1), filter (F2), project (F3/F5), windows (A1-A3)
     sources     — source abstraction (S1-S4): parquet | file-stream | rate | kafka
-    sinks       — foreachBatch writers (K1-K5) incl. keyed upsert
+    sinks       — foreachBatch writers (K1-K4) incl. keyed upsert
     pipeline    — the reference topology (dual sink: pre-filter raw, post-filter clean)
     streaming   — watermark policy, drain (availableNow, one per output mode)
     ext         — LLM-data-pipeline operators: dedup, similarity, text, multimodal, joins

@@ -24,14 +24,8 @@ class EngineConfig:
     # storage
     raw_archive_path: str = "/tmp/iotstream/raw"
     clean_path: str = "/tmp/iotstream/clean"
-    agg_path: str = "/tmp/iotstream/agg"
-    checkpoint_dir: str = "/tmp/iotstream/checkpoints"
-    # streaming policy (SURVEY.md §2.8 T3/T6)
-    watermark_delay: str = "10 minutes"
+    # streaming policy (SURVEY.md §2.8 T6)
     window_width: str = "1 minute"
-    trigger_interval: str | None = None  # None → availableNow in tests
-    # spark tuning
-    shuffle_partitions: int = 32
     extra: dict = field(default_factory=dict)
 
     @classmethod

@@ -12,49 +12,29 @@ The exact all-pairs Jaccard in ``neardup_jaccard_exact`` exists as the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from iotstream.ext.text import word_ngrams
 
 SHINGLE_WIDTH = 3
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    """Small single-file fixture scans arrive as ONE partition, which
-    serializes every CPU-bound derivation downstream onto one core.
-    Round-robin repartition to the session's parallelism first — the
-    shuffle is tiny next to the shingle/hash work it parallelizes.
+    """``df`` round-robin repartitioned to the session's parallelism
+    when it has fewer splits than that, else ``df`` itself. A
+    single-file fixture scan arrives as one partition and would
+    serialize the CPU-bound shingle/hash work downstream onto one core;
+    a scan that is already wide must not pay a full-corpus shuffle.
 
-    GUARDED: only fans out when the scan actually has fewer splits
-    than the session's parallelism. At real scale the scan already has
-    thousands of splits (governed by spark.sql.files.maxPartitionBytes)
-    and an unconditional ``repartition`` would be a full-corpus shuffle
-    for nothing.
-
-    The probe is ``df.inputFiles()`` — a driver-side listing off the
-    plan's resolved file indexes (no job, no physical plan). The old
-    ``.rdd.getNumPartitions()`` probe compiled a throwaway non-AQE
-    physical plan per invocation, an A/B-measured 15-25% overhead on
-    every caller and driver work proportional to plan size at scale.
-    ``len(inputFiles())`` undercounts splits for LARGE files (the scan
-    splits them at spark.sql.files.maxPartitionBytes), and a compacted
-    corpus — few huge parquet files — is exactly where a spurious
-    full-corpus repartition hurts most. So when the file count alone is
-    below parallelism, the guard refines the estimate with per-file
-    sizes: splits ≈ Σ ceil(size / maxPartitionBytes). Size lookups only
-    happen on that branch, i.e. for fewer than ``parallelism`` files —
-    bounded driver work. Non-file inputs (in-memory test frames) list
-    zero files and fan out — correct for their only use, tiny local
-    data; size-probe failures (exotic filesystems) fall back to the
-    file count alone.
-
-    CALLER CONTRACT: pass a (possibly filtered/projected) FILE-SCAN
-    frame. ``inputFiles()`` reflects the underlying scan, not the
-    frame's current partitioning — a post-shuffle or cached frame
-    lists no files (or a file count unrelated to its partitions) and
-    would otherwise be repartitioned even when it already has
-    ≥ parallelism partitions — since r8 that case falls back to the
-    frame's actual partition count (see the branch comment below).
-    Every in-repo caller feeds a raw scan."""
+    Splits are estimated driver-side with no job: the scan's file count
+    (``inputFiles()``), refined when below parallelism by
+    Σ ceil(size / spark.sql.files.maxPartitionBytes), so a compacted
+    corpus of few large files is not repartitioned (a failed size probe
+    falls back to the file count). A frame with no scan files
+    (in-memory, post-shuffle, cached) is judged by its actual partition
+    count, which compiles a physical plan; pass a file scan where
+    possible."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     if len(files) >= parallelism:
@@ -62,14 +42,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     if files and _estimated_splits(df, files) >= parallelism:
         return df
     if not files and df.rdd.getNumPartitions() >= parallelism:
-        # CALLER-CONTRACT enforcement (r8, VERDICT r7 item 6): a frame
-        # with no scan files (in-memory, post-shuffle, cached) falls
-        # back to its ACTUAL partition count — already-wide frames
-        # return untouched instead of paying a spurious full shuffle.
-        # The rdd probe compiles a throwaway physical plan (the 15-25%
-        # overhead the inputFiles() fast path avoids), but only the
-        # no-file branch pays it and no in-repo caller (all raw
-        # scans) ever takes it.
         return df
     return df.repartition(parallelism)
 
@@ -140,75 +112,57 @@ def dedup_exact(docs: DataFrame, key: str = "text") -> DataFrame:
     )
 
 
-def with_shingles(docs: DataFrame, n: int = SHINGLE_WIDTH) -> DataFrame:
-    """Distinct word n-gram shingles per document, as an ARRAY column.
-    Word-level shingles (not token sets — with a 31-word vocabulary
-    token sets saturate and every pair looks similar; n-grams restore
-    discrimination). Use only where the per-doc array is genuinely
-    needed (pairwise verify); for per-shingle pipelines use
-    ``exploded_shingles`` — exploding this array re-evaluates the
-    interpreted HOF lambda per generated row (quadratic per doc)."""
-    # element_at is 1-based, matching the oracle's DuckDB list indexing.
-    # The size(w) >= n guard is load-bearing: Spark's sequence(a, b)
-    # COUNTS DOWN when b < a, so a doc with fewer than n words (or NULL
-    # text, where size(NULL) = -1) would index past the array and crash
-    # the whole stage — such docs have zero n-gram shingles by
-    # definition (found by tools/degenerate_sweep.py's NULL corpus).
-    lam = " ".join(
-        ["concat_ws(' ',"]
-        + [f"element_at(w, i + {k})," for k in range(n - 1)]
-        + [f"element_at(w, i + {n - 1}))"]
-    )
-    return docs.withColumn("w", F.split("text", " ")).withColumn(
-        "shingles",
-        F.expr(
-            f"if(size(w) >= {n}, "
-            f"array_distinct(transform(sequence(1, size(w) - {n - 1}), i -> {lam})), "
-            "array())"
-        ),
-    )
+def shingle_sets(docs: DataFrame, n: int = SHINGLE_WIDTH) -> DataFrame:
+    """(doc_id, gs): each document's DISTINCT word n-gram shingles as
+    ``xxhash64`` longs. Documents with fewer than n words have no row.
+    One doc-keyed shuffle; map-side partial sets absorb in-doc repeats.
+
+    A 64-bit hash stands in for the shingle (the trade MinHash already
+    makes): a collision perturbs one set by one element, negligible
+    against any dedup threshold at 10^12 shingles."""
+    hashed = word_ngrams(docs, n).select("doc_id", F.xxhash64("ngram").alias("g"))
+    return hashed.groupBy("doc_id").agg(F.collect_set("g").alias("gs"))
 
 
-def exploded_shingles(
-    docs: DataFrame, n: int = SHINGLE_WIDTH, dedup: bool = True
+def drop_overcap_groups(
+    df: DataFrame,
+    keys: list[str],
+    cap: int | None,
+    name: str,
+    guard_stats: dict | None = None,
 ) -> DataFrame:
-    """One (doc_id, g) row per word n-gram shingle. Explodes an index
-    SEQUENCE first and builds each shingle string once per output row —
-    measured ~6× faster than explode(transform(...)), whose interpreted
-    lambda chain is re-evaluated per generated row. ``dedup=True``
-    distincts per-doc shingles (one narrow shuffle; map-side partial
-    aggregation absorbs in-doc repeats since a doc's rows are
-    co-partitioned on its scan split). Pass ``dedup=False`` for
-    consumers invariant to duplicates (e.g. min() in MinHash) to skip
-    that shuffle entirely."""
-    parts = ", ".join(f"element_at(w, i + {k})" for k in range(n))
-    ex = (
-        docs.withColumn("w", F.split("text", " "))
-        .filter(F.expr(f"size(w) >= {n}"))
-        .select(
-            "doc_id",
-            "w",
-            F.explode(F.expr(f"sequence(1, size(w) - {n - 1})")).alias("i"),
-        )
-        .select("doc_id", F.expr(f"concat_ws(' ', {parts})").alias("g"))
+    """The rows of ``df`` whose ``keys`` group has at most ``cap`` rows
+    (``cap=None`` returns ``df``). A window count over ``keys``: callers
+    pass the keys their next operator partitions on, so the guard adds
+    no shuffle and no second evaluation of ``df``.
+
+    ``guard_stats`` (dict) receives ``"observation"``, a
+    ``pyspark.sql.Observation`` called ``name`` whose ``dropped_rows``
+    (rows in over-cap groups) is available after an action."""
+    if cap is None:
+        return df
+    sized = df.withColumn(
+        "_gsz", F.count(F.lit(1)).over(Window.partitionBy(*keys))
     )
-    return ex.distinct() if dedup else ex
+    if guard_stats is not None:
+        obs = Observation(name)
+        guard_stats["observation"] = obs
+        sized = sized.observe(
+            obs, F.sum((F.col("_gsz") > cap).cast("long")).alias("dropped_rows")
+        )
+    return sized.filter(F.col("_gsz") <= cap).drop("_gsz")
 
 
-def minhash_signature(exploded: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """MinHash signature from (doc_id, g) shingle rows: for seed s, min
-    over shingles of xxhash64(shingle, s).
-
-    Implementation note: NOT nested higher-order functions — Spark
-    evaluates HOF lambdas interpreted (outside whole-stage codegen), ~an
-    order of magnitude slower. ``num_hashes`` plain min() aggregates
-    (hash + agg fully codegen'd) → reassemble array. One shuffle on
-    doc_id with map-side partial mins; duplicate shingles don't change
-    a min, so the input needs no per-doc dedup."""
+def minhash_signature(ngrams: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """(doc_id, signature) from (doc_id, ngram) rows: for seed s, the
+    min over the document's n-grams of xxhash64(ngram, s). Plain min()
+    aggregates (codegen'd, no lambdas) reassembled into an array; one
+    doc-keyed shuffle, and repeated n-grams do not change a min."""
     mins = [
-        F.min(F.xxhash64("g", F.lit(s))).alias(f"mh{s}") for s in range(num_hashes)
+        F.min(F.xxhash64("ngram", F.lit(s))).alias(f"mh{s}")
+        for s in range(num_hashes)
     ]
-    per_doc = exploded.groupBy("doc_id").agg(*mins)
+    per_doc = ngrams.groupBy("doc_id").agg(*mins)
     return per_doc.select(
         "doc_id", F.array(*[f"mh{s}" for s in range(num_hashes)]).alias("signature")
     )
@@ -220,80 +174,36 @@ def lsh_candidate_pairs(
     max_bucket: int | None = None,
     guard_stats: dict | None = None,
 ) -> DataFrame:
-    """Band the signature and emit candidate pairs per matching band
-    bucket. Shuffle key = (band index, band hash): only documents that
-    collide in ≥1 band are ever paired — candidate count scales with
-    true near-dup density, not corpus size².
+    """Distinct (doc_a < doc_b) pairs whose signatures agree on at
+    least one of ``bands`` equal slices. Shuffle key = (band, bucket
+    hash), so candidates scale with near-dup density, not corpus size².
 
-    ``max_bucket`` is the skew guard for the one way this goes
-    quadratic at 100 TB: a mega-bucket (a viral document duplicated
-    millions of times, or a degenerate signature) makes its
-    within-bucket join bucket²-sized. Buckets larger than the cap are
-    DROPPED from candidate generation — standard LSH-dedup practice,
-    because a bucket that size is either an exact-dup cluster (already
-    collapsed by the exact-dedup pass that should precede near-dup)
-    or hash-degenerate noise. Capped buckets trade recall only among
-    documents that collide with >max_bucket others; pairs they share
-    through OTHER bands are unaffected. Default None keeps the exact
-    semantics for oracle-graded runs.
-
-    ``guard_stats`` (ADVICE r7: make guard drops observable): pass a
-    dict to receive ``{"observation": pyspark.sql.Observation}``
-    whose ``dropped_rows`` metric — banded rows discarded by the
-    ``max_bucket`` cap — is available after an action runs. Zero on
-    every fixture corpus."""
-    # r18 (guide §4.2-adjacent, JVM-side): explode the band INDEX and
-    # hash the sliced signature array directly. The old form built a
-    # per-band struct inside a transform() lambda (interpreted,
-    # re-evaluated per explode output row) and serialized each band
-    # slice to a JSON STRING just to hash it; xxhash64 hashes
-    # array<bigint> natively, and an exploded index column keeps the
-    # whole projection inside whole-stage codegen — one evaluation per
-    # output row. Bucket VALUES change (hash of longs, not of their
-    # JSON rendering); bucket semantics (equal slices ⇒ equal bucket)
-    # and the downstream exact-verify are unchanged, so output pairs
-    # are identical whenever banding recall is 1 — re-proven vs the
-    # oracle at every SF, and the LSH-feed == exact-feed cluster tests
-    # pin it.
-    banded = (
-        signed.select(
-            "doc_id",
-            "signature",
-            F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band"),
-        )
-        .select(
-            "doc_id",
-            "band",
-            F.xxhash64(
-                F.expr(
-                    f"slice(signature, band * (size(signature) div {bands}) + 1, "
-                    f"size(signature) div {bands})"
-                )
-            ).alias("bucket"),
-        )
-    )
-    if max_bucket is not None:
-        # Window count over the (band, bucket) partition the pair join
-        # shuffles on anyway: ONE pass over the banded rows — an
-        # agg+join-back would re-evaluate the whole minhash lineage for
-        # the count side, a full extra corpus scan at the scale this
-        # guard exists for.
-        from pyspark.sql import Window
-
-        _bsz = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        banded = banded.withColumn("_bsz", _bsz)
-        if guard_stats is not None:
-            from pyspark.sql import Observation
-
-            obs = Observation("lsh_candidate_pairs_guard")
-            guard_stats["observation"] = obs
-            banded = banded.observe(
-                obs,
-                F.sum(
-                    (F.col("_bsz") > max_bucket).cast("long")
-                ).alias("dropped_rows"),
+    ``max_bucket`` drops (band, bucket) groups larger than the cap
+    before pairing (None = exact semantics): identical texts collide in
+    every band, and one group's pairing costs bucket². Pairs the dropped
+    documents share through other bands still surface. ``guard_stats``
+    is ``drop_overcap_groups``'s, observation
+    ``lsh_candidate_pairs_guard``."""
+    # Exploding the band index and hashing the sliced array keeps the
+    # projection inside whole-stage codegen.
+    banded = signed.select(
+        "doc_id",
+        "signature",
+        F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band"),
+    ).select(
+        "doc_id",
+        "band",
+        F.xxhash64(
+            F.expr(
+                f"slice(signature, band * (size(signature) div {bands}) + 1, "
+                f"size(signature) div {bands})"
             )
-        banded = banded.filter(F.col("_bsz") <= max_bucket).drop("_bsz")
+        ).alias("bucket"),
+    )
+    banded = drop_overcap_groups(
+        banded, ["band", "bucket"], max_bucket, "lsh_candidate_pairs_guard",
+        guard_stats,
+    )
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -308,40 +218,23 @@ def lsh_candidate_pairs(
     )
 
 
-def _jaccard(pairs: DataFrame, shingled: DataFrame) -> DataFrame:
-    """Exact shingle-Jaccard for given candidate (doc_a, doc_b) pairs.
-
-    The shingle ARRAY is built once per document BELOW the candidate
-    joins (one narrow corpus pass), then replicated per pair by the
-    join. An r17 experiment moved the array build ABOVE the joins
-    (survivors only, no corpus-wide pass); the x16 scale probe
-    rejected it — on a dup-dense corpus candidate pairs outnumber
-    documents (every exact-dup group of size g collides in all bands,
-    g^2/2 pairs), so per-pair recomputation turned the verify stage
-    from O(corpus + pairs*intersect) into O(pairs*(build+intersect)):
-    neardup_minhash x16 went 3.2 s -> 15.3 s. The corpus pass is the
-    cheaper side of that trade at every density the LSH path is
-    designed for; keep it."""
-    sets_ = shingled.select("doc_id", "shingles")
+def _jaccard(pairs: DataFrame, sets_: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard of candidate (doc_a, doc_b) pairs over
+    ``shingle_sets`` rows. The sets are built once per document below
+    the pair joins: on a dup-dense corpus pairs outnumber documents, so
+    building them per pair would cost more than the corpus pass."""
+    side = lambda k: sets_.select(  # noqa: E731
+        F.col("doc_id").alias(f"doc_{k}"), F.col("gs").alias(f"gs_{k}")
+    )
     return (
-        pairs.join(
-            sets_.select(
-                F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sets_.select(
-                F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-            ),
-            "doc_b",
-        )
+        pairs.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
             (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
+                F.size(F.array_intersect("gs_a", "gs_b")).cast("double")
+                / F.size(F.array_union("gs_a", "gs_b"))
             ).alias("jaccard"),
         )
     )
@@ -355,87 +248,48 @@ def neardup_minhash(
     max_bucket: int | None = 4096,
     guard_stats: dict | None = None,
 ) -> DataFrame:
-    """E2 scale path: MinHash+LSH candidates → exact Jaccard verify.
-    With 32 hashes / 8 bands (r=4), collision prob at J=0.5 per band is
-    0.5⁴=6.25% → ≥1-of-8 bands ≈ 40%;  at J=0.9 ≈ 99.6% — tune
-    bands/hashes per corpus. Returns pairs with verified J ≥ threshold.
-    ``max_bucket`` passes through to the skew guard in
-    ``lsh_candidate_pairs``.
+    """E2 scale path: (doc_a, doc_b, jaccard) pairs with exact shingle
+    Jaccard ≥ ``threshold`` among MinHash+LSH candidates. With 32
+    hashes / 8 bands a pair at J=0.5 is a candidate with probability
+    ≈40%, at J=0.9 ≈99.6%; tune ``bands``/``num_hashes`` per corpus.
 
-    The guard is ON by default since r7 (cap 4096): identical texts
-    collide in EVERY band no matter the banding parameters, so a
-    mass-duplicated document is the one input no parameter choice can
-    defuse — the r7 scale probe measured the unguarded DECLARED entry
-    at 313 s on a ×64 corpus whose 10% mega-dup group the guard
-    handles in 6 s at exponent ~0.2 (SCALE_PROBE_r7). A (band,
-    bucket) group larger than 4096 is an exact-dup cluster (owned by
-    the dedup_exact pass that precedes near-dup in the documented
-    pipeline order) or hash-degenerate noise, never an organic
-    near-dup neighborhood — fixture buckets max out at 4 across all
-    SFs, so graded outputs are provably unchanged. Pass ``None`` for
-    uncapped exact-recall semantics; pass ``guard_stats`` (dict) to
-    receive an Observation whose ``dropped_rows`` metric makes guard
-    drops visible instead of silent (ADVICE r7)."""
+    ``max_bucket`` and ``guard_stats`` pass to ``lsh_candidate_pairs``.
+    The cap is on by default: a mass-duplicated document collides in
+    every band under any banding, and a group above 4096 is an exact-dup
+    cluster (owned by ``dedup_exact``, which runs first) or hash noise.
+    Pass ``None`` for uncapped exact-recall semantics."""
     fanned = fan_out(docs)
-    ex = exploded_shingles(fanned, dedup=False)  # min() ignores repeats
     cands = lsh_candidate_pairs(
-        minhash_signature(ex, num_hashes),
+        minhash_signature(word_ngrams(fanned, SHINGLE_WIDTH), num_hashes),
         bands,
         max_bucket=max_bucket,
         guard_stats=guard_stats,
     )
-    j = _jaccard(cands, with_shingles(fanned))
+    j = _jaccard(cands, shingle_sets(fanned))
     return j.filter(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 
 def neardup_jaccard_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """E2 verify/oracle path: exact shingle-Jaccard via inverted-index
-    join (explode shingles, join on shingle, count intersections).
-    Quadratic in per-shingle document frequency — correctness tool, not
-    the 100 TB path (that's ``neardup_minhash``)."""
-    # r18 (guide §2.3/§2.4): one doc-keyed exchange builds BOTH the
-    # per-doc distinct shingle set and its size. The r17 form paid a
-    # (doc_id, g-string) distinct exchange, a doc-keyed count agg, and
-    # a doc-keyed join to glue them; collect_set over pre-hashed
-    # shingles does all three in a single narrow shuffle (map-side
-    # partial sets absorb in-doc repeats — a doc's rows are
-    # co-partitioned on its scan split), and every downstream key is
-    # an 8-byte long instead of a ~25-byte shingle string.
-    #
-    # Hashing note: xxhash64(shingle) stands in for the shingle, the
-    # same identity-by-64-bit-hash trade MinHash already makes.
-    # Collisions perturb one pair count by 1; at the fixture scale the
-    # probability is ~1e-10 (oracle-verified identical at every SF),
-    # and at 10^12 shingles the expected few-dozen global collisions
-    # are noise against a 0.5 dedup threshold.
-    ex = exploded_shingles(fan_out(docs), dedup=False).select(
-        "doc_id", F.xxhash64("g").alias("g")
+    """E2 verify/oracle path: every (doc_a, doc_b, jaccard) pair with
+    exact shingle Jaccard ≥ ``threshold``, via an inverted-index join
+    (explode the shingle sets, join on shingle, count intersections).
+    Quadratic in per-shingle document frequency — a correctness tool,
+    not the 100 TB path (that is ``neardup_minhash``)."""
+    tok = shingle_sets(fan_out(docs)).select(
+        "doc_id", F.size("gs").alias("n"), F.explode("gs").alias("g")
     )
-    per_doc = ex.groupBy("doc_id").agg(F.collect_set("g").alias("_gs"))
-    tok = per_doc.select(
-        "doc_id", F.size("_gs").alias("n"), F.explode("_gs").alias("g")
-    )
-    # shuffle_hash hint: the shingle self-join's per-key groups are
-    # df-bounded — hash builds beat sort-merge's double sort here
-    # (A/B ~20-25% at sf0.1). Safe for THIS kernel because it is
-    # the capped correctness tool (module header: never the 100 TB
-    # path); the scale path (neardup_minhash) keeps Spark's defaults.
+    # Hash builds beat sort-merge's double sort on the df-bounded
+    # per-shingle groups of this capped kernel.
     a, b = tok.alias("a"), tok.hint("shuffle_hash").alias("b")
-    # Lossless size-ratio prune: J(a,b) <= min(na,nb)/max(na,nb), so a
-    # pair can only reach J >= t when the smaller set is at least t of
-    # the larger — drop the rest before the pair-count aggregation.
+    # Lossless size-ratio prune: J(a,b) <= min(na,nb)/max(na,nb).
     ratio_ok = (
         (F.col("a.n") >= F.lit(threshold) * F.col("b.n"))
         & (F.col("b.n") >= F.lit(threshold) * F.col("a.n"))
     )
-    # Set sizes ride the pair aggregation (r17): n is functionally
-    # dependent on its doc_id, so min() recovers it per group and the
-    # two post-aggregation join-backs to sz (two more joins + two
-    # exchanges + a third evaluation of the sz lineage) disappear —
-    # guide §2.4, "remove shuffles outright". Values are unchanged:
-    # same i, same na/nb, same jaccard arithmetic.
+    # n is functionally dependent on doc_id, so min() carries each set
+    # size through the pair aggregation without a join-back.
     inter = (
         a.join(
             b,
@@ -461,27 +315,15 @@ def neardup_jaccard_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 
 
 def simhash64(docs: DataFrame) -> DataFrame:
-    """SimHash: sign-aggregate the bits of per-shingle 64-bit hashes.
-    Near-dups differ in few bits → group by hash or probe by Hamming
-    distance. Pure expressions; engine-internal (hash functions are not
-    cross-engine comparable).
-
-    Votes are FREQUENCY-WEIGHTED (shingle multiset, the standard
-    Charikar/Manku formulation — features vote once per occurrence):
-    r7 dropped the per-doc distinct that de-weighted repeats, removing
-    a full corpus-sized shuffle — the ONE aggregation on doc_id is now
-    the only exchange, with map-side partial votes absorbing in-doc
-    repeats for free (measured 1.67→0.84 s at sf0.1; on this corpus
-    0.1% of shingle rows are repeats, so signatures barely move).
-    Byte-identical texts still get identical signatures — the graded
-    invariant sheet (q_simhash) is weighting-independent."""
-    # Index-explode + 64 plain sign-vote aggregates: stays inside
-    # whole-stage codegen (nested HOF lambdas are interpreted and ~10×
-    # slower, and exploding a transform() array re-evaluates the lambda
-    # per generated row).
-    ex = exploded_shingles(fan_out(docs), dedup=False).select(
-        "doc_id", F.xxhash64("g").alias("h")
-    )
+    """(doc_id, simhash): Charikar SimHash over each document's distinct
+    shingle set — bit b is set when more shingle hashes have bit b set
+    than clear. Near-dups differ in few bits; byte-identical texts get
+    identical signatures. Engine-internal (hash functions are not
+    cross-engine comparable). Documents with fewer than
+    ``SHINGLE_WIDTH`` words have no row."""
+    # 64 plain sign-vote aggregates stay inside whole-stage codegen; the
+    # vote groupBy reuses the set aggregation's doc_id partitioning.
+    ex = shingle_sets(fan_out(docs)).select("doc_id", F.explode("gs").alias("h"))
     votes = [
         F.sum(F.expr(f"IF(((h >> {b}) & 1) = 1, 1, -1)")).alias(f"v{b}")
         for b in range(64)
@@ -514,8 +356,6 @@ def dedup_report(
     1 — `tests/test_ext_dedup.py` asserts text-channel equality and
     ≥0.9 embedding-channel recall on the fixture corpus.
     """
-    from pyspark.sql import Window
-
     from iotstream.ext.similarity import neardup_embedding, neardup_embedding_lsh
 
     # canonical via min-over-key window: one scan + one shuffle, no
@@ -582,56 +422,24 @@ def neardup_editdist(
     max_block: int | None = 1024,
     guard_stats: dict | None = None,
 ) -> DataFrame:
-    """E2 variant: edit-distance near-dup on blocked candidate pairs —
-    catches character-level mutations (typos, OCR noise) that
-    token-set Jaccard is blind to.
+    """E2 variant: (doc_a, doc_b, dist) pairs whose first ``prefix_len``
+    characters are within Levenshtein distance ``max_dist`` — catches
+    character-level mutations (typos, OCR noise) that token-set Jaccard
+    is blind to.
 
-    Blocking: pairs must share (source, n_chars // bucket_chars), so
-    the self-join is an equi-join on the block key — candidate count
-    scales with block density. SCALE CAVEAT (r7 declared-probe
-    finding, exponent 0.90 at ×16): block density itself grows with
-    the corpus — similar-length docs are organic, which makes this
-    kernel quadratic-in-N within blocks at web scale. Its production
-    role there is the VERIFY predicate over candidates from a
-    sublinear generator (SimHash buckets / MinHash bands), with the
-    length-delta prune and banded levenshtein unchanged; standalone
-    use is for corpus sizes where length-blocked density stays
-    bounded. The O(prefix_len²) levenshtein kernel runs JVM-side on a
-    fixed-length prefix, and the cheap length-delta prune
-    (|Δn_chars| ≤ max_dist, a lower bound on edit distance) drops most
-    pairs before it.
+    Candidates must share (source, n_chars // bucket_chars) and differ
+    in length by at most ``max_dist`` (a lower bound on edit distance),
+    so the self-join is an equi-join on the block key. Block density
+    grows with the corpus, so standalone use is quadratic within blocks
+    at web scale; there this is the verify predicate over candidates
+    from a sublinear generator (SimHash buckets, MinHash bands).
 
-    ``max_block`` (VERDICT r7 item 4 — ON by default since r8,
-    mirroring the ``max_bucket`` mechanism at cap 1024: each surviving
-    pair here pays a banded levenshtein (~max_dist·prefix_len char
-    ops, two orders heavier than an LSH hash compare), so the
-    comparable-work cap sits lower): identical-length boilerplate mass
-    (one hot (source, length-bucket) block) makes the self-join
-    block² and NO parameter choice defuses it — the same adversarial
-    shape as the LSH mega-bucket the r7 guard closed. Blocks larger
-    than the cap are dropped from candidate generation: a block that
-    size is dominated by boilerplate/exact-dup mass (owned by the
-    exact-dedup pass that precedes near-dup in the documented
-    pipeline order), not organic typo neighborhoods. Unlike the LSH
-    guards there is no second band to re-surface dropped pairs, so
-    the drop IS a recall trade at the cap boundary — which is why it
-    is observable: pass ``guard_stats`` (dict) to receive
-    ``{"observation": pyspark.sql.Observation}`` whose
-    ``dropped_rows`` metric (rows in over-cap blocks) is available
-    after an action. Fixture blocks max out far below the cap at
-    every SF, so graded outputs are unchanged (suppression pytest).
-    Pass ``None`` for uncapped exact semantics.
-
-    Two plan-shape guards learned from .explain(): (1) Catalyst pushes
-    the ``dist <= max_dist`` filter INTO the join condition, so the
-    levenshtein runs in the join's probe stage — a post-join
-    repartition can never parallelize it. The probe side itself is
-    round-robin repartitioned (explicit numbered repartition, which AQE
-    will not coalesce away on small inputs), spreading the quadratic
-    per-block pair expansion evenly even for hot blocks. (2) The
-    threshold form ``levenshtein(a, b, max_dist)`` bounds the DP band
-    to O(max_dist·n) and returns -1 past the bound — survivors carry
-    their exact distance, everything else short-circuits."""
+    ``max_block`` drops (source, bucket) blocks larger than the cap
+    (None = exact semantics): identical-length boilerplate makes one
+    block² pairs under any parameters. With no second band to re-surface
+    dropped pairs the cap is a recall trade, observable through
+    ``guard_stats`` (``drop_overcap_groups``'s, observation
+    ``neardup_editdist_guard``)."""
     n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     pick = docs.select(
         "doc_id",
@@ -640,26 +448,14 @@ def neardup_editdist(
         (F.col("n_chars") / bucket_chars).cast("long").alias("bucket"),
         F.substring("text", 1, prefix_len).alias("prefix"),
     )
-    if max_block is not None:
-        # Window count over the (source, bucket) partition the join
-        # shuffles on anyway — one pass, same shape as the LSH
-        # max_bucket guard.
-        from pyspark.sql import Window
-
-        _bsz = F.count(F.lit(1)).over(Window.partitionBy("source", "bucket"))
-        pick = pick.withColumn("_bsz", _bsz)
-        if guard_stats is not None:
-            from pyspark.sql import Observation
-
-            obs = Observation("neardup_editdist_guard")
-            guard_stats["observation"] = obs
-            pick = pick.observe(
-                obs,
-                F.sum(
-                    (F.col("_bsz") > max_block).cast("long")
-                ).alias("dropped_rows"),
-            )
-        pick = pick.filter(F.col("_bsz") <= max_block).drop("_bsz")
+    pick = drop_overcap_groups(
+        pick, ["source", "bucket"], max_block, "neardup_editdist_guard",
+        guard_stats,
+    )
+    # Catalyst pushes the distance filter into the join condition, so the
+    # levenshtein runs in the join's probe stage; a numbered round-robin
+    # repartition of the probe side (which AQE keeps) spreads hot blocks.
+    # levenshtein(a, b, max_dist) bounds the DP band and returns -1 past it.
     a, b = pick.repartition(n).alias("a"), pick.alias("b")
     dist = F.levenshtein(
         F.col("a.prefix"), F.col("b.prefix"), max_dist

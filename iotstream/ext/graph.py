@@ -35,7 +35,6 @@ def connected_components(
     dst: str = "dst",
     node: str = "node",
     max_iter: int = 25,
-    shortcut: bool = False,
 ) -> DataFrame:
     """Label every node with the MIN node id reachable from it.
 
@@ -52,40 +51,17 @@ def connected_components(
     propagated labels — components are then split too fine, never
     merged wrongly (labels only ever decrease toward the true min).
 
-    ``shortcut=True`` adds a pointer-doubling step per round — after
-    propagating over edges, each node also adopts its LABEL'S label
-    (label chains halve every round, the classic parallel-CC
-    shortcutting trick), so rounds drop from O(diameter) to
-    O(log diameter) at the cost of one extra self-join on the label
-    key per round. Same fixed point, same monotone-decrease invariant
-    (a node's label is always the id of some node in its own
-    component, so shortcutting can never cross components). Use it
-    when deep chains are plausible; the default single-join form wins
-    on the shallow graphs near-dup detection actually produces.
-
-    Edge-case contract on ``nodes`` (deliberate; ADVICE r17 — the r17
-    one-shuffle rewrite changed these from the old left-join form):
-    a ``nodes`` row with a NULL id is DROPPED (its min(_old) is NULL,
-    the candidate-row filter removes it — NULL is not a vertex), and
-    duplicate ``nodes`` rows collapse to ONE output row per node id
-    (groupBy semantics; the old formulation preserved duplicates).
-    Both are unreachable from the graded queries (their vertex sets
-    are non-NULL and distinct); direct callers wanting the old
-    duplicate-preserving behavior should join this result back to
-    their row set.
+    A ``nodes`` row with a NULL id is dropped (NULL is not a vertex),
+    and duplicate ``nodes`` rows collapse to one output row per node id;
+    callers needing one row per input row join this result back.
     """
     adj = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        # Pre-partition on the per-round join key (r17, guide §2.4):
-        # distinct() leaves the cache hash-partitioned on (a, b), which
-        # satisfies NO downstream requirement — every round would
-        # re-exchange the cached adjacency on `a` before joining it to
-        # the label table. One explicit repartition at build time moves
-        # that shuffle out of the loop: rounds now read co-partitioned
-        # cached partitions directly ("pre-partition both on node", as
-        # the module header always claimed).
+        # Pre-partition on the per-round join key: distinct() leaves the
+        # cache partitioned on (a, b), which no round can use, so this
+        # moves the adjacency exchange out of the loop.
         .repartition(F.col("a"))
         .persist()
     )
@@ -94,18 +70,12 @@ def connected_components(
     converged = False
     try:
         for _ in range(max_iter):
-            # ONE shuffle per round (r17; was three node-keyed
-            # exchanges: groupBy(b) on the neighbor table, labels into
-            # the left join, join output). The neighbor-candidate rows
-            # and the current labels are unioned and min-aggregated in
-            # a single groupBy: new = min(old, min over neighbors) —
-            # the exact update rule of the old join+coalesce+least
-            # formulation. `_old` rides along as min(old-side label)
-            # (exactly one labels row per node; min ignores the NULL
-            # the candidate rows carry), so convergence detection needs
-            # no old-vs-new join either. Candidate rows whose endpoint
-            # is outside `nodes` surface with _old NULL and are dropped
-            # — identical to the old left join keeping only label rows.
+            # One shuffle per round: neighbor-candidate rows and the
+            # current labels are unioned and min-aggregated in a single
+            # groupBy, new = min(old, min over neighbors). `_old` rides
+            # along as min(old-side label) (min ignores the candidates'
+            # NULL), so convergence needs no old-vs-new join; candidates
+            # whose endpoint is outside `nodes` keep _old NULL and drop.
             cand = adj.join(labels, adj["a"] == labels["node"]).select(
                 F.col("b").alias("node"),
                 "label",
@@ -122,23 +92,6 @@ def connected_components(
                 )
                 .filter(F.col("_old").isNotNull())
             )
-            if shortcut:
-                # Pointer doubling: adopt label(label). The label table
-                # covers every node, so the lookup join is an equi-join
-                # on the label key; left + coalesce guards the (already
-                # minimal) nodes whose label row carries no improvement.
-                lab2 = prop.select(
-                    F.col("node").alias("_ln"), F.col("label").alias("_ll")
-                )
-                prop = prop.join(
-                    lab2, prop["label"] == lab2["_ln"], "left"
-                ).select(
-                    "node",
-                    "_old",
-                    F.least(
-                        F.col("label"), F.coalesce("_ll", "label")
-                    ).alias("label"),
-                )
             new_labels = prop.select(
                 "node",
                 "label",
@@ -163,9 +116,8 @@ def connected_components(
         warnings.warn(
             f"connected_components finished max_iter={max_iter} rounds "
             "without observing a fixed point — components may be split "
-            "too fine (never wrongly merged). Raise max_iter or pass "
-            "shortcut=True (pointer doubling, O(log diameter) rounds) for "
-            "graphs this deep.",
+            "too fine (never wrongly merged). Raise max_iter for graphs "
+            "this deep.",
             ConvergenceWarning,
             stacklevel=2,
         )

@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iotstream.ext.dedup import drop_overcap_groups
+
 _TOPK_SCHEMA = "query_id bigint, vec_id bigint, cosine double"
 _PAIR_SCHEMA = "id_a bigint, id_b bigint, cosine double"
 
@@ -340,7 +342,6 @@ def neardup_embedding_lsh(
     target_bucket: int = 512,
     recall: float = 0.9,
     max_tables: int = 128,
-    vectors: str = "auto",
     vec_broadcast_bytes: int = 256 << 20,
     guard_stats: dict | None = None,
 ) -> DataFrame:
@@ -361,56 +362,45 @@ def neardup_embedding_lsh(
     every table at any nbits, and one group's verify costs bucket².
     Pairs those vectors share through other tables still surface.
 
-    ``vectors`` picks the execution regime; both give the same pairs:
+    Two execution regimes give the same pairs:
 
-    - ``"broadcast"`` (auto when the corpus fits ``vec_broadcast_bytes``
-      at its source element width): one bounded driver collect builds
-      the vector and signature matrices, both broadcast. One stage over
+    - broadcast (when the corpus fits ``vec_broadcast_bytes`` at its
+      source element width): one bounded driver collect builds the
+      vector and signature matrices, both broadcast. One stage over
       (table, shard) units verifies each kept bucket with a float32
       candidate margin, keeps a pair only in its first kept colliding
       table and rescores it in float64, so each pair is emitted once
       and there is no ``distinct``. A cosine exactly at the threshold
       or at a round(6) midpoint may differ from the gram-matrix kernel
-      by an ulp. A pin whose dense (tables × 2^nbits) bookkeeping
-      exceeds 2^28 cells warns and falls back to ship.
-    - ``"ship"`` (auto above the gate): narrow (vec_id, t, bucket) rows
-      shuffle on (t, bucket), vectors join back by vec_id, each group
-      is verified by ``_pairs_above``, and ``distinct()`` collapses
-      cross-table duplicates.
+      by an ulp. Dense (tables × 2^nbits) bookkeeping above 2^28 cells
+      warns and falls back to ship.
+    - ship (above the gate): narrow (vec_id, t, bucket) rows shuffle on
+      (t, bucket), vectors join back by vec_id, each group is verified
+      by ``_pairs_above``, and ``distinct()`` collapses cross-table
+      duplicates.
 
     ``guard_stats`` (optional out-param) always gets ``"regime"``: the
     regime that ran, ``"broadcast"``, ``"ship"`` or ``"empty"`` (no
     vectors; empty pair frame). Broadcast and empty fill
     ``"dropped_rows"`` (rows in over-cap buckets, eagerly); ship fills
-    ``"observation"``, a ``pyspark.sql.Observation`` whose
-    ``dropped_rows`` is available after an action. When auto-sizing
-    ran, ``"sizing"`` holds the ``lsh_auto_params`` stats."""
+    ``"observation"`` (``drop_overcap_groups``, observation
+    ``neardup_embedding_lsh_guard``). When auto-sizing ran,
+    ``"sizing"`` holds the ``lsh_auto_params`` stats."""
     import warnings
 
     import numpy as np
     import pyarrow as pa_mod
-    from pyspark.sql import Observation
     from pyspark.sql.types import DoubleType
 
-    if vectors not in ("auto", "broadcast", "ship"):
-        raise ValueError(
-            f"neardup_embedding_lsh: vectors must be auto|broadcast|ship, got {vectors!r}"
-        )
     spark = emb.sparkSession
     emb = drop_null_vectors(emb).select("vec_id", "embedding")
-    n_vecs = None
     # One aggregate gives the count (for sizing and the regime gate) and
-    # the dimension; a fully pinned call only reads one row for the
-    # dimension, so a ship-regime caller never pays a corpus pass.
-    if nbits is None or tables is None or vectors == "auto":
-        row = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.first(F.size("embedding")).alias("dim"),
-        ).first()
-        n_vecs, dim = row["n"], row["dim"]
-    else:
-        first = emb.select(F.size("embedding")).head()
-        dim = first[0] if first is not None else None
+    # the dimension.
+    row = emb.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.first(F.size("embedding")).alias("dim"),
+    ).first()
+    n_vecs, dim = row["n"], row["dim"]
     if nbits is None or tables is None:
         sizing: dict = {}
         nbits, tables = lsh_auto_params(
@@ -442,9 +432,7 @@ def neardup_embedding_lsh(
         if isinstance(emb.schema["embedding"].dataType.elementType, DoubleType)
         else 4
     )
-    use_broadcast = vectors == "broadcast" or (
-        vectors == "auto" and n_vecs * dim * elem_bytes <= vec_broadcast_bytes
-    )
+    use_broadcast = n_vecs * dim * elem_bytes <= vec_broadcast_bytes
     if use_broadcast and tables * (1 << nbits) > (1 << 28):
         warnings.warn(
             f"neardup_embedding_lsh: dense broadcast bookkeeping for "
@@ -573,21 +561,11 @@ def neardup_embedding_lsh(
             )
 
     tabbed = emb.mapInArrow(assign, schema="vec_id bigint, t int, bucket bigint")
-    if max_bucket is not None:
-        # a window count over the (t, bucket) partition applyInPandas
-        # groups on anyway: an agg + join-back would run the hyperplane
-        # assignment twice
-        tabbed = tabbed.withColumn(
-            "_bsz", F.count(F.lit(1)).over(Window.partitionBy("t", "bucket"))
-        )
-        if guard_stats is not None:
-            obs = Observation("neardup_embedding_lsh_guard")
-            guard_stats["observation"] = obs
-            tabbed = tabbed.observe(
-                obs,
-                F.sum((F.col("_bsz") > max_bucket).cast("long")).alias("dropped_rows"),
-            )
-        tabbed = tabbed.filter(F.col("_bsz") <= max_bucket).drop("_bsz")
+    # (t, bucket) is the partition applyInPandas groups on anyway
+    tabbed = drop_overcap_groups(
+        tabbed, ["t", "bucket"], max_bucket, "neardup_embedding_lsh_guard",
+        guard_stats,
+    )
 
     def block(pdf):
         group = _vectors(pdf)

@@ -24,16 +24,15 @@ Two operators a training-data / IoT analytics pipeline needs constantly:
   into empty buckets (TimescaleDB ``time_bucket_gapfill`` + ``locf``;
   the hypertable-rollup op the reference's KSQL layer cannot express).
   Missing buckets are generated with ``sequence()`` + ``explode`` from
-  each sensor's own [first, last] span — distributed, no driver-side
+  each sensor's own observed segments — distributed, no driver-side
   calendar, output bounded by span/width per key rather than by any
-  global range. Every shuffle (bucket agg, span agg, skeleton join,
-  LOCF window) is keyed on the sensor id, so AQE coalesces them and no
-  stage ever sees more than one sensor's timeline at once.
+  global range. Both shuffles (bucket agg, segment window) are keyed on
+  the sensor id and see only observed buckets, never the dense output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -123,67 +122,84 @@ def interval_follow(
     )
 
 
-def gapfill_locf(
-    sensor: DataFrame,
-    value: str = "metrics.temperature",
-    bucket_width: str = "1 minute",
-) -> DataFrame:
-    """Dense per-sensor series: one row per ``bucket_width`` bucket in
-    each sensor's [first, last] observed span, value = bucket AVG where
-    observed, else last observation carried forward. ``filled`` marks
-    the synthesized rows. Matches TimescaleDB
-    ``time_bucket_gapfill(...) + locf(avg(...))`` semantics; unit
-    hard-wired to minute buckets for the 1-minute flagship granularity
-    (callers pass e.g. "5 minutes" for coarser rollups).
-    """
-    n_min = int(bucket_width.split()[0]) if bucket_width[0].isdigit() else 1
-    step = F.expr(f"interval {n_min} minute")
-    bucket = F.date_trunc("minute", F.col("ts"))
-    if n_min != 1:
-        epoch_min = (F.unix_timestamp(bucket) / 60).cast("long")
-        # pmod, not %: Spark's % takes the DIVIDEND's sign, so for a
-        # pre-epoch timestamp (negative epoch) `e - e % n` rounds UP
-        # into the NEXT bucket while DuckDB's time_bucket floors — the
-        # r11 hostile-values sweep caught a 1969-12-31 observation
-        # landing in the 1970-01-01 bucket. pmod is always >= 0, so
-        # the subtraction floors on both sides of the epoch.
-        bucket = F.timestamp_seconds(
-            (epoch_min - F.pmod(epoch_min, F.lit(n_min))) * 60
+_UNIT_SECONDS = {"minute": 60, "hour": 3600, "day": 86400}
+
+
+def _bucket(width: str) -> tuple[Column, int]:
+    """(start of the ``width`` bucket holding ``ts``, width in seconds)
+    for ``width`` = "N minute(s)|hour(s)|day(s)", N ≥ 1. Buckets are
+    aligned to the Unix epoch and floor on both sides of it. Any other
+    unit raises ValueError."""
+    n, _, unit = width.strip().partition(" ")
+    unit = unit.strip()
+    if not n.isdigit() or int(n) < 1 or unit.rstrip("s") not in _UNIT_SECONDS:
+        raise ValueError(
+            f"bucket width must be 'N minute(s)|hour(s)|day(s)', got {width!r}"
         )
-    # event_time_only contract: a NULL timestamp has no bucket; without
-    # the filter it forms a NULL observed bucket that poisons the lead()
-    # segment chain (and the engines' null-ordering defaults differ).
-    sensor = sensor.filter(F.col("ts").isNotNull())
-    obs = sensor.groupBy(F.col("id"), bucket.alias("bucket")).agg(
-        F.round(F.avg(value), 6).alias("obs_v")
+    secs = int(n) * _UNIT_SECONDS[unit.rstrip("s")]
+    # pmod, not %: Spark's % takes the dividend's sign, so a pre-epoch
+    # second would round up into the next bucket.
+    epoch = F.unix_timestamp(F.col("ts"))
+    return F.timestamp_seconds(epoch - F.pmod(epoch, F.lit(secs))), secs
+
+
+def _gapfill_segments(
+    sensor: DataFrame, value: str, bucket_width: str
+) -> DataFrame:
+    """The dense per-sensor bucket series behind the gap-fill operators:
+    one row per ``bucket_width`` bucket in each sensor's [first, last]
+    observed span, as (id, bucket, seg_start, obs_v, nxt_bucket, nxt_v).
+    Each observed bucket owns the segment [seg_start, nxt_bucket) up to
+    the sensor's next observed bucket (the last owns only itself);
+    obs_v is the segment's observed AVG(value) rounded to 6 and nxt_v
+    the next segment's (NULL for the last). Readings with a NULL ``ts``
+    have no bucket and are ignored.
+
+    Only observed rows are aggregated and windowed; the dense rows come
+    from a narrow explode of each segment, so no shuffle or window ever
+    sees the densified output."""
+    bucket, secs = _bucket(bucket_width)
+    obs = (
+        sensor.filter(F.col("ts").isNotNull())
+        .groupBy(F.col("id"), bucket.alias("bucket"))
+        .agg(F.round(F.avg(value), 6).alias("obs_v"))
     )
-    # Segment formulation (same shape as interpolate_linear): each
-    # observed bucket owns [bucket, next observed bucket) and the
-    # carried value is constant across the segment, so the dense series
-    # is PRODUCED by a narrow explode over observed rows — one lead()
-    # window over the (small) observed set, no skeleton join and no
-    # IGNORE-NULLS window over the (large) densified output.
     w = Window.partitionBy("id").orderBy("bucket")
     seg = obs.select(
         "id",
         F.col("bucket").alias("seg_start"),
         "obs_v",
         F.lead("bucket").over(w).alias("nxt_bucket"),
+        F.lead("obs_v").over(w).alias("nxt_v"),
     )
     seg_end = F.coalesce(
-        F.timestamp_seconds(
-            F.unix_timestamp("nxt_bucket") - F.lit(60 * n_min)
-        ),
+        F.timestamp_seconds(F.unix_timestamp("nxt_bucket") - F.lit(secs)),
         F.col("seg_start"),
     )
-    dense = seg.select(
+    step = F.expr(f"interval {secs} seconds")
+    return seg.select(
         "id",
+        "seg_start",
         "obs_v",
-        F.col("seg_start"),
-        F.explode(F.sequence(F.col("seg_start"), seg_end, step)).alias(
-            "bucket"
-        ),
+        "nxt_bucket",
+        "nxt_v",
+        F.explode(F.sequence(F.col("seg_start"), seg_end, step)).alias("bucket"),
     )
+
+
+def gapfill_locf(
+    sensor: DataFrame,
+    value: str = "metrics.temperature",
+    bucket_width: str = "1 minute",
+) -> DataFrame:
+    """Dense per-sensor series (id, bucket, temperature, filled): one
+    row per ``bucket_width`` bucket ("N minute(s)|hour(s)|day(s)",
+    epoch-aligned) in each sensor's [first, last] observed span;
+    temperature is the bucket's AVG(``value``) where observed, else the
+    last observation carried forward, and ``filled`` marks the
+    synthesized rows. TimescaleDB ``time_bucket_gapfill(...) +
+    locf(avg(...))`` semantics."""
+    dense = _gapfill_segments(sensor, value, bucket_width)
     return dense.select(
         "id",
         "bucket",
@@ -349,6 +365,7 @@ def time_weighted_avg(
     counted — documented deviation that keeps the op one ordered pass).
     Single-sample buckets (and zero-width spans) degenerate to the
     plain value, like TimescaleDB's ``average`` of a one-point weight.
+    ``bucket_width`` is "N minute(s)|hour(s)|day(s)", epoch-aligned.
 
     Scale: the lead() window and the groupBy share the (id, bucket)
     partitioning — ONE shuffle; weights are exact integer microseconds
@@ -356,7 +373,7 @@ def time_weighted_avg(
     < 2⁵³ for any realistic bucket), so the single final division is
     the only float op.
     """
-    bucket = F.date_trunc(bucket_width.split()[-1].rstrip("s"), F.col("ts"))
+    bucket, _ = _bucket(bucket_width)
     flat = sensor.select(
         "id",
         "messageId",
@@ -396,73 +413,17 @@ def interpolate_linear(
     value: str = "metrics.temperature",
     bucket_width: str = "60 minutes",
 ) -> DataFrame:
-    """Gap-fill with LINEAR interpolation — TimescaleDB
-    ``time_bucket_gapfill + interpolate``: dense per-sensor series over
-    each sensor's [first, last] span, missing buckets filled by the
-    straight line between the surrounding observed buckets (LOCF's
-    smoother sibling; every interior gap has both neighbors because the
-    span is anchored at observed endpoints).
-
-    Scale shape: the heavy lifting happens on the OBSERVED rows, never
-    the densified output. One (id, bucket) aggregate, one lead() window
-    over observed buckets (orders of magnitude fewer rows than the
-    dense skeleton), then each consecutive-observation segment explodes
-    its own gap with the slope already attached — a narrow map. The
-    dense series is produced, not sorted: no window ever scans the
-    skeleton, and the old spans/skeleton/join subtree (which recomputed
-    the aggregate and ran two opposite unbounded frames over the 1M-row
-    dense set) is gone. Interpolation arithmetic is exact-integer in x
-    (epoch seconds), one float expression in y, rounded to 6 on both
-    engines.
-    """
-    n_min = int(bucket_width.split()[0]) if bucket_width[0].isdigit() else 1
-    step = F.expr(f"interval {n_min} minute")
-    bucket = F.date_trunc("minute", F.col("ts"))
-    if n_min != 1:
-        epoch_min = (F.unix_timestamp(bucket) / 60).cast("long")
-        # pmod, not %: Spark's % takes the DIVIDEND's sign, so for a
-        # pre-epoch timestamp (negative epoch) `e - e % n` rounds UP
-        # into the NEXT bucket while DuckDB's time_bucket floors — the
-        # r11 hostile-values sweep caught a 1969-12-31 observation
-        # landing in the 1970-01-01 bucket. pmod is always >= 0, so
-        # the subtraction floors on both sides of the epoch.
-        bucket = F.timestamp_seconds(
-            (epoch_min - F.pmod(epoch_min, F.lit(n_min))) * 60
-        )
-    sensor = sensor.filter(F.col("ts").isNotNull())  # event_time_only contract
-    obs = sensor.groupBy(F.col("id"), bucket.alias("bucket")).agg(
-        F.round(F.avg(value), 6).alias("obs_v")
-    )
-    # Each observed bucket pairs with the sensor's NEXT observed bucket;
-    # the segment [bucket, nxt_bucket) owns every dense output row in it
-    # (the final observation owns just itself), so segments partition the
-    # output and the explode below cannot duplicate or drop a bucket.
-    w = Window.partitionBy("id").orderBy("bucket")
-    seg = obs.select(
-        "id",
-        F.col("bucket").alias("seg_start"),
-        "obs_v",
-        F.lead("bucket").over(w).alias("nxt_bucket"),
-        F.lead("obs_v").over(w).alias("nxt_v"),
-    )
-    seg_end = F.coalesce(
-        F.timestamp_seconds(
-            F.unix_timestamp("nxt_bucket") - F.lit(60 * n_min)
-        ),
-        F.col("seg_start"),
-    )
-    dense = seg.select(
-        "id",
-        "obs_v",
-        "nxt_v",
-        F.unix_timestamp("seg_start").alias("x0"),
-        F.unix_timestamp("nxt_bucket").alias("x1"),
-        F.explode(F.sequence(F.col("seg_start"), seg_end, step)).alias(
-            "bucket"
-        ),
-    )
+    """Gap-fill with LINEAR interpolation (TimescaleDB
+    ``time_bucket_gapfill + interpolate``): the ``gapfill_locf`` series
+    with each missing bucket on the straight line between the
+    surrounding observed buckets (every interior gap has both, since
+    the span is anchored at observed endpoints). Arithmetic is
+    exact-integer in x (epoch seconds), one float expression in y."""
+    dense = _gapfill_segments(sensor, value, bucket_width)
     x = F.unix_timestamp("bucket")
-    is_obs = x == F.col("x0")
+    x0 = F.unix_timestamp("seg_start")
+    x1 = F.unix_timestamp("nxt_bucket")
+    is_obs = x == x0
     # sign(x)·floor(|x|·1e6 + 0.5)/1e6 instead of round(x, 6): engines
     # disagree on round() when the interpolated double sits exactly on a
     # 7th-decimal tie (Java rounds the shortest decimal repr, DuckDB the
@@ -470,8 +431,7 @@ def interpolate_linear(
     # everywhere, and the sign factor keeps it HALF_AWAY (matching SQL)
     # for negative temperatures too.
     raw = F.col("obs_v") + (F.col("nxt_v") - F.col("obs_v")) * (
-        (x - F.col("x0")).cast("double")
-        / (F.col("x1") - F.col("x0")).cast("double")
+        (x - x0).cast("double") / (x1 - x0).cast("double")
     )
     interp = (
         F.signum(raw) * F.floor(F.abs(raw) * 1000000.0 + F.lit(0.5)) / 1000000.0

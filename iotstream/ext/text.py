@@ -52,14 +52,18 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
+def _stop_stats() -> tuple[Column, Column, Column]:
+    """(n_tokens, stop_hits, stop_ratio) Columns over ``text``."""
+    n = F.size(tokens())
+    stop_hits = F.size(F.filter(tokens(), lambda t: t.isin(*STOPWORDS)))
+    return n, stop_hits, stop_hits.cast("double") / n
+
+
 def quality_expr() -> Column:
     """The quality score as a reusable Column over ``text``: length
     saturation × (1 − stopword ratio), rounded to 6 (deterministic
     rational arithmetic)."""
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stop_hits = F.expr(f"size(filter(split(text, ' '), t -> t IN ({stop_list})))")
-    n = F.size(tokens())
-    stop_ratio = stop_hits.cast("double") / n
+    n, _, stop_ratio = _stop_stats()
     length_sat = F.least(n.cast("double") / F.lit(100.0), F.lit(1.0))
     return F.round(length_sat * (F.lit(1.0) - stop_ratio), 6)
 
@@ -68,11 +72,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality: length saturation × (1 − stopword
     ratio). Mirrors the length/stopword-ratio family of filters used in
     LLM corpus curation; fully deterministic rational arithmetic."""
-    toks = tokens()
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stop_hits = F.expr(f"size(filter(split(text, ' '), t -> t IN ({stop_list})))")
-    n = F.size(toks)
-    stop_ratio = stop_hits.cast("double") / n
+    n, stop_hits, stop_ratio = _stop_stats()
     return docs.select(
         "doc_id",
         n.cast("long").alias("n_tokens"),
@@ -195,22 +195,33 @@ def scrub_repetition(docs: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def ngram_counts(
-    docs: DataFrame, n: int = 2, col: str = "text", min_count: int = 5
+def word_ngrams(
+    docs: DataFrame, n: int, col: str = "text", keep: tuple[str, ...] = ("doc_id",)
 ) -> DataFrame:
-    """Global word-n-gram frequencies (explode an index sequence and
-    join adjacent tokens — the same kernel as the dedup shingles:
-    `element_at` over a pre-split array instead of re-evaluating a
-    HOF lambda per generated row). One shuffle, map-side partial agg."""
-    toks = tokens(col)
-    base = docs.select(toks.alias("w")).filter(F.size("w") >= n)
+    """One row per word n-gram occurrence: the ``keep`` columns plus
+    ``ngram``, the n consecutive whitespace tokens of ``col`` joined by
+    single spaces. Documents with fewer than n tokens, and NULL
+    documents, yield no rows. Narrow: an exploded index sequence
+    addresses the pre-split token array with ``element_at``, so each
+    n-gram string is built once per output row inside codegen."""
+    # The size >= n filter is load-bearing: sequence(1, size - n + 1)
+    # counts DOWN when its end is below 1 (and size(NULL) is -1), which
+    # would index past the array.
+    base = docs.select(*keep, tokens(col).alias("w")).filter(F.size("w") >= n)
     i = F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("i")
     gram = F.concat_ws(
         " ", *[F.element_at("w", F.col("i") + j) for j in range(n)]
     )
+    return base.select(*keep, "w", i).select(*keep, gram.alias("ngram"))
+
+
+def ngram_counts(
+    docs: DataFrame, n: int = 2, col: str = "text", min_count: int = 5
+) -> DataFrame:
+    """Global word-n-gram frequencies with at least ``min_count``
+    occurrences. One shuffle, map-side partial aggregation."""
     return (
-        base.select("w", i)
-        .select(gram.alias("ngram"))
+        word_ngrams(docs, n, col, keep=())
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") >= min_count)
@@ -311,18 +322,6 @@ def decontaminate(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     )
 
 
-def _word_ngrams(docs: DataFrame, n: int, col: str = "text") -> DataFrame:
-    """(doc_id, ngram) pairs — the element_at-over-pre-split-array
-    kernel shared with ngram_counts (one narrow pass, no re-evaluated
-    HOF lambda per generated row)."""
-    base = docs.select("doc_id", tokens(col).alias("w")).filter(F.size("w") >= n)
-    i = F.explode(F.sequence(F.lit(1), F.size("w") - (n - 1))).alias("i")
-    gram = F.concat_ws(
-        " ", *[F.element_at("w", F.col("i") + j) for j in range(n)]
-    )
-    return base.select("doc_id", "w", i).select("doc_id", gram.alias("ngram"))
-
-
 def decontaminate_ngram(
     docs: DataFrame, eval_docs: DataFrame, n: int = 3
 ) -> DataFrame:
@@ -337,9 +336,9 @@ def decontaminate_ngram(
     bounded by the corpus hit-rate (typically tiny) and the final
     anti-join is left to AQE — broadcast when small, a c_custkey-style
     key shuffle otherwise."""
-    block = F.broadcast(_word_ngrams(eval_docs, n).select("ngram").distinct())
+    block = F.broadcast(word_ngrams(eval_docs, n, keep=()).distinct())
     bad = (
-        _word_ngrams(docs, n)
+        word_ngrams(docs, n)
         .join(block, "ngram", "left_semi")
         .select("doc_id")
         .distinct()
@@ -462,15 +461,12 @@ def lm_bigram_xent(docs: DataFrame, col: str = "text") -> DataFrame:
     float ops are the final ln and mean (rounded to 6); all counts stay
     exact integers.
     """
-    big = _word_ngrams(docs, 2, col).select(
+    big = word_ngrams(docs, 2, col).select(
         "doc_id", "ngram", F.substring_index("ngram", " ", 1).alias("ctx")
     )
     c2 = big.groupBy("ngram").agg(F.count(F.lit(1)).alias("c2"))
     # c(w1 ·) = Σ_w2 c(w1 w2): the context count re-aggregates the
-    # VOCABULARY-sized bigram table, not the corpus-sized bigram
-    # stream (r17) — the old groupBy("ctx") over ``big`` was a second
-    # full corpus pass + shuffle for numbers c2 already contains.
-    # Exact integer equality, same add-one smoothing inputs.
+    # vocabulary-sized bigram table, not the corpus-sized bigram stream.
     c1 = (
         c2.select(F.substring_index("ngram", " ", 1).alias("ctx"), "c2")
         .groupBy("ctx")

@@ -1,13 +1,14 @@
-"""K1-K5 — sinks as foreachBatch writers.
+"""K1-K4 — sinks as foreachBatch writers.
 
 The reference's sinks are: per-record Mongo inserts for the raw archive
 (reference src/main/java/stream/mongodb/MongoDBRawData.java:36-53), a
 per-record KafkaProducer for the clean stream (StreamProcessor.java:110-131
 — a new producer per record, the classic anti-pattern), Kafka Connect
 Mongo sinks for passthrough and aggregates (README.md:59-70,96-107), and
-System.out tracing (K5). Here every sink is a batched write per
-micro-batch: Spark pools Kafka producers and parquet writers amortize
-across the batch — the per-record overhead disappears structurally.
+System.out tracing (K5, Spark's own ``console`` sink). Here every sink
+is a batched write per micro-batch: Spark pools Kafka producers and
+parquet writers amortize across the batch — the per-record overhead
+disappears structurally.
 """
 
 from __future__ import annotations
@@ -80,12 +81,6 @@ class ParquetUpsertSink:
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__epoch")
         )
-
-
-def console_writer(df: DataFrame, truncate: bool = False):
-    """K5 — debug tracing (the reference's System.out.println at
-    HiveMQSource.java:97 / StreamProcessor.java:97,128)."""
-    return df.writeStream.format("console").option("truncate", str(truncate).lower())
 
 
 def dual_sink_writer(

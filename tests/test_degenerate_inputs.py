@@ -19,21 +19,28 @@ def _docs(spark, rows):
     )
 
 
-def test_with_shingles_short_and_null_docs(spark):
-    from iotstream.ext.dedup import with_shingles
+def test_word_ngrams_short_and_null_docs(spark):
+    from iotstream.ext.text import word_ngrams
 
     docs = _docs(
         spark,
         [
             (1, "a b c d", "en", "s", 7),
-            (2, "a b", "en", "s", 3),       # fewer words than the window
+            (2, "a b", "en", "s", 3),       # fewer words than n=3
             (3, "", "en", "s", 0),
             (4, None, None, "s", None),
+            (5, "a", "en", "s", 1),         # fewer words than n=2
         ],
     )
-    got = {r.doc_id: r.shingles for r in with_shingles(docs, n=3).collect()}
-    assert got[1] == ["a b c", "b c d"]
-    assert got[2] == [] and got[3] == [] and got[4] == []
+
+    def grams(n):
+        got: dict = {}
+        for r in word_ngrams(docs, n).collect():
+            got.setdefault(r.doc_id, []).append(r.ngram)
+        return {k: sorted(v) for k, v in got.items()}
+
+    assert grams(2) == {1: ["a b", "b c", "c d"], 2: ["a b"]}
+    assert grams(3) == {1: ["a b c", "b c d"]}
 
 
 def test_doc_chunks_empty_and_null(spark):

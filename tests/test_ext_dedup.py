@@ -128,11 +128,11 @@ def test_lsh_max_bucket_drops_mega_buckets_only(spark):
     from pyspark.sql import functions as F
 
     from iotstream.ext.dedup import (
-        exploded_shingles,
         fan_out,
         lsh_candidate_pairs,
         minhash_signature,
     )
+    from iotstream.ext.text import word_ngrams
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(i, base) for i in range(40)]  # 40 identical docs → mega bucket
@@ -141,7 +141,7 @@ def test_lsh_max_bucket_drops_mega_buckets_only(spark):
         (101, "one two three four five six seven eight nine eleven"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    signed = minhash_signature(exploded_shingles(fan_out(docs), dedup=False))
+    signed = minhash_signature(word_ngrams(fan_out(docs), 3))
 
     unguarded = lsh_candidate_pairs(signed).collect()
     guarded = lsh_candidate_pairs(signed, max_bucket=10).collect()
@@ -285,20 +285,30 @@ def test_fan_out_no_file_frames_respect_existing_width(spark):
     enforced instead of documented: a frame with NO scan files (in-
     memory, post-shuffle) falls back to its actual partition count, so
     an already-wide frame is returned untouched (same object — no
-    spurious full-corpus shuffle) while a narrow one still fans out."""
+    spurious full-corpus shuffle) while a narrow one still fans out.
+    Covered for post-shuffle range frames and for local in-memory
+    frames with defaultParallelism partitions vs one partition."""
     from iotstream.ext.dedup import fan_out
 
-    par = spark.sparkContext.defaultParallelism
-    wide = spark.range(1000).repartition(par * 2)
-    assert wide.inputFiles() == []
-    assert fan_out(wide) is wide
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    rows = [(i,) for i in range(1000)]
+    cases = [
+        (spark.range(1000).repartition(par * 2), spark.range(1000).coalesce(1)),
+        (
+            spark.createDataFrame(sc.parallelize(rows, par), "id bigint"),
+            spark.createDataFrame(sc.parallelize(rows, 1), "id bigint"),
+        ),
+    ]
+    for wide, narrow in cases:
+        assert wide.inputFiles() == []
+        assert fan_out(wide) is wide
 
-    narrow = spark.range(1000).coalesce(1)
-    assert narrow.inputFiles() == []
-    fanned = fan_out(narrow)
-    assert fanned is not narrow
-    assert fanned.rdd.getNumPartitions() == par
-    assert fanned.count() == 1000
+        assert narrow.inputFiles() == []
+        fanned = fan_out(narrow)
+        assert fanned is not narrow
+        assert fanned.rdd.getNumPartitions() == par
+        assert fanned.count() == 1000
 
 
 def test_editdist_block_guard_suppresses_hot_length_only(spark):

@@ -295,14 +295,14 @@ def test_embedding_lsh_regimes_agree(spark):
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     base = rows(neardup_embedding_lsh(emb, 0.4, recall=0.99999))
     ship = rows(
-        neardup_embedding_lsh(emb, 0.4, recall=0.99999, vectors="ship")
+        neardup_embedding_lsh(emb, 0.4, recall=0.99999, vec_broadcast_bytes=0)
     )
     assert ship == base
 
 
 def test_embedding_lsh_dense_bookkeeping_falls_back_to_ship(spark):
-    """ADVICE r8: a caller pinning huge nbits with vectors="broadcast"
-    would allocate multi-GiB dense (tables, 2**nbits) cap bookkeeping
+    """ADVICE r8: a caller pinning huge nbits on a corpus small enough
+    for the broadcast regime would allocate multi-GiB dense (tables, 2**nbits) cap bookkeeping
     driver-side before any useful work. The sanity bound must warn and
     fall back to the ship regime (sparse in occupied buckets), and the
     verified pairs must match the broadcast regime at sane sizing."""
@@ -318,8 +318,7 @@ def test_embedding_lsh_dense_bookkeeping_falls_back_to_ship(spark):
         got = {
             (r.id_a, r.id_b)
             for r in neardup_embedding_lsh(
-                emb, threshold=0.9, nbits=30, tables=16, vectors="broadcast",
-                guard_stats=gs,
+                emb, threshold=0.9, nbits=30, tables=16, guard_stats=gs,
             ).collect()
         }
     assert any("falling back to the ship regime" in str(w.message) for w in caught)
@@ -369,7 +368,7 @@ def test_embedding_lsh_guard_stats_observable(spark):
     stats2 = {}
     out2 = neardup_embedding_lsh(
         emb, threshold=0.9, nbits=4, tables=8, max_bucket=64,
-        guard_stats=stats2, vectors="ship",
+        guard_stats=stats2, vec_broadcast_bytes=0,
     )
     got2 = {(r.id_a, r.id_b) for r in out2.collect()}
     assert got2 == got

@@ -385,3 +385,54 @@ def test_interval_follow_all_nonfinite_followers_sum_null(spark):
     row = interval_follow(ev).collect()[0]
     assert row.n_follow == 1
     assert row.follow_value is None  # no fabricated 0
+
+
+def test_gapfill_bucket_width_units(spark):
+    """Hour and day widths bucket by that unit, epoch-aligned — not by
+    N minutes. Three readings over two days give three day rows."""
+    from iotstream.ext.temporal import gapfill_locf, interpolate_linear
+
+    days = _sensor_frame(spark, [("a", 0, 10.0), ("a", 1440, 20.0), ("a", 2880, 30.0)])
+    rows = sorted(gapfill_locf(days, bucket_width="1 day").collect(), key=lambda r: r.bucket)
+    assert [r.bucket for r in rows] == [dt.datetime(2024, 1, d) for d in (1, 2, 3)]
+    assert [(r.temperature, r.filled) for r in rows] == [
+        (10.0, False), (20.0, False), (30.0, False),
+    ]
+
+    hours = _sensor_frame(spark, [("a", 0, 1.0), ("a", 250, 3.0)])  # 12:00, 16:10
+    rows = sorted(gapfill_locf(hours, bucket_width="2 hours").collect(), key=lambda r: r.bucket)
+    assert [r.bucket.hour for r in rows] == [12, 14, 16]
+    assert [r.filled for r in rows] == [False, True, False]
+
+    ends = _sensor_frame(spark, [("a", 0, 10.0), ("a", 2880, 30.0)])
+    rows = sorted(
+        interpolate_linear(ends, bucket_width="1 day").collect(), key=lambda r: r.bucket
+    )
+    assert [r.bucket.day for r in rows] == [1, 2, 3]
+    assert [(r.temperature, r.filled) for r in rows] == [
+        (10.0, False), (20.0, True), (30.0, False),
+    ]
+
+
+def test_time_weighted_avg_hour_buckets_floor_to_the_hour(spark):
+    from iotstream.ext.temporal import time_weighted_avg
+
+    # 03:01 and 03:31 on Jan 2: one 03:00 bucket; 10 held 30 min, the
+    # final sample gets zero weight
+    df = _sensor_mid(spark, [("s", 901, 10), ("s", 931, 40)])
+    out = time_weighted_avg(df, bucket_width="60 minutes").collect()
+    assert [(r.bucket, r.n_readings, r.twa_temperature) for r in out] == [
+        (dt.datetime(2024, 1, 2, 3, 0), 2, 10.0)
+    ]
+
+
+def test_bucket_width_rejects_other_units(spark):
+    import pytest
+
+    from iotstream.ext.temporal import gapfill_locf, interpolate_linear, time_weighted_avg
+
+    df = _sensor_mid(spark, [("s", 0, 10)])
+    for fn in (gapfill_locf, interpolate_linear, time_weighted_avg):
+        for width in ("1 week", "30 seconds", "minute", "0 minutes"):
+            with pytest.raises(ValueError):
+                fn(df, bucket_width=width)

@@ -96,51 +96,3 @@ def test_lsh_feed_clusters_equal_exact_feed(spark):
     lsh = clusters(xdedup.neardup_minhash(docs, threshold=0.5))
     assert lsh == exact
     assert len(set(exact.values())) < len(exact)  # fixture has real dups
-
-
-def test_shortcut_equals_default_on_random_graphs(spark):
-    """Pointer doubling reaches the same fixed point as plain min-label
-    propagation on assorted topologies (deterministic pseudo-random
-    edge sets: cliques + chains + isolated nodes)."""
-    import random
-
-    rng = random.Random(7)
-    nodes = list(range(60))
-    edges = []
-    # three cliques
-    for base in (0, 10, 20):
-        members = list(range(base, base + 7))
-        edges += [(a, b) for a in members for b in members if a < b]
-    # one long descending-id chain (worst case for propagation)
-    chain = list(range(30, 50))
-    edges += list(zip(chain, chain[1:]))
-    # random extra edges
-    edges += [tuple(sorted(rng.sample(range(50), 2))) for _ in range(25)]
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    n = spark.createDataFrame([(x,) for x in nodes], "node bigint")
-    plain = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(e, n, max_iter=60).collect()
-    }
-    fast = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(e, n, shortcut=True).collect()
-    }
-    assert fast == plain
-
-
-def test_shortcut_converges_in_log_rounds_on_deep_path(spark):
-    """A 64-hop path needs 63 plain rounds but must converge without
-    warning within a logarithmic budget under pointer doubling."""
-    import warnings
-
-    from iotstream.ext.graph import ConvergenceWarning
-
-    edges = [(i, i + 1) for i in range(64)]
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    n = spark.createDataFrame([(x,) for x in range(65)], "node bigint")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = connected_components(e, n, max_iter=10, shortcut=True).collect()
-    assert not [w for w in caught if issubclass(w.category, ConvergenceWarning)]
-    assert {r["cluster_id"] for r in out} == {0}

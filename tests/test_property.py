@@ -266,10 +266,8 @@ def _union_find_labels(n: int, edges: list[tuple[int, int]]) -> dict[int, int]:
 @given(cc_graphs)
 @SLOW
 def test_connected_components_match_union_find(spark, graph):
-    """Both CC variants (min-label propagation and pointer doubling)
-    agree with an independent union-find on arbitrary random graphs —
-    unlike test_graph.py's variant-vs-variant check, this catches a
-    flaw shared by both distributed formulations."""
+    """Min-label propagation agrees with an independent union-find on
+    arbitrary random graphs."""
     from iotstream.ext.graph import connected_components
 
     n, edges = graph
@@ -280,12 +278,11 @@ def test_connected_components_match_union_find(spark, graph):
         else spark.createDataFrame([], "src bigint, dst bigint")
     )
     expect = _union_find_labels(n, edges)
-    for kw in ({"max_iter": n + 1}, {"shortcut": True}):
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(edges_df, nodes_df, **kw).collect()
-        }
-        assert got == expect
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in connected_components(edges_df, nodes_df, max_iter=n + 1).collect()
+    }
+    assert got == expect
 
 
 # --- as-of join vs brute-force scan ----------------------------------

@@ -3,7 +3,8 @@
 The bench fixtures top out at sf0.1; plan reading says the scale paths
 are linear, this MEASURES it. The probe replicates the sf0.1 fixtures
 ×N into /tmp with per-replica key shifts chosen so the WORKLOAD scales
-honestly, times a query set at ×1 and ×N (bench.py's hygiene: warm-up,
+honestly, times a query set at ×1 and ×N in bench.py's record session
+with its timing (``bench._session``, ``bench._time_one``: warm-up,
 forced GC, min-of-2, noop sink), and reports each query's scaling
 exponent  log(t_N / t_1) / log(N).  Exponent ≈ 1 is linear; values
 well under 1 mean fixed overhead still dominates at this size; anything
@@ -53,6 +54,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 SRC_SF_DIR = "/root/testdata/sf0.1"
 # v2: permutation text transform + prime flip mask (v1 dirs are
 # contaminated beyond ×25/×97 replicas — never reuse them)
@@ -89,22 +92,6 @@ DEFAULT_QUERIES = [
 SUPERLINEAR_FLAG = 1.25
 
 ALPHA = "abcdefghijklmnopqrstuvwxyz"
-
-
-def _session(tag: str):
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"iotstream-scale-probe-{tag}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
 
 
 def _permuted(i: int) -> str:
@@ -341,20 +328,8 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
     qs["dedup_clusters_lsh_full"] = _q_dedup_clusters_lsh_full
     out: dict[str, float] = {}
     for name in names:
-        fn = qs[name]
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001 — warm-up best-effort
-            pass
-        try:
-            spark._jvm.System.gc()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            out[name] = round(best, 3)
+            out[name] = round(bench._time_one(spark, qs[name], sf_dir), 3)
         except Exception as e:  # noqa: BLE001
             print(f"probe error in {name}: {type(e).__name__}: {e}", file=sys.stderr)
             out[name] = -1.0
@@ -444,8 +419,10 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    spark = _session(f"x{args.mult}{'skew' if args.skew else ''}")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session(
+        os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        app=f"iotstream-scale-probe-x{args.mult}{'skew' if args.skew else ''}",
+    )
     t0 = time.perf_counter()
     dir1 = build_scaled(spark, 1, skew=args.skew)
     dirn = build_scaled(spark, args.mult, skew=args.skew)
