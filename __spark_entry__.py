@@ -126,6 +126,15 @@ FORCE_WINDOW: tuple[tuple[str, int], ...] = (
     ("continuous_rollup", 19),
     ("rate_of_change", 19),
     ("ewma_smooth", 19),
+    # r19 pins: every global rank goes through ranks.with_global_ranks
+    # (one materialize-and-count action; rfm makes its three ranks in
+    # one call), and tokenize_encode builds its vocab that way.
+    # user_value_deciles and both dedup_clusters variants (connected
+    # components now observes its changed count on the round's
+    # checkpoint) are already pinned above.
+    ("rfm_segments", 19),
+    ("vocab_build", 19),
+    ("tokenize_encode", 19),
 )
 
 
@@ -631,7 +640,7 @@ def q_dedup_clusters(spark, sf_dir):
     )
     # width right-sized by the declared 2000-doc cap: every CC-round
     # table is <=|docs| rows, and each round pays per-partition job
-    # overhead (localCheckpoint + count) that AQE cannot coalesce.
+    # overhead (its checkpoint) that AQE cannot coalesce.
     with scoped_shuffle_partitions(spark, 8):
         comp = connected_components(
             pairs, docs.select("doc_id"), src="doc_a", dst="doc_b", node="doc_id"
@@ -1453,21 +1462,15 @@ def q_grouping_sets_volume(spark, sf_dir):
 
 
 def q_user_value_deciles(spark, sf_dir):
-    """ntile/percent_rank analytic over per-user purchase totals,
-    computed on the global-rank primitive (ext/ranks.py) at a width
-    sized from the MEASURED per-user row count, as ``rfm_segments``
-    does: a fixture-sized table takes the lazy single-partition path,
-    while a corpus-sized one still fans out linearly (range-repartition
-    + per-partition row_number + broadcast block prefix). Bit-identical
-    to the built-in ntile/percent_rank under this total order (user_id
-    tiebreaker)."""
+    """ntile/percent_rank deciles over per-user purchase totals,
+    ranked by ``ext/ranks.py::with_global_ranks`` (no single-partition
+    window). Bit-identical to the builtin ntile/percent_rank under this
+    total order (user_id tiebreaker)."""
     from iotstream.ext.ranks import (
-        adaptive_rank_width,
         ntile_expr,
         percent_rank_expr,
-        with_global_row_number,
+        with_global_ranks,
     )
-
     from iotstream.schemas import finite_measures
 
     use_utc(spark)
@@ -1481,14 +1484,9 @@ def q_user_value_deciles(spark, sf_dir):
             .cast("double")
             .alias("total_value")
         )
-    ).localCheckpoint()
-    n = totals.count()
-    ranked = with_global_row_number(
-        totals.withColumn("_total", F.lit(n)),
-        [F.desc("total_value"), F.asc("user_id")],
-        out="_rn",
-        num_partitions=adaptive_rank_width(spark, n),
-        materialize_input=False,
+    )
+    ranked = with_global_ranks(
+        totals, _rn=[F.desc("total_value"), F.asc("user_id")]
     )
     rn, total = F.col("_rn"), F.col("_total")
     return ranked.select(

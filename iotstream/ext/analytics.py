@@ -153,17 +153,14 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     Frequency (purchase count), Monetary (exact decimal revenue), each
     quartiled with ntile(4) → a 3-digit segment label (4=best).
 
-    The three quartile ranks use the DISTRIBUTED global-rank primitive
-    (`ext/ranks.py`: range-repartition + per-partition row_number +
-    broadcast block prefix) rather than three unpartitioned ntile
-    windows — the per-user aggregate frame is |users| rows, which at
-    corpus scale is itself hundreds of millions and must never funnel
-    through one task. Bit-identical to the ntile formulation (the
-    DuckDB oracle computes it that way): orders are total (user_id
-    tiebreaker; monetary ranked on the exact DECIMAL sum — no float
-    rank instability).
+    The three quartile ranks come from one
+    ``ext/ranks.py::with_global_ranks`` call (no single-partition
+    window; the per-user aggregate is materialized and counted once).
+    Bit-identical to the ntile formulation the DuckDB oracle uses:
+    every order is total (user_id tiebreaker), and monetary ranks on
+    the exact DECIMAL sum.
     """
-    from iotstream.ext.ranks import ntile_expr, with_global_row_number
+    from iotstream.ext.ranks import ntile_expr, with_global_ranks
     from iotstream.schemas import finite_measures
 
     p = (
@@ -178,37 +175,11 @@ def rfm_segments(events: DataFrame) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,4)")).alias("_mon"),
         )
     )
-    # Materialize the per-user aggregate ONCE, then drive everything
-    # from it: r7 ran the corpus-agg lineage twice (the scalar-total
-    # broadcast subquery + the first rank's input checkpoint) and paid
-    # three session-width rank passes whose fixed job costs dwarf the
-    # |users|-sized data (VERDICT r7 item 3: slowest declared query,
-    # 3.38 s driver for a 1500-row table at sf0.1). The row count is
-    # now a driver-side literal (exact — no crossJoin subquery), and
-    # the rank width adapts to the materialized size (~250k user rows
-    # per partition, floored at 1): tiny tables stop paying 32-wide
-    # scheduling overhead per rank job, while a corpus-scale user
-    # table still fans out linearly — same exponent, smaller constant.
-    from iotstream.ext.ranks import adaptive_rank_width
-
-    p = p.localCheckpoint()
-    total_rows = p.count()
-    width = adaptive_rank_width(events.sparkSession, total_rows)
-    p = p.withColumn("_total", F.lit(total_rows))
-    p = with_global_row_number(
+    p = with_global_ranks(
         p,
-        [F.desc("last_purchase_ts"), F.asc("user_id")],
-        out="_r_rn",
-        num_partitions=width,
-        materialize_input=False,
-    )
-    p = with_global_row_number(
-        p, [F.desc("frequency"), F.asc("user_id")], out="_f_rn",
-        num_partitions=width, materialize_input=False,
-    )
-    p = with_global_row_number(
-        p, [F.desc("_mon"), F.asc("user_id")], out="_m_rn",
-        num_partitions=width, materialize_input=False,
+        _r_rn=[F.desc("last_purchase_ts"), F.asc("user_id")],
+        _f_rn=[F.desc("frequency"), F.asc("user_id")],
+        _m_rn=[F.desc("_mon"), F.asc("user_id")],
     )
     total = F.col("_total")
     return p.select(

@@ -12,7 +12,8 @@ are cliques or short chains), so 3-5 rounds in practice.
 
 At 100 TB: labels and adjacency both shuffle on the node key each
 round — pre-partition both on `node` so the per-round join is
-co-located; driver sees only the scalar convergence count per round.
+co-located; driver sees only the scalar convergence count per round,
+observed by that round's checkpoint jobs (no separate count action).
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from iotstream.ext import checkpoint_observed
 
 
 class ConvergenceWarning(UserWarning):
@@ -92,14 +95,18 @@ def connected_components(
                 )
                 .filter(F.col("_old").isNotNull())
             )
-            new_labels = prop.select(
-                "node",
-                "label",
-                (F.col("label") < F.col("_old")).alias("_changed"),
-            ).localCheckpoint()  # materialize: bounded lineage per round
-            changed = new_labels.filter(F.col("_changed")).count()
+            # materialize (bounded lineage per round); the changed-label
+            # count rides on the checkpoint's own jobs
+            new_labels, seen = checkpoint_observed(
+                prop.select(
+                    "node",
+                    "label",
+                    (F.col("label") < F.col("_old")).alias("_changed"),
+                ),
+                changed=F.count_if("_changed"),
+            )
             labels = new_labels.drop("_changed")
-            if changed == 0:
+            if seen["changed"] == 0:
                 converged = True
                 break
     finally:

@@ -1,42 +1,36 @@
-"""Distributed global ranking — exact row_number / ntile / percent_rank
-over a TOTAL order without the single-partition window.
+"""Exact global ``row_number`` / ``ntile`` / ``percent_rank`` over a
+total order, without a single-partition window.
 
 ``row_number() over (order by ...)`` with no partition key funnels the
-whole table through one task — the same plan shape `ext/packing.py`
-documents for prefix sums, and the last one hiding in the analytics
-pack (RFM ntiles, user-value deciles: user-level tables that reach
-hundreds of millions of rows at corpus scale). Formulation:
+whole table through one task. ``with_global_ranks`` is the entry point:
+it materializes its input once, measures the row count in that same
+action, sizes the rank width from the count, and appends ``_total``
+(a literal) plus one global row-number column per named order.
+
+``with_global_row_number`` is the kernel. At width 1 it is one lazy
+``repartition(1)`` + in-task sort + numbering pass. At width > 1:
 
 1. ``repartitionByRange`` + ``sortWithinPartitions`` on the sort key —
    partition i holds a contiguous, ordered slice of the total order
-   (boundaries come from sampling; WHERE a row lands does not affect
+   (boundaries come from sampling; where a row lands does not affect
    its final rank, only load balance);
-2. per-partition local numbering via a NARROW Arrow ``mapInPandas``
+2. per-partition local numbering via a narrow Arrow ``mapInPandas``
    pass (a running counter per partition, partition id from
-   ``TaskContext``) — no second table-sized shuffle, unlike a window
-   partitioned by the partition id, which Catalyst would re-shuffle
-   by hash;
-3. the numbered frame is ``localCheckpoint``-ed ONCE, then both
-   consumers (the per-partition count table and the main join side)
-   read the same materialized partitions — correctness must not
-   depend on exchange reuse deduplicating two range exchanges whose
-   sampled boundaries could otherwise differ;
-4. per-partition row counts — STRICTLY bounded at one row per
-   partition, i.e. by cluster parallelism, never by data size —
-   prefix-summed driver-side and broadcast back as a tiny offset
-   table added to the local rank. (An earlier draft used a
-   single-partition window over the count table; driver-side is the
-   same bounded work without WindowExec's all-to-one-partition
-   machinery or its warning.)
+   ``TaskContext``) — no second table-sized shuffle;
+3. the numbered frame is ``localCheckpoint``-ed once, so the
+   per-partition count table and the main join side read the same
+   materialized partitions (correctness does not depend on two range
+   exchanges sampling the same boundaries);
+4. per-partition row counts — one row per partition, bounded by the
+   width, never by data size — are prefix-summed on the driver and
+   broadcast back as a tiny offset table added to the local rank.
 
-Bit-identical to the naive global window for any total order (ties
-impossible when the sort key ends in a unique column — every caller
-here appends one), with the table-sized stages one shuffle + one
-narrow pass. ``ntile``/``percent_rank`` derive from the global row
-number and the scalar total, matching Spark's built-ins exactly:
-ntile's first ``N % n`` buckets take one extra row; percent_rank =
-(rank-1)/(N-1) (0.0 for a single row, and rank == row_number under a
-total order).
+Both regimes are bit-identical to the builtin window for any total
+order (end the sort key with a unique column). ``ntile`` and
+``percent_rank`` derive from the global row number and the scalar
+total, matching Spark's builtins exactly: ntile's first ``N % n``
+buckets take one extra row; percent_rank = (rank-1)/(N-1), 0.0 for a
+single row (rank == row_number under a total order).
 """
 
 from __future__ import annotations
@@ -45,41 +39,62 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from iotstream.ext import checkpoint_observed
+
+#: Rows per rank partition when sizing the width from a measured count.
+ROWS_PER_PARTITION = 250_000
+
+
+def _rank_width(spark, total_rows: int) -> int:
+    """~``ROWS_PER_PARTITION`` rows per partition, floored at 1 (the
+    single-partition regime) and capped at 32× cluster parallelism."""
+    return max(
+        1,
+        min(
+            spark.sparkContext.defaultParallelism * 32,
+            -(-total_rows // ROWS_PER_PARTITION),
+        ),
+    )
+
+
+def with_global_ranks(df: DataFrame, **orders: list[Column]) -> DataFrame:
+    """Append ``_total`` (the row count, a literal) and, for each
+    ``name=order_by``, an exact 1-based global ``row_number`` column
+    ``name`` over ``order_by`` (a total order — end it with a unique
+    tiebreaker).
+
+    Eager: ``df`` is materialized once, and its row count is observed
+    by that same action. The count sizes one width shared by every
+    order, so a table that fits one task takes the lazy
+    single-partition regime and a large one fans out linearly."""
+    df, seen = checkpoint_observed(df, n=F.count(F.lit(1)))
+    total = seen["n"]
+    width = _rank_width(df.sparkSession, total)
+    df = df.withColumn("_total", F.lit(total))
+    for out, order_by in orders.items():
+        df = with_global_row_number(df, order_by, width, out)
+    return df
+
 
 def with_global_row_number(
     df: DataFrame,
     order_by: list[Column],
+    num_partitions: int,
     out: str = "_rn",
-    num_partitions: int | None = None,
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Append exact 1-based global ``row_number`` over ``order_by``
-    (must be a total order — end it with a unique tiebreaker).
+    (a total order — end it with a unique tiebreaker) as ``out``,
+    ranking on ``num_partitions`` partitions.
 
-    Eager: materializes the numbered frame (``localCheckpoint``) so
-    the count table and the main output are guaranteed to see the
-    same range-partition boundaries.
-
-    ``materialize_input=False`` skips the input ``localCheckpoint``
-    for callers whose input is ALREADY materialized (or provably
-    cheap): r7 added the unconditional pin for corpus-lineage inputs,
-    but a caller stacking several ranks over one checkpointed base
-    (``rfm_segments``) re-copied the base per call — pure fixed cost
-    (VERDICT r7 item 3).
-
-    SINGLE-PARTITION FAST PATH (r8): when the resolved width is 1 —
-    callers size it from a MEASURED row count, so this is the
-    "table provably fits one task" regime, not a plan-shape guess —
-    the exact rank is one round-robin ``repartition(1)`` + in-task
-    sort + numbering pass: no boundary-sampling job, no count table,
-    no prefix join, no checkpoints (a single partition has no
-    boundary nondeterminism to pin). Lazy, one job when actioned.
-    The distributed path is unchanged for any width > 1."""
+    Width 1 is lazy: one job when actioned. Width > 1 is eager: it
+    materializes the numbered frame (``localCheckpoint``) and collects
+    the per-partition counts. Inputs with an expensive lineage should
+    be materialized first (``with_global_ranks`` does), since the
+    range boundaries are sampled in a job of their own."""
     import numpy as np
 
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if n == 1:
+    if num_partitions == 1:
         ranged1 = df.repartition(1).sortWithinPartitions(*order_by)
         schema1 = StructType(
             list(df.schema.fields) + [StructField(out, LongType())]
@@ -96,16 +111,9 @@ def with_global_row_number(
                 yield pdf
 
         return ranged1.mapInPandas(number_single, schema=schema1)
-    # Materialize the input once before range-partitioning:
-    # repartitionByRange runs a SEPARATE sampling job over the child
-    # lineage to pick boundaries, then the shuffle runs it again — for
-    # rank inputs (always post-aggregation tables whose lineage is a
-    # corpus-sized agg) that is two full corpus passes. The inputs
-    # themselves are bounded (vocab / per-user tables), so pinning
-    # them is cheap at any scale.
-    if materialize_input:
-        df = df.localCheckpoint()
-    ranged = df.repartitionByRange(n, *order_by).sortWithinPartitions(*order_by)
+    ranged = df.repartitionByRange(num_partitions, *order_by).sortWithinPartitions(
+        *order_by
+    )
 
     out_schema = StructType(
         list(df.schema.fields)
@@ -127,9 +135,8 @@ def with_global_row_number(
             yield pdf
 
     local = ranged.mapInPandas(number, schema=out_schema).localCheckpoint()
-    # one row per partition — bounded by parallelism, not data size, so
-    # the exclusive prefix-sum is legitimate driver-side work (same
-    # rationale as the IVF codebook staying in numpy)
+    # one row per partition — bounded by the width, not data size, so
+    # the exclusive prefix-sum is driver-side work
     counts = local.groupBy("_pid").agg(F.max("_lrn").alias("_cnt")).collect()
     acc = 0
     offsets = []
@@ -139,26 +146,8 @@ def with_global_row_number(
     prefix = spark.createDataFrame(offsets, "_pid long, _off long")
     return (
         local.join(F.broadcast(prefix), "_pid")
-        .withColumn(out, (F.col("_off") + F.col("_lrn")).cast("long"))
+        .withColumn(out, F.col("_off") + F.col("_lrn"))
         .drop("_pid", "_lrn", "_off")
-    )
-
-
-def adaptive_rank_width(
-    spark, total_rows: int, rows_per_partition: int = 250_000
-) -> int:
-    """Rank width from a MEASURED row count: ~250k rows per partition,
-    floored at 1 (→ the single-partition fast path), capped at 32×
-    cluster parallelism. Callers count their (already materialized)
-    rank input and stop paying session-width scheduling overhead on
-    dictionary/user-sized tables, while corpus-scale tables fan out
-    linearly with size — same exponent, smaller constant."""
-    return max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism * 32,
-            -(-total_rows // rows_per_partition),
-        ),
     )
 
 

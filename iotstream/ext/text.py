@@ -104,36 +104,16 @@ def vocab_build(
     docs: DataFrame, col: str = "text", min_count: int = 5
 ) -> DataFrame:
     """Frequency-ranked vocabulary with a min-count floor (the
-    tokenizer-training precursor). Ties broken lexically so ids are
-    deterministic. Ranking runs on the DISTRIBUTED global-rank
-    primitive (``ext/ranks.py``: range-repartition + narrow local
-    numbering + tiny prefix-sum — bit-identical to the naive global
-    window): the vocabulary is post-aggregation and usually
-    dictionary-sized, but a web-scale corpus's min_count≥5 vocab can
-    reach 10⁸ rows, and a ``row_number() OVER (ORDER BY ...)`` with no
-    partition key would funnel all of it through ONE task (VERDICT r6
-    minor). (cnt desc, word asc) is a total order — word is unique
-    after the count groupBy."""
-    from iotstream.ext.ranks import adaptive_rank_width, with_global_row_number
+    tokenizer-training precursor): ``token_id`` is the 1-based rank
+    over (cnt desc, word asc), a total order since word is unique
+    after the count groupBy, so ids are deterministic. Ranked by
+    ``ext/ranks.py::with_global_ranks``: no single-partition window,
+    and the count table is materialized once (one corpus pass)."""
+    from iotstream.ext.ranks import with_global_ranks
 
     wc = word_counts(docs, col).filter(F.col("cnt") >= min_count)
-    # Materialize the count table once (ONE corpus pass), then size
-    # the rank width from its measured row count (r8): the r7 shape
-    # paid session-width sampling/checkpoint/prefix jobs even for a
-    # dictionary-sized vocab — pure fixed cost; a 10⁸-row web vocab
-    # still fans out linearly via the same policy.
-    wc = wc.localCheckpoint()
-    width = adaptive_rank_width(docs.sparkSession, wc.count())
-    ranked = with_global_row_number(
-        wc,
-        [F.desc("cnt"), F.asc("word")],
-        out="_rn",
-        num_partitions=width,
-        materialize_input=False,
-    )
-    return ranked.select(
-        "word", "cnt", F.col("_rn").cast("long").alias("token_id")
-    )
+    ranked = with_global_ranks(wc, _rn=[F.desc("cnt"), F.asc("word")])
+    return ranked.select("word", "cnt", F.col("_rn").alias("token_id"))
 
 
 def tokenize_encode(

@@ -42,8 +42,6 @@ NLJ_OK = {
     "important_stock",
     "tfidf_top_terms",
     "lm_bigram_xent",  # 1-row |V| scalar broadcast cross join
-    "user_value_deciles",  # 1-row scalar-total broadcast (ranks.py)
-    "rfm_segments",  # same
     "df_token_filter",  # 1-row corpus-count broadcast (r17: the DF
     # threshold moved in-plan; the cross join side is a single row)
 }
@@ -51,16 +49,11 @@ NLJ_OK = {
 # Queries whose plan legitimately contains a Window over an Exchange
 # SinglePartition: the windowed input is BOUNDED BY DESIGN, not
 # table-sized — the block-prefix table of a two-level scan (one row
-# per block/partition: sequence_pack, ranks-based deciles/RFM) or a
-# dictionary-sized vocabulary rank. Everything else that windows over
-# a single-partition exchange is the scale smell ext/ranks.py exists
-# to remove.
+# per block: sequence_pack) or a dictionary-sized vocabulary rank.
+# Everything else that windows over a single-partition exchange is the
+# scale smell ext/ranks.py exists to remove (its ranks emit no Window).
 GLOBAL_WINDOW_OK = {
     "sequence_pack",  # block totals table (~corpus/block_size rows)
-    "user_value_deciles",  # ranks.py per-partition counts (~shuffle width)
-    "rfm_segments",  # same, ×3 rank passes
-    "vocab_build",  # vocabulary-sized rank
-    "tokenize_encode",  # vocab rank feeding the broadcast dictionary
     "df_token_filter",  # document-frequency vocab rank
 }
 
