@@ -455,16 +455,15 @@ def q_streaming_window_agg(spark, sf_dir):
     final upserted state, which equals the batch result under the
     unbounded correctness watermark."""
     from iotstream.schemas import nonnegative_event_time
-    from iotstream.streaming import scoped_shuffle_partitions, windowed_agg_final_state
+    from iotstream.streaming import windowed_agg_final_state
 
     # watermarked op: non-negative event-time domain (see schemas)
     valid = nonnegative_event_time(
         validity_filter(sensorize(load_events_stream(spark, sf_dir)))
     )
-    with scoped_shuffle_partitions(spark, 8):
-        return windowed_agg_final_state(
-            spark, valid, "ts", ["id"], F.col("metrics.temperature")
-        )
+    return windowed_agg_final_state(
+        spark, valid, "ts", ["id"], F.col("metrics.temperature")
+    )
 
 
 def q_top_events(spark, sf_dir):
@@ -507,12 +506,11 @@ def q_stateful_quality_monitor(spark, sf_dir):
     per-sensor quality monitor (totals + longest consecutive-invalid
     run). Runs as a real streaming query; final upserted state is
     oracle-checked against a gaps-and-islands SQL formulation."""
-    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming import drain
     from iotstream.streaming.stateful import quality_monitor
 
     sensor = sensorize(load_events_stream(spark, sf_dir))
-    with scoped_shuffle_partitions(spark, 8):
-        return drain(spark, quality_monitor(sensor), "update", ["id"])
+    return drain(spark, quality_monitor(sensor), "update", ["id"])
 
 
 def q_sessionize(spark, sf_dir):
@@ -530,14 +528,13 @@ def q_streaming_sessionize(spark, sf_dir):
     session_window's boundary semantics (gap >= threshold splits,
     session_end = last event + gap)."""
     from iotstream.ext.sessions import session_window_stream
-    from iotstream.streaming import UNBOUNDED_WATERMARK, drain, scoped_shuffle_partitions
+    from iotstream.streaming import UNBOUNDED_WATERMARK, drain
 
     stream = load_events_stream(spark, sf_dir).select("user_id", "ts")
     sessions = session_window_stream(
         stream, key="user_id", watermark=UNBOUNDED_WATERMARK
     )
-    with scoped_shuffle_partitions(spark, 8):
-        return drain(spark, sessions, "complete")
+    return drain(spark, sessions, "complete")
 
 
 def q_distinct_users(spark, sf_dir):
@@ -608,22 +605,11 @@ def q_dq_report(spark, sf_dir):
 def q_dedup_report(spark, sf_dir):
     """Composed curation verdict per document: exact-dup canonical +
     text-near-dup + embedding-near-dup flags in one sheet."""
-    from iotstream.streaming import scoped_shuffle_partitions
-
     # same demo cap as neardup_jaccard: the exact-verify kernels are
     # the correctness twins; the blocked kernels are the scale path.
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 2000)
-    # width right-sized by the declared 2000-doc cap (same rationale
-    # as dedup_clusters): this composed sheet is ~12 sequential
-    # exchanges, and 32-wide shuffles pay scheduling overhead per
-    # stage that AQE cannot coalesce on inputs this small. The conf is
-    # read at EXECUTION, not plan construction, so the sheet is
-    # materialized (localCheckpoint — same trick the CC rounds inside
-    # dedup_clusters rely on) while the scope is active; the caller
-    # receives the 2000-row materialized frame.
-    with scoped_shuffle_partitions(spark, 8):
-        return xdedup.dedup_report(docs, emb).localCheckpoint()
+    return xdedup.dedup_report(docs, emb)
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -632,20 +618,15 @@ def q_dedup_clusters(spark, sf_dir):
     shingle-Jaccard pair graph; singletons keep their own id. Oracle
     is a recursive-CTE reachability closure."""
     from iotstream.ext.graph import connected_components
-    from iotstream.streaming import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
     pairs = xdedup.neardup_jaccard_exact(docs, threshold=0.5).select(
         "doc_a", "doc_b"
     )
-    # width right-sized by the declared 2000-doc cap: every CC-round
-    # table is <=|docs| rows, and each round pays per-partition job
-    # overhead (its checkpoint) that AQE cannot coalesce.
-    with scoped_shuffle_partitions(spark, 8):
-        comp = connected_components(
-            pairs, docs.select("doc_id"), src="doc_a", dst="doc_b", node="doc_id"
-        )
-        return comp.select(F.col("node").alias("doc_id"), "cluster_id")
+    comp = connected_components(
+        pairs, docs.select("doc_id"), src="doc_a", dst="doc_b", node="doc_id"
+    )
+    return comp.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 def q_dedup_clusters_lsh(spark, sf_dir):
@@ -661,15 +642,13 @@ def q_dedup_clusters_lsh(spark, sf_dir):
     the outcome reproducible; `tests/test_graph.py` asserts LSH-feed vs
     exact-feed cluster equality)."""
     from iotstream.ext.graph import connected_components
-    from iotstream.streaming import scoped_shuffle_partitions
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
     pairs = xdedup.neardup_minhash(docs, threshold=0.5).select("doc_a", "doc_b")
-    with scoped_shuffle_partitions(spark, 8):  # same cap-sized width
-        comp = connected_components(
-            pairs, docs.select("doc_id"), src="doc_a", dst="doc_b", node="doc_id"
-        )
-        return comp.select(F.col("node").alias("doc_id"), "cluster_id")
+    comp = connected_components(
+        pairs, docs.select("doc_id"), src="doc_a", dst="doc_b", node="doc_id"
+    )
+    return comp.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
 def q_dataset_split(spark, sf_dir):
@@ -978,32 +957,27 @@ def q_streaming_dedup(spark, sf_dir):
     """Streaming exact dedup: dropDuplicates on the event key inside a
     real micro-batch stream (state-store backed), drained availableNow;
     oracle is batch DISTINCT. The streaming twin of E1."""
-    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming import drain
 
     deduped = (
         load_events_stream(spark, sf_dir)
         .select("event_id", "user_id", "event_type", "value")
         .dropDuplicates(["event_id"])
     )
-    with scoped_shuffle_partitions(spark, 8):
-        return drain(spark, deduped, "append")
+    return drain(spark, deduped, "append")
 
 
 def q_streaming_enrich(spark, sf_dir):
     """Stream×static broadcast enrichment join (dim never shuffles the
     stream) → running per-segment totals; final upserted state equals
     the batch join+agg (the oracle)."""
-    from iotstream.streaming import scoped_shuffle_partitions
     from iotstream.streaming.joins import enrich_against_dim_final
 
     stream = load_events_stream(spark, sf_dir).select("user_id", "value")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    with scoped_shuffle_partitions(spark, 8):
-        return enrich_against_dim_final(
-            spark, stream, dim, "user_id", "c_mktsegment"
-        )
+    return enrich_against_dim_final(spark, stream, dim, "user_id", "c_mktsegment")
 
 
 def q_streaming_interval_join(spark, sf_dir):
@@ -1011,7 +985,6 @@ def q_streaming_interval_join(spark, sf_dir):
     per-user events within 30 min after each error, as pairs; drained
     append-mode — inner-join matches emit eagerly, so the finite run
     is complete. Oracle is the batch pair join."""
-    from iotstream.streaming import scoped_shuffle_partitions
     from iotstream.streaming.joins import interval_join_pairs
 
     left = (
@@ -1029,10 +1002,9 @@ def q_streaming_interval_join(spark, sf_dir):
         F.col("ts").alias("r_ts"),
         F.col("value").alias("follow_value"),
     )
-    with scoped_shuffle_partitions(spark, 8):
-        pairs = interval_join_pairs(
-            spark, left, right, "user_id", left_ts="e_ts", right_ts="r_ts"
-        )
+    pairs = interval_join_pairs(
+        spark, left, right, "user_id", left_ts="e_ts", right_ts="r_ts"
+    )
     return pairs.select(
         "error_event_id", "follow_event_id", "user_id", "follow_value"
     )
@@ -1750,12 +1722,11 @@ def q_streaming_status_change(spark, sf_dir):
     per-sensor valid↔invalid edge detector, drained availableNow;
     emitted transitions are oracle-checked against the batch lag()
     formulation of the same predicate."""
-    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming import drain
     from iotstream.streaming.stateful import status_changes
 
     sensor = sensorize(load_events_stream(spark, sf_dir))
-    with scoped_shuffle_partitions(spark, 8):
-        return drain(spark, status_changes(sensor), "append")
+    return drain(spark, status_changes(sensor), "append")
 
 
 def q_status_change(spark, sf_dir):
@@ -1879,7 +1850,7 @@ def q_streaming_dedup_wm(spark, sf_dir):
     (schemas.positive_event_time; the hostile gate measured 1040 vs
     1041 rows under the previous >= contract)."""
     from iotstream.schemas import positive_event_time
-    from iotstream.streaming import drain, scoped_shuffle_partitions
+    from iotstream.streaming import drain
 
     deduped = (
         # watermarked dedup: STRICTLY-positive event-time domain (the
@@ -1889,8 +1860,7 @@ def q_streaming_dedup_wm(spark, sf_dir):
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with scoped_shuffle_partitions(spark, 8):
-        return drain(spark, deduped, "append")
+    return drain(spark, deduped, "append")
 
 
 # ------------------------------------------------------------- contract

@@ -555,24 +555,12 @@ def contamination_verdict(
     }
 
 
-def _env_bool(var: str, default: str) -> str:
-    """Normalize a boolean env override to the literal 'true'/'false'
-    Spark requires — '1'/'yes'/'on' would otherwise fail session init
-    instead of toggling the A/B override (ADVICE r17)."""
-    raw = os.environ.get(var, default).strip().lower()
-    if raw in ("1", "true", "yes", "on"):
-        return "true"
-    if raw in ("0", "false", "no", "off", ""):
-        return "false"
-    raise ValueError(f"{var}: expected a boolean (true/false/1/0/yes/no), got {raw!r}")
-
-
 def _session(cpus: str, extra_conf: dict | None = None, app: str = "iotstream-bench"):
-    """The record session. ``extra_conf`` lets tools/ab_bench.py reuse
-    this EXACT builder (same baseline configs, incl. the r17
-    preferSortMergeJoin/Arrow settings) with per-experiment overrides —
-    an A/B harness with its own builder silently measures a different
-    baseline than the record sweep (ADVICE r17)."""
+    """The record session: ``local[cpus]`` with ``cpus`` shuffle
+    partitions, AQE, shuffled-hash joins allowed, Arrow transfers and a
+    UTC session. ``extra_conf`` layers per-experiment overrides on this
+    exact builder (tools/ab_bench.py), so an A/B compares against the
+    record baseline."""
     from pyspark.sql import SparkSession
 
     builder = (
@@ -581,21 +569,10 @@ def _session(cpus: str, extra_conf: dict | None = None, app: str = "iotstream-be
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r17 (guide §3.1/§9): allow the planner to pick shuffled-hash
-        # over sort-merge when its size conditions hold — skips both
-        # sides' sorts in the fact/dim equi-joins that dominate the
-        # tail. Scale-portable (the planner still requires the build
-        # side to fit per partition; SMJ remains the fallback) and
-        # env-overridable for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            _env_bool("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        # r17 (guide §6): Arrow for driver transfers — the similarity
-        # kernels collect their fixed query set via toPandas(); the
-        # row-pickle path pays per-row conversion for array<double>
-        # columns. Orders-of-magnitude cheaper at any scale; A/B at
-        # sf0.1 measured ~6% off the similarity family.
+        # the planner may pick shuffled-hash over sort-merge when the
+        # build side fits per partition; sort-merge stays the fallback
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # Arrow for driver transfers (the similarity kernels' toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -14,7 +14,9 @@
   when the upsert table is read; complete drains overwrite, so a
   replay is harmless. ``sinks.dual_sink_writer`` is still
   at-least-once: a replayed epoch appends its raw and clean rows again.
-- T5: streaming aggregation state lives in the state store.
+- T5: streaming aggregation state lives in the state store, in as many
+  partitions as the session's ``spark.sql.shuffle.partitions`` when the
+  query first starts; a restarted checkpoint keeps its recorded width.
 - T6: pacing via triggers (availableNow in tests, processingTime in
   production) instead of the reference's 100 ms sleep poll
   (HiveMQSource.java:86-93).
@@ -91,26 +93,6 @@ def run_available_now(writer, checkpoint: str | None = None):
     return q
 
 
-class scoped_shuffle_partitions:
-    """Temporarily right-size ``spark.sql.shuffle.partitions`` — the
-    number of state-store partitions a streaming query creates. A
-    driver session left at the 200 default pays 200 state tasks per
-    micro-batch on test-scale data; production sizes this to the
-    cluster. Restores the previous value on exit."""
-
-    def __init__(self, spark, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
 def drain(
     spark: SparkSession, df: DataFrame, output_mode: str, keys=()
 ) -> DataFrame:
@@ -125,7 +107,8 @@ def drain(
       batch overwrites the previous one).
 
     With no input at all, every mode returns an empty table with
-    ``df``'s columns."""
+    ``df``'s columns. The query keeps its state in as many partitions
+    as the session's ``spark.sql.shuffle.partitions``."""
     writer = df.writeStream.outputMode(output_mode)
     if output_mode == "update":
         sink = ParquetUpsertSink(df.schema, keys)

@@ -396,3 +396,19 @@ def test_minhash_guard_stats_observation(spark):
     out2 = neardup_minhash(docs, guard_stats=stats2)  # default 4096 cap
     out2.count()
     assert stats2["observation"].get["dropped_rows"] == 0
+
+
+def test_dedup_report_builder_starts_at_most_one_job(spark):
+    """Building the declared ``dedup_report`` query returns a lazy plan:
+    the sheet's shuffles run when the caller acts on it, not during the
+    build."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    group = "dedup-report-build"
+    sc.setJobGroup(group, group)
+    try:
+        entry.q_dedup_report(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1

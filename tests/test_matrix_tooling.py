@@ -720,27 +720,6 @@ def test_stray_guard_ignores_mentions_and_flags_real_runs():
     )
 
 
-def test_env_bool_normalizes_and_rejects(monkeypatch):
-    """ADVICE r17: SPARK_GRAFT_PREFER_SMJ='1'/'yes' must toggle the
-    boolean conf instead of failing Spark session init; junk raises
-    loudly at parse time rather than deep inside the JVM."""
-    import pytest as _pytest
-
-    import bench
-
-    for raw, want in [
-        ("1", "true"), ("true", "true"), ("YES", "true"), ("on", "true"),
-        ("0", "false"), ("False", "false"), ("no", "false"), ("", "false"),
-    ]:
-        monkeypatch.setenv("X_BOOL", raw)
-        assert bench._env_bool("X_BOOL", "false") == want, raw
-    monkeypatch.delenv("X_BOOL", raising=False)
-    assert bench._env_bool("X_BOOL", "true") == "true"
-    monkeypatch.setenv("X_BOOL", "maybe")
-    with _pytest.raises(ValueError):
-        bench._env_bool("X_BOOL", "false")
-
-
 def test_stray_guard_flags_python_dash_m_invocations():
     """ADVICE r17: `python -m`-style invocations of the guarded
     scripts are strays too; module paths that merely END in the name

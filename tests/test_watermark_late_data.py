@@ -9,7 +9,7 @@ import time
 from pyspark.sql import functions as F
 
 from iotstream.operators.windows import tumbling_agg
-from iotstream.streaming import drain, scoped_shuffle_partitions
+from iotstream.streaming import drain
 
 SCHEMA = "id string, ts timestamp, value double"
 
@@ -49,8 +49,7 @@ def test_late_row_beyond_watermark_is_dropped(spark, tmp_path):
     agg = tumbling_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
-    with scoped_shuffle_partitions(spark, 4):
-        final = drain(spark, agg, "update", ["window_start", "id"])
+    final = drain(spark, agg, "update", ["window_start", "id"])
     out = {
         (r.window_start.isoformat(), r.id): r.max_value
         for r in final.collect()
@@ -79,8 +78,7 @@ def test_same_data_with_unbounded_watermark_keeps_late_row(spark, tmp_path):
     agg = tumbling_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
-    with scoped_shuffle_partitions(spark, 4):
-        final = drain(spark, agg, "update", ["window_start", "id"])
+    final = drain(spark, agg, "update", ["window_start", "id"])
     out = {
         (r.window_start.isoformat(), r.id): r.max_value
         for r in final.collect()
@@ -137,8 +135,7 @@ def test_stream_stream_join_drops_rows_at_or_before_epoch(spark, tmp_path):
         & (F.col("r_ts") > F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 MINUTES"))
     )
-    with scoped_shuffle_partitions(spark, 4):
-        pairs = drain(spark, left.join(right, cond, "inner"), "append")
+    pairs = drain(spark, left.join(right, cond, "inner"), "append")
     got = sorted(r.lid for r in pairs.collect())
     assert got == ["ctrl", "plus"]  # 'pre' and 'exact' dropped by Spark
 
@@ -153,8 +150,7 @@ def test_dedup_within_watermark_drops_rows_at_or_before_epoch(spark, tmp_path):
         .withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark(["id", "ts"])
     )
-    with scoped_shuffle_partitions(spark, 4):
-        kept = sorted((r.id, r.ts) for r in drain(spark, stream, "append").collect())
+    kept = sorted((r.id, r.ts) for r in drain(spark, stream, "append").collect())
     ids = [i for i, _ in kept]
     assert "pre" not in ids
     assert (
@@ -190,8 +186,7 @@ def test_session_window_keeps_epoch_exact_event(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("s"), "id", "n")
     )
-    with scoped_shuffle_partitions(spark, 4):
-        got = {(r.id, r.s) for r in drain(spark, stream, "append").collect()}
+    got = {(r.id, r.s) for r in drain(spark, stream, "append").collect()}
     # epoch-exact event's session survives (end = epoch+gap > 0)
     assert ("exact", dt.datetime(1970, 1, 1)) in got
     # the epoch-CROSSING pre-epoch session survives too (end +25 min)
