@@ -33,7 +33,7 @@ from iotstream.ext.multimodal import (
     resize_media,
 )
 from iotstream.generator import _HUM, _TEMP, synthetic_sensor_events
-from iotstream.operators.filters import VALID_SQL, validity_filter
+from iotstream.operators.filters import VALID_SQL, is_valid, validity_filter
 from iotstream.operators.parse import parse_sensor_json, to_sensor_json
 from iotstream.operators.project import raw_archive_projection
 from iotstream.operators.throughput import throughput
@@ -135,6 +135,9 @@ FORCE_WINDOW: tuple[tuple[str, int], ...] = (
     ("rfm_segments", 19),
     ("vocab_build", 19),
     ("tokenize_encode", 19),
+    # r19 pin: status_change classifies through filters.is_valid (the F2
+    # predicate) instead of an inline copy of it.
+    ("status_change", 19),
 )
 
 
@@ -1748,10 +1751,9 @@ def q_status_change(spark, sf_dir):
         F.col("metrics.temperature").alias("temperature"),
         F.col("metrics.humidity").alias("humidity"),
     )
+    # NULL metrics make is_valid NULL, so `when` falls through: "valid"
     status = F.when(
-        ((F.col("temperature") == 0) & (F.col("humidity") == 0))
-        | ((F.col("temperature") >= 50) & (F.col("humidity") >= 100)),
-        F.lit("invalid"),
+        ~is_valid(F.col("temperature"), F.col("humidity")), F.lit("invalid")
     ).otherwise(F.lit("valid"))
     w = Window.partitionBy("id").orderBy("ts", "messageId")
     edges = (

@@ -1,62 +1,42 @@
-"""Bench harness — times every declared query at the bench scale factor.
+"""Bench harness: times every declared query at the bench scale factor.
 
-Prints ONE compact JSON line:
+Prints ONE compact JSON line of at most COMPACT_LINE_BUDGET characters:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {<headline subset>: sec, ...}, "sf": <float>,
-     "n_queries": N, "loadavg": {...}, "errors": [...]}
-(stdout carries only the headline-query subset to keep the line small;
-the FULL per-query timing map is written to BENCH_FULL.json alongside.)
+     "n_queries": N, "loadavg": {...}, "certified": {...}, ...}
+The full per-query timing map and load record go to BENCH_FULL.json.
 
-The artifact is load-self-diagnosing (VERDICT r8 item 3): loadavg +
-ISO-UTC wall-clock + cumulative hypervisor steal are sampled before
-the Spark session exists (the clean external-load signal), after
-every query, at the end of the query sweep, and at the true end of
-the artifact (after the isolated series and the ingest drain, so a
-steal burst during those phases is recorded too). The compact line
-carries the summary with a headline `contaminated` flag — busy at
-start (loadavg), >1% of machine cycles stolen over the session, or
->5% stolen inside any inter-sample window (steal_ratio /
-steal_ratio_window_max; loadavg is blind to steal, the measured cause
-of the 2× cross-session spread) — so a capture taken on a busy
-machine identifies itself instead of reading as a perf regression.
-The session threshold was tightened from 0.05 to 0.01 in r14 after
-the r13 matrix captures (steal 0.012-0.032, ~32-40% inflated vs the
-same code idle at 0.0003) all self-certified clean — see
-contamination_verdict() for the full threshold rationale. The
-deviation-from-idle-median alternative (VERDICT r13) was rejected:
-it couples the gate to a committed reference total that changes with
-every engine/query-set edit, while the steal counter is
-code-independent.
-
-r15 adds PER-QUERY steal certification (VERDICT r14 item 1 — the
-band ate two rounds' bench legs): every reported number carries its
-own timing window (pre/post steal samples around _time_one); queries
-whose window exceeds PER_QUERY_STEAL_GATE are re-timed after the
-sweep inside clean gaps (wait_clean_window) and the clean capture is
-SPLICED in. The headline `contaminated` flag is now splice_verdict()
-— clean iff start-load clean, no co-tenant sweep load, and every
-final window certified — while the raw session detector rides
-alongside as `session_contaminated`/`session_causes`. `--wait-clean`
-(or SPARK_GRAFT_WAIT_CLEAN=1) additionally delays the sweep start
-into a steal-free gap, budget SPARK_GRAFT_WAIT_CLEAN_SEC (900 s
-default); re-time budget SPARK_GRAFT_RETIME_SEC (600 s default).
+Contracts:
+- ``_session`` is the one Spark session builder outside ``perfbench/``:
+  tests, the oracle and dtype gates, the sweeps, the plan tools and the
+  A/B and probe tools all call it and pass their differences through
+  ``extra_conf``/``app``. Its task slots and shuffle width come from
+  ``session_cpus()``.
+- ``measure`` is the one query timing: a warm-up run, a forced GC, then
+  the min of 2 noop-sink runs, with the hypervisor-steal window sampled
+  around the whole call. A number is certified clean when its own
+  window's steal is at or under PER_QUERY_STEAL_GATE; dirty numbers are
+  re-timed after the sweep inside clean gaps and the clean capture is
+  spliced in (``splice_dirty``). The headline ``contaminated`` flag is
+  ``splice_verdict``; the session detector ``contamination_verdict``
+  rides alongside.
+- ``ingest`` is the one streaming-ingest timing: the full topology
+  (JSON payload stream, parse, raw archive + clean sink) drained
+  availableNow; the best clean drain after one warm-up.
+- The ten slowest queries are re-timed in fresh single-query JVMs
+  (``python bench.py --one <query>``), the "isolated" series: a rise in
+  the session numbers alone is load, a rise in the isolated numbers is
+  a plan change.
+- Exit code 0 with a parseable line even when queries fail; failures
+  read -1.0 and are listed under "errors".
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32).
-
-After the in-session sweep, the slowest queries are RE-TIMED in fresh
-single-query subprocesses (new JVM each, same warm-up/GC/min-of-2
-hygiene) and reported as the "isolated" series alongside the session
-numbers: a 128-query session carries co-resident heap/JIT/cache state
-that inflates individual timings by 30-40% in ways min-of-2 cannot
-remove (VERDICT r6), so regressions are judged on BOTH series — a
-session-only rise is load, an isolated rise is a real plan change.
-``python bench.py --one <query>`` is the subprocess entry point.
-
-Each query is forced end-to-end with the noop sink (full computation,
-no driver-side collect overhead). AQE is on — at bench scale it
-coalesces shuffle partitions and handles skew the same way a cluster
-run would.
+     SPARK_GRAFT_CPUS   (default: the CPUs this process may run on),
+     SPARK_DRIVER_MEM   (default 48g).
+``--wait-clean`` (or SPARK_GRAFT_WAIT_CLEAN=1) delays the sweep start
+into a steal-free gap, budget SPARK_GRAFT_WAIT_CLEAN_SEC (900 s);
+SPARK_GRAFT_RETIME_SEC (600 s) budgets the re-time pass;
+SPARK_GRAFT_NO_ISOLATED=1 skips the isolated series.
 """
 
 from __future__ import annotations
@@ -72,7 +52,7 @@ import time
 def _tick_hz() -> float:
     """Kernel jiffy rate for /proc/stat deltas. Hardcoding 100 breaks
     the steal ratio (and the contamination verdict) on any kernel built
-    with a non-default USER_HZ (ADVICE r9)."""
+    with a non-default USER_HZ."""
     try:
         hz = os.sysconf("SC_CLK_TCK")
         return float(hz) if hz > 0 else 100.0
@@ -83,7 +63,7 @@ def _tick_hz() -> float:
 def _proc_cpus() -> int:
     """CPUs actually accumulating jiffies, counted from the per-cpu
     lines of /proc/stat — os.cpu_count() over-divides the steal ratio
-    when CPUs are offline/hotplugged (ADVICE r9)."""
+    when CPUs are offline/hotplugged."""
     try:
         with open("/proc/stat") as f:
             n = sum(
@@ -101,8 +81,7 @@ def load_at_start_threshold(ncpu: int | None = None) -> float:
     1-min loadavg above 25% of the machine (floor 2.0) means someone
     ELSE was running before the bench added its own threads. Public so
     tools/run_matrix.py's settle gate imports it instead of duplicating
-    the formula (ADVICE r12: a re-derived copy silently diverges from
-    the contamination verdict it is meant to pre-empt)."""
+    the formula."""
     n = ncpu if ncpu is not None else _proc_cpus()
     return max(2.0, round(0.25 * n, 1))
 
@@ -141,14 +120,14 @@ def _load_sample() -> dict:
     }
 
 
-#: Per-query window steal gate (VERDICT r14 item 1): a query's number
-#: is CERTIFIED clean when the steal inside its own timing window
-#: (pre-sample → post-sample, spanning warm-up + GC + both timed runs)
-#: stays at or under this fraction of machine cycles. Matches the
-#: session threshold (0.01): r13 forensics showed even 1-3% session
-#: steal correlates with 30-40% inflation (the counter under-reports
-#: co-tenant throttling), while idle noise sits at 0.0003-0.002 — so
-#: the gate sits just above idle, with ~5× margin both ways.
+#: Per-query window steal gate: a query's number is CERTIFIED clean
+#: when the steal inside its own timing window (pre-sample →
+#: post-sample, spanning warm-up + GC + both timed runs) stays at or
+#: under this fraction of machine cycles. Matches the session
+#: threshold (0.01): 1-3% session steal was measured to go with 30-40%
+#: inflation (the counter under-reports co-tenant throttling), while
+#: idle noise sits at 0.0003-0.002, so the gate sits just above idle
+#: with ~5× margin both ways.
 PER_QUERY_STEAL_GATE = 0.01
 
 #: Minimum window length (monotonic seconds) for a meaningful per-
@@ -171,12 +150,21 @@ def window_steal_ratio(
     return (s1 - s0) / ((m1 - m0) * hz * ncpu)
 
 
+def steal_window(s0: dict, s1: dict) -> dict:
+    """The timing window between two ``_load_sample()`` records, in the
+    shape ``window_steal_ratio`` reads, plus the closing 1-min load."""
+    return {
+        "mono0": s0["mono"], "steal0": s0["steal_jiffies"],
+        "mono1": s1["mono"], "steal1": s1["steal_jiffies"],
+        "load1": s1["loadavg"][0],
+    }
+
+
 def window_clean(w: dict, hz: float, ncpu: int) -> bool:
     """True iff the window's steal was MEASURED at or under the gate.
     An unmeasurable window (ratio -1.0) is NOT clean — `ratio <= gate`
     alone would let an unknown drain displace a certified one and trip
-    the best-of early break (ADVICE r15); mirrors splice_dirty's
-    in-loop check."""
+    the best-of early break; mirrors splice_dirty's in-loop check."""
     ratio = window_steal_ratio(w, hz, ncpu)
     return 0 <= ratio <= PER_QUERY_STEAL_GATE
 
@@ -189,8 +177,8 @@ def splice_verdict(
     tick_hz: float | None = None,
     timings: dict[str, float] | None = None,
 ) -> dict:
-    """Per-query-certified contamination verdict (VERDICT r14 item 1)
-    — pure (no /proc reads) so tests can replay recorded windows.
+    """Per-query-certified contamination verdict — pure (no /proc
+    reads) so tests can replay recorded windows.
 
     ``query_windows`` holds each reported number's FINAL timing window
     (post-splice: a re-timed query carries its clean re-run's window,
@@ -199,18 +187,17 @@ def splice_verdict(
     every MEASURED timing window's steal stayed at or under
     PER_QUERY_STEAL_GATE. Windows too short to measure (ratio -1.0)
     are NOT certified — they are surfaced in ``unknown`` and callers
-    must not read all-clean from a capture with unknowns (ADVICE r15).
+    must not read all-clean from a capture with unknowns.
     When ``timings`` is given, queries that ERRORED (timing < 0,
     reported as -1.0 / no number) are excluded from ``dirty`` — they
     contribute no reported number to certify and can never be re-timed
     clean, so a steal burst during a failing query must not
-    permanently flip the headline flag (ADVICE r15); their ratios stay
+    permanently flip the headline flag; their ratios stay
     in ``window_ratios`` for transparency. This is deliberately
     stricter per-number and looser per-session than
     contamination_verdict(): steal that lands BETWEEN timing windows
     (warm-ups, sampling gaps) inflates the session average without
-    touching any reported number, which is exactly the
-    false-contamination shape that ate the r13 and r14 bench legs."""
+    touching any reported number."""
     hz = tick_hz if tick_hz is not None else _tick_hz()
     ratios = {
         n: round(r, 4) if (r := window_steal_ratio(w, hz, ncpu)) >= 0 else -1.0
@@ -259,7 +246,7 @@ def wait_clean_window(
 ) -> dict:
     """Block until one ``probe_sec`` steal window reads at or under
     ``gate`` (half the per-query gate — start with margin), or the
-    budget runs out. The r13/r14 steal band is bursty with idle gaps;
+    budget runs out. Steal bands are bursty with idle gaps;
     starting the sweep inside a gap is cheaper than re-timing half the
     queries after it. Returns a record for the artifact."""
     hz = _tick_hz()
@@ -272,11 +259,7 @@ def wait_clean_window(
         time.sleep(probe_sec)
         b = _load_sample()
         probes += 1
-        last = window_steal_ratio(
-            {"mono0": a["mono"], "steal0": a["steal_jiffies"],
-             "mono1": b["mono"], "steal1": b["steal_jiffies"]},
-            hz, ncpu,
-        )
+        last = window_steal_ratio(steal_window(a, b), hz, ncpu)
         waited = time.perf_counter() - t0
         if last < 0 or last <= gate or waited >= budget_sec:
             return {
@@ -347,9 +330,7 @@ def splice_dirty(
                 break
             s1 = sample_fn()
             w = {
-                "mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-                "mono1": s1["mono"], "steal1": s1["steal_jiffies"],
-                "load1": s1["loadavg"][0],
+                **steal_window(s0, s1),
                 "retries": query_windows[name]["retries"] + 1,
             }
             query_windows[name]["retries"] = w["retries"]
@@ -378,10 +359,8 @@ COMPACT_LINE_BUDGET = 1800
 
 def _fit_compact(compact: dict) -> dict:
     """Guarantee the compact stdout line fits COMPACT_LINE_BUDGET by
-    shedding optional blocks in a FIXED order (r15 regression: the full
-    load summary + isolated maps pushed the line to 2349 chars and the
-    driver capture truncated → "parsed": null → the round lost its
-    trend row). Sheds least-essential first; the metric/value/queries/
+    shedding optional blocks in a FIXED order, least-essential first,
+    so a captured stdout tail always parses. The metric/value/queries/
     certified/loadavg core is never dropped. A "trimmed" list records
     what was shed so a reader knows to open BENCH_FULL.json."""
     def _size() -> int:
@@ -421,10 +400,8 @@ def _fit_compact(compact: dict) -> dict:
         if _size() <= COMPACT_LINE_BUDGET:
             break
     if _size() > COMPACT_LINE_BUDGET:
-        # Last-resort shed (ADVICE r16): the six steps can exhaust
-        # without fitting (e.g. many long dirty-query names in
-        # certified.dirty) and the docstring's guarantee — the r15
-        # 'parsed: null' truncation fix — must hold regardless. Trim
+        # Last-resort shed: the six steps can exhaust without fitting
+        # (e.g. many long dirty-query names in certified.dirty). Trim
         # queries to the flagship alone and cap the dirty list; if
         # even that overflows, say so on stderr so the oversize is
         # attributable instead of silently reproducing the bug.
@@ -434,9 +411,8 @@ def _fit_compact(compact: dict) -> dict:
         )
         cert = compact.get("certified")
         if isinstance(cert, dict) and isinstance(cert.get("dirty"), list):
-            # The production caller pre-caps the list at 5 names, so a
-            # count cap alone was dead code there (ADVICE r17): the
-            # REACHABLE overflow shape is 5 *long* names — truncate
+            # The production caller pre-caps the list at 5 names, so
+            # the reachable overflow shape is 5 *long* names — truncate
             # each name too. The count cap stays for direct callers.
             dirty = cert["dirty"]
             if len(dirty) > 5:
@@ -466,7 +442,7 @@ def contamination_verdict(
 ) -> dict:
     """Cause-coded contamination verdict over a capture's load/steal
     samples — pure (no /proc reads) so tests can replay recorded bands
-    against it (VERDICT r13 item 2).
+    against it.
 
     Cause codes and why each threshold sits where it does:
 
@@ -476,13 +452,10 @@ def contamination_verdict(
                        32-CPU box load 2 is ~6% busy, which is noise,
                        so the threshold scales with the machine.
       steal          — session-average hypervisor steal above 1% of
-                       machine cycles. History: the original 0.05
-                       threshold was proven too loose in r13 — matrix
-                       captures at steal 0.012-0.032 self-certified
-                       clean while reading ~32-40% slower than the
-                       SAME engine code idle (82.31 s at 0.0003,
-                       BENCH_IDLE_r13.json, vs 109-121 s in-band).
-                       Steal stalls are bursty and the hypervisor's
+                       machine cycles. Captures at steal 0.012-0.032
+                       read ~32-40% slower than the same code idle
+                       (82.31 s at 0.0003, BENCH_IDLE_r13.json, vs
+                       109-121 s in-band). Steal stalls are bursty and the hypervisor's
                        co-tenant pressure throttles more than the
                        steal counter shows, so the ratio is a
                        DETECTOR, not a proportional inflation
@@ -555,14 +528,22 @@ def contamination_verdict(
     }
 
 
-def _session(cpus: str, extra_conf: dict | None = None, app: str = "iotstream-bench"):
+def session_cpus() -> str:
+    """Task slots and shuffle width of every ``_session``:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on. The one place the variable is read."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _session(cpus: str | None = None, extra_conf: dict | None = None, app: str = "iotstream-bench"):
     """The record session: ``local[cpus]`` with ``cpus`` shuffle
-    partitions, AQE, shuffled-hash joins allowed, Arrow transfers and a
-    UTC session. ``extra_conf`` layers per-experiment overrides on this
-    exact builder (tools/ab_bench.py), so an A/B compares against the
-    record baseline."""
+    partitions (default ``session_cpus()``), AQE, shuffled-hash joins
+    allowed, Arrow transfers and a UTC session. ``extra_conf`` layers a
+    caller's overrides on this exact builder, so every tool and test
+    runs, and every A/B compares against, the record session."""
     from pyspark.sql import SparkSession
 
+    cpus = cpus or session_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
@@ -588,9 +569,15 @@ def _session(cpus: str, extra_conf: dict | None = None, app: str = "iotstream-be
     return spark
 
 
-def _time_one(spark, fn, sf_dir: str) -> float:
-    """Warm-up run, forced GC, then min-of-2 — the hygiene every
-    timing in this harness shares."""
+def measure(spark, fn, sf_dir: str) -> tuple[float, dict]:
+    """Time ``fn(spark, sf_dir)``: one untimed warm-up run (it compiles
+    the generated code for the exact plan, which AQE picks per data
+    size), a forced GC (so earlier queries' garbage is not collected
+    inside this one's timed runs), then the min of 2 runs into the noop
+    sink (full computation, no driver-side collect). Returns the
+    seconds and the steal window (``steal_window``) sampled around the
+    whole call."""
+    s0 = _load_sample()
     try:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     except Exception:  # noqa: BLE001 — warm-up best-effort
@@ -602,16 +589,76 @@ def _time_one(spark, fn, sf_dir: str) -> float:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-    return best
+    return best, steal_window(s0, _load_sample())
+
+
+def ingest(spark, sf_dir: str) -> tuple[int, float, dict]:
+    """Time the full streaming topology over ``sf_dir``'s events: the
+    sensorized events as JSON payload text files, read as a stream,
+    parsed and written to the raw archive and the clean sink by
+    ``run_sensor_pipeline_stream`` (availableNow). One untimed warm-up
+    drain, then a forced GC before each timed drain; after two drains,
+    up to two more wait for a clean steal gap until one is clean.
+    Returns (events, seconds, window) of the best drain: a clean drain
+    beats a dirty one, and among equals the faster wins."""
+    import shutil
+    import tempfile
+
+    from iotstream.config import EngineConfig
+    from iotstream.operators.parse import to_sensor_json
+    from iotstream.pipeline import run_sensor_pipeline_stream
+    from iotstream.schemas import load_table, use_utc
+    from iotstream.sensorize import sensorize
+
+    hz, ncpu = _tick_hz(), _proc_cpus()
+    use_utc(spark)
+    events = sensorize(load_table(spark, sf_dir, "events"))
+    n = events.count()
+    tmp = tempfile.mkdtemp(prefix="iotstream-ingest-")
+    try:
+        payloads = f"{tmp}/payloads"
+        to_sensor_json(events).write.mode("overwrite").text(payloads)
+
+        def drain(tag: str) -> float:
+            conf = EngineConfig(
+                raw_archive_path=f"{tmp}/{tag}/raw",
+                clean_path=f"{tmp}/{tag}/clean",
+            )
+            stream = spark.readStream.schema("value string").text(payloads)
+            t0 = time.perf_counter()
+            run_sensor_pipeline_stream(spark, stream, conf, f"{tmp}/{tag}/ckpt")
+            return time.perf_counter() - t0
+
+        drain("w")
+        best, best_w = None, None
+        for i, tag in enumerate(("a", "b", "c", "d")):
+            best_clean = best_w is not None and window_clean(best_w, hz, ncpu)
+            if i >= 2:
+                if best_clean:
+                    break
+                wait_clean_window(60.0, probe_sec=2.0)
+            spark._jvm.System.gc()
+            s0 = _load_sample()
+            dt = drain(tag)
+            w = {**steal_window(s0, _load_sample()), "retries": max(0, i - 1)}
+            clean = window_clean(w, hz, ncpu)
+            if (
+                best is None
+                or (clean and not best_clean)
+                or (clean == best_clean and dt < best)
+            ):
+                best, best_w = dt, w
+        return n, best, best_w
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def one_query(name: str) -> int:
     """Subprocess entry: time ONE query in a pristine JVM and print a
-    single JSON line — the isolated series' measurement unit. The line
-    carries the timing window's own steal ratio so the isolated series
-    is certifiable per number like the session sweep (r15)."""
+    single JSON line, the isolated series' unit, carrying the timing
+    window's own steal ratio so each isolated number is certifiable."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = _session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = _session()
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
 
@@ -620,14 +667,8 @@ def one_query(name: str) -> int:
         print(json.dumps({"query": name, "error": "unknown"}))
         return 2
     try:
-        s0 = _load_sample()
-        sec = _time_one(spark, qs[name], sf_dir)
-        s1 = _load_sample()
-        ratio = window_steal_ratio(
-            {"mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-             "mono1": s1["mono"], "steal1": s1["steal_jiffies"]},
-            _tick_hz(), _proc_cpus(),
-        )
+        sec, w = measure(spark, qs[name], sf_dir)
+        ratio = window_steal_ratio(w, _tick_hz(), _proc_cpus())
         print(json.dumps({
             "query": name,
             "sec": round(sec, 3),
@@ -651,13 +692,10 @@ def isolated_series(
     Returns (timings, per-query window steal ratios) — the second map
     lets a reader certify each isolated number like the session sweep.
     A DIRTY isolated window gets ONE retry into a clean gap (budget
-    permitting), mirroring the session sweep's splice: the r15 idle
-    twin recorded dedup_report at 11.99 s isolated vs 2.13 s
-    in-session — same code, a steal burst landing on the one
-    subprocess — and without the per-run ratio (not recorded pre-r15)
-    the number read as a 4× plan regression (VERDICT r15 item 5). The
-    cleaner of the two runs is kept; a still-dirty number stays
-    reported with its ratio, never hidden."""
+    permitting), mirroring the session sweep's splice: one steal burst
+    on one subprocess otherwise reads as a plan regression. The cleaner
+    of the two runs is kept; a still-dirty number stays reported with
+    its ratio, never hidden."""
     import subprocess
 
     def _run_one(name: str, remaining: float) -> dict:
@@ -699,7 +737,7 @@ def isolated_series(
                     file=sys.stderr,
                 )
                 wait_clean_window(min(60.0, remaining), probe_sec=2.0)
-                # The retry gets its OWN failure domain (ADVICE r16):
+                # The retry gets its OWN failure domain:
                 # a TimeoutExpired/JSON error on the retry must fall
                 # back to the first run's valid (dirty) record, never
                 # discard it — 'a still-dirty number stays reported'.
@@ -716,10 +754,9 @@ def isolated_series(
                     retry = {}
                 # Keep the certified-cleaner run: a clean retry
                 # replaces; a dirty retry only replaces if faster AND
-                # its window steal was MEASURED (ADVICE r16: an
-                # unmeasurable -1.0 retry silently downgraded a named
-                # dirty record to 'unknown' — min-of-N only holds
-                # under equal dirt).
+                # its window steal was MEASURED (an unmeasurable -1.0
+                # retry would downgrade a named dirty record to
+                # 'unknown'; min-of-N only holds under equal dirt).
                 r2 = retry.get("steal_ratio", -1.0)
                 if "sec" in retry and (
                     0 <= r2 <= PER_QUERY_STEAL_GATE
@@ -737,14 +774,12 @@ def isolated_series(
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = session_cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # --wait-clean (VERDICT r14 item 1): delay the sweep start into a
-    # steal-free gap instead of launching into the band and re-timing
-    # half the queries afterwards. Opt-in (flag or env) so ad-hoc runs
-    # stay instant; the matrix bench leg passes the flag.
+    # Opt-in (flag or env) so ad-hoc runs start at once: delay the sweep
+    # start into a steal-free gap instead of re-timing afterwards.
     wait_info: dict | None = None
     if "--wait-clean" in sys.argv or os.environ.get(
         "SPARK_GRAFT_WAIT_CLEAN"
@@ -758,13 +793,10 @@ def main() -> int:
                 file=sys.stderr,
             )
 
-    # Load self-diagnosis (VERDICT r8 item 3): the r8 driver capture
-    # read 116.6 s vs an 86.4 s idle re-run, and nothing in the
-    # artifact could tell a reader the machine was busy — a full judge
-    # re-run was burned proving it. The PRE-SESSION loadavg is the
-    # clean external-load signal (sampled before Spark spins up its 32
-    # threads); per-query samples are confounded by the bench's own
-    # work but still localize WHEN contamination arrived.
+    # The pre-session loadavg is the clean external-load signal (sampled
+    # before Spark starts its own threads); per-query samples are
+    # confounded by the bench's own work but still localize WHEN
+    # contamination arrived.
     load_start = _load_sample()
     t_session0 = time.perf_counter()
     per_query_load: dict[str, dict] = {}
@@ -774,21 +806,17 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
 
-    # The bench times DECLARED order, not the rotated grading order
-    # (ADVICE r9): declaration order encodes the cost layout (cheap
-    # batch queries lead so slot 0 pays JVM warmup; streaming/stateful
-    # fixed costs sit last), and rotation would scramble per-query
-    # timings across rounds as the window moves. Rotation exists only
-    # for the driver's grading gate.
+    # DECLARED order, not the rotated grading order: declaration order
+    # encodes the cost layout (cheap batch queries lead, streaming fixed
+    # costs sit last), and rotation would move per-query timings around
+    # as the grading window moves.
     bench_queries = getattr(entrymod, "_declared_queries", entrymod.queries)()
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
-    # One throwaway REAL-query warm-up before the loop: the synthetic
-    # warmup above doesn't touch parquet scans, Arrow, or the Python
-    # worker pool, so whichever query ran first absorbed their
-    # first-touch cost (r5: slot-0 dedup_report timed 3.32 s driver vs
-    # 2.4 s isolated). A cheap declared query soaks that up untimed,
-    # making per-query numbers position-independent.
+    # One untimed real query soaks up the first touch of parquet scans,
+    # Arrow and the Python worker pool, which the synthetic warm-up
+    # above does not reach, so per-query numbers do not depend on
+    # position.
     try:
         next(iter(bench_queries.values()))(spark, sf_dir).write.format(
             "noop"
@@ -796,74 +824,44 @@ def main() -> int:
     except Exception:  # noqa: BLE001 — warm-up is best-effort
         pass
 
-    # Per-query warm-up at the SAME scale factor: one untimed run
-    # compiles the generated code (Janino/JIT) for the EXACT plan the
-    # timed run executes — AQE picks different physical plans per data
-    # size, so warming at a smaller SF leaves the real plan's codegen
-    # compile (~seconds for the 64-aggregate simhash) inside the timed
-    # window. The reported number is steady-state throughput, which is
-    # what amortizes at production scale.
-    # Reported time = min of 2 measured runs after the warm-up: a 45-
-    # query session has GC/scheduling noise of ±1-2 s per query; min-of-2
-    # keeps round-over-round comparisons meaningful.
-    # _time_one forces a collection between the warm-up and the timed
-    # runs: a 128-query session accumulates heap debt, and a major GC
-    # landing inside someone's timed window charges the PREVIOUS
-    # queries' garbage to this one (A/B: the same query times 0.9 s
-    # early-session and 6.8 s late-session without this, flat with
-    # it). The reported number is the query's own steady-state cost.
-    # Each query's reported number carries its own TIMING WINDOW
-    # (pre-sample → post-sample around _time_one) so it can be
-    # individually steal-certified; dirty windows are re-timed after
-    # the sweep and the clean capture spliced in (VERDICT r14 item 1 —
-    # the band ate two rounds' bench legs; a session-average verdict
-    # cannot say WHICH numbers a burst hit).
+    # Each reported number carries its own steal window (``measure``) so
+    # it is certified on its own; a failed query reports -1.0 and no
+    # window.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     query_windows: dict[str, dict] = {}
     for name, fn in bench_queries.items():
-        s0 = _load_sample()
         try:
-            timings[name] = round(_time_one(spark, fn, sf_dir), 3)
+            sec, w = measure(spark, fn, sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {type(e).__name__}: {e}", file=sys.stderr)
             timings[name] = -1.0
             errors[name] = f"{type(e).__name__}: {e}"[:300]
-        s = _load_sample()
+            continue
+        timings[name] = round(sec, 3)
+        query_windows[name] = {**w, "retries": 0}
         per_query_load[name] = {
-            "ts": s["ts"],
-            "mono": s["mono"],
-            "load1": s["loadavg"][0],
-            "steal_jiffies": s["steal_jiffies"],
-        }
-        query_windows[name] = {
-            "mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-            "mono1": s["mono"], "steal1": s["steal_jiffies"],
-            "load1": s["loadavg"][0], "retries": 0,
+            "mono": w["mono1"], "load1": w["load1"], "steal_jiffies": w["steal1"],
         }
 
-    # Post-sweep splice pass: re-time every query whose window read
-    # dirty, waiting for a clean gap between attempts (the band is
-    # bursty). Budget-bounded; a query that never gets a clean window
-    # keeps its last measurement and stays on the dirty list — the
-    # verdict reports it, never hides it.
+    # Re-time every query whose window read dirty, waiting for a clean
+    # gap between attempts. Budget-bounded; a query that never gets a
+    # clean window keeps its number and stays on the dirty list.
     hz = _tick_hz()
     ncpu = _proc_cpus()
     requeried = splice_dirty(
         timings,
         query_windows,
-        lambda name: _time_one(spark, bench_queries[name], sf_dir),
+        lambda name: measure(spark, bench_queries[name], sf_dir)[0],
         hz,
         ncpu,
         budget_sec=float(os.environ.get("SPARK_GRAFT_RETIME_SEC", "600")),
     )
 
     ok = {k: v for k, v in timings.items() if v >= 0}
-    # Mid-point sample: end of the QUERY sweep. The final sample (and
-    # the session steal/contamination verdict) is taken only after the
-    # isolated series and the ingest drain below — those are exactly
-    # the phases a mid-run steal burst would otherwise hit UNRECORDED
-    # while "end" read clean.
+    # End of the QUERY sweep. The final sample (and the session verdict)
+    # comes after the isolated series and the ingest drain, so steal
+    # during those phases is recorded too.
     load_after_queries = _load_sample()
     out = {
         "metric": "total_runtime_declared_queries",
@@ -875,125 +873,31 @@ def main() -> int:
     if errors:
         out["errors"] = errors
 
-    # Isolated series (VERDICT r6 item 6): the 10 slowest in-session
-    # queries re-timed in pristine single-query JVMs — the artifact
-    # that separates session noise from real plan regressions.
     if os.environ.get("SPARK_GRAFT_NO_ISOLATED") != "1":
         out["isolated"], out["isolated_steal"] = isolated_series(
             sorted(ok, key=ok.get, reverse=True)[:10]
         )
 
-    # End-to-end streaming ingest throughput: the reference's full
-    # topology (JSON payload stream → parse → pre-filter raw archive +
-    # post-filter clean sink) drained as a real micro-batch stream.
-    # The reference's generator self-reports 0.5 msg/s/thread
-    # (BASELINE.md); this records the engine-side number at bench scale.
     try:
-        import shutil
-        import tempfile
-
-        from iotstream.config import EngineConfig
-        from iotstream.operators.parse import to_sensor_json
-        from iotstream.pipeline import run_sensor_pipeline_stream
-        from iotstream.schemas import load_table, use_utc
-        from iotstream.sensorize import sensorize
-
-        use_utc(spark)
-        events = sensorize(load_table(spark, sf_dir, "events"))
-        n = events.count()
-        tmp = tempfile.mkdtemp(prefix="iotstream-bench-ingest-")
-        payloads = f"{tmp}/payloads"
-        to_sensor_json(events).write.mode("overwrite").text(payloads)
-
-        def drain(tag: str) -> float:
-            conf = EngineConfig(
-                raw_archive_path=f"{tmp}/{tag}/raw",
-                clean_path=f"{tmp}/{tag}/clean",
-            )
-            stream = spark.readStream.schema("value string").text(payloads)
-            t0 = time.perf_counter()
-            run_sensor_pipeline_stream(spark, stream, conf, f"{tmp}/{tag}/ckpt")
-            return time.perf_counter() - t0
-
-        # The drain is GC-sensitive: without an explicit collection a
-        # mid-addBatch GC pause lands on roughly every other run (A/B:
-        # alternating 22k/56k ev/s on an idle machine; forced GC +
-        # warm-up converges to a stable ~58k). One untimed warm-up
-        # drain, a forced collection, then best-of-2 reports
-        # steady-state throughput — the number that amortizes at
-        # production scale, same rationale as the query min-of-2.
-        # Each timed drain carries its own steal window; if neither of
-        # the first two is clean, up to two more attempts wait for a
-        # clean gap — the reported number is the best CLEAN drain,
-        # falling back to best-of-all (flagged dirty) only when the
-        # band never lifts.
-        drain("w")
-        best = None
-        best_w: dict | None = None
-        for i, tag in enumerate(("a", "b", "c", "d")):
-            if i >= 2:
-                if best_w is not None and window_clean(best_w, hz, ncpu):
-                    break
-                wait_clean_window(60.0, probe_sec=2.0)
-            spark._jvm.System.gc()
-            s0 = _load_sample()
-            dt = drain(tag)
-            s1 = _load_sample()
-            w = {
-                "mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-                "mono1": s1["mono"], "steal1": s1["steal_jiffies"],
-                "load1": s1["loadavg"][0], "retries": max(0, i - 1),
-            }
-            clean = window_clean(w, hz, ncpu)
-            best_clean = best_w is not None and window_clean(
-                best_w, hz, ncpu
-            )
-            # A clean drain always beats a dirty one; among equals,
-            # faster wins (min-of-N).
-            if (
-                best is None
-                or (clean and not best_clean)
-                or (clean == best_clean and dt < best)
-            ):
-                best, best_w = dt, w
-        out["streaming_ingest_events_per_sec"] = round(n / best)
-        if best_w is not None:
-            query_windows["__ingest__"] = best_w
-        shutil.rmtree(tmp, ignore_errors=True)
+        n, sec, w = ingest(spark, sf_dir)
+        out["streaming_ingest_events_per_sec"] = round(n / sec)
+        query_windows["__ingest__"] = w
     except Exception as e:  # noqa: BLE001
         print(f"bench ingest error: {type(e).__name__}: {e}", file=sys.stderr)
 
-    # FINAL load/steal sample — after the isolated series and ingest
-    # drain, so the self-diagnosis covers the WHOLE artifact, not just
-    # the query sweep.
     load_end = _load_sample()
     wall_sec = time.perf_counter() - t_session0
-    # Steal as a fraction of the machine's total cycles over the
-    # session (the /proc/stat cpu line aggregates all CPUs at ~100 Hz
-    # each): loadavg is BLIND to hypervisor steal — the measured cause
-    # of the 2× spread on sustained all-core runs (SCALE_PROBE_r9.json
-    # records 53-123 s for the same x256 kernel across sessions) — so
-    # the contamination verdict must look at both signals.
-    ncpu = _proc_cpus()
-    # The bench's own worker count comes from SPARK_GRAFT_CPUS (local[N]),
-    # not from the machine: on a box with fewer CPUs than N, the bench's
-    # own threads alone can push load1 past a machine-sized threshold and
-    # false-flag the verdict (ADVICE r10) — so the sweep threshold scales
-    # with whichever is larger, and both counts are recorded.
-    try:
-        bench_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        bench_threads = 32
-    # Two verdicts, one headline (VERDICT r14 item 1):
-    #   - contamination_verdict() — the SESSION detector (average +
-    #     burst over the whole artifact), kept raw for transparency
-    #     and for re-certifying historical captures;
-    #   - splice_verdict() — the PER-NUMBER certification: every
-    #     reported timing's own (post-splice) window must be clean.
-    # The headline `contaminated` flag is the splice verdict: steal
-    # landing between timing windows inflates the session average
-    # without touching any reported number — the exact false-positive
-    # shape that ate the r13/r14 bench legs.
+    # The sweep-load threshold scales with the larger of the bench's own
+    # thread count (local[N]) and the machine's CPUs: with N above the
+    # CPU count the bench's threads alone push load1 past a
+    # machine-sized threshold. Both counts are recorded.
+    bench_threads = int(cpus)
+    # Two verdicts, one headline: contamination_verdict() is the
+    # SESSION detector (average + burst over the whole artifact), kept
+    # raw; splice_verdict() certifies every reported number's own
+    # (post-splice) window and is the headline flag, because steal that
+    # lands between timing windows inflates the session average without
+    # touching any reported number.
     verdict = contamination_verdict(
         load_start, load_end, per_query_load, wall_sec, ncpu, bench_threads
     )
@@ -1060,17 +964,9 @@ def main() -> int:
     if wait_info is not None:
         out["load"]["wait_clean"] = wait_info
 
-    # The driver captures only the TAIL (~2000 chars) of stdout: a
-    # 127-entry "queries" map made every prior round's line unparseable
-    # ("parsed": null in BENCH_r1-r3), and the r15 line regressed the
-    # same way when the full load summary + isolated maps pushed it to
-    # 2349 chars ("parsed": null in BENCH_r15 — the round's trend row
-    # was lost). The complete per-query map is written to
-    # BENCH_FULL.json at the repo root; stdout carries ONE compact JSON
-    # line that is HARD-CAPPED below the capture window (see
-    # _fit_compact): "queries" trimmed to the flagship plus the slowest
-    # entries, the load story cut to the fields the trend/verdict read,
-    # and overflow shed in a fixed order with a "trimmed" marker.
+    # The complete record goes to BENCH_FULL.json at the repo root;
+    # stdout carries ONE compact line hard-capped by _fit_compact, since
+    # a reader of a captured stdout tail sees only its last ~2000 chars.
     try:
         repo_root = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(repo_root, "BENCH_FULL.json"), "w") as f:
@@ -1084,8 +980,7 @@ def main() -> int:
         head["flagship"] = timings["flagship"]
     # Stdout load story: ONLY the fields bench_trend/_capture_summary
     # and the verdict read. The full summary (per-query requeried map,
-    # thresholds, jiffy splits — 850+ chars) lives in BENCH_FULL.json;
-    # inlining it is what truncated the r15 driver capture.
+    # thresholds, jiffy splits — 850+ chars) lives in BENCH_FULL.json.
     load_compact = {
         "start": load_summary["start"],
         "max": load_summary["max"],
@@ -1109,7 +1004,7 @@ def main() -> int:
         "certified": {
             # all_clean requires every reported window MEASURED clean:
             # an unmeasurable window (ratio -1.0) is not a certificate,
-            # so unknowns block the flag (ADVICE r15) — surfaced as a
+            # so unknowns block the flag — surfaced as a
             # count so bench_trend's spliced-clean promotion can't ride
             # on unmeasured windows.
             "all_clean": not spliced["dirty"] and not spliced["unknown"],

@@ -9,8 +9,10 @@ outside the engine and reads Kafka here (SURVEY.md §2.1 S1). Every
 source yields the SAME schema — a raw string ``value`` column (plus
 transport metadata) — so the downstream pipeline is source-agnostic.
 
-All sources return streaming DataFrames except ``ParquetBatchSource``
-(batch; identical operator semantics, used by the correctness oracle).
+Each source is a dataclass whose ``load(spark)`` returns a streaming
+DataFrame: ``FileStreamSource`` (parquet directory, the test-time
+stand-in for the broker hop), ``KafkaJsonSource`` and
+``RateSensorSource`` (synthetic live stream).
 """
 
 from __future__ import annotations
@@ -24,27 +26,8 @@ from pyspark.sql.types import StructType
 from iotstream.config import EngineConfig
 
 
-class Source:
-    """A source produces a DataFrame with a string ``value`` column."""
-
-    def load(self, spark: SparkSession) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError
-
-
 @dataclass
-class ParquetBatchSource(Source):
-    """Batch stand-in: fixture parquet → JSON payload strings (what the
-    MQTT broker would deliver). Lets every streaming test assert against
-    the batch run of the same operators."""
-
-    path: str
-
-    def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
-
-
-@dataclass
-class FileStreamSource(Source):
+class FileStreamSource:
     """Micro-batch file stream over a parquet directory — the test-time
     replacement for the MQTT/Kafka hop. ``maxFilesPerTrigger`` paces
     micro-batches like the reference's 100 ms poll loop
@@ -67,7 +50,7 @@ class FileStreamSource(Source):
 
 
 @dataclass
-class KafkaJsonSource(Source):
+class KafkaJsonSource:
     """S2 — Kafka topic of JSON values (KSQL ``CREATE STREAM json``,
     README.md:76-83). Requires a reachable broker; config-only here
     (no broker in the test container). QoS-2-equivalent delivery comes
@@ -89,7 +72,7 @@ class KafkaJsonSource(Source):
 
 
 @dataclass
-class RateSensorSource(Source):
+class RateSensorSource:
     """S4 — live synthetic sensor stream: ``rate`` source + the
     generator expressions (iotstream.generator). Reproduces the
     reference generator's 1/9/90 quality mix (mqttgen.py:36-45) as a

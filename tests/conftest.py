@@ -1,20 +1,16 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import SparkSession
+
+import bench
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("iotstream-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    s = bench._session(
+        extra_conf={"spark.driver.memory": "2g"}, app="iotstream-tests"
     )
     yield s
     s.stop()

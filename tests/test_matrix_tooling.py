@@ -730,3 +730,66 @@ def test_stray_guard_flags_python_dash_m_invocations():
     assert _is_stray_cmd(["python3.11", "-m", "tools.run_matrix"])
     assert not _is_stray_cmd(["python", "-m", "pytest", "tests/"])
     assert not _is_stray_cmd(["python", "-m"])
+
+
+def test_spark_session_builder_only_in_bench_session():
+    """Every Spark session outside perfbench/ is bench._session: the
+    only `SparkSession.builder` in bench.py, tools/ and tests/ sits
+    inside that function, so the oracle gate, the sweeps, the tools
+    and the tests run the session bench.py and perfbench measure."""
+    import ast
+    import glob
+
+    sites = []
+    files = [os.path.join(REPO, "bench.py")]
+    files += glob.glob(os.path.join(REPO, "tools", "*.py"))
+    files += glob.glob(os.path.join(REPO, "tests", "*.py"))
+    for path in sorted(files):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        defs = [
+            n for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "SparkSession"
+            ):
+                owner = next(
+                    (d.name for d in defs
+                     if d.lineno <= node.lineno <= d.end_lineno),
+                    "<module>",
+                )
+                sites.append(f"{os.path.relpath(path, REPO)}:{owner}")
+    assert sites == ["bench.py:_session"], sites
+
+
+def test_session_cpus_reads_env_else_host_cpus(monkeypatch):
+    """SPARK_GRAFT_CPUS wins when set; unset (or empty) it falls back to
+    the CPUs this process may run on, never a fixed count."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert bench.session_cpus() == "7"
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert bench.session_cpus() == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert bench.session_cpus() == "3"
+
+
+def test_steal_window_feeds_window_steal_ratio():
+    """steal_window is the one window shape: two samples 10 s apart
+    with 320 stolen jiffies on 32 CPUs at 100 Hz read 1% steal, and
+    the closing sample's 1-min load rides along."""
+    import bench
+
+    s0 = {"mono": 100.0, "steal_jiffies": 1000, "loadavg": [0.5, 0, 0]}
+    s1 = {"mono": 110.0, "steal_jiffies": 1320, "loadavg": [2.5, 0, 0]}
+    w = bench.steal_window(s0, s1)
+    assert w == {"mono0": 100.0, "steal0": 1000, "mono1": 110.0,
+                 "steal1": 1320, "load1": 2.5}
+    assert abs(bench.window_steal_ratio(w, 100, 32) - 0.01) < 1e-12

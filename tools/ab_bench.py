@@ -1,16 +1,18 @@
-"""Quick A/B harness for optimization experiments (r17).
+"""A/B harness: times a subset of declared queries in the record session.
 
-Times a subset of declared queries with bench.py's exact hygiene
-(_session + _time_one: warm-up, forced GC, min-of-2, noop sink) but
-allows session-conf overrides, so a candidate config or code change can
-be measured on the affected queries in ~a minute instead of a full
-25-minute sweep. The full bench.py sweep remains the record; this tool
-only ranks candidates.
+Each query is timed by ``bench.measure`` (warm-up, forced GC, min of 2
+noop-sink runs) in ``bench._session`` with the ``--conf`` overrides
+layered on top, so a candidate config or code change is measured on
+the affected queries against the record baseline. The full
+``bench.py`` sweep remains the record; this tool only ranks candidates.
 
 Usage:
     python tools/ab_bench.py [--conf k=v ...] [--sf DIR] query [query ...]
 
-Prints one JSON line: {"queries": {name: sec}, "conf": {...}, "steal": r}.
+Prints one JSON line: {"queries": {name: sec}, "total": sec,
+"conf": {...}, "steal": r}. A query that is not declared reads -2.0, a
+query that fails -1.0; "steal" is the largest per-query window steal
+ratio (-1.0 when no window was measurable).
 """
 
 from __future__ import annotations
@@ -39,38 +41,32 @@ def main() -> int:
         else:
             names.append(a)
 
-    # Reuse bench._session so the A-side baseline is the RECORD
-    # session, r17 configs included (ADVICE r17) — overrides ride on
-    # top for the B side.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = bench._session(cpus, extra_conf=confs, app="iotstream-ab")
+    spark = bench._session(extra_conf=confs, app="iotstream-ab")
 
     import __spark_entry__ as entrymod
 
     qs = entrymod._declared_queries()
-    s0 = bench._load_sample()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     out: dict[str, float] = {}
+    steal = -1.0
+    hz, ncpu = bench._tick_hz(), bench._proc_cpus()
     for name in names:
         if name not in qs:
             out[name] = -2.0
             continue
         try:
-            out[name] = round(bench._time_one(spark, qs[name], sf_dir), 3)
+            sec, w = bench.measure(spark, qs[name], sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"ab error in {name}: {e}", file=sys.stderr)
             out[name] = -1.0
-    s1 = bench._load_sample()
-    ratio = bench.window_steal_ratio(
-        {"mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-         "mono1": s1["mono"], "steal1": s1["steal_jiffies"]},
-        bench._tick_hz(), bench._proc_cpus(),
-    )
+            continue
+        out[name] = round(sec, 3)
+        steal = max(steal, round(bench.window_steal_ratio(w, hz, ncpu), 4))
     print(json.dumps({
         "queries": out,
         "total": round(sum(v for v in out.values() if v > 0), 3),
         "conf": confs,
-        "steal": round(ratio, 4) if ratio >= 0 else -1.0,
+        "steal": steal,
     }))
     return 0
 

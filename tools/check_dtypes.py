@@ -24,6 +24,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+import bench  # noqa: E402
 from iotstream.schemas import FIXTURE_TABLES, table_path  # noqa: E402
 
 
@@ -41,16 +42,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dtype-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", tz)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = bench._session(app="dtype-check")
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")

@@ -1338,17 +1338,9 @@ def run_reach(rnd: int | None) -> int:
     hostile_dir = build_hostile()
     mutated = set(HOSTILE_MUTS) | {"documents", "embeddings"}
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("reach-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session(app="reach-audit")
 
     import __spark_entry__ as entrymod
 
@@ -1520,17 +1512,9 @@ def main() -> int:
         mode = "both"
     sizes = {"empty": [0], "one": [1], "both": [0, 1]}[mode]
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("degenerate-sweep")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session(app="degenerate-sweep")
 
     import __spark_entry__ as entrymod
 

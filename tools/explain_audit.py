@@ -133,19 +133,12 @@ def audit(name: str, text: str) -> list[str]:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    import bench
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session(app="explain-audit")
 
     sections, flagged = [], {}
     for name, fn in entrymod.queries().items():

@@ -1,8 +1,10 @@
 """Dump `.explain("formatted")` for named declared queries to files.
 
-Round-17 deliverable helper: writes plans/<tag>/<query>_<suffix>.txt
-with the FINAL AQE plan (plan_text executes the frame first), so
-before/after plan diffs are committable evidence.
+Writes plans/<tag>/<query>_<suffix>.txt with the FINAL AQE plan
+(plan_text executes the frame first) of each query in the record
+session (``bench._session``), so before/after plan diffs are
+committable evidence. Streaming-only queries (explain_audit.SKIP) are
+skipped.
 
 Usage:
     python tools/plan_dump.py --tag r17 --suffix before [--sf DIR] q [q ...]
@@ -38,18 +40,9 @@ def main() -> int:
     out_dir = os.path.join(here, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-dump")
-        .config("spark.sql.shuffle.partitions", 8)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session(app="plan-dump")
 
     import __spark_entry__ as entrymod
 

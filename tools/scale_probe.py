@@ -3,10 +3,10 @@
 The bench fixtures top out at sf0.1; plan reading says the scale paths
 are linear, this MEASURES it. The probe replicates the sf0.1 fixtures
 ×N into /tmp with per-replica key shifts chosen so the WORKLOAD scales
-honestly, times a query set at ×1 and ×N in bench.py's record session
-with its timing (``bench._session``, ``bench._time_one``: warm-up,
-forced GC, min-of-2, noop sink), and reports each query's scaling
-exponent  log(t_N / t_1) / log(N).  Exponent ≈ 1 is linear; values
+honestly, times a query set at ×1 and ×N in the record session
+(``bench._session``) with the record timing (``bench.measure``:
+warm-up, forced GC, min-of-2, noop sink), and reports each query's
+scaling exponent  log(t_N / t_1) / log(N).  Exponent ≈ 1 is linear; values
 well under 1 mean fixed overhead still dominates at this size; anything
 over the flag threshold (default 1.25) is called out as superlinear —
 the thing a 100 TB run cannot afford.
@@ -36,10 +36,15 @@ Usage:
                                 [--ingest] [--teardown]
 
 Scaled dirs are cached under CACHE_ROOT and reused across runs;
---teardown removes the cache afterwards. --ingest additionally
-drains the full streaming topology (bench.py's ingest measurement)
-at both sizes — fixed micro-batch overhead should amortize, so
-events/s is expected to RISE with corpus size.
+--teardown removes the cache afterwards. --ingest additionally times
+the full streaming topology with ``bench.ingest`` at both sizes and
+reports {events, seconds, events_per_sec} for each — fixed
+micro-batch overhead should amortize, so events/s is expected to RISE
+with corpus size.
+
+Prints a table on stdout, then one JSON line: {"mult", "t1", "tn",
+"exponents", "superlinear"[, "ingest"]}. Exits 1 when any query is
+superlinear or fails at either size, 2 on an unknown query name.
 """
 
 from __future__ import annotations
@@ -77,11 +82,9 @@ DEFAULT_QUERIES = [
     "similarity_topk",
     "similarity_topk_lsh",
     "similarity_topk_ivf",
-    # Since r7 the DECLARED entry grades through the auto-sizing path
-    # (lsh_auto_params), so probing it verbatim probes the production
-    # plan — the r6 probe had to hand-build an `_auto` twin because
-    # the graded query pinned the quadratic (4 bits, 64 tables)
-    # config. The `_auto` alias remains for trend comparability.
+    # the declared entry runs the auto-sizing path (lsh_auto_params),
+    # so probing it verbatim probes the production plan; the `_auto`
+    # alias remains for trend comparability
     "neardup_embedding_lsh",
     "sequence_pack",
     "rfm_segments",
@@ -114,8 +117,7 @@ def _fixture_fingerprint() -> str:
     """Identity of the SOURCE fixtures (name, size, mtime of every
     parquet under SRC_SF_DIR), hashed. Stored inside the _COMPLETE
     marker so a regenerated sf0.1 fixture invalidates cached replicas
-    instead of silently reusing stale ones (ADVICE r6 — the marker
-    used to key on multiplier/skew alone)."""
+    instead of silently reusing stale ones."""
     import hashlib
 
     parts = []
@@ -329,58 +331,11 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
     out: dict[str, float] = {}
     for name in names:
         try:
-            out[name] = round(bench._time_one(spark, qs[name], sf_dir), 3)
+            out[name] = round(bench.measure(spark, qs[name], sf_dir)[0], 3)
         except Exception as e:  # noqa: BLE001
             print(f"probe error in {name}: {type(e).__name__}: {e}", file=sys.stderr)
             out[name] = -1.0
     return out
-
-
-def time_ingest(spark, sf_dir: str) -> dict[str, float]:
-    """bench.py's end-to-end streaming drain (JSON payload stream →
-    parse → dual sink) against the scaled events table: fixed
-    micro-batch overhead should amortize, so events/s RISES with
-    corpus size. Returns {events, seconds, events_per_sec}."""
-    import shutil
-    import tempfile
-
-    from iotstream.config import EngineConfig
-    from iotstream.operators.parse import to_sensor_json
-    from iotstream.pipeline import run_sensor_pipeline_stream
-    from iotstream.schemas import load_table, use_utc
-    from iotstream.sensorize import sensorize
-
-    use_utc(spark)
-    events = sensorize(load_table(spark, sf_dir, "events"))
-    n = events.count()
-    tmp = tempfile.mkdtemp(prefix="iotstream-scale-ingest-")
-    try:
-        payloads = f"{tmp}/payloads"
-        to_sensor_json(events).write.mode("overwrite").text(payloads)
-
-        def drain(tag: str) -> float:
-            conf = EngineConfig(
-                raw_archive_path=f"{tmp}/{tag}/raw",
-                clean_path=f"{tmp}/{tag}/clean",
-            )
-            stream = spark.readStream.schema("value string").text(payloads)
-            t0 = time.perf_counter()
-            run_sensor_pipeline_stream(spark, stream, conf, f"{tmp}/{tag}/ckpt")
-            return time.perf_counter() - t0
-
-        drain("w")
-        best = None
-        for tag in ("a", "b"):
-            spark._jvm.System.gc()
-            dt = drain(tag)
-            best = dt if best is None else min(best, dt)
-        return {
-            "events": n,
-            "seconds": round(best, 3),
-            "events_per_sec": round(n / best),
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def main() -> int:
@@ -392,9 +347,7 @@ def main() -> int:
         action="store_true",
         help="probe EVERY __spark_entry__.queries() entry verbatim "
         "(declaration order) instead of --queries: the graded configs "
-        "are what scale traps hide in (VERDICT r6 — the probe only "
-        "caught the pinned-LSH quadratic because someone hand-built "
-        "the twin; this mode catches any graded entry automatically)",
+        "are what scale traps hide in",
     )
     ap.add_argument("--teardown", action="store_true")
     ap.add_argument("--ingest", action="store_true")
@@ -420,7 +373,6 @@ def main() -> int:
         return 2
 
     spark = bench._session(
-        os.environ.get("SPARK_GRAFT_CPUS", "32"),
         app=f"iotstream-scale-probe-x{args.mult}{'skew' if args.skew else ''}",
     )
     t0 = time.perf_counter()
@@ -432,10 +384,14 @@ def main() -> int:
     tn = time_queries(spark, dirn, names) if names else {}
     ingest = None
     if args.ingest:
-        ingest = {
-            "x1": time_ingest(spark, dir1),
-            f"x{args.mult}": time_ingest(spark, dirn),
-        }
+        ingest = {}
+        for tag, d in (("x1", dir1), (f"x{args.mult}", dirn)):
+            n, sec, _ = bench.ingest(spark, d)
+            ingest[tag] = {
+                "events": n,
+                "seconds": round(sec, 3),
+                "events_per_sec": round(n / sec),
+            }
         print("ingest:", json.dumps(ingest), file=sys.stderr)
 
     rows = []
