@@ -14,15 +14,17 @@ Contracts:
   ``session_cpus()``.
 - ``measure`` is the one query timing: a warm-up run, a forced GC, then
   the min of 2 noop-sink runs, with the hypervisor-steal window sampled
-  around the whole call. A number is certified clean when its own
-  window's steal is at or under PER_QUERY_STEAL_GATE; dirty numbers are
-  re-timed after the sweep inside clean gaps and the clean capture is
-  spliced in (``splice_dirty``). The headline ``contaminated`` flag is
-  ``splice_verdict``; the session detector ``contamination_verdict``
-  rides alongside.
-- ``ingest`` is the one streaming-ingest timing: the full topology
-  (JSON payload stream, parse, raw archive + clean sink) drained
-  availableNow; the best clean drain after one warm-up.
+  around the whole call. ``ingest`` times the full streaming topology
+  (JSON payload stream, parse, raw archive + clean sink, drained
+  availableNow) with the same warm-up / GC / min-of-2 code.
+- ``certified`` is the one clean-window policy, applied to every number
+  (each sweep query, the ingest drain, each ``--one`` query): a number
+  is clean when its own window's steal is at or under
+  PER_QUERY_STEAL_GATE; a dirty capture is re-taken after a wait for a
+  clean gap, at most MAX_CAPTURES captures within a re-time budget. The
+  first clean capture wins; if none is clean the first capture stays
+  and ``splice_verdict`` names it. That verdict is the headline
+  ``contaminated`` flag.
 - The ten slowest queries are re-timed in fresh single-query JVMs
   (``python bench.py --one <query>``), the "isolated" series: a rise in
   the session numbers alone is load, a rise in the isolated numbers is
@@ -33,15 +35,16 @@ Contracts:
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS   (default: the CPUs this process may run on),
      SPARK_DRIVER_MEM   (default 48g).
-``--wait-clean`` (or SPARK_GRAFT_WAIT_CLEAN=1) delays the sweep start
-into a steal-free gap, budget SPARK_GRAFT_WAIT_CLEAN_SEC (900 s);
-SPARK_GRAFT_RETIME_SEC (600 s) budgets the re-time pass;
-SPARK_GRAFT_NO_ISOLATED=1 skips the isolated series.
+``--wait-clean`` delays the session start, for at most WAIT_CLEAN_SEC,
+until one probe window reads steal-free and the 1-min load is at or
+under ``load_at_start_threshold()``.
 """
 
 from __future__ import annotations
 
 import datetime
+import functools
+import itertools
 import json
 import os
 import re
@@ -51,7 +54,7 @@ import time
 
 def _tick_hz() -> float:
     """Kernel jiffy rate for /proc/stat deltas. Hardcoding 100 breaks
-    the steal ratio (and the contamination verdict) on any kernel built
+    the steal ratio (and every clean-window verdict) on any kernel built
     with a non-default USER_HZ."""
     try:
         hz = os.sysconf("SC_CLK_TCK")
@@ -77,11 +80,10 @@ def _proc_cpus() -> int:
 
 
 def load_at_start_threshold(ncpu: int | None = None) -> float:
-    """The bench's load_at_start contamination threshold: pre-session
-    1-min loadavg above 25% of the machine (floor 2.0) means someone
-    ELSE was running before the bench added its own threads. Public so
-    tools/run_matrix.py's settle gate imports it instead of duplicating
-    the formula."""
+    """The bench's load_at_start threshold: pre-session 1-min loadavg
+    above 25% of the machine (floor 2.0) means someone ELSE was running
+    before the bench added its own threads. ``--wait-clean`` waits for
+    load at or under it; ``splice_verdict`` flags a start above it."""
     n = ncpu if ncpu is not None else _proc_cpus()
     return max(2.0, round(0.25 * n, 1))
 
@@ -120,14 +122,13 @@ def _load_sample() -> dict:
     }
 
 
-#: Per-query window steal gate: a query's number is CERTIFIED clean
-#: when the steal inside its own timing window (pre-sample →
-#: post-sample, spanning warm-up + GC + both timed runs) stays at or
-#: under this fraction of machine cycles. Matches the session
-#: threshold (0.01): 1-3% session steal was measured to go with 30-40%
-#: inflation (the counter under-reports co-tenant throttling), while
-#: idle noise sits at 0.0003-0.002, so the gate sits just above idle
-#: with ~5× margin both ways.
+#: Per-query window steal gate: a number is CERTIFIED clean when the
+#: steal inside its own timing window (pre-sample → post-sample,
+#: spanning warm-up + GC + both timed runs) stays at or under this
+#: fraction of machine cycles. 1-3% steal was measured to go with
+#: 30-40% inflation (the counter under-reports co-tenant throttling),
+#: while idle noise sits at 0.0003-0.002, so the gate sits just above
+#: idle with ~5× margin both ways.
 PER_QUERY_STEAL_GATE = 0.01
 
 #: Minimum window length (monotonic seconds) for a meaningful per-
@@ -162,9 +163,8 @@ def steal_window(s0: dict, s1: dict) -> dict:
 
 def window_clean(w: dict, hz: float, ncpu: int) -> bool:
     """True iff the window's steal was MEASURED at or under the gate.
-    An unmeasurable window (ratio -1.0) is NOT clean — `ratio <= gate`
-    alone would let an unknown drain displace a certified one and trip
-    the best-of early break; mirrors splice_dirty's in-loop check."""
+    An unmeasurable window (ratio -1.0) is NOT clean: `ratio <= gate`
+    alone would let an unknown re-capture displace a dirty first one."""
     ratio = window_steal_ratio(w, hz, ncpu)
     return 0 <= ratio <= PER_QUERY_STEAL_GATE
 
@@ -181,23 +181,19 @@ def splice_verdict(
     reads) so tests can replay recorded windows.
 
     ``query_windows`` holds each reported number's FINAL timing window
-    (post-splice: a re-timed query carries its clean re-run's window,
-    not the original dirty one). The capture is clean iff the machine
-    was idle at start, no co-tenant load arrived during the sweep, and
-    every MEASURED timing window's steal stayed at or under
-    PER_QUERY_STEAL_GATE. Windows too short to measure (ratio -1.0)
-    are NOT certified — they are surfaced in ``unknown`` and callers
-    must not read all-clean from a capture with unknowns.
+    (the window of the capture ``certified`` kept). The capture is
+    clean iff the machine was idle at start, no co-tenant load arrived
+    during the sweep, and every MEASURED timing window's steal stayed
+    at or under PER_QUERY_STEAL_GATE. Windows too short to measure
+    (ratio -1.0) are NOT certified — they are surfaced in ``unknown``
+    and callers must not read all-clean from a capture with unknowns.
     When ``timings`` is given, queries that ERRORED (timing < 0,
     reported as -1.0 / no number) are excluded from ``dirty`` — they
-    contribute no reported number to certify and can never be re-timed
-    clean, so a steal burst during a failing query must not
-    permanently flip the headline flag; their ratios stay
-    in ``window_ratios`` for transparency. This is deliberately
-    stricter per-number and looser per-session than
-    contamination_verdict(): steal that lands BETWEEN timing windows
-    (warm-ups, sampling gaps) inflates the session average without
-    touching any reported number."""
+    contribute no reported number to certify, so a steal burst during
+    a failing query must not permanently flip the headline flag; their
+    ratios stay in ``window_ratios`` for transparency. Steal that lands
+    BETWEEN timing windows (warm-ups, sampling gaps) touches no
+    reported number and does not dirty the capture."""
     hz = tick_hz if tick_hz is not None else _tick_hz()
     ratios = {
         n: round(r, 4) if (r := window_steal_ratio(w, hz, ncpu)) >= 0 else -1.0
@@ -243,112 +239,87 @@ def wait_clean_window(
     budget_sec: float,
     probe_sec: float = 3.0,
     gate: float = PER_QUERY_STEAL_GATE / 2,
+    max_load1: float = float("inf"),
 ) -> dict:
     """Block until one ``probe_sec`` steal window reads at or under
-    ``gate`` (half the per-query gate — start with margin), or the
-    budget runs out. Steal bands are bursty with idle gaps;
-    starting the sweep inside a gap is cheaper than re-timing half the
-    queries after it. Returns a record for the artifact."""
+    ``gate`` (half the per-query gate — start with margin) with the
+    1-min load at or under ``max_load1``, or the budget runs out. Steal
+    bands are bursty with idle gaps; starting a capture inside a gap is
+    cheaper than re-timing it. Returns a record for the artifact."""
     hz = _tick_hz()
     ncpu = _proc_cpus()
     t0 = time.perf_counter()
     probes = 0
-    last = -1.0
     while True:
         a = _load_sample()
         time.sleep(probe_sec)
         b = _load_sample()
         probes += 1
         last = window_steal_ratio(steal_window(a, b), hz, ncpu)
+        load1 = b["loadavg"][0]
+        clean = last <= gate and load1 <= max_load1
         waited = time.perf_counter() - t0
-        if last < 0 or last <= gate or waited >= budget_sec:
+        if clean or waited >= budget_sec:
             return {
                 "waited_sec": round(waited, 1),
                 "probes": probes,
                 "final_ratio": round(last, 4) if last >= 0 else -1.0,
+                "load1": load1,
                 "gate": gate,
-                "clean": bool(0 <= last <= gate) or last < 0,
+                "clean": clean,
             }
         print(
-            f"bench wait-clean: steal {last:.4f} > {gate}, waiting "
+            f"bench wait-clean: steal {last:.4f} (gate {gate}), load1 "
+            f"{load1} (max {max_load1}), waiting "
             f"({waited:.0f}/{budget_sec:.0f}s)",
             file=sys.stderr,
         )
 
 
-def splice_dirty(
-    timings: dict[str, float],
-    query_windows: dict[str, dict],
-    time_fn,
-    hz: float,
-    ncpu: int,
-    *,
-    budget_sec: float,
-    max_attempts: int = 3,
-    wait_fn=None,
-    sample_fn=None,
-    clock=None,
-) -> dict[str, dict]:
-    """Re-time every query whose timing window read dirty and splice
-    clean captures into ``timings``/``query_windows`` IN PLACE.
+#: At most this many captures of one number (the first plus retries).
+MAX_CAPTURES = 3
+#: Re-time budget of the query sweep, shared by all its queries (s).
+SWEEP_RETIME_SEC = 600.0
+#: Re-time budget of one ingest drain or one ``--one`` query (s).
+NUMBER_RETIME_SEC = 90.0
+#: How long ``--wait-clean`` may delay the session start (s).
+WAIT_CLEAN_SEC = 900.0
 
-    ``time_fn(name) -> sec`` runs one measured repeat of the named
-    query; wait/sample/clock hooks default to the real machinery and
-    exist so tests can drive the loop against scripted steal bands
-    (the same injectability pattern as the pure verdicts). Returns the
-    re-time record {name: {original_sec, attempts, certified}}.
-    A query that never gets a clean window inside the budget keeps its
-    ORIGINAL measurement (dirty re-run timings are never spliced — the
-    first number is the one whose window the verdict already saw) and
-    stays on splice_verdict's dirty list — reported, never hidden."""
-    wait_fn = wait_fn if wait_fn is not None else wait_clean_window
-    sample_fn = sample_fn if sample_fn is not None else _load_sample
-    clock = clock if clock is not None else time.perf_counter
-    requeried: dict[str, dict] = {}
-    t0 = clock()
-    dirty0 = sorted(
-        n for n, w in query_windows.items()
-        if timings.get(n, -1.0) >= 0
-        and window_steal_ratio(w, hz, ncpu) > PER_QUERY_STEAL_GATE
-    )
-    for name in dirty0:
-        rec = {"original_sec": timings[name], "attempts": 0,
-               "certified": False}
-        requeried[name] = rec
-        for _attempt in range(max_attempts):
-            remaining = budget_sec - (clock() - t0)
-            if remaining <= 0:
-                break
-            wait_fn(min(60.0, remaining), probe_sec=2.0)
-            s0 = sample_fn()
-            try:
-                sec = time_fn(name)
-            except Exception as e:  # noqa: BLE001 — keep original number
-                print(
-                    f"bench retime error in {name}: {e}", file=sys.stderr
-                )
-                break
-            s1 = sample_fn()
-            w = {
-                **steal_window(s0, s1),
-                "retries": query_windows[name]["retries"] + 1,
-            }
-            query_windows[name]["retries"] = w["retries"]
-            rec["attempts"] += 1
-            ratio = window_steal_ratio(w, hz, ncpu)
-            if 0 <= ratio <= PER_QUERY_STEAL_GATE:
-                timings[name] = round(sec, 3)
-                query_windows[name] = w
-                rec["certified"] = True
-                break
-    if dirty0:
-        print(
-            f"bench splice: re-timed {len(dirty0)} dirty-window queries, "
-            f"certified {sum(1 for r in requeried.values() if r['certified'])}"
-            f" in {clock() - t0:.0f}s",
-            file=sys.stderr,
-        )
-    return requeried
+
+def certified(time_once, budget: float) -> tuple[float, dict]:
+    """The one clean-window policy. ``time_once() -> (sec, window)``
+    takes one capture. While the latest capture's window reads dirty,
+    fewer than MAX_CAPTURES were taken and ``budget`` seconds of
+    re-timing are left, wait for a clean gap and capture again. The
+    first clean capture wins; if none is clean, or a retry raises, the
+    first capture stays (``splice_verdict`` reports it dirty). An
+    unmeasurable window is not retried: waiting cannot make it
+    measurable. The returned window carries ``attempts`` (captures
+    taken) and ``retry_sec`` (seconds spent after the first capture, so
+    callers can share one budget)."""
+    hz, ncpu = _tick_hz(), _proc_cpus()
+    first = time_once()
+    sec, w = first
+    t0 = time.perf_counter()
+    attempts = 1
+    while (
+        window_steal_ratio(w, hz, ncpu) > PER_QUERY_STEAL_GATE
+        and attempts < MAX_CAPTURES
+    ):
+        left = budget - (time.perf_counter() - t0)
+        if left <= 0:
+            break
+        wait_clean_window(min(60.0, left), probe_sec=2.0)
+        attempts += 1
+        try:
+            sec, w = time_once()
+        except Exception as e:  # noqa: BLE001 — keep the first capture
+            print(f"bench re-time error: {e}", file=sys.stderr)
+            break
+    if not window_clean(w, hz, ncpu):
+        sec, w = first
+    retry_sec = round(time.perf_counter() - t0, 1)
+    return sec, {**w, "attempts": attempts, "retry_sec": retry_sec}
 
 
 #: Hard cap for the ONE compact stdout line. The driver records only
@@ -387,9 +358,8 @@ def _fit_compact(compact: dict) -> dict:
         ("errors", lambda: _drop("errors")),
         ("queries>10", lambda: _trim_queries(10)),
         ("queries>5", lambda: _trim_queries(5)),
-        ("causes", lambda: (
-            compact.get("loadavg", {}).pop("contamination_causes", None),
-            compact.get("loadavg", {}).pop("session_causes", None),
+        ("causes", lambda: compact.get("loadavg", {}).pop(
+            "contamination_causes", None
         )),
     ]
     trimmed: list[str] = []
@@ -431,103 +401,6 @@ def _fit_compact(compact: dict) -> dict:
     return compact
 
 
-def contamination_verdict(
-    load_start: dict,
-    load_end: dict,
-    per_query_load: dict,
-    wall_sec: float,
-    ncpu: int,
-    bench_threads: int,
-    tick_hz: int | None = None,
-) -> dict:
-    """Cause-coded contamination verdict over a capture's load/steal
-    samples — pure (no /proc reads) so tests can replay recorded bands
-    against it.
-
-    Cause codes and why each threshold sits where it does:
-
-      load_at_start  — pre-session 1-min loadavg above 25% of the
-                       machine (floor 2.0): someone ELSE was running
-                       before the bench added its own threads. On a
-                       32-CPU box load 2 is ~6% busy, which is noise,
-                       so the threshold scales with the machine.
-      steal          — session-average hypervisor steal above 1% of
-                       machine cycles. Captures at steal 0.012-0.032
-                       read ~32-40% slower than the same code idle
-                       (82.31 s at 0.0003, BENCH_IDLE_r13.json, vs
-                       109-121 s in-band). Steal stalls are bursty and the hypervisor's
-                       co-tenant pressure throttles more than the
-                       steal counter shows, so the ratio is a
-                       DETECTOR, not a proportional inflation
-                       estimate: the threshold must sit just above
-                       idle noise (observed idle: 0.0003-0.002), not
-                       at "5% of cycles". 0.01 splits the measured
-                       bands with ~5× margin to idle and margin below
-                       the contaminated band's floor (0.012).
-      steal_burst    — any inter-sample window (start → per-query
-                       samples → end) with steal above 5% of that
-                       window's cycles: a localized burst a long
-                       session's average dilutes below the session
-                       threshold still invalidates the queries it
-                       landed on.
-      load_during_sweep — per-query 1-min loadavg peaking above 1.5×
-                       max(bench thread count, CPU count): the bench's
-                       own local[N] threads can't get there alone even
-                       when N exceeds the machine's CPUs, so a
-                       co-tenant arrived mid-run.
-    """
-    hz = tick_hz if tick_hz is not None else _tick_hz()
-    loads = [
-        v["load1"] for v in per_query_load.values() if v.get("load1", -1) >= 0
-    ]
-    s0 = load_start.get("steal_jiffies", -1)
-    s1 = load_end.get("steal_jiffies", -1)
-    steal_delta = s1 - s0 if s0 >= 0 and s1 >= 0 else -1
-    steal_ratio = (
-        round(steal_delta / (wall_sec * hz * ncpu), 4)
-        if steal_delta >= 0 and wall_sec > 0
-        else -1.0
-    )
-    # Windowed burst scan over the sample chain. Windows shorter than
-    # 0.2 s are skipped: at 100 Hz × ncpu the denominator is still
-    # hundreds of jiffies so the ratio is meaningful, but below that
-    # the /proc read skew dominates.
-    window_max = -1.0
-    chain = [load_start, *per_query_load.values(), load_end]
-    for a, b in zip(chain, chain[1:]):
-        ma, mb = a.get("mono", -1.0), b.get("mono", -1.0)
-        sa, sb = a.get("steal_jiffies", -1), b.get("steal_jiffies", -1)
-        if ma < 0 or mb < 0 or sa < 0 or sb < 0 or mb - ma < 0.2:
-            continue
-        window_max = max(window_max, (sb - sa) / ((mb - ma) * hz * ncpu))
-    if window_max >= 0:
-        window_max = round(window_max, 4)
-    thresholds = {
-        "load_at_start": load_at_start_threshold(ncpu),
-        "steal_ratio": 0.01,
-        "steal_ratio_window": 0.05,
-        "load_during_sweep": round(1.5 * max(bench_threads, ncpu), 1),
-    }
-    causes = []
-    if load_start["loadavg"][0] > thresholds["load_at_start"]:
-        causes.append("load_at_start")
-    if steal_ratio >= 0 and steal_ratio > thresholds["steal_ratio"]:
-        causes.append("steal")
-    if window_max >= 0 and window_max > thresholds["steal_ratio_window"]:
-        causes.append("steal_burst")
-    if loads and max(loads) > thresholds["load_during_sweep"]:
-        causes.append("load_during_sweep")
-    return {
-        "loads": loads,
-        "steal_delta": steal_delta,
-        "steal_ratio": steal_ratio,
-        "steal_ratio_window_max": window_max,
-        "thresholds": thresholds,
-        "causes": causes,
-        "tick_hz": hz,
-    }
-
-
 def session_cpus() -> str:
     """Task slots and shuffle width of every ``_session``:
     ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
@@ -557,6 +430,9 @@ def _session(cpus: str | None = None, extra_conf: dict | None = None, app: str =
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no [Stage N:> bars on stderr: they share lines with the
+        # verdicts the gates print when both streams are merged
+        .config("spark.ui.showConsoleProgress", "false")
         # local-mode driver == all executors: size the heap so the
         # interpreted-HOF queries (zip_with/aggregate allocate per row)
         # don't turn the tail of the 40-query session into a GC bench.
@@ -569,38 +445,44 @@ def _session(cpus: str | None = None, extra_conf: dict | None = None, app: str =
     return spark
 
 
-def measure(spark, fn, sf_dir: str) -> tuple[float, dict]:
-    """Time ``fn(spark, sf_dir)``: one untimed warm-up run (it compiles
-    the generated code for the exact plan, which AQE picks per data
-    size), a forced GC (so earlier queries' garbage is not collected
-    inside this one's timed runs), then the min of 2 runs into the noop
-    sink (full computation, no driver-side collect). Returns the
-    seconds and the steal window (``steal_window``) sampled around the
-    whole call."""
+def _timed(spark, run) -> tuple[float, dict]:
+    """One untimed warm-up ``run()`` (best effort), a forced GC (so
+    earlier work's garbage is not collected inside the timed runs),
+    then the min of 2 timed runs. Returns the seconds and the steal
+    window (``steal_window``) sampled around the whole call."""
     s0 = _load_sample()
     try:
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        run()
     except Exception:  # noqa: BLE001 — warm-up best-effort
         pass
     spark._jvm.System.gc()
     best = None
     for _ in range(2):
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        run()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
     return best, steal_window(s0, _load_sample())
+
+
+def measure(spark, fn, sf_dir: str) -> tuple[float, dict]:
+    """Time ``fn(spark, sf_dir)`` into the noop sink (full computation,
+    no driver-side collect) with ``_timed``; the warm-up run compiles
+    the generated code for the exact plan, which AQE picks per data
+    size. Returns (seconds, window)."""
+    return _timed(
+        spark,
+        lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
 
 
 def ingest(spark, sf_dir: str) -> tuple[int, float, dict]:
     """Time the full streaming topology over ``sf_dir``'s events: the
     sensorized events as JSON payload text files, read as a stream,
     parsed and written to the raw archive and the clean sink by
-    ``run_sensor_pipeline_stream`` (availableNow). One untimed warm-up
-    drain, then a forced GC before each timed drain; after two drains,
-    up to two more wait for a clean steal gap until one is clean.
-    Returns (events, seconds, window) of the best drain: a clean drain
-    beats a dirty one, and among equals the faster wins."""
+    ``run_sensor_pipeline_stream`` (availableNow), each drain into
+    fresh sink and checkpoint directories. The drain is timed by
+    ``_timed`` under ``certified``. Returns (events, seconds, window)."""
     import shutil
     import tempfile
 
@@ -610,7 +492,6 @@ def ingest(spark, sf_dir: str) -> tuple[int, float, dict]:
     from iotstream.schemas import load_table, use_utc
     from iotstream.sensorize import sensorize
 
-    hz, ncpu = _tick_hz(), _proc_cpus()
     use_utc(spark)
     events = sensorize(load_table(spark, sf_dir, "events"))
     n = events.count()
@@ -618,56 +499,43 @@ def ingest(spark, sf_dir: str) -> tuple[int, float, dict]:
     try:
         payloads = f"{tmp}/payloads"
         to_sensor_json(events).write.mode("overwrite").text(payloads)
+        drains = itertools.count()
 
-        def drain(tag: str) -> float:
+        def drain() -> None:
+            d = f"{tmp}/{next(drains)}"
             conf = EngineConfig(
-                raw_archive_path=f"{tmp}/{tag}/raw",
-                clean_path=f"{tmp}/{tag}/clean",
+                raw_archive_path=f"{d}/raw", clean_path=f"{d}/clean"
             )
             stream = spark.readStream.schema("value string").text(payloads)
-            t0 = time.perf_counter()
-            run_sensor_pipeline_stream(spark, stream, conf, f"{tmp}/{tag}/ckpt")
-            return time.perf_counter() - t0
+            run_sensor_pipeline_stream(spark, stream, conf, f"{d}/ckpt")
 
-        drain("w")
-        best, best_w = None, None
-        for i, tag in enumerate(("a", "b", "c", "d")):
-            best_clean = best_w is not None and window_clean(best_w, hz, ncpu)
-            if i >= 2:
-                if best_clean:
-                    break
-                wait_clean_window(60.0, probe_sec=2.0)
-            spark._jvm.System.gc()
-            s0 = _load_sample()
-            dt = drain(tag)
-            w = {**steal_window(s0, _load_sample()), "retries": max(0, i - 1)}
-            clean = window_clean(w, hz, ncpu)
-            if (
-                best is None
-                or (clean and not best_clean)
-                or (clean == best_clean and dt < best)
-            ):
-                best, best_w = dt, w
-        return n, best, best_w
+        sec, w = certified(
+            functools.partial(_timed, spark, drain), NUMBER_RETIME_SEC
+        )
+        return n, sec, w
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def one_query(name: str) -> int:
-    """Subprocess entry: time ONE query in a pristine JVM and print a
-    single JSON line, the isolated series' unit, carrying the timing
-    window's own steal ratio so each isolated number is certifiable."""
+    """Subprocess entry: time ONE query in a pristine JVM under
+    ``certified`` and print a single JSON line, the isolated series'
+    unit, carrying the kept window's own steal ratio so each isolated
+    number is certifiable."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _session()
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
 
-    qs = getattr(entrymod, "_declared_queries", entrymod.queries)()
+    qs = entrymod._declared_queries()
     if name not in qs:
         print(json.dumps({"query": name, "error": "unknown"}))
         return 2
     try:
-        sec, w = measure(spark, qs[name], sf_dir)
+        sec, w = certified(
+            functools.partial(measure, spark, qs[name], sf_dir),
+            NUMBER_RETIME_SEC,
+        )
         ratio = window_steal_ratio(w, _tick_hz(), _proc_cpus())
         print(json.dumps({
             "query": name,
@@ -683,33 +551,15 @@ def one_query(name: str) -> int:
 def isolated_series(
     names: list[str], budget_sec: float = 360.0
 ) -> tuple[dict[str, float], dict[str, float]]:
-    """Fresh-subprocess min-of-2 per query. ~20 s JVM+warm-up cost per
+    """One ``--one`` subprocess per query. ~20 s JVM+warm-up cost per
     entry, so callers pass a small set (the slowest in-session ones).
     ``budget_sec`` caps the WHOLE series — per-query timeouts alone
-    would let 10 pathological entries cost 30 min of driver bench
-    time; when the budget runs out the remaining queries are skipped
-    (the series is advisory, the session sweep is the record).
-    Returns (timings, per-query window steal ratios) — the second map
-    lets a reader certify each isolated number like the session sweep.
-    A DIRTY isolated window gets ONE retry into a clean gap (budget
-    permitting), mirroring the session sweep's splice: one steal burst
-    on one subprocess otherwise reads as a plan regression. The cleaner
-    of the two runs is kept; a still-dirty number stays reported with
-    its ratio, never hidden."""
+    would let 10 pathological entries cost 30 min of bench time; when
+    the budget runs out the remaining queries are skipped (the series
+    is advisory, the session sweep is the record). Returns (timings,
+    per-query window steal ratios) — the second map lets a reader
+    certify each isolated number like the session sweep."""
     import subprocess
-
-    def _run_one(name: str, remaining: float) -> dict:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", name],
-            capture_output=True,
-            text=True,
-            timeout=min(180, max(30, remaining)),
-        )
-        line = (
-            proc.stdout.strip().splitlines()[-1]
-            if proc.stdout.strip() else "{}"
-        )
-        return json.loads(line)
 
     out: dict[str, float] = {}
     steal: dict[str, float] = {}
@@ -723,50 +573,17 @@ def isolated_series(
             )
             break
         try:
-            rec = _run_one(name, remaining)
-            ratio = rec.get("steal_ratio", -1.0)
-            remaining = budget_sec - (time.perf_counter() - t_start)
-            if (
-                "sec" in rec
-                and ratio > PER_QUERY_STEAL_GATE
-                and remaining > 45
-            ):
-                print(
-                    f"bench isolated: {name} window steal {ratio:.4f} > "
-                    f"{PER_QUERY_STEAL_GATE}, retrying in a clean gap",
-                    file=sys.stderr,
-                )
-                wait_clean_window(min(60.0, remaining), probe_sec=2.0)
-                # The retry gets its OWN failure domain:
-                # a TimeoutExpired/JSON error on the retry must fall
-                # back to the first run's valid (dirty) record, never
-                # discard it — 'a still-dirty number stays reported'.
-                try:
-                    retry = _run_one(
-                        name, budget_sec - (time.perf_counter() - t_start)
-                    )
-                except Exception as e:  # noqa: BLE001 — advisory series
-                    print(
-                        f"bench isolated: retry failed for {name}: {e}; "
-                        "keeping first run",
-                        file=sys.stderr,
-                    )
-                    retry = {}
-                # Keep the certified-cleaner run: a clean retry
-                # replaces; a dirty retry only replaces if faster AND
-                # its window steal was MEASURED (an unmeasurable -1.0
-                # retry would downgrade a named dirty record to
-                # 'unknown'; min-of-N only holds under equal dirt).
-                r2 = retry.get("steal_ratio", -1.0)
-                if "sec" in retry and (
-                    0 <= r2 <= PER_QUERY_STEAL_GATE
-                    or (r2 >= 0 and retry["sec"] < rec["sec"])
-                ):
-                    rec = retry
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--one", name],
+                capture_output=True,
+                text=True,
+                timeout=min(180, max(30, remaining)),
+            )
+            lines = proc.stdout.strip().splitlines()
+            rec = json.loads(lines[-1]) if lines else {}
             if "sec" in rec:
                 out[name] = rec["sec"]
-                if "steal_ratio" in rec:
-                    steal[name] = rec["steal_ratio"]
+                steal[name] = rec["steal_ratio"]
         except Exception as e:  # noqa: BLE001 — isolated series is advisory
             print(f"bench isolated error in {name}: {e}", file=sys.stderr)
     return out, steal
@@ -777,29 +594,28 @@ def main() -> int:
     cpus = session_cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    hz, ncpu = _tick_hz(), _proc_cpus()
 
-    # Opt-in (flag or env) so ad-hoc runs start at once: delay the sweep
-    # start into a steal-free gap instead of re-timing afterwards.
+    # Opt-in so ad-hoc runs start at once: delay the session start into
+    # a steal-free gap on an unloaded machine. Load is judged only here:
+    # once the session runs, its own threads raise load1.
     wait_info: dict | None = None
-    if "--wait-clean" in sys.argv or os.environ.get(
-        "SPARK_GRAFT_WAIT_CLEAN"
-    ) == "1":
-        budget = float(os.environ.get("SPARK_GRAFT_WAIT_CLEAN_SEC", "900"))
-        wait_info = wait_clean_window(budget)
+    if "--wait-clean" in sys.argv:
+        wait_info = wait_clean_window(
+            WAIT_CLEAN_SEC, max_load1=load_at_start_threshold(ncpu)
+        )
         if not wait_info["clean"]:
             print(
                 f"bench wait-clean: budget spent, starting anyway "
-                f"(last steal {wait_info['final_ratio']})",
+                f"(last steal {wait_info['final_ratio']}, "
+                f"load1 {wait_info['load1']})",
                 file=sys.stderr,
             )
 
     # The pre-session loadavg is the clean external-load signal (sampled
-    # before Spark starts its own threads); per-query samples are
-    # confounded by the bench's own work but still localize WHEN
-    # contamination arrived.
+    # before Spark starts its own threads).
     load_start = _load_sample()
     t_session0 = time.perf_counter()
-    per_query_load: dict[str, dict] = {}
 
     spark = _session(cpus)
 
@@ -810,7 +626,7 @@ def main() -> int:
     # encodes the cost layout (cheap batch queries lead, streaming fixed
     # costs sit last), and rotation would move per-query timings around
     # as the grading window moves.
-    bench_queries = getattr(entrymod, "_declared_queries", entrymod.queries)()
+    bench_queries = entrymod._declared_queries()
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
     # One untimed real query soaks up the first touch of parquet scans,
@@ -824,44 +640,31 @@ def main() -> int:
     except Exception:  # noqa: BLE001 — warm-up is best-effort
         pass
 
-    # Each reported number carries its own steal window (``measure``) so
-    # it is certified on its own; a failed query reports -1.0 and no
-    # window.
+    # Each reported number is certified on its own window; the sweep's
+    # queries share one re-time budget. A failed query reports -1.0 and
+    # no window.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     query_windows: dict[str, dict] = {}
+    retime_left = SWEEP_RETIME_SEC
     for name, fn in bench_queries.items():
         try:
-            sec, w = measure(spark, fn, sf_dir)
+            sec, w = certified(
+                functools.partial(measure, spark, fn, sf_dir), retime_left
+            )
         except Exception as e:  # noqa: BLE001
             print(f"bench error in {name}: {type(e).__name__}: {e}", file=sys.stderr)
             timings[name] = -1.0
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             continue
+        retime_left -= w["retry_sec"]
         timings[name] = round(sec, 3)
-        query_windows[name] = {**w, "retries": 0}
-        per_query_load[name] = {
-            "mono": w["mono1"], "load1": w["load1"], "steal_jiffies": w["steal1"],
-        }
-
-    # Re-time every query whose window read dirty, waiting for a clean
-    # gap between attempts. Budget-bounded; a query that never gets a
-    # clean window keeps its number and stays on the dirty list.
-    hz = _tick_hz()
-    ncpu = _proc_cpus()
-    requeried = splice_dirty(
-        timings,
-        query_windows,
-        lambda name: measure(spark, bench_queries[name], sf_dir)[0],
-        hz,
-        ncpu,
-        budget_sec=float(os.environ.get("SPARK_GRAFT_RETIME_SEC", "600")),
-    )
+        query_windows[name] = w
 
     ok = {k: v for k, v in timings.items() if v >= 0}
-    # End of the QUERY sweep. The final sample (and the session verdict)
-    # comes after the isolated series and the ingest drain, so steal
-    # during those phases is recorded too.
+    # End of the QUERY sweep. The final sample comes after the isolated
+    # series and the ingest drain, so steal during those phases is
+    # recorded too.
     load_after_queries = _load_sample()
     out = {
         "metric": "total_runtime_declared_queries",
@@ -873,10 +676,9 @@ def main() -> int:
     if errors:
         out["errors"] = errors
 
-    if os.environ.get("SPARK_GRAFT_NO_ISOLATED") != "1":
-        out["isolated"], out["isolated_steal"] = isolated_series(
-            sorted(ok, key=ok.get, reverse=True)[:10]
-        )
+    out["isolated"], out["isolated_steal"] = isolated_series(
+        sorted(ok, key=ok.get, reverse=True)[:10]
+    )
 
     try:
         n, sec, w = ingest(spark, sf_dir)
@@ -892,74 +694,42 @@ def main() -> int:
     # CPU count the bench's threads alone push load1 past a
     # machine-sized threshold. Both counts are recorded.
     bench_threads = int(cpus)
-    # Two verdicts, one headline: contamination_verdict() is the
-    # SESSION detector (average + burst over the whole artifact), kept
-    # raw; splice_verdict() certifies every reported number's own
-    # (post-splice) window and is the headline flag, because steal that
-    # lands between timing windows inflates the session average without
-    # touching any reported number.
-    verdict = contamination_verdict(
-        load_start, load_end, per_query_load, wall_sec, ncpu, bench_threads
-    )
     spliced = splice_verdict(
-        load_start, query_windows, ncpu, bench_threads, timings=timings
+        load_start, query_windows, ncpu, bench_threads, hz, timings=timings
     )
-    loads = verdict["loads"]
-    steal_delta = verdict["steal_delta"]
-    steal_ratio = verdict["steal_ratio"]
-    thresholds = verdict["thresholds"]
-    causes = verdict["causes"]
+    loads = [
+        w["load1"] for w in query_windows.values() if w.get("load1", -1) >= 0
+    ]
+    steal_ratio = window_steal_ratio(steal_window(load_start, load_end), hz, ncpu)
+    requeried = sorted(n for n, w in query_windows.items() if w["attempts"] > 1)
     load_summary = {
         "start": load_start["loadavg"][0],
         "end": load_end["loadavg"][0],
         "max": max(loads) if loads else -1.0,
         "mean": round(sum(loads) / len(loads), 2) if loads else -1.0,
         "wall_sec": round(wall_sec, 1),
-        # Hypervisor steal in jiffies (≈10 ms units, summed over CPUs)
-        # across the whole artifact, plus the same split at the end of
-        # the query sweep so a burst localizes to query-sweep vs
-        # isolated/ingest phases.
-        "steal_jiffies_session": steal_delta,
-        "steal_jiffies_query_sweep": (
-            load_after_queries["steal_jiffies"] - load_start["steal_jiffies"]
-            if load_after_queries["steal_jiffies"] >= 0
-            and load_start["steal_jiffies"] >= 0
-            else -1
-        ),
-        "steal_ratio": steal_ratio,
-        "steal_ratio_window_max": verdict["steal_ratio_window_max"],
-        # Headline verdict = per-number splice certification; the raw
-        # session detector rides alongside so a reader sees BOTH (a
-        # spliced-clean capture on a steal-band machine reads
-        # contaminated:false + session_contaminated:true — every
-        # number certified, machine busy between windows).
+        # Hypervisor steal over the whole artifact, as a fraction of
+        # machine cycles: recorded, not a verdict (steal between timing
+        # windows touches no reported number).
+        "steal_ratio": round(steal_ratio, 4) if steal_ratio >= 0 else -1.0,
         "contaminated": spliced["contaminated"],
         "contamination_causes": spliced["causes"],
-        "contamination_thresholds": {
-            **thresholds, **spliced["thresholds"],
-        },
-        "session_contaminated": bool(causes),
-        "session_causes": causes,
+        "contamination_thresholds": spliced["thresholds"],
         "dirty_queries": spliced["dirty"],
-        "requeried": {
-            n: r["attempts"] for n, r in requeried.items()
-        },
+        "requeried": requeried,
         "ncpu": ncpu,
         "bench_threads": bench_threads,
-        "tick_hz": verdict["tick_hz"],
+        "tick_hz": hz,
     }
     out["load"] = {
         "start": load_start,
         "after_query_sweep": load_after_queries,
         "end": load_end,
         "summary": load_summary,
-        "per_query": per_query_load,
-        # Final (post-splice) timing windows + their steal ratios so a
-        # judge can audit every number's certification, plus the full
-        # re-time record.
+        # Every number's final timing window (with its capture count)
+        # and steal ratio, so a reader can audit each certification.
         "query_windows": query_windows,
         "window_ratios": spliced["window_ratios"],
-        "requeried": requeried,
     }
     if wait_info is not None:
         out["load"]["wait_clean"] = wait_info
@@ -979,17 +749,11 @@ def main() -> int:
     if "flagship" in timings:
         head["flagship"] = timings["flagship"]
     # Stdout load story: ONLY the fields bench_trend/_capture_summary
-    # and the verdict read. The full summary (per-query requeried map,
-    # thresholds, jiffy splits — 850+ chars) lives in BENCH_FULL.json.
+    # and run_matrix read. The full summary lives in BENCH_FULL.json.
     load_compact = {
-        "start": load_summary["start"],
-        "max": load_summary["max"],
-        "wall_sec": load_summary["wall_sec"],
-        "steal_ratio": load_summary["steal_ratio"],
-        "contaminated": load_summary["contaminated"],
-        "contamination_causes": load_summary["contamination_causes"],
-        "session_contaminated": load_summary["session_contaminated"],
-        "session_causes": load_summary["session_causes"],
+        k: load_summary[k]
+        for k in ("start", "max", "wall_sec", "steal_ratio", "contaminated",
+                  "contamination_causes")
     }
     compact = {
         "metric": out["metric"],

@@ -1,7 +1,8 @@
 """Matrix/sweep tooling contracts (r13, ADVICE r12 + VERDICT r12 item 1).
 
 No Spark session — these pin the pure-Python plumbing: the bench
-leg's contamination parsing and shared threshold, the per-round leg
+leg's contamination parsing, bench.py's clean-window policy
+(``certified``) and verdicts, the per-round leg
 list (unicode + reach gates actually wired in), and the digest-keyed
 fixture markers that stop edited mutation specs from silently serving
 stale cached fixtures.
@@ -29,113 +30,6 @@ def test_bench_contaminated_parses_flag_states():
     # no parsable line / no flag → None (treated as "unavailable")
     assert rm._bench_contaminated("no json here") is None
     assert rm._bench_contaminated(json.dumps({"metric": "x"})) is None
-
-
-def _verdict_inputs(
-    steal_total: int,
-    wall: float = 100.0,
-    ncpu: int = 32,
-    start_load: float = 0.1,
-    burst: tuple[float, int] | None = None,
-):
-    """Synthesize a (load_start, load_end, per_query_load) triple with
-    a given total steal over ``wall`` seconds at 100 Hz. ``burst``
-    places ALL of an extra (duration, jiffies) steal burst inside one
-    mid-session window so the session average stays low."""
-    start = {"mono": 0.0, "loadavg": [start_load, 0.1, 0.1], "steal_jiffies": 0}
-    per_query = {
-        "q1": {"mono": wall * 0.4, "load1": 5.0, "steal_jiffies": int(steal_total * 0.4)},
-    }
-    if burst is not None:  # chain order matters: insert between q1 and q2
-        dur, jiffies = burst
-        per_query["q1b"] = {
-            "mono": wall * 0.4 + dur,
-            "load1": 5.0,
-            "steal_jiffies": int(steal_total * 0.4) + jiffies,
-        }
-    extra = burst[1] if burst is not None else 0
-    per_query["q2"] = {
-        "mono": wall * 0.8,
-        "load1": 5.0,
-        "steal_jiffies": int(steal_total * 0.8) + extra,
-    }
-    end = {"mono": wall, "loadavg": [5.0, 3.0, 1.0], "steal_jiffies": steal_total + extra}
-    return start, end, per_query
-
-
-def test_contamination_verdict_catches_r13_steal_band():
-    """VERDICT r13 item 2: the r13 matrix captures (steal_ratio
-    0.012-0.032, ~32-40% slower than the same code idle) all
-    self-certified clean under the old 0.05 threshold. Replay that
-    band against the pure verdict: it must now flag 'steal'."""
-    import bench
-
-    wall, ncpu, hz = 109.2, 32, 100
-    for band_ratio in (0.012, 0.016, 0.032):
-        jiffies = int(band_ratio * wall * hz * ncpu)
-        start, end, pq = _verdict_inputs(jiffies, wall=wall, ncpu=ncpu)
-        v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-        assert "steal" in v["causes"], band_ratio
-        assert v["thresholds"]["steal_ratio"] == 0.01
-
-
-def test_contamination_verdict_idle_band_stays_clean():
-    """An idle-band capture (steal 0.0003-0.002, the BENCH_IDLE_r13 /
-    r12 regime) must still read plain clean — the tightened gate must
-    not start flagging the reference captures."""
-    import bench
-
-    wall, ncpu, hz = 82.3, 32, 100
-    for idle_ratio in (0.0003, 0.002, 0.009):
-        jiffies = int(idle_ratio * wall * hz * ncpu)
-        start, end, pq = _verdict_inputs(jiffies, wall=wall, ncpu=ncpu)
-        v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-        assert v["causes"] == [], idle_ratio
-        assert v["steal_ratio"] <= 0.01
-
-
-def test_contamination_verdict_flags_localized_burst():
-    """A 3-second 60%-steal burst inside one query window dilutes to
-    ~0.6% over a 300 s session — under the session threshold — but
-    invalidates the queries it landed on. The windowed detector must
-    flag it; the same chain without the burst must stay clean."""
-    import bench
-
-    wall, ncpu, hz = 300.0, 32, 100
-    # burst: 3 s window in which 60% of cycles are stolen
-    burst_jiffies = int(0.6 * 3.0 * hz * ncpu)
-    start, end, pq = _verdict_inputs(
-        0, wall=wall, ncpu=ncpu, burst=(3.0, burst_jiffies)
-    )
-    v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-    assert v["steal_ratio"] < 0.01  # diluted: session gate alone misses it
-    assert "steal_burst" in v["causes"]
-    start, end, pq = _verdict_inputs(0, wall=wall, ncpu=ncpu)
-    v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-    assert v["causes"] == []
-
-
-def test_contamination_verdict_tolerates_missing_signals():
-    """Pre-r14 sample shapes (no mono field) and /proc-less platforms
-    (steal -1) must degrade to 'signal unavailable', not crash or
-    false-flag."""
-    import bench
-
-    start = {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": -1}
-    end = {"loadavg": [5.0, 3.0, 1.0], "steal_jiffies": -1}
-    pq = {"q1": {"load1": 5.0, "steal_jiffies": -1}}
-    v = bench.contamination_verdict(start, end, pq, 100.0, 32, 32, 100)
-    assert v["causes"] == []
-    assert v["steal_ratio"] == -1.0
-    assert v["steal_ratio_window_max"] == -1.0
-
-
-def test_bench_threshold_shared_with_bench_py():
-    """ADVICE r12: the settle gate must read bench.py's own threshold,
-    not a re-derived copy that silently diverges."""
-    import bench
-
-    assert rm._bench_threshold() == bench.load_at_start_threshold()
 
 
 def test_code_digest_excludes_round_artifacts_only():
@@ -535,122 +429,110 @@ def test_code_digest_strips_generated_readme_block():
 
 
 class _ScriptedBand:
-    """Scripted steal-band machinery for splice_dirty: each sample
-    advances a fake clock; the band schedule decides how much steal
-    each inter-sample window accrues."""
+    """Scripted steal band for ``bench.certified``: each capture is one
+    2 s timing window that accrues the next scripted steal ratio and
+    reports its capture number as its seconds; ``wait`` stands in for
+    ``wait_clean_window``."""
 
-    def __init__(self, window_ratios: list[float], hz=100, ncpu=32):
-        self.ratios = list(window_ratios)  # consumed per timing window
-        self.hz, self.ncpu = hz, ncpu
+    def __init__(self, window_ratios: list[float]):
+        import bench
+
+        self.ratios = list(window_ratios)  # consumed per capture
+        self.hz, self.ncpu = bench._tick_hz(), bench._proc_cpus()
         self.t = 100.0
         self.steal = 50_000
         self.waits = 0
-
-    def clock(self) -> float:
-        return self.t
+        self.captures = 0
 
     def wait(self, budget, probe_sec=2.0):
         self.waits += 1
         self.t += 1.0
 
-    def sample(self) -> dict:
-        # pair of samples brackets one timing window: advance 2 s and
-        # accrue the next scripted ratio on the CLOSING sample
-        if getattr(self, "_open", False):
-            ratio = self.ratios.pop(0) if self.ratios else 0.0
-            self.steal += int(ratio * 2.0 * self.hz * self.ncpu)
-            self._open = False
-        else:
-            self._open = True
-        self.t += 2.0
+    def _sample(self) -> dict:
         return {"mono": self.t, "steal_jiffies": self.steal,
                 "loadavg": [1.0, 1.0, 1.0]}
 
+    def capture(self) -> tuple[float, dict]:
+        import bench
 
-def test_splice_dirty_retimes_until_clean_and_splices():
-    """A dirty query re-timed under a band that lifts on the second
-    attempt: the clean re-run's number and window replace the dirty
-    ones; the clean query is never touched."""
+        self.captures += 1
+        s0 = self._sample()
+        ratio = self.ratios.pop(0) if self.ratios else 0.0
+        self.t += 2.0
+        self.steal += int(ratio * 2.0 * self.hz * self.ncpu)
+        return float(self.captures), bench.steal_window(s0, self._sample())
+
+
+def _certify(monkeypatch, band, time_once=None, budget=500.0):
     import bench
 
-    band = _ScriptedBand([0.08, 0.001])  # attempt1 dirty, attempt2 clean
-    timings = {"q_dirty": 5.0, "q_clean": 1.0}
-    wins = {
-        "q_dirty": _qwin(0.09),
-        "q_clean": _qwin(0.001, t0=20.0),
-    }
-    calls = []
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: calls.append(n) or 2.5,
-        100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert calls == ["q_dirty", "q_dirty"]
-    assert rec == {"q_dirty": {"original_sec": 5.0, "attempts": 2,
-                               "certified": True}}
-    assert timings == {"q_dirty": 2.5, "q_clean": 1.0}
-    assert wins["q_dirty"]["retries"] == 2
+    monkeypatch.setattr(bench, "wait_clean_window", band.wait)
+    return bench.certified(time_once or band.capture, budget)
+
+
+def test_certified_clean_first_capture_needs_no_wait(monkeypatch):
+    band = _ScriptedBand([0.001])
+    sec, w = _certify(monkeypatch, band)
+    assert (sec, w["attempts"], band.waits, band.captures) == (1.0, 1, 0, 1)
+
+
+def test_certified_retimes_dirty_capture_until_clean(monkeypatch):
+    """A band that lifts on the second capture: the clean re-capture's
+    number and window replace the dirty first one."""
+    import bench
+
+    band = _ScriptedBand([0.08, 0.001])
+    sec, w = _certify(monkeypatch, band)
+    assert (sec, w["attempts"], band.waits) == (2.0, 2, 1)
+    assert bench.window_clean(w, band.hz, band.ncpu)
     v = bench.splice_verdict(
-        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, wins, 32, 32, 100
+        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, {"q": w},
+        band.ncpu, 1, band.hz,
     )
     assert not v["contaminated"]
 
 
-def test_splice_dirty_persistent_band_keeps_number_and_reports():
-    """A band that never lifts: max_attempts re-runs, the LAST dirty
-    measurement stays, and the verdict still names the query."""
+def test_certified_persistent_band_keeps_first_capture_and_reports(
+    monkeypatch,
+):
+    """A band that never lifts: MAX_CAPTURES captures, the FIRST one
+    stays, and the verdict names the query."""
     import bench
 
     band = _ScriptedBand([0.08, 0.09, 0.07])
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: 2.5, 100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert rec["q"] == {"original_sec": 5.0, "attempts": 3,
-                        "certified": False}
-    assert timings["q"] == 5.0  # dirty re-runs never splice
+    sec, w = _certify(monkeypatch, band)
+    assert band.captures == bench.MAX_CAPTURES == w["attempts"]
+    assert sec == 1.0
+    assert abs(bench.window_steal_ratio(w, band.hz, band.ncpu) - 0.08) < 0.01
     v = bench.splice_verdict(
-        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, wins, 32, 32, 100
+        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, {"q": w},
+        band.ncpu, 1, band.hz,
     )
     assert v["dirty"] == ["q"]
 
 
-def test_splice_dirty_budget_bounds_the_pass():
-    """An exhausted budget stops the loop before any attempt — the
-    sweep can never hang on a permanent band."""
-    import bench
-
+def test_certified_exhausted_budget_never_waits(monkeypatch):
+    """No re-time budget left: the dirty first capture stays without a
+    wait, so a permanent band can never hang the sweep."""
     band = _ScriptedBand([0.08])
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: 2.5, 100, 32, budget_sec=0.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert rec["q"]["attempts"] == 0 and not rec["q"]["certified"]
-    assert band.waits == 0
+    sec, w = _certify(monkeypatch, band, budget=0.0)
+    assert (sec, w["attempts"], band.waits, band.captures) == (1.0, 1, 0, 1)
 
 
-def test_splice_dirty_errored_query_keeps_original():
-    """A re-run that raises keeps the original number and stops
-    retrying that query (regression elsewhere must not spin)."""
+def test_certified_raising_retry_keeps_first_capture(monkeypatch):
+    """A re-capture that raises keeps the first number and stops."""
     import bench
 
-    band = _ScriptedBand([0.001])
+    band = _ScriptedBand([0.08, 0.001])
 
-    def boom(name):
-        raise RuntimeError("transient")
+    def time_once():
+        if band.captures:
+            raise RuntimeError("transient")
+        return band.capture()
 
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, boom, 100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert timings["q"] == 5.0
-    assert rec["q"]["attempts"] == 0 and not rec["q"]["certified"]
+    sec, w = _certify(monkeypatch, band, time_once=time_once)
+    assert (sec, w["attempts"], band.waits) == (1.0, 2, 1)
+    assert not bench.window_clean(w, band.hz, band.ncpu)
 
 
 def test_fit_compact_last_resort_shed_fits_pathological_core():
@@ -793,3 +675,54 @@ def test_steal_window_feeds_window_steal_ratio():
     assert w == {"mono0": 100.0, "steal0": 1000, "mono1": 110.0,
                  "steal1": 1320, "load1": 2.5}
     assert abs(bench.window_steal_ratio(w, 100, 32) - 0.01) < 1e-12
+
+
+def test_bench_retry_and_env_reads_have_one_owner():
+    """``wait_clean_window`` is called only by ``certified`` (the one
+    re-time policy) and ``main``'s ``--wait-clean`` start gate, in
+    bench.py and every tool; bench.py reads no environment variable
+    besides its three documented ones."""
+    import ast
+    import glob
+
+    def is_environ(n) -> bool:
+        return (isinstance(n, ast.Attribute) and n.attr == "environ"
+                and isinstance(n.value, ast.Name) and n.value.id == "os")
+
+    waits, env_reads, environ_refs = [], set(), 0
+    files = [os.path.join(REPO, "bench.py")]
+    files += glob.glob(os.path.join(REPO, "tools", "*.py"))
+    for path in sorted(files):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        rel = os.path.relpath(path, REPO)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "wait_clean_window"
+                or getattr(node.func, "attr", None) == "wait_clean_window"
+            ):
+                owner = next(
+                    (d.name for d in defs
+                     if d.lineno <= node.lineno <= d.end_lineno),
+                    "<module>",
+                )
+                waits.append(f"{rel}:{owner}")
+            if rel != "bench.py":
+                continue
+            environ_refs += is_environ(node)
+            if isinstance(node, ast.Call) and (
+                (getattr(node.func, "attr", None) == "get"
+                 and is_environ(node.func.value))
+                or (getattr(node.func, "attr", None) == "getenv")
+            ):
+                env_reads.add(getattr(node.args[0], "value", "<dynamic>"))
+                environ_refs -= is_environ(node.func.value)
+            elif isinstance(node, ast.Subscript) and is_environ(node.value):
+                env_reads.add(getattr(node.slice, "value", "<dynamic>"))
+                environ_refs -= 1
+    assert sorted(waits) == ["bench.py:certified", "bench.py:main"], waits
+    assert env_reads <= {
+        "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM",
+    }, env_reads
+    assert environ_refs == 0  # no other use of os.environ in bench.py

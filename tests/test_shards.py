@@ -4,7 +4,6 @@ and deterministic output across reruns."""
 from __future__ import annotations
 
 import glob
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -19,9 +18,9 @@ def _splits(spark):
     return dataset_split(docs).join(docs.select("doc_id", "text"), "doc_id")
 
 
-def test_shards_roundtrip_and_partition_pruning(spark):
+def test_shards_roundtrip_and_partition_pruning(spark, tmp_path):
     df = _splits(spark)
-    out = tempfile.mkdtemp(prefix="iotstream-shards-")
+    out = str(tmp_path / "shards")
     write_training_shards(df, out, max_records_per_file=100)
     # directory-per-split layout
     dirs = {p.split("split=")[1] for p in glob.glob(f"{out}/split=*")}
@@ -37,9 +36,9 @@ def test_shards_roundtrip_and_partition_pruning(spark):
         assert n <= 100, (f, n)
 
 
-def test_shards_deterministic_across_reruns(spark):
+def test_shards_deterministic_across_reruns(spark, tmp_path):
     df = _splits(spark)
-    a, b = (tempfile.mkdtemp(prefix="iotstream-shards-") for _ in range(2))
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
     write_training_shards(df, a)
     write_training_shards(df, b)
     fa = sorted(glob.glob(f"{a}/split=*/*.parquet"))
@@ -51,14 +50,13 @@ def test_shards_deterministic_across_reruns(spark):
         assert da == db  # same rows, same order → deterministic shards
 
 
-def test_compact_parquet_preserves_rows_and_reduces_files(spark):
+def test_compact_parquet_preserves_rows_and_reduces_files(spark, tmp_path):
     import glob as g
-    import tempfile
 
     from iotstream.ext.shards import compact_parquet
 
     df = _splits(spark)
-    out = tempfile.mkdtemp(prefix="iotstream-compact-") + "/t"
+    out = str(tmp_path / "t")
     # fragment: many small files
     df.repartition(40).write.parquet(out)
     before_files = len(g.glob(f"{out}/*.parquet"))

@@ -76,9 +76,9 @@ def totals(markdown: bool) -> int:
     README triplet story COMPUTED from the committed artifacts instead
     of narrated. For each driver round: the recorded total, the
     capture's steal_ratio, the verdict the capture recorded AT THE
-    TIME, the verdict under the CURRENT gate (bench.py's session steal
-    threshold, imported — re-certifying history when the gate
-    tightens), and the idle twin (``BENCH_IDLE_r{N}.json``) where one
+    TIME, the verdict under the CURRENT gate (bench.py's
+    PER_QUERY_STEAL_GATE, imported — re-certifying history when the
+    gate tightens), and the idle twin (``BENCH_IDLE_r{N}.json``) where one
     was taken. The "idle-equivalent" column is the idle twin when it
     exists, else the total itself when the current gate reads clean,
     else "-" — steal is a DETECTOR, not a proportional estimator, so
@@ -87,14 +87,7 @@ def totals(markdown: bool) -> int:
         sys.path.insert(0, REPO)
     import bench
 
-    thresh = 0.01
-    try:  # read the live threshold so this table can never diverge
-        thresh = bench.contamination_verdict(
-            {"loadavg": [0.0], "steal_jiffies": 0},
-            {"loadavg": [0.0], "steal_jiffies": 0}, {}, 1.0, 1, 1, 100,
-        )["thresholds"]["steal_ratio"]
-    except Exception:  # pragma: no cover — bench.py mid-edit
-        pass
+    thresh = bench.PER_QUERY_STEAL_GATE
 
     rows = []
     for path in sorted(

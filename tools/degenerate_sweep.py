@@ -208,6 +208,30 @@ NULL_MUTS: dict[str, tuple[str | None, list[dict]]] = {
             {"r_name": None},
         ],
     ),
+    # NULL text ⇒ NULL n_chars (a failed fetch has no known length),
+    # empty text ⇒ n_chars 0
+    "documents": (
+        "doc_id",
+        [
+            {"text": None, "n_chars": None},
+            {"text": "", "n_chars": 0},
+            {"text": None, "lang": None, "n_chars": None},
+        ] * 2,
+    ),
+    # content-less vectors must be EXCLUDED from every pair/top-k output
+    # (DuckDB's NULL list arithmetic drops them naturally; the engine
+    # must match), never reshape-corrupted or np.stack-crashed
+    "embeddings": (
+        "vec_id",
+        [
+            {"embedding": None},  # failed embedding job
+            {"embedding": None},
+            # a REAL vector with a NULL label: exercises the NULL GROUP
+            # BY path in label profiling without being excluded by
+            # drop_null_vectors
+            {"label": None},
+        ],
+    ),
 }
 
 
@@ -232,75 +256,37 @@ def _extend(src: str, out: str, table: str, pk: str | None, muts: list[dict]):
     pq.write_table(pa.concat_tables([t, extra]), os.path.join(out, fname))
 
 
-def build_nulls() -> str:
-    """NULL-bearing fixture: sf0.001 plus consistent degenerate rows in
-    EVERY table (r10 verdict item 1 — the r9 sweep covered only
-    documents/embeddings and found 9 real defects on that one table).
-    documents — NULL text ⇒ NULL n_chars (a failed fetch has no known
-    length), empty text ⇒ n_chars 0.
-    embeddings — NULL vectors (a failed embedding job) and one NULL
-    label: content-less vectors must be EXCLUDED from every pair/top-k
-    output (DuckDB's NULL list arithmetic drops them naturally; the
-    engine must match), never reshape-corrupted or np.stack-crashed.
-    All other tables — NULL_MUTS above."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = f"{ROOT}/nulls"
-    digest = _spec_digest("nulls-v2", NULL_MUTS, SRC)
+def _mutated_fixture(
+    out: str, tag: str, muts: dict[str, tuple[str | None, list[dict]]]
+) -> str:
+    """SRC with every table in ``muts`` ({table: (pk, rows)}) extended
+    by ``_extend`` and the other tables copied. The ``.complete``
+    marker holds the digest of ``tag``, ``muts`` and SRC, so an edited
+    spec rebuilds instead of serving the stale cached fixture."""
+    digest = _spec_digest(tag, muts, SRC)
     if _fresh_marker(out, digest):
         return out
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
-    special = {"documents.parquet", "embeddings.parquet"}
     for f in os.listdir(SRC):
-        if f.endswith(".parquet") and f not in special:
-            table = f[: -len(".parquet")]
-            if table in NULL_MUTS:
-                pk, muts = NULL_MUTS[table]
-                _extend(SRC, out, table, pk, muts)
-            else:
-                shutil.copy(os.path.join(SRC, f), os.path.join(out, f))
-
-    t = pq.read_table(os.path.join(SRC, "documents.parquet"))
-    head = t.slice(0, 6).to_pydict()
-    mx = pa.compute.max(t.column("doc_id")).as_py()
-    rows = {c: list(head[c]) for c in t.column_names}
-    for i in range(6):
-        rows["doc_id"][i] = mx + 1 + i
-        if i % 3 == 0:
-            rows["text"][i] = None
-            rows["n_chars"][i] = None
-        if i % 3 == 1:
-            rows["text"][i] = ""
-            rows["n_chars"][i] = 0
-        if i % 3 == 2:
-            rows["text"][i] = None
-            rows["lang"][i] = None
-            rows["n_chars"][i] = None
-    extra = pa.Table.from_pydict(rows, schema=t.schema)
-    pq.write_table(
-        pa.concat_tables([t, extra]), os.path.join(out, "documents.parquet")
-    )
-
-    e = pq.read_table(os.path.join(SRC, "embeddings.parquet"))
-    ehead = e.slice(0, 3).to_pydict()
-    emx = pa.compute.max(e.column("vec_id")).as_py()
-    erows = {c: list(ehead[c]) for c in e.column_names}
-    for i in range(3):
-        erows["vec_id"][i] = emx + 1 + i
-        if i < 2:
-            erows["embedding"][i] = None  # failed embedding job
-    # a REAL vector with a NULL label: exercises the NULL GROUP BY path
-    # in label profiling without being excluded by drop_null_vectors
-    erows["label"][2] = None
-    eextra = pa.Table.from_pydict(erows, schema=e.schema)
-    pq.write_table(
-        pa.concat_tables([e, eextra]), os.path.join(out, "embeddings.parquet")
-    )
-    with open(f"{out}/.complete", "w") as f:
-        f.write(digest)
+        if not f.endswith(".parquet"):
+            continue
+        table = f[: -len(".parquet")]
+        if muts.get(table, (None, []))[1]:
+            _extend(SRC, out, table, *muts[table])
+        else:
+            shutil.copy(os.path.join(SRC, f), os.path.join(out, f))
+    with open(f"{out}/.complete", "w") as fh:
+        fh.write(digest)
     return out
+
+
+def build_nulls() -> str:
+    """NULL-bearing fixture: sf0.001 plus consistent degenerate rows in
+    EVERY table (NULL_MUTS; r10 verdict item 1 — the r9 sweep covered
+    only documents/embeddings and found 9 real defects on that one
+    table)."""
+    return _mutated_fixture(f"{ROOT}/nulls", "nulls-v2", NULL_MUTS)
 
 
 #: Hostile-VALUES mutations (r11, the step after NULLs): rows whose
@@ -754,23 +740,10 @@ def build_boundary(cls: str) -> str:
         }
     else:  # pragma: no cover — caller passes a literal
         raise ValueError(cls)
-    out = f"{ROOT}/boundary_{cls}"
-    digest = _spec_digest(f"boundary-{cls}-v1", muts, SRC)
-    if _fresh_marker(out, digest):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    for f in os.listdir(SRC):
-        if not f.endswith(".parquet"):
-            continue
-        table = f[: -len(".parquet")]
-        if table in muts and muts[table]:
-            _extend(SRC, out, table, HOSTILE_MUTS[table][0], muts[table])
-        else:
-            shutil.copy(os.path.join(SRC, f), os.path.join(out, f))
-    with open(f"{out}/.complete", "w") as fh:
-        fh.write(digest)
-    return out
+    return _mutated_fixture(
+        f"{ROOT}/boundary_{cls}", f"boundary-{cls}-v1",
+        {t: (HOSTILE_MUTS[t][0], rows) for t, rows in muts.items()},
+    )
 
 
 #: Epoch-class targets: the WATERMARKED declared queries — hand-listed
@@ -1185,18 +1158,8 @@ def build_hostile() -> str:
     divides by ‖v‖ = 0), plus an exact duplicate of a real vector
     (top-k tie-breaking must be deterministic). The full check_oracle
     parity gate runs on it."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    out = f"{ROOT}/hostile"
-    digest = _spec_digest(
-        "hostile-v5-zerodiv", HOSTILE_MUTS, HOSTILE_DOCS,
-        HOSTILE_DOC_ROWS, SRC,
-    )
-    if _fresh_marker(out, digest):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
     # ALL-NaN USER group (r12): the `all_nan` event_type covers type-
     # grouped paths, but user-grouped decile/RFM/segment paths never
     # see a user whose EVERY measure is NaN unless one is built. Pick
@@ -1227,55 +1190,26 @@ def build_hostile() -> str:
         pk, muts = hostile_muts[t]
         hostile_muts[t] = (pk, list(muts) + zd[t])
 
-    special = {"documents.parquet", "embeddings.parquet"}
-    for f in os.listdir(SRC):
-        if f.endswith(".parquet") and f not in special:
-            table = f[: -len(".parquet")]
-            if table in hostile_muts:
-                pk, muts = hostile_muts[table]
-                _extend(SRC, out, table, pk, muts)
-            else:
-                shutil.copy(os.path.join(SRC, f), os.path.join(out, f))
-
-    t = pq.read_table(os.path.join(SRC, "documents.parquet"))
     doc_rows = [{"text": d} for d in HOSTILE_DOCS] + HOSTILE_DOC_ROWS
-    head = t.slice(0, len(doc_rows)).to_pydict()
-    mx = pa.compute.max(t.column("doc_id")).as_py()
-    rows = {c: list(head[c]) for c in t.column_names}
-    for i, d in enumerate(doc_rows):
-        rows["doc_id"][i] = mx + 1 + i
-        rows["text"][i] = d["text"]
-        rows["n_chars"][i] = len(d["text"])
-        for c, v in d.items():
-            if c != "text":
-                rows[c][i] = v
-    pq.write_table(
-        pa.concat_tables(
-            [t, pa.Table.from_pydict(rows, schema=t.schema)]
-        ),
-        os.path.join(out, "documents.parquet"),
+    hostile_muts["documents"] = (
+        "doc_id", [{"n_chars": len(d["text"]), **d} for d in doc_rows],
     )
-
-    e = pq.read_table(os.path.join(SRC, "embeddings.parquet"))
-    ehead = e.slice(0, 4).to_pydict()
-    emx = pa.compute.max(e.column("vec_id")).as_py()
-    erows = {c: list(ehead[c]) for c in e.column_names}
-    dim = len(erows["embedding"][0])
-    for i in range(4):
-        erows["vec_id"][i] = emx + 1 + i
-    erows["embedding"][0] = [_NAN] + [0.25] * (dim - 1)
-    erows["embedding"][1] = [_INF] + [0.25] * (dim - 1)
-    erows["embedding"][2] = [0.0] * dim
-    # row 3 keeps its copied REAL embedding verbatim → exact duplicate
-    pq.write_table(
-        pa.concat_tables(
-            [e, pa.Table.from_pydict(erows, schema=e.schema)]
-        ),
-        os.path.join(out, "embeddings.parquet"),
+    dim = len(
+        pq.read_table(os.path.join(SRC, "embeddings.parquet"),
+                      columns=["embedding"]).column(0)[0].as_py()
     )
-    with open(f"{out}/.complete", "w") as f:
-        f.write(digest)
-    return out
+    hostile_muts["embeddings"] = (
+        "vec_id",
+        [
+            {"embedding": [_NAN] + [0.25] * (dim - 1)},
+            {"embedding": [_INF] + [0.25] * (dim - 1)},
+            {"embedding": [0.0] * dim},
+            {},  # keeps its copied REAL embedding → exact duplicate
+        ],
+    )
+    return _mutated_fixture(
+        f"{ROOT}/hostile", "hostile-v5-zerodiv", hostile_muts
+    )
 
 
 #: Queries the reach audit accepts as identical-under-hostile, each

@@ -26,13 +26,13 @@ output tail, so any leg failure is visible without log archaeology:
                   declared query's hostile-fixture output is value-
                   identical to its clean output — the hostile gate
                   never reached it)
-    bench         python bench.py (solo — never concurrent with other
-                  Spark work; the compact JSON line is recorded). The
-                  leg is load-gated: it waits for loadavg to decay
-                  below bench.py's own start threshold, then re-runs
-                  up to BENCH_MAX_ATTEMPTS times while the capture
-                  self-flags ``contaminated`` — the committed artifact
-                  should need no manual idle chaser.
+    bench         python bench.py --wait-clean, once (solo — never
+                  concurrent with other Spark work; the compact JSON
+                  line is recorded). bench.py owns the clean-window
+                  policy: it starts in a steal-free gap at low load and
+                  re-times each dirty number itself; a capture that
+                  still self-flags ``contaminated`` records the leg as
+                  ``pass-contaminated``.
 
 Legs run one at a time (the bench leg REQUIRES that; oracle checks
 tolerate concurrency but sequential keeps timings attributable).
@@ -81,62 +81,9 @@ def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
         ("hostile", [PY, "tools/degenerate_sweep.py", "hostile"]),
         ("unicode", [PY, "tools/unicode_probe.py", str(rnd)]),
         ("reach", [PY, "tools/degenerate_sweep.py", "reach", str(rnd)]),
-        # --wait-clean: delay the sweep start into a steal-free gap
-        # (r15 — the hypervisor band ate the r13/r14 bench legs; the
-        # bench also re-times any query whose own window read dirty)
+        # --wait-clean: start the sweep in a steal-free gap at low load
         ("bench", [PY, "bench.py", "--wait-clean"]),
     ]
-
-#: Bench-leg contamination discipline (VERDICT r11 item 5): the r11
-#: matrix ran the bench leg after a fixed 90 s settle and still caught
-#: ambient load (95.1 s at load 3.49), forcing a manual idle re-run.
-#: The leg now (a) WAITS until 1-min loadavg decays below bench.py's
-#: own load_at_start threshold (max(2.0, 0.25·ncpu)) before launching,
-#: and (b) parses the capture's self-diagnosed ``contaminated`` flag
-#: and re-runs the bench (with another settle) until it reads false or
-#: the attempt budget is spent — so the committed artifact needs no
-#: manual chaser.
-BENCH_MAX_ATTEMPTS = 3
-BENCH_SETTLE_TIMEOUT = 600  # max seconds to wait for loadavg decay
-BENCH_SETTLE_POLL = 15
-
-
-def _bench_threshold() -> float:
-    """bench.py's OWN load_at_start threshold, imported rather than
-    re-derived (ADVICE r12: a duplicated formula silently diverges from
-    the contamination verdict it pre-empts the moment bench.py's
-    changes). Falls back to the historical formula only if the import
-    itself breaks."""
-    if REPO not in sys.path:
-        sys.path.insert(0, REPO)
-    try:
-        import bench
-
-        return float(bench.load_at_start_threshold())
-    except Exception:  # pragma: no cover — bench.py mid-edit/unreadable
-        return max(2.0, round(0.25 * (os.cpu_count() or 1), 1))
-
-
-def _settle_for_bench() -> float:
-    """Block until load1 is under bench.py's start threshold (or the
-    timeout passes — recorded either way; the bench's own verdict is
-    still the authority). Returns seconds waited."""
-    thresh = _bench_threshold()
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < BENCH_SETTLE_TIMEOUT:
-        try:
-            load1 = os.getloadavg()[0]
-        except OSError:  # pragma: no cover
-            break
-        if load1 < thresh:
-            break
-        print(
-            f"SETTLE bench: load1 {load1:.2f} >= {thresh:.1f}, waiting",
-            flush=True,
-        )
-        time.sleep(BENCH_SETTLE_POLL)
-    return round(time.monotonic() - t0, 1)
-
 
 def _is_stray_cmd(argv: list[str]) -> bool:
     """True when an argv genuinely RUNS one of the guarded surfaces —
@@ -469,56 +416,23 @@ def main() -> int:
             print(f"SKIP  {name}")
             continue
         print(f"RUN   {name}: {' '.join(cmd)}", flush=True)
-        t0 = time.monotonic()
         bench_meta: dict = {}
-        run_secs: list[float] = []
-        attempts = BENCH_MAX_ATTEMPTS if name == "bench" else 1
-        for attempt in range(1, attempts + 1):
-            if name == "bench":
-                # Load-gated settle replaces the r11 fixed 90 s sleep:
-                # the leg runs right after the Spark-heavy legs and
-                # must not start until load1 has actually decayed.
-                waited = _settle_for_bench()
-                bench_meta.setdefault("settle_seconds", []).append(waited)
-                # The bench leg is the steal-sensitive one: give a
-                # leftover process a short grace to exit, then record
-                # whatever is still alive next to the attempt.
-                strays = _guard_strays("before bench", wait_sec=120.0)
-                if strays:
-                    bench_meta.setdefault("strays", []).append(strays)
-            a0 = time.monotonic()
-            try:
-                proc = subprocess.run(
-                    cmd, cwd=REPO, capture_output=True, text=True,
-                    timeout=3600,
-                )
-                rc, out = proc.returncode, proc.stdout + proc.stderr
-            except subprocess.TimeoutExpired:
-                rc, out = -1, "TIMEOUT after 3600s"
-            run_secs.append(round(time.monotonic() - a0, 1))
-            if name != "bench" or rc != 0:
-                break
-            contaminated = _bench_contaminated(out)
-            bench_meta.setdefault("contaminated_attempts", []).append(
-                contaminated
-            )
-            if not contaminated:  # False or None (flag unavailable)
-                break
-            print(
-                f"RETRY bench: capture self-flagged contaminated "
-                f"(attempt {attempt}/{attempts})",
-                flush=True,
-            )
-        # "seconds" keeps its pre-r12 meaning — the duration of the run
-        # that produced the recorded verdict, settle waits excluded
-        # (ADVICE r12: folding settle+retries in made the bench leg
-        # incomparable across rounds and inflated total_seconds).
-        # wall_seconds carries the full leg wall-clock for the bench
-        # leg; attempt_seconds itemizes retried runs.
-        dur = run_secs[-1] if run_secs else round(time.monotonic() - t0, 1)
         if name == "bench":
-            bench_meta["attempt_seconds"] = run_secs
-            bench_meta["wall_seconds"] = round(time.monotonic() - t0, 1)
+            # The bench leg is the steal-sensitive one: give a leftover
+            # process a short grace to exit, then record whatever is
+            # still alive next to the capture.
+            strays = _guard_strays("before bench", wait_sec=120.0)
+            if strays:
+                bench_meta["strays"] = strays
+        t0 = time.monotonic()
+        try:
+            proc = subprocess.run(
+                cmd, cwd=REPO, capture_output=True, text=True, timeout=3600,
+            )
+            rc, out = proc.returncode, proc.stdout + proc.stderr
+        except subprocess.TimeoutExpired:
+            rc, out = -1, "TIMEOUT after 3600s"
+        dur = round(time.monotonic() - t0, 1)
         # tail: the verdict lines every leg prints last (ALL OK /
         # failure list / pytest summary / bench JSON). Spark progress
         # bars arrive as \r-terminated segments and Spark/parquet log
@@ -535,13 +449,10 @@ def main() -> int:
         status = "pass" if rc == 0 else "FAIL"
         if rc != 0:
             any_fail = True
-        elif name == "bench":
-            # A final capture that still self-flags contaminated must
-            # not read as a clean pass at the verdict level (ADVICE
-            # r12: it previously survived only in the metadata list).
-            ca = bench_meta.get("contaminated_attempts") or []
-            if ca and ca[-1] is True:
-                status = "pass-contaminated"
+        elif name == "bench" and _bench_contaminated(out):
+            # A capture that self-flags contaminated must not read as a
+            # clean pass at the verdict level.
+            status = "pass-contaminated"
         result["legs"][name] = {
             "status": status,
             "rc": rc,

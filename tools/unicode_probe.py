@@ -32,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import subprocess
 import sys
 import time
@@ -40,8 +39,10 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
+sys.path.insert(0, HERE)
 
-SRC = "/root/testdata/sf0.001"
+from degenerate_sweep import _mutated_fixture  # noqa: E402
+
 OUT = "/tmp/iotstream-degenerate/unicode"
 
 #: documents.text rows; n_chars is set to the CODE-POINT count (python
@@ -58,53 +59,26 @@ UNICODE_DOCS = [
 ]
 
 
+#: Per-table mutated rows (``degenerate_sweep._extend`` spec): the
+#: UNICODE_DOCS documents, plus unicode group keys and a unicode JSON
+#: value in events.
+UNICODE_MUTS: dict[str, tuple[str, list[dict]]] = {
+    "documents": (
+        "doc_id", [{"text": t, "n_chars": len(t)} for t in UNICODE_DOCS],
+    ),
+    "events": (
+        "event_id",
+        [
+            {"event_type": "café_click"},                       # unicode group key
+            {"event_type": "购买"},                      # CJK group key
+            {"props": '{"k": 1, "s": "emoji \U0001f680 café"}'},  # unicode JSON value
+        ],
+    ),
+}
+
+
 def build() -> str:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    marker = f"{OUT}/.complete"
-    if os.path.exists(marker):
-        return OUT
-    shutil.rmtree(OUT, ignore_errors=True)
-    os.makedirs(OUT, exist_ok=True)
-    for f in os.listdir(SRC):
-        if not f.endswith(".parquet"):
-            continue
-        if f not in ("documents.parquet", "events.parquet"):
-            shutil.copy(os.path.join(SRC, f), os.path.join(OUT, f))
-
-    t = pq.read_table(os.path.join(SRC, "documents.parquet"))
-    head = t.slice(0, len(UNICODE_DOCS)).to_pydict()
-    mx = pa.compute.max(t.column("doc_id")).as_py()
-    rows = {c: list(head[c]) for c in t.column_names}
-    for i, text in enumerate(UNICODE_DOCS):
-        rows["doc_id"][i] = mx + 1 + i
-        rows["text"][i] = text
-        rows["n_chars"][i] = len(text)
-    pq.write_table(
-        pa.concat_tables([t, pa.Table.from_pydict(rows, schema=t.schema)]),
-        os.path.join(OUT, "documents.parquet"),
-    )
-
-    e = pq.read_table(os.path.join(SRC, "events.parquet"))
-    ehead = e.slice(0, 3).to_pydict()
-    emx = pa.compute.max(e.column("event_id")).as_py()
-    erows = {c: list(ehead[c]) for c in e.column_names}
-    muts = [
-        {"event_type": "café_click"},                       # unicode group key
-        {"event_type": "购买"},                      # CJK group key
-        {"props": '{"k": 1, "s": "emoji \U0001f680 café"}'},  # unicode JSON value
-    ]
-    for i, m in enumerate(muts):
-        erows["event_id"][i] = emx + 1 + i
-        for c, v in m.items():
-            erows[c][i] = v
-    pq.write_table(
-        pa.concat_tables([e, pa.Table.from_pydict(erows, schema=e.schema)]),
-        os.path.join(OUT, "events.parquet"),
-    )
-    open(marker, "w").close()
-    return OUT
+    return _mutated_fixture(OUT, "unicode-v1", UNICODE_MUTS)
 
 
 def main() -> int:
