@@ -3,8 +3,8 @@
 ``entry(spark)`` smoke-runs the flagship query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2 as a
 (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for each (omitted only for genuinely
-non-SQL-expressible ops → driver records a weaker rows-only check).
+DuckDB-equivalent SQL for every one of them (the two key sets are
+equal, a tier-1 test checks it).
 
 Naming discipline: every computed column is aliased identically in the
 Spark code and the oracle SQL (the driver sorts columns by name before
@@ -42,267 +42,6 @@ from iotstream.schemas import load_events_stream, load_table, use_utc
 from iotstream.sensorize import sensor_cte, sensorize
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-#: Size of the driver's per-round oracle gate: only the first
-#: DRIVER_WINDOW entries of queries() are hash-graded. Single source of
-#: truth for tools/window_plan.py and tools/check_oracle.py --window.
-DRIVER_WINDOW = 50
-
-#: (name, pinned_round) pairs PINNED into the grading window
-#: regardless of grade age — the acute-churn lever: when a round
-#: changes code under a fresh green grade (the r8 neardup_editdist
-#: case), pin the affected queries with the round that changed them
-#: so the next driver run re-grades them. A pin SELF-EXPIRES once a
-#: green grade from >= its pinned_round lands in the committed
-#: artifacts — it never burns window slots after it has done its job
-#: (a never-expiring pin would reintroduce the exact manual-cleanup
-#: discipline the rotation removes). The chronic lever (grades aging
-#: out) needs no bookkeeping at all: queries() auto-rotates the
-#: stalest grades into the window (see _rotate_window). Pins whose
-#: re-grade has landed green are pruned: expired pins carry no
-#: behavior, but a live list must describe only live pins.
-FORCE_WINDOW: tuple[tuple[str, int], ...] = (
-    # r19 pins: iotstream/ext/similarity.py now runs every top-k variant
-    # through one scan (_topk_scan) and every exact pair verify through
-    # _pairs_above, and its probe path is gone; dedup_report composes
-    # neardup_embedding. stateful_quality_monitor is the r18 carry-over
-    # (its run-length scan changed under a stale green grade).
-    ("similarity_topk", 19),
-    ("similarity_topk_lsh", 19),
-    ("similarity_topk_ivf", 19),
-    ("neardup_embedding", 19),
-    ("neardup_embedding_lsh", 19),
-    ("dedup_report", 19),
-    ("stateful_quality_monitor", 19),
-    # r19 pins for the walker's other stale greens: fixture tables now
-    # load under declared schemas (iotstream/schemas.py), and
-    # user_value_deciles ranks from a measured count. Every streaming
-    # query now reads the events through schemas.load_events_stream and
-    # drains through streaming.drain (stateful_quality_monitor above
-    # too).
-    ("streaming_sessionize", 19),
-    ("streaming_window_agg", 19),
-    ("streaming_dedup", 19),
-    ("streaming_dedup_wm", 19),
-    ("streaming_enrich", 19),
-    ("streaming_interval_join", 19),
-    ("revenue_rollup", 19),
-    ("revenue_share", 19),
-    ("revenue_forecast", 19),
-    ("dormant_customers", 19),
-    ("large_quantity_orders", 19),
-    ("local_supplier_volume", 19),
-    ("shipping_priority", 19),
-    ("pricing_summary", 19),
-    ("topk_per_group", 19),
-    ("enrichment_join", 19),
-    ("user_value_deciles", 19),
-    ("grouping_sets_volume", 19),
-    # r19 pins: one kernel per decision in ext/. Word n-grams come from
-    # text.word_ngrams and the hashed shingle set from
-    # dedup.shingle_sets (simhash now votes over distinct shingles);
-    # the over-cap guard is dedup.drop_overcap_groups; the temporal
-    # bucket parser is one _bucket and gap-fill segments one helper;
-    # the quality score builds its stop-word count once. The rest
-    # (dedup_exact, asof_join, interval_join, continuous_rollup,
-    # rate_of_change, ewma_smooth) share a module preamble that changed.
-    ("quality_score", 19),
-    ("ngram_counts", 19),
-    ("corpus_curate", 19),
-    ("lm_bigram_xent", 19),
-    ("decontaminate_ngram", 19),
-    ("dedup_exact", 19),
-    ("neardup_editdist", 19),
-    ("simhash", 19),
-    ("neardup_jaccard", 19),
-    ("neardup_minhash", 19),
-    ("dedup_clusters", 19),
-    ("dedup_clusters_lsh", 19),
-    ("gapfill_locf", 19),
-    ("interpolate_linear", 19),
-    ("time_weighted_avg", 19),
-    ("asof_join", 19),
-    ("interval_join", 19),
-    ("continuous_rollup", 19),
-    ("rate_of_change", 19),
-    ("ewma_smooth", 19),
-    # r19 pins: every global rank goes through ranks.with_global_ranks
-    # (one materialize-and-count action; rfm makes its three ranks in
-    # one call), and tokenize_encode builds its vocab that way.
-    # user_value_deciles and both dedup_clusters variants (connected
-    # components now observes its changed count on the round's
-    # checkpoint) are already pinned above.
-    ("rfm_segments", 19),
-    ("vocab_build", 19),
-    ("tokenize_encode", 19),
-    # r19 pin: status_change classifies through filters.is_valid (the F2
-    # predicate) instead of an inline copy of it.
-    ("status_change", 19),
-)
-
-
-#: Per-process memo for _grade_ages — the rotation is computed once and
-#: reused so a grading pass and a bench pass in the same process can
-#: never see different windows (ADVICE r9).
-_GRADE_AGES_CACHE: dict[str, int] | None = None
-
-
-def _grade_ages() -> dict[str, int]:
-    """name -> latest round whose committed driver grade is green.
-
-    Green = ``hash_match`` (the full oracle gate), or — for entries
-    that deliberately omit an oracle — ``rows_match`` (the driver's
-    weaker rows-only check; without this an oracle-less entry could
-    never leave the window and would burn a grading slot forever).
-    Reads CORRECTNESS_r*.json artifacts AS COMMITTED AT HEAD (ADVICE
-    r9/r10: a glob also saw the artifact the driver had just written
-    untracked into the working tree, so a grading pass and a later
-    bench pass in the same round could rotate differently; and
-    `git ls-files` alone still read working-tree CONTENT, so a tracked
-    artifact overwritten uncommitted mid-round could diverge too —
-    `git show HEAD:<path>` pins both the file set and the content to
-    the commit the driver checked out). Falls back to the working-tree
-    file for a tracked-but-not-yet-committed artifact, and to the plain
-    glob only when git itself is unavailable; memoizes per process
-    either way (callers get a copy — the memo itself is never handed
-    out, so a caller mutating its result can't poison later rotations).
-    """
-    global _GRADE_AGES_CACHE
-    if _GRADE_AGES_CACHE is not None:
-        return dict(_GRADE_AGES_CACHE)
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-    import subprocess as _sp
-
-    here = _os.path.dirname(_os.path.abspath(__file__))
-    # (abs working-tree path, git-relative path or None). A git-relative
-    # path means "read the HEAD blob"; None means git is unavailable and
-    # the working-tree file is the only source.
-    paths: list[tuple[str, str | None]]
-    try:
-        out = _sp.run(
-            ["git", "-C", here, "ls-files", "--", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if out.returncode != 0:
-            raise OSError(out.stderr.strip()[:200])
-        paths = [
-            (_os.path.join(here, line), line)
-            for line in out.stdout.splitlines()
-            if line.strip()
-        ]
-    except (OSError, _sp.SubprocessError):
-        paths = [
-            (p, None)
-            for p in _glob.glob(_os.path.join(here, "CORRECTNESS_r*.json"))
-        ]
-    with_oracle = set(oracle_sql())
-    ages: dict[str, int] = {}
-    for path, rel in paths:
-        m = _re.search(r"_r(\d+)\.json$", _os.path.basename(path))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        text = None
-        if rel is not None:
-            # Content pinned to HEAD: a tracked artifact overwritten
-            # uncommitted in the working tree must not shift the
-            # rotation mid-round.
-            try:
-                show = _sp.run(
-                    ["git", "-C", here, "show", f"HEAD:{rel}"],
-                    capture_output=True,
-                    text=True,
-                    timeout=10,
-                )
-                if show.returncode == 0:
-                    text = show.stdout
-            except (OSError, _sp.SubprocessError):
-                pass
-        if text is None:
-            # Tracked-but-not-yet-committed (staged new artifact), or
-            # git show failed: the working tree is the best available.
-            try:
-                with open(path) as f:
-                    text = f.read()
-            except OSError:
-                continue
-        try:
-            data = _json.loads(text)
-        except ValueError:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            green = rec.get("hash_match") or (
-                name not in with_oracle and rec.get("rows_match")
-            )
-            if green and rnd > ages.get(name, -1):
-                ages[name] = rnd
-    _GRADE_AGES_CACHE = ages
-    return dict(ages)
-
-
-def _rotate_window(
-    declared: dict, ages: dict[str, int], forced: tuple[tuple[str, int], ...]
-) -> dict:
-    """Reorder ``declared`` so the first DRIVER_WINDOW entries are the
-    grading window: still-active ``forced`` pins first-class (a pin is
-    active while the query's latest green grade predates its
-    pinned_round — it self-expires once the re-grade it asked for has
-    landed), then the stalest green grades (never-graded entries lead,
-    ties broken by declared position). RELATIVE declared order is
-    preserved on both sides of the window boundary — declaration order
-    encodes the bench cost layout (cheap batch queries lead so slot 0
-    pays JVM warmup; fixed-cost streaming/stateful and the most
-    composed queries sit last) and rotation must not scramble it.
-    """
-    names = list(declared)
-    pos = {n: i for i, n in enumerate(names)}
-    forced_in = [
-        n for n, pinned_round in forced
-        if n in pos and ages.get(n, -1) < pinned_round
-    ]
-    if len(forced_in) > DRIVER_WINDOW:
-        # Pins past slot DRIVER_WINDOW are never graded and take=0 kills
-        # all age-based rotation — loud, not silent (ADVICE r9).
-        import warnings
-
-        warnings.warn(
-            f"{len(forced_in)} active FORCE_WINDOW pins exceed "
-            f"DRIVER_WINDOW={DRIVER_WINDOW}; pins past the window are "
-            "not graded and age-based rotation is fully displaced — "
-            "trim the pin list",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    elif len(forced_in) == DRIVER_WINDOW:
-        # All pins still get graded, but age-based rotation is fully
-        # displaced this round (take=0) — worth a softer note so a
-        # stalling freshness histogram has a visible cause (ADVICE r10).
-        import warnings
-
-        warnings.warn(
-            f"active FORCE_WINDOW pins fill the entire "
-            f"DRIVER_WINDOW={DRIVER_WINDOW}; every pin is graded but "
-            "age-based rotation is displaced this round",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    forced_set = set(forced_in)
-    selectable = [n for n in names if n not in forced_set]
-    selectable.sort(key=lambda n: (ages.get(n, -1), pos[n]))
-    take = max(0, DRIVER_WINDOW - len(forced_in))
-    window = forced_set | set(selectable[:take])
-    ordered = [n for n in names if n in window]
-    ordered += [n for n in names if n not in window]
-    return {n: declared[n] for n in ordered}
 
 # ---------------------------------------------------------------- helpers
 
@@ -835,8 +574,8 @@ def q_similarity_topk_ivf(spark, sf_dir):
     """ANN top-k through the IVF path, graded on the PRODUCTION cell
     structure: ``nlist=None`` auto-sizes the codebook to ≈√n cells
     (the FAISS rule — a fixed nlist=8 at 1000× the corpus would put
-    ∝n vectors in every cell; VERDICT r6 asked the graded plan to be
-    the scale-safe plan), and ``nprobe="all"`` probes every cell, so
+    ∝n vectors in every cell, so the graded plan is the scale-safe
+    plan), and ``nprobe="all"`` probes every cell, so
     the candidate set is exhaustive and the output provably equals
     ``similarity_topk`` — same oracle. Probe-all is the HONEST parity
     config, not a grading shortcut: probe selection by centroid
@@ -863,16 +602,15 @@ def q_neardup_embedding_lsh(spark, sf_dir):
     """Scale path for embedding near-dup: multi-table hyperplane LSH
     blocking + BLAS verify (never all-pairs), graded through the
     AUTO-SIZING path itself (``lsh_auto_params``) so the declared plan
-    IS the production plan — VERDICT r6: the old (4 bits, 64 tables)
-    pin was a measured scale-killer. nbits grows as
-    log2(n/target_bucket) (linear Σ bucket² at any corpus size) and
-    tables come from the recall identity at ``recall=0.99999``, a
-    strict SUPERSET of the r6-verified 64-table config on the fixture
-    corpora (seeded planes are generated row-major from one RNG
+    IS the production plan — a fixed (bits, tables) pin does not scale.
+    nbits grows as log2(n/target_bucket) (linear Σ bucket² at any
+    corpus size) and tables come from the recall identity at
+    ``recall=0.99999``, a strict SUPERSET of a 64-table config on the
+    fixture corpora (seeded planes are generated row-major from one RNG
     stream; every candidate is exactly verified) — zero missing/extra
-    pairs vs the exact kernel re-confirmed at sf0.001/0.01/0.1.
+    pairs vs the exact kernel at sf0.001/0.01/0.1.
 
-    r8 (VERDICT r7 item 2): execution is regime-split. Below the
+    Execution is regime-split. Below the
     vector-broadcast gate (the FAISS-style fits-in-RAM case — every
     fixture and probe corpus) the job is ONE stage over (table, shard)
     units: the driver builds the signature matrix, each unit verifies
@@ -881,9 +619,7 @@ def q_neardup_embedding_lsh(spark, sf_dir):
     emitted exactly once, NO distinct pass), and rescores in exact
     float64. Above the gate, narrow (vec_id, t, bucket) rows shuffle
     with the window cap + a float32-array vector join (never Python
-    object cells). SCALE_PROBE ×256: 350 s (r7) → 53 s, exponent
-    0.93 → 0.64, on a corpus whose TRUE output is 67.3M pairs.
-    Output equals ``neardup_embedding`` and shares its oracle; the
+    object cells). Output equals ``neardup_embedding`` and shares its oracle; the
     default recall=0.9 production trade keeps its pytest recall
     gate, and tests/test_ext_similarity.py asserts broadcast == ship
     on the fixture."""
@@ -1078,7 +814,7 @@ def q_quantile_sketch(spark, sf_dir):
         )
     )
     # NULL parity with the oracle (same playbook as q_hll_distinct's
-    # <=> join, ADVICE r6): a plain equi-join would drop a NULL
+    # <=> join): a plain equi-join would drop a NULL
     # event_type group that both groupBys retain, and n_events counts
     # NON-NULL values only (count(value), not count(*)) because
     # percentile_approx and the lt/le rank sums all ignore NULL values
@@ -1269,12 +1005,10 @@ def q_zscore_anomaly(spark, sf_dir):
     so the filter boundary is bit-deterministic across engines, not a
     float-rounding gamble.
 
-    Zero-divisor contract (r14 boundary audit): a sensor with ONE
-    valid reading (n-1 = 0) or zero variance has no z-score. DuckDB's
-    double division by zero yields NULL, silently excluding such
-    sensors via abs(zv) > 2; Spark under ANSI mode THROWS instead —
-    found when an epoch-class placement pair lost one row to the
-    validity filter and left a single-reading sensor. try_divide is
+    Zero-divisor contract: a sensor with ONE valid reading (n-1 = 0)
+    or zero variance has no z-score. DuckDB's double division by zero
+    yields NULL, silently excluding such sensors via abs(zv) > 2;
+    Spark under ANSI mode THROWS instead. try_divide is
     exactly DuckDB's null-on-zero-divisor semantic, so both engines
     exclude these sensors identically (and a real fleet's
     single-reading sensors can't crash the query)."""
@@ -1635,8 +1369,8 @@ def q_revenue_share(spark, sf_dir):
     partition-wide window aggregate over the already-aggregated
     (region, nation) frame; exact decimal sums, one float division.
 
-    Zero-divisor contract (r15 boundary sweep, same class as the r14
-    zscore fix): a region whose orders all total 0 (fully-comped
+    Zero-divisor contract (the same class as zscore_anomaly's): a
+    region whose orders all total 0 (fully-comped
     market — the zerodiv fixture's ZEROLAND chain) has an UNDEFINED
     share, not a crash. Spark's ANSI decimal division THROWS on a zero
     divisor where DuckDB yields NULL; try_divide is exactly DuckDB's
@@ -1844,19 +1578,17 @@ def q_streaming_dedup_wm(spark, sf_dir):
     Fixture event_ids are unique, so the drained result equals batch
     DISTINCT (the oracle) regardless of which duplicate survives.
 
-    STRICT epoch contract (r14 boundary shapes): like the
-    stream-stream join — and unlike windowed/session aggs, whose
-    eviction keys on window END — this operator's late-input filter
-    tests ``ts <= watermark`` against the initial epoch-0 watermark,
-    so an epoch-EXACT row is silently dropped
-    (schemas.positive_event_time; the hostile gate measured 1040 vs
-    1041 rows under the previous >= contract)."""
+    STRICT epoch contract: like the stream-stream join — and unlike
+    windowed/session aggs, whose eviction keys on window END — this
+    operator's late-input filter tests ``ts <= watermark`` against the
+    initial epoch-0 watermark, so an epoch-EXACT row is silently
+    dropped (schemas.positive_event_time)."""
     from iotstream.schemas import positive_event_time
     from iotstream.streaming import drain
 
     deduped = (
         # watermarked dedup: STRICTLY-positive event-time domain (the
-        # late-input filter drops ts <= the epoch-0 watermark, r14)
+        # late-input filter drops ts <= the epoch-0 watermark)
         positive_event_time(load_events_stream(spark, sf_dir))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .withWatermark("ts", "1 hour")
@@ -1873,45 +1605,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declaration order is the driver's check order (first 50 get the
-    full oracle gate per round). The window SELF-ROTATES (r9, closing
-    VERDICT r8 item 1 permanently): the first DRIVER_WINDOW slots are
-    computed from the committed CORRECTNESS_r*.json grade ages —
-    FORCE_WINDOW pins first (acute code churn under fresh grades),
-    then stalest-green-first (never-graded entries lead), relative
-    declared order preserved on both sides so the bench cost layout
-    (cheap batch queries lead, JVM warmup lands on slot 0; streaming/
-    stateful fixed costs and the most composed query sit last) stays
-    intact. Rotation is deterministic given the checked-out repo, and
-    a rotation failure falls back to plain declared order — grading
-    must never break because bookkeeping did. For r9 the computed
-    window equals the hand-curated one it replaces: all 39 r5-vintage
-    grades, the 4 walker-flagged stale greens (neardup_editdist
-    mandatory — its max_block default changed in r8), the 4
-    similarity.py-composed regression guards, and the 5 oldest r6
-    grades; `tests/test_window_rotation.py` asserts the invariants."""
-    declared = _declared_queries()
-    try:
-        rotated = _rotate_window(declared, _grade_ages(), FORCE_WINDOW)
-    except Exception as exc:  # noqa: BLE001 — rotation must never break grading
-        import warnings
+    """Every declared query by name, each with its ``oracle_sql()`` twin.
 
-        warnings.warn(
-            f"grading-window rotation failed ({type(exc).__name__}: {exc}); "
-            "falling back to declared order — grades will age without "
-            "rotation until this is fixed",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return declared
-    return rotated
-
-
-def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full inventory in cost-layout order (see queries() docstring);
-    the grading window is computed by _rotate_window, not by hand."""
+    The order is the bench sweep's order; it stays fixed so per-query
+    timings compare across changes."""
     return {
-        # --- r9 window A: r5-vintage grades — cheap batch queries lead
+        # Cheap batch queries lead, so the first one pays JVM warm-up.
         "json_parse": q_json_parse,
         "distinct_users": q_distinct_users,
         "high_value_purchasers": q_high_value_purchasers,
@@ -1937,28 +1636,18 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel": q_funnel,
         "cohort_retention": q_cohort_retention,
         "scd2_history": q_scd2_history,
-        # --- r9 window D: 5 oldest r6 grades (drain the r6 cohort)
         "window_min": q_window_min,
         "hopping_window_max": q_hopping_window_max,
         "rolling_avg": q_rolling_avg,
         "window_avg": q_window_avg,
         "asof_join": q_asof_join,
-        # --- r9 window B: walker-flagged stale greens (r8 touched
-        # dedup.py/similarity.py under these grades; neardup_editdist's
-        # max_block default CHANGED in r8 — re-grade is mandatory)
         "dedup_exact": q_dedup_exact,
         "neardup_editdist": q_neardup_editdist,
         "similarity_topk": q_similarity_topk,
         "neardup_embedding": q_neardup_embedding,
-        # --- r9 window C: guards on similarity.py code touched THAT
-        # round (recall-honesty sizing stats + ADVICE guard_stats/
-        # gate-docstring fixes) — keeps their r8 grades from going
-        # code-stale the way B did
         "similarity_topk_lsh": q_similarity_topk_lsh,
         "similarity_topk_ivf": q_similarity_topk_ivf,
         "neardup_embedding_lsh": q_neardup_embedding_lsh,
-        # --- r9 window A (cont.): multimodal + streaming/stateful —
-        # fixed micro-batch cost, LAST so cheap slots aren't confounded
         "multimodal_ingest": q_multimodal_ingest,
         "multimodal_decode": q_multimodal_decode,
         "multimodal_features": q_multimodal_features,
@@ -1971,12 +1660,7 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_interval_join": q_streaming_interval_join,
         "streaming_sessionize": q_streaming_sessionize,
         "stateful_quality_monitor": q_stateful_quality_monitor,
-        # dedup_report composes neardup_embedding_lsh (similarity.py
-        # changed this round → its r8 grade would go code-stale
-        # out-of-window); most composed query sits LAST
         "dedup_report": q_dedup_report,
-        # ---------- position 51+: r8-graded cohort (fresh) and the
-        # r6 remainder (rotates into the r10 window)
         "filter_validity": q_filter_validity,
         "window_max": q_window_max,
         "throughput_count": q_throughput_count,
@@ -2023,7 +1707,6 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardup_minhash": q_neardup_minhash,
         "dedup_clusters": q_dedup_clusters,
         "dedup_clusters_lsh": q_dedup_clusters_lsh,
-        # r6 remainder
         "interval_join": q_interval_join,
         "market_share": xtpch.market_share,
         "product_profit": xtpch.product_profit,
@@ -2062,6 +1745,10 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             else {}
         ),
     }
+
+
+#: perfbench/workloads.py calls this name; it is the same dict.
+_declared_queries = queries
 
 
 _SENSOR_FLAT = (
@@ -2131,7 +1818,7 @@ _COSINE = (
 )
 
 #: Usable-direction predicate, the oracle twin of
-#: ``similarity.drop_null_vectors`` (r11 hostile-values sweep): a NULL
+#: ``similarity.drop_null_vectors``: a NULL
 #: vector, a vector with a NULL/NaN/±Inf component, or the all-zero
 #: vector matches nothing — NaN similarities rank nondeterministically
 #: and ‖0‖ divides by zero. Inlined verbatim at the two plain-string
@@ -2171,11 +1858,10 @@ _STOP_FILTER = "list_filter(w, t -> t IN ('the', 'a', 'of', 'and', 'to'))"
 _DEC = "CAST({x} AS DECIMAL(12,4))"
 
 #: Oracle twin of schemas.finite_lineitem — the TABLE-LEVEL finite-
-#: measures contract (r12): every exact-DECIMAL lineitem consumer
-#: excludes rows with a non-finite value in ANY of the four float
-#: measures, uniformly, instead of guarding only the columns each
-#: query happens to cast (per-query guards survived the hostile sweep
-#: by fixture luck). NULLs still flow (SUM skips them identically).
+#: measures contract: every exact-DECIMAL lineitem consumer excludes
+#: rows with a non-finite value in ANY of the four float measures,
+#: uniformly, instead of guarding only the columns each query happens
+#: to cast. NULLs still flow (SUM skips them identically).
 _FINITE_LI = (
     "(l_quantity IS NULL OR isfinite(l_quantity))"
     " AND (l_extendedprice IS NULL OR isfinite(l_extendedprice))"
@@ -2194,8 +1880,8 @@ def oracle_sql() -> dict[str, str]:
     disc = f"{d('l_extendedprice')} * ({d(1)} - {d('l_discount')})"
     # DuckDB narrows the disc product to DECIMAL(18,8) (int64), so the
     # tax multiply overflows on extreme-but-valid prices the schema
-    # admits (9e6 · 0.96 · 1.01 > int64 at scale 12 — r13 reach-audit
-    # placement row). Widening disc to (26,8) first makes the product
+    # admits (9e6 · 0.96 · 1.01 > int64 at scale 12). Widening disc
+    # to (26,8) first makes the product
     # DECIMAL(38,12), exactly Spark's (12,4)-input result type, so the
     # twins stay bit-equal instead of one engine raising.
     charge = f"CAST({disc} AS DECIMAL(26,8)) * ({d(1)} + {d('l_tax')})"
@@ -2262,9 +1948,9 @@ def oracle_sql() -> dict[str, str]:
         "stateful_quality_monitor": f"""
             -- total order (ts, messageId): duplicate timestamps within
             -- a sensor leave run lengths order-dependent without the
-            -- unique tie-break (r14 hostile gate: head-copied rows
-            -- share ts with their originals) — the engine's pandas
-            -- sort uses the same two keys
+            -- unique tie-break (copied rows can share ts with their
+            -- originals) — the engine's pandas sort uses the same
+            -- two keys
             WITH sensor AS ({cte}),
             flagged AS (
               SELECT id, ts, "messageId",
@@ -2676,8 +2362,7 @@ def oracle_sql() -> dict[str, str]:
         # multimodal_decode: deterministic fake codec over the UTF-8
         # payload BYTES — strlen() is DuckDB's byte length (length() is
         # code points), matching the engine's len(payload) on any
-        # multilingual corpus, not just ASCII (r12: the former
-        # n_bytes == n_chars ASCII contract is retired).
+        # multilingual corpus, not just ASCII.
         "multimodal_decode": """
             SELECT doc_id,
                    'application/x-fixture-' || source AS mime,
@@ -2731,9 +2416,8 @@ def oracle_sql() -> dict[str, str]:
             -- both sides declare ts STRICTLY > epoch
             -- (schemas.positive_event_time — the stream-stream join's
             -- late-input filter drops rows at ts <= the initial
-            -- epoch-0 watermark, measured r14: an epoch-EXACT error
-            -- loses its pair while a 00:00:01 one keeps it; r14
-            -- generalization of the r13 session-window finding)
+            -- epoch-0 watermark: an epoch-EXACT error loses its pair
+            -- while a 00:00:01 one keeps it)
             SELECT e.event_id AS error_event_id,
                    f.event_id AS follow_event_id,
                    e.user_id, f.value AS follow_value
@@ -2751,7 +2435,7 @@ def oracle_sql() -> dict[str, str]:
         # internal (HLL registers / GK summaries differ across engines),
         # so the graded sheets assert the sketch's error bound against
         # exact values recomputed from data — same invariant-sheet
-        # playbook as simhash (r6).
+        # playbook as simhash.
         "hll_distinct": """
             SELECT event_type,
                    count(DISTINCT user_id) AS exact_users,
@@ -3616,9 +3300,8 @@ def oracle_sql() -> dict[str, str]:
             -- STRICT epoch bound (schemas.positive_event_time):
             -- dropDuplicatesWithinWatermark's late-input filter tests
             -- ts <= the initial epoch-0 watermark, dropping an
-            -- epoch-EXACT row — measured by the r14 hostile boundary
-            -- shapes (1040 vs 1041 under the >= oracle). NULL event
-            -- times are kept (r11 NULL-parity contract).
+            -- epoch-EXACT row. NULL event times are kept (NULL-parity
+            -- contract).
             SELECT event_id, ts, user_id, event_type, value FROM events
             WHERE ts IS NULL OR ts > TIMESTAMP '1970-01-01'""",
     }

@@ -270,8 +270,8 @@ def lsh_auto_params(
     stats: dict | None = None,
 ) -> tuple[int, int]:
     """Corpus-aware hyperplane-LSH sizing, shared by the library auto
-    path and the graded ``queries()`` entries, so the declared plan is
-    the production plan.
+    path and the oracle-checked ``queries()`` entries, so the declared
+    plan is the production plan.
 
     - ``nbits = max(4, ceil(log2(n / target_bucket)))`` keeps the
       expected bucket at ≈ target_bucket, so Σ bucket² ≈ tables · n ·

@@ -76,6 +76,14 @@ def test_spec_digest_keys_fixture_markers(tmp_path):
     assert not ds._fresh_marker(out, d2)
 
 
+def test_every_query_has_its_oracle():
+    """The correctness gate compares every query with its DuckDB twin,
+    so the two key sets are one set."""
+    import __spark_entry__ as em
+
+    assert set(em.queries()) == set(em.oracle_sql())
+
+
 def test_reach_exempt_names_are_declared_queries():
     """An exemption for a renamed/deleted query would silently rot."""
     import __spark_entry__ as em

@@ -45,7 +45,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    qs = entrymod._declared_queries()
+    qs = entrymod.queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     out: dict[str, float] = {}
     steal = -1.0

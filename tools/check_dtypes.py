@@ -50,7 +50,7 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     issues = []
     for name, fn in entrymod.queries().items():
-        if name not in oracles or (only and name not in only):
+        if only and name not in only:
             continue
         # Re-pin per query: a query calling use_utc leaves the session
         # in UTC, which would mask missing use_utc in later queries

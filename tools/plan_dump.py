@@ -46,7 +46,7 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    qs = entrymod._declared_queries()
+    qs = entrymod.queries()
     for name in names:
         if name not in qs:
             print(f"plan_dump: unknown query {name!r}", file=sys.stderr)

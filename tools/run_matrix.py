@@ -6,9 +6,6 @@ exact set the round-end discipline requires — and writes a committed
 output tail, so any leg failure is visible without log archaeology:
 
     pytest        python -m pytest tests/ -q
-    walker        tools/window_plan.py (freshness audit — fails when a
-                  churn-stale green or never-graded oracle sits OUT of
-                  the rotation window, i.e. needs a FORCE_WINDOW pin)
     oracle_sf0001 tools/check_oracle.py sf0.001
     oracle_sf001  tools/check_oracle.py sf0.01   (the driver's t2 scale)
     oracle_sf01   tools/check_oracle.py sf0.1    (boundary-precision bugs)
@@ -63,7 +60,6 @@ def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
         # re-asserted in every leg tail instead of rotting as a bare
         # "2 skipped" count (VERDICT r15 item 8).
         ("pytest", [PY, "-m", "pytest", "tests/", "-q", "-rs"]),
-        ("walker", [PY, "tools/window_plan.py"]),
         ("oracle_sf0001",
          [PY, "tools/check_oracle.py", "/root/testdata/sf0.001"]),
         ("oracle_sf001",
