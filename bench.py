@@ -744,8 +744,8 @@ def main() -> int:
     head = {n: timings[n] for n in slowest}
     if "flagship" in timings:
         head["flagship"] = timings["flagship"]
-    # Stdout load story: ONLY the fields bench_trend/_capture_summary
-    # and run_matrix read. The full summary lives in BENCH_FULL.json.
+    # Stdout load story: ONLY the headline fields (run_matrix reads
+    # `contaminated`). The full summary lives in BENCH_FULL.json.
     load_compact = {
         k: load_summary[k]
         for k in ("start", "max", "wall_sec", "steal_ratio", "contaminated",
@@ -765,8 +765,8 @@ def main() -> int:
             # all_clean requires every reported window MEASURED clean:
             # an unmeasurable window (ratio -1.0) is not a certificate,
             # so unknowns block the flag — surfaced as a
-            # count so bench_trend's spliced-clean promotion can't ride
-            # on unmeasured windows.
+            # count so a spliced-clean reading can't ride on unmeasured
+            # windows.
             "all_clean": not spliced["dirty"] and not spliced["unknown"],
             "dirty": spliced["dirty"][:5],
             "unknown": len(spliced["unknown"]),

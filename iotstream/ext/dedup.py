@@ -85,9 +85,9 @@ def _parse_byte_conf(s: str, default: int = 128 * 1024 * 1024) -> int:
     ``JavaUtils.byteStringAsBytes`` (binary units: ``128m`` == ``128mb``
     == 128 MiB; bare integers are bytes). A human-set value like
     ``64MB`` must not fall through to the default — the split estimate
-    would then be wrong in whichever direction the conf moved
-    (ADVICE r6: a conf LOWER than default made fan_out see too few
-    splits and fire a spurious full-corpus repartition)."""
+    would then be wrong in whichever direction the conf moved (a conf
+    LOWER than default makes fan_out see too few splits and fire a
+    spurious full-corpus repartition)."""
     try:
         v = s.strip().lower()
         if v.endswith("b"):

@@ -65,8 +65,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary over lineitem: filter pushed to
     the parquet scan, decimal-exact sums, avg derived from exact sum /
     count. Single shuffle (4 groups), partial aggregation map-side."""
-    # table-level finite-measures contract (schemas.finite_lineitem,
-    # r12 NaN-density sweep): Spark's CAST silently NULLs NaN/±Inf,
+    # table-level finite-measures contract (schemas.finite_lineitem):
+    # Spark's CAST silently NULLs NaN/±Inf,
     # DuckDB raises — the exclusion is the declared, mirrored rule
     li = finite_lineitem(spark, sf_dir).filter(
         F.col("l_shipdate") <= F.lit("1998-09-02")
@@ -236,7 +236,7 @@ def large_quantity_orders(
     l_orderkey, map-side partials), shrinking lineitem to a tiny key
     set that AQE then broadcasts against orders; customer broadcasts.
     Final top-k is TakeOrderedAndProject."""
-    # table-level finite-measures contract (schemas.finite_lineitem, r12)
+    # table-level finite-measures contract (schemas.finite_lineitem)
     li = finite_lineitem(spark, sf_dir).select("l_orderkey", "l_quantity")
     qty = (
         li.groupBy("l_orderkey")

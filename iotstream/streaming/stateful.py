@@ -50,10 +50,10 @@ def _monitor(
         state.get if state.exists else (0, 0, 0, 0)
     )
     # Concatenate ALL the group's Arrow chunks, then impose the total
-    # order (ts, messageId) ONCE. Two r14 hostile-gate lessons: (a) a
-    # per-chunk sort leaves the CROSS-chunk order at arrival order,
-    # which varies with scheduling — the same fixture graded max_run 1
-    # or 2 across runs; (b) duplicate timestamps within a sensor (the
+    # order (ts, messageId) ONCE: (a) a per-chunk sort leaves the
+    # CROSS-chunk order at arrival order, which varies with scheduling
+    # — the same fixture would give max_run 1 or 2 across runs; (b)
+    # duplicate timestamps within a sensor (the
     # hostile head-copied rows share ts with their originals) need the
     # unique messageId tie-break or "consecutive" is undefined — the
     # oracle's row_number mirrors the same two-key ORDER BY.
@@ -63,8 +63,7 @@ def _monitor(
     # key's micro-batch slice is bounded by trigger interval × that
     # sensor's event rate, not by table size, so this holds at 100 TB
     # unless a single sensor floods one trigger; if hot keys become
-    # real, swap to a heap k-way merge over the pre-sorted chunks
-    # (ADVICE r14).
+    # real, swap to a heap k-way merge over the pre-sorted chunks.
     chunks = list(pdfs)
     if chunks:
         import numpy as np
@@ -74,8 +73,7 @@ def _monitor(
             (pdf["temperature"].eq(0) & pdf["humidity"].eq(0))
             | (pdf["temperature"].ge(50) & pdf["humidity"].ge(100))
         ).to_numpy()
-        # r18 (guide §4.2): vectorized run-length scan instead of a
-        # per-row Python loop. For each position i, the invalid run
+        # Vectorized run-length scan, no per-row Python loop. For each position i, the invalid run
         # ending at i is i - (index of the most recent valid row ≤ i);
         # rows before the first valid row extend the carried-in
         # cur_run. Valid positions evaluate to run 0, so a single

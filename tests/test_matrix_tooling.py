@@ -3,7 +3,8 @@
 No Spark session — these pin the pure-Python plumbing: the bench
 leg's contamination parsing, bench.py's clean-window policy
 (``certified``) and verdicts, the per-round leg
-list (unicode + reach gates actually wired in), and the digest-keyed
+list (hostile + unicode gates actually wired in), the oracle gate's
+dtype verdict and the hostile leg's reach verdict, and the digest-keyed
 fixture markers that stop edited mutation specs from silently serving
 stale cached fixtures.
 """
@@ -56,7 +57,7 @@ def test_code_digest_excludes_round_artifacts_only():
 def test_build_legs_wires_round_stamped_gates():
     legs = dict(rm.build_legs(13))
     assert "unicode" in legs and legs["unicode"][-1] == "13"
-    assert "reach" in legs and legs["reach"][-1] == "13"
+    assert "hostile" in legs and legs["hostile"][-1] == "13"
     assert list(dict(rm.build_legs(13)))[-1] == "bench"  # bench runs last
 
 
@@ -82,6 +83,59 @@ def test_every_query_has_its_oracle():
     import __spark_entry__ as em
 
     assert set(em.queries()) == set(em.oracle_sql())
+
+
+def test_dtype_verdict_fails_null_free_int_vs_float():
+    """The HUGEINT case: DuckDB's SUM over integers lands as float64
+    while Spark emits int64; the values print alike, the kinds do not."""
+    import pandas as pd
+    from check_oracle import dtype_mismatches
+
+    spark_df = pd.DataFrame({"n": [1, 2, 3]})
+    duck_df = pd.DataFrame({"n": [1.0, 2.0, 3.0]})
+    assert dtype_mismatches(spark_df, duck_df) == [("n", "i", "f")]
+
+
+def test_dtype_verdict_passes_integral_float_with_nan_vs_nullable_int():
+    """toPandas() widens a nullable int column with NULLs to float64;
+    its integral values collapse back to an int kind."""
+    import pandas as pd
+    from check_oracle import dtype_mismatches
+
+    spark_df = pd.DataFrame({"n": [1.0, float("nan"), 3.0]})
+    duck_df = pd.DataFrame({"n": pd.array([1, None, 3], dtype="Int64")})
+    assert dtype_mismatches(spark_df, duck_df) == []
+
+
+def test_dtype_verdict_fails_non_integral_float_vs_int():
+    import pandas as pd
+    from check_oracle import dtype_mismatches
+
+    duck_df = pd.DataFrame({"n": pd.array([1, None, 3], dtype="Int64")})
+    spark_df = pd.DataFrame({"n": [1.5, float("nan"), 3.0]})
+    assert dtype_mismatches(spark_df, duck_df) == [("n", "f", "i")]
+    spark_df = pd.DataFrame({"n": [1.5, 2.0, 3.0]})
+    duck_df = pd.DataFrame({"n": [1, 2, 3]})
+    assert dtype_mismatches(spark_df, duck_df) == [("n", "f", "i")]
+
+
+def test_reach_status_classifies_each_case():
+    """touched beats everything; an identical output is exempt only
+    when every scanned table is unmutated or the query carries a
+    REACH_EXEMPT reason; an unattributed plan counts as mutated."""
+    mutated = {"events", "lineitem"}
+    exempt = next(iter(ds.REACH_EXEMPT))
+    assert ds.reach_status("q", True, ["events"], mutated) == "touched"
+    assert ds.reach_status("q", False, ["nation"], mutated) == (
+        "exempt-unmutated-tables"
+    )
+    assert ds.reach_status(exempt, False, [], mutated) == (
+        f"exempt: {ds.REACH_EXEMPT[exempt]}"
+    )
+    assert ds.reach_status("q", False, ["events", "nation"], mutated) == (
+        "UNREACHED"
+    )
+    assert ds.reach_status("q", False, [], mutated) == "UNREACHED"
 
 
 def test_reach_exempt_names_are_declared_queries():
@@ -413,27 +467,6 @@ def test_zerodiv_targets_are_declared_and_shapes_hold():
     for u in by_user:
         for e in by_user[u]:
             assert 10 <= temp(e) <= 50 and 50 <= hum(e) <= 80, e
-
-
-def test_code_digest_strips_generated_readme_block():
-    """ADVICE r14: the README embeds a bench-trend table regenerated
-    from round artifacts — the digest must not move when ONLY the
-    marked generated block changes, and must move for real edits."""
-    body = (
-        b"# Title\nhand-written\n"
-        b"<!-- generated: tool -->\n| old table |\n"
-        b"<!-- end generated -->\ntail\n"
-    )
-    body2 = body.replace(b"| old table |", b"| new table row |")
-    assert rm.strip_generated_blocks(body) == rm.strip_generated_blocks(body2)
-    body3 = body.replace(b"hand-written", b"edited prose")
-    assert rm.strip_generated_blocks(body) != rm.strip_generated_blocks(body3)
-    # unterminated begin marker strips to EOF (half-regenerated table)
-    trunc = body.split(b"<!-- end generated -->")[0]
-    assert rm.strip_generated_blocks(trunc) == b"# Title\nhand-written\n"
-    # no markers → byte-identical passthrough
-    plain = b"no markers here\n"
-    assert rm.strip_generated_blocks(plain) == plain
 
 
 class _ScriptedBand:

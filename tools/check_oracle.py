@@ -1,8 +1,21 @@
 """The correctness gate: every query against its DuckDB oracle.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same fixture dir, then compares row count, sorted column
-names, and values (rows sorted, order-insensitive). Usage:
+DuckDB over the same fixture dir. Each Spark frame runs once
+(``localCheckpoint()``; ``collect()`` and ``toPandas()`` both read the
+checkpoint), and that one result gets two verdicts:
+
+- values: row count, sorted column names, and values (rows sorted,
+  order-insensitive, cells through ``norm_cell``);
+- dtypes: the pandas dtype kind (int/float/bool/object/datetime) of
+  every column. The value verdict formats floats with ``%.9g``, which
+  collapses ``49.0`` and ``49``, so it cannot see the int64-vs-float64
+  mismatches that fail the driver's value-hash gate: DuckDB returns
+  HUGEINT for SUMs over integers, which lands as float64 in pandas
+  while Spark emits int64. Fix one by wrapping the oracle aggregate in
+  ``CAST(... AS BIGINT)``.
+
+Usage:
 
     python tools/check_oracle.py [--tz=ZONE] [sf_dir] [query ...]
 
@@ -12,6 +25,10 @@ boundary-precision bugs hide below data density (a seconds-truncated
 RANGE frame key diverged from its full-precision oracle only at
 sf0.1), and ``--tz`` smokes out queries missing ``use_utc``. Exit code 1
 on any failure — don't pipe through filters that mask it.
+
+``gate(spark, sf_dir, tz, only)`` is the same gate in-process, for the
+sweeps that run it on derived fixtures (``degenerate_sweep.py``,
+``unicode_probe.py``).
 """
 
 from __future__ import annotations
@@ -48,6 +65,113 @@ def frame_key(cols, rows):
     return [cols[i] for i in order], out
 
 
+def key_digest(key) -> str:
+    """sha256 of a ``frame_key``: equal digests mean equal keys, and
+    holding a digest does not hold the rows."""
+    import hashlib
+
+    return hashlib.sha256(repr(key).encode()).hexdigest()
+
+
+def value_failures(name, skey, okey) -> list[str]:
+    """The value verdict's FAIL lines for two ``frame_key``s (Spark,
+    DuckDB); empty when they agree."""
+    (sc, sk), (oc, ok) = skey, okey
+    if len(sk) != len(ok):
+        return [f"FAIL  {name}: rows {len(sk)} vs {len(ok)}"]
+    if sc != oc:
+        return [f"FAIL  {name}: cols {sc} vs {oc}"]
+    if sk != ok:
+        bad = next(i for i, (a, b) in enumerate(zip(sk, ok)) if a != b)
+        return [
+            f"FAIL  {name}: values differ, first at sorted-row {bad}:",
+            f"      spark : {sk[bad]}",
+            f"      duckdb: {ok[bad]}",
+        ]
+    return []
+
+
+def _kind(dt) -> str:
+    return {"u": "i"}.get(dt.kind, dt.kind)
+
+
+def dtype_mismatches(spdf, odf) -> list[tuple[str, str, str]]:
+    """``(column, spark kind, duckdb kind)`` for every column of the
+    Spark pandas frame whose dtype kind differs from the DuckDB one's.
+
+    NULL-free columns compare raw kinds: ``convert_dtypes()`` would
+    collapse an integral-valued float64 HUGEINT artifact into Int64 and
+    hide the very mismatch this verdict exists for. A column with a
+    NULL on either side compares ``convert_dtypes()`` kinds instead:
+    ``toPandas()`` widens a nullable int64 with NULLs to float64 (a
+    pandas artifact the driver's value hash does not see), and an
+    integral-valued float64-with-NaN collapses back to Int64 on both
+    sides while a non-integral float against an int still differs."""
+    import warnings
+
+    bad = []
+    for c in spdf.columns:
+        if c not in odf.columns:
+            continue
+        s, o = spdf[c], odf[c]
+        if s.isna().any() or o.isna().any():
+            # convert_dtypes' integral test casts ±Inf to int, which
+            # warns; the column stays float, so the warning is noise
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", RuntimeWarning)
+                s, o = s.convert_dtypes(), o.convert_dtypes()
+        if _kind(s.dtype) != _kind(o.dtype):
+            bad.append((c, _kind(s.dtype), _kind(o.dtype)))
+    return bad
+
+
+def gate(spark, sf_dir, tz="UTC", only=()) -> dict[str, dict]:
+    """Run the gate over ``sf_dir`` in ``spark`` and print each query's
+    ``OK`` line or ``FAIL`` lines. Returns ``{query: result}`` in
+    ``queries()`` order, each result ``{"ok": both verdicts pass,
+    "lines": the printed lines, "digest": ``key_digest`` of the Spark
+    frame's frame_key (None when building or running it raised), "df":
+    the frame exactly as the builder returned it (None when the builder
+    raised)}``."""
+    con = duckdb.connect()
+    for t in FIXTURE_TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+    oracles = entrymod.oracle_sql()
+    results: dict[str, dict] = {}
+    for name, fn in entrymod.queries().items():
+        if only and name not in only:
+            continue
+        # Re-pin the requested TZ before EVERY query: use_utc from an
+        # earlier query would otherwise mask a missing use_utc here.
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        res = results[name] = {"digest": None, "df": None}
+        try:
+            sdf = res["df"] = fn(spark, sf_dir)
+            done = sdf.localCheckpoint()
+            skey = frame_key(sdf.columns, done.collect())
+            res["digest"] = key_digest(skey)
+            spdf = done.toPandas()
+        except Exception as e:  # noqa: BLE001
+            lines = [f"FAIL  {name}: spark error: {type(e).__name__}: {e}"]
+        else:
+            try:
+                ores = con.sql(oracles[name])
+                okey = frame_key([d[0] for d in ores.description],
+                                 ores.fetchall())
+                odf = con.sql(oracles[name]).df()
+            except Exception as e:  # noqa: BLE001
+                lines = [f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}"]
+            else:
+                lines = value_failures(name, skey, okey) + [
+                    f"FAIL  {name}.{c}: spark kind '{sk}' vs duckdb '{ok}'"
+                    for c, sk, ok in dtype_mismatches(spdf, odf)
+                ] or [f"OK    {name}: {len(skey[1])} rows"]
+        res["ok"] = lines[0].startswith("OK")
+        res["lines"] = lines
+        print("\n".join(lines), flush=True)
+    return results
+
+
 def main() -> int:
     # --tz=ZONE runs the Spark session under a hostile timezone (the
     # driver's is unknown); queries must self-normalize via use_utc.
@@ -58,54 +182,8 @@ def main() -> int:
             tz = a.split("=", 1)[1]
             args.remove(a)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
-
-    spark = bench._session(app="oracle-check")
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
-
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        # Re-pin the requested TZ before EVERY query: use_utc from an
-        # earlier query would otherwise mask a missing use_utc here.
-        spark.conf.set("spark.sql.session.timeZone", tz)
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
-            continue
-        try:
-            ores = con.sql(oracles[name])
-            ocols = [d[0] for d in ores.description]
-            orows = ores.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")
-            continue
-        sc, sk = frame_key(scols, srows)
-        oc, ok = frame_key(ocols, orows)
-        if len(srows) != len(orows):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(srows)} vs {len(orows)}")
-        elif sc != oc:
-            failures.append(name)
-            print(f"FAIL  {name}: cols {sc} vs {oc}")
-        elif sk != ok:
-            failures.append(name)
-            bad = next(i for i, (a, b) in enumerate(zip(sk, ok)) if a != b)
-            print(f"FAIL  {name}: values differ, first at sorted-row {bad}:")
-            print(f"      spark : {sk[bad]}")
-            print(f"      duckdb: {ok[bad]}")
-        else:
-            print(f"OK    {name}: {len(srows)} rows")
+    results = gate(bench._session(app="oracle-check"), sf_dir, tz, set(args[1:]))
+    failures = [n for n, r in results.items() if not r["ok"]]
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     return 1 if failures else 0
 

@@ -20,51 +20,43 @@ topic.
 A third mode, ``nulls``, builds a NULL-bearing fixture dir (documents
 extended with NULL-text "failed fetch" rows — n_chars NULL too, since
 a failed fetch has no known length — and zero-length rows with
-n_chars 0) and runs the FULL
-check_oracle gate on it: not just "doesn't crash" but value-level
+n_chars 0) and runs the FULL oracle gate (``check_oracle.gate``, value
+and dtype verdicts) on it: not just "doesn't crash" but value-level
 Spark≡DuckDB parity on a corpus with NULL and empty documents. This
-is the sweep that found (r9): the descending-sequence shingle crash
-on <n-word docs, the NOT IN vs left_anti NULL divergence in
+is the sweep that found the descending-sequence shingle crash on
+<n-word docs, the NOT IN vs left_anti NULL divergence in
 decontaminate, gopher_quality's ANSI divide-by-zero on empty docs,
 doc_chunks' phantom negative chunk ids, and the multimodal NULL
 payload crashes.
 
-A fourth mode, ``hostile`` (r11), injects hostile VALUES rather than
-NULLs — IEEE NaN/±Inf measures, pre-epoch and far-future event times,
-empty-string group keys, quote/newline/control characters through the
-JSON serde, extreme-but-valid JSON, whitespace-only / punctuation-only
-/ one-enormous-token documents, and adversarial embedding vectors
-(NaN component, +Inf component, all-zero = no direction, exact
-duplicate of a real vector) — and runs the FULL parity gate on the
-result. Since r12 the hostile corpus also injects UNICODE shapes
-(multilingual document text, unicode group keys, unicode JSON values):
-the fake-codec contract is byte-based (the oracles recompute from
-UTF-8 bytes via strlen/hex-nibble), so multilingual text is a gated
-parity surface, no longer a report-only probe. The r11 single-NaN-row
-shapes are also broadened here: NaN at BOTH extremes of a group, an
-ALL-NaN group, and NaN ties — the placements percentile/min_by/
-rank-order paths are sensitive to that one row per table cannot
-exercise.
-
-A fifth mode, ``reach`` (r13, VERDICT r12 item 1), is the
-injection-reachability audit: the hostile gate is only as strong as
-the rows that actually SURVIVE each query's filter lineage — r12
-proved three lineitem consumers' NaN guards had passed grading purely
-because the injected rows dodged their filters. The audit runs every
-declared query twice, on the clean sf0.001 fixture and on the hostile
-fixture, canonicalizes both outputs (same sort/normalize as the
-oracle gate), and FAILS for any query whose hostile output is
-value-identical to its clean output while reading at least one
-hostile-mutated table — "the gate reached nothing". Queries reading
-only unmutated tables are auto-exempt (attributed via
+A fourth mode, ``hostile [round]``, injects hostile VALUES rather than
+NULLs — IEEE NaN/±Inf measures (NaN at both extremes of a group, an
+all-NaN group, NaN ties), pre-epoch and far-future event times,
+empty-string and unicode group keys, quote/newline/control characters
+and unicode values through the JSON serde, extreme-but-valid JSON,
+whitespace-only / punctuation-only / one-enormous-token / multilingual
+documents, and adversarial embedding vectors (NaN component, +Inf
+component, all-zero = no direction, exact duplicate of a real vector).
+In one Spark session it runs the full oracle gate on clean sf0.001
+(``SRC``) and on the hostile fixture, then takes the
+injection-reachability audit from those two results: the hostile gate
+is only as strong as the rows that SURVIVE each query's filter
+lineage, so a query whose hostile output is value-identical (same
+``frame_key``) to its clean output while reading at least one
+hostile-mutated table FAILS as UNREACHED — "the gate reached nothing".
+Queries reading only unmutated tables are exempt (attributed via
 ``DataFrame.inputFiles``); anything else identical must either get a
 placement-engineered hostile row or a documented ``REACH_EXEMPT``
-entry.
+entry. A boundary-class sub-audit (epoch, nandec, zerodiv) then runs
+every class target on that class's incremental fixture: its output
+must move from its clean digest (a ``survives`` target must only not
+raise). With a round, the audit is written to
+``REACH_AUDIT_r{round}.json``.
 
-Usage: python tools/degenerate_sweep.py [empty|one|both|nulls|hostile|all]
-       python tools/degenerate_sweep.py reach [round]
-Exit 1 on any raising query (empty/one), any parity failure
-(nulls/hostile), or any unreached query (reach).
+Usage: python tools/degenerate_sweep.py [empty|one|both|nulls|all]
+       python tools/degenerate_sweep.py hostile [round]
+Exit 1 on any raising query (empty/one), any gate failure
+(nulls/hostile), or any unreached query or class target (hostile).
 """
 
 from __future__ import annotations
@@ -432,7 +424,7 @@ HOSTILE_MUTS["lineitem"][1].extend(
 #: to reach two operators (session_window's epoch eviction,
 #: interval_follow's NaN→DECIMAL). These shapes generalize both
 #: classes to every operator in the class, as AUDIT SHAPES — the
-#: ``boundary`` sub-audit inside ``run_reach`` builds one incremental
+#: ``boundary`` sub-audit inside ``run_hostile`` builds one incremental
 #: fixture per class (clean + ONLY that class's rows) and FAILS any
 #: class target whose output does not move, so "the guard is
 #: exercised" is proven per class, not assumed from code reading.
@@ -1251,87 +1243,90 @@ def _tables_read(df) -> set[str]:
     return out
 
 
-def run_reach(rnd: int | None) -> int:
-    """Injection-reachability audit (VERDICT r12 item 1). For every
-    declared query: run on clean sf0.001 and on the hostile fixture,
-    canonicalize both result frames exactly like the oracle gate
-    (sorted columns, sorted normalized rows), and compare. A query
-    whose two outputs are value-identical while its plan scans at
-    least one hostile-mutated table is UNREACHED — every injected
+def reach_status(name: str, touched: bool, tables: list[str],
+                 mutated: set[str]) -> str:
+    """One query's reach verdict: ``touched`` when its hostile output
+    differs from its clean output; else ``exempt-unmutated-tables``
+    when its plan scans only unmutated tables (an empty ``tables``
+    means unattributed, taken as mutated); else the ``REACH_EXEMPT``
+    reason; else ``UNREACHED``."""
+    if touched:
+        return "touched"
+    if tables and not any(t in mutated for t in tables):
+        return "exempt-unmutated-tables"
+    if name in REACH_EXEMPT:
+        return f"exempt: {REACH_EXEMPT[name]}"
+    return "UNREACHED"
+
+
+def run_hostile(rnd: int | None) -> int:
+    """The hostile leg: the oracle gate on clean sf0.001 and on the
+    hostile fixture in one session, then the injection-reachability
+    audit from those two results. A query whose two outputs are
+    value-identical (same ``frame_key`` digest) while its plan scans
+    at least one hostile-mutated table is UNREACHED: every injected
     shape died in its filter lineage, so the hostile parity gate was
-    vacuous for it. Writes REACH_AUDIT_r{rnd}.json when a round is
-    given; exits 1 on any unreached or raising query."""
-    import hashlib
+    vacuous for it. The boundary-class sub-audit then runs each class target on
+    its class fixture against the clean digest. Writes
+    REACH_AUDIT_r{rnd}.json when a round is given; exits 1 on any gate
+    failure, raising or unreached query, or unreached class target."""
     import json
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    if here not in sys.path:
-        sys.path.insert(0, here)
-    from check_oracle import frame_key
+    import __spark_entry__ as entrymod
+    import bench
+    from check_oracle import frame_key, gate, key_digest
 
     hostile_dir = build_hostile()
     mutated = set(HOSTILE_MUTS) | {"documents", "embeddings"}
+    spark = bench._session(app="hostile-gate")
 
-    import bench
+    print(f"--- oracle gate: clean {SRC} ---")
+    clean = gate(spark, SRC)
+    print(f"--- oracle gate: hostile {hostile_dir} ---")
+    host = gate(spark, hostile_dir)
+    gate_failures = [
+        f"{fx}:{n}" for fx, res in (("clean", clean), ("hostile", host))
+        for n, r in res.items() if not r["ok"]
+    ]
 
-    spark = bench._session(app="reach-audit")
-
-    import __spark_entry__ as entrymod
-
-    def fingerprint(df) -> str:
-        cols, rows = frame_key(df.columns, df.collect())
-        return hashlib.sha256(repr((cols, rows)).encode()).hexdigest()
-
+    print("--- reach audit ---")
     report: dict[str, dict] = {}
     unreached: list[str] = []
     raising: list[str] = []
-    clean_keys: dict[str, str] = {}
     decimal_planned: list[str] = []
-    for name, fn in entrymod.queries().items():
-        try:
-            df_clean = fn(spark, SRC)
-            tables = sorted(_tables_read(df_clean))
-            # nandec target auto-derivation: a decimal cast anywhere in
-            # the analyzed plan marks the query as an exact-DECIMAL
-            # consumer (drained streaming queries hide their plan — the
-            # hand list STREAM_DECIMAL_TARGETS covers those)
-            try:
-                plan = df_clean._jdf.queryExecution().analyzed().toString()
-                if re.search(r"cast\([^)]*as decimal", plan, re.I):
-                    decimal_planned.append(name)
-            except Exception:  # noqa: BLE001 — plan introspection only
-                pass
-            key_clean = fingerprint(df_clean)
-            clean_keys[name] = key_clean
-            key_host = fingerprint(fn(spark, hostile_dir))
-        except Exception as e:  # noqa: BLE001
+    for name, c in clean.items():
+        raised = next((r for r in (c, host[name]) if r["digest"] is None), None)
+        if raised:
             raising.append(name)
-            report[name] = {"status": "RAISE",
-                            "error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"RAISE {name}: {type(e).__name__}: {e}"[:200])
+            report[name] = {"status": "RAISE", "error": raised["lines"][0][:200]}
+            print(f"RAISE {name}")
             continue
-        touched = key_clean != key_host
-        reads_mutated = not tables or any(t in mutated for t in tables)
-        if touched:
-            status = "touched"
-        elif not reads_mutated:
-            status = "exempt-unmutated-tables"
-        elif name in REACH_EXEMPT:
-            status = f"exempt: {REACH_EXEMPT[name]}"
-        else:
-            status = "UNREACHED"
+        tables = sorted(_tables_read(c["df"]))
+        # nandec target auto-derivation: a decimal cast anywhere in the
+        # analyzed plan marks the query as an exact-DECIMAL consumer
+        # (drained streaming queries hide their plan — the hand list
+        # STREAM_DECIMAL_TARGETS covers those)
+        try:
+            plan = c["df"]._jdf.queryExecution().analyzed().toString()
+            if re.search(r"cast\([^)]*as decimal", plan, re.I):
+                decimal_planned.append(name)
+        except Exception:  # noqa: BLE001 — plan introspection only
+            pass
+        status = reach_status(name, c["digest"] != host[name]["digest"],
+                              tables, mutated)
+        if status == "UNREACHED":
             unreached.append(name)
         report[name] = {"status": status, "tables": tables}
         print(f"{'ok   ' if status != 'UNREACHED' else 'FAIL '}{name}: "
               f"{status} (tables: {', '.join(tables) or '<unattributed>'})")
 
-    # ---- r14 boundary-class sub-audit (VERDICT r13 item 4) ----
+    # ---- boundary-class sub-audit ----
     # Per class: one incremental fixture (clean + ONLY that class's
     # rows); every class target's output must MOVE under it — proof
     # the class shapes reach the operator's guard rather than dying in
     # its filters. Value-level parity on the same rows is the hostile
-    # oracle leg's job (hostile is a superset of both class fixtures
-    # by construction).
+    # gate's job (hostile is a superset of both class fixtures by
+    # construction).
     classes: dict[str, dict] = {}
     boundary_unreached: list[str] = []
     class_targets: dict[str, dict[str, str]] = {
@@ -1349,12 +1344,13 @@ def run_reach(rnd: int | None) -> int:
         fixture = build_boundary(cls)
         cls_report: dict[str, str] = {}
         for name, expect in targets.items():
-            if name not in declared or name not in clean_keys:
+            if clean.get(name, {}).get("digest") is None:
                 cls_report[name] = "SKIP (not declared or clean run failed)"
                 continue
             try:
-                moved = fingerprint(declared[name](spark, fixture)) \
-                    != clean_keys[name]
+                df = declared[name](spark, fixture)
+                moved = key_digest(frame_key(df.columns, df.collect())) \
+                    != clean[name]["digest"]
             except Exception as e:  # noqa: BLE001
                 cls_report[name] = f"RAISE {type(e).__name__}: {e}"[:200]
                 boundary_unreached.append(f"{cls}:{name}")
@@ -1386,10 +1382,12 @@ def run_reach(rnd: int | None) -> int:
         "raising": raising,
         "boundary_unreached": boundary_unreached,
         "mutated_tables": sorted(mutated),
+        "gate_failures": gate_failures,
     }
     if rnd is not None:
         path = os.path.join(
-            os.path.dirname(here), f"REACH_AUDIT_r{rnd}.json"
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            f"REACH_AUDIT_r{rnd}.json",
         )
         with open(path, "w") as f:
             json.dump(
@@ -1399,8 +1397,13 @@ def run_reach(rnd: int | None) -> int:
             )
             f.write("\n")
         print(f"wrote {path}")
+    n_ok = {fx: sum(r["ok"] for r in res.values())
+            for fx, res in (("clean", clean), ("hostile", host))}
     print(
-        f"\nreach audit: {summary['touched']} touched, "
+        f"\noracle gate: clean {n_ok['clean']}/{len(clean)}, "
+        f"hostile {n_ok['hostile']}/{len(host)}"
+        + (f"\nGATE FAILURES: {gate_failures}" if gate_failures else "")
+        + f"\nreach audit: {summary['touched']} touched, "
         f"{summary['exempt']} exempt, {len(unreached)} UNREACHED, "
         f"{len(raising)} raising; boundary classes: "
         + ", ".join(
@@ -1411,48 +1414,35 @@ def run_reach(rnd: int | None) -> int:
         + (f"\nUNREACHED: {unreached}" if unreached else "")
         + (f"\nBOUNDARY: {boundary_unreached}" if boundary_unreached else "")
     )
-    return 1 if unreached or raising or boundary_unreached else 0
+    return 1 if gate_failures or unreached or raising or boundary_unreached else 0
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
+    import bench
+    from check_oracle import gate
+
     mode = sys.argv[1] if len(sys.argv) > 1 else "both"
-    if mode == "reach":
+    if mode in ("hostile", "all"):
         rnd = (
             int(sys.argv[2])
-            if len(sys.argv) > 2 and sys.argv[2].isdigit()
+            if mode == "hostile" and len(sys.argv) > 2 and sys.argv[2].isdigit()
             else None
         )
-        return run_reach(rnd)
-    if mode in ("hostile", "all"):
-        import subprocess
-
-        hostile_dir = build_hostile()
-        here = os.path.dirname(os.path.abspath(__file__))
-        rc = subprocess.call(
-            [sys.executable, os.path.join(here, "check_oracle.py"), hostile_dir]
-        )
+        rc = run_hostile(rnd)
         if mode == "hostile" or rc != 0:
             return rc
     if mode in ("nulls", "all"):
-        import subprocess
-
-        nulls_dir = build_nulls()
-        here = os.path.dirname(os.path.abspath(__file__))
-        rc = subprocess.call(
-            [sys.executable, os.path.join(here, "check_oracle.py"), nulls_dir]
-        )
-        if mode == "nulls" or rc != 0:
-            return rc
+        results = gate(bench._session(app="nulls-gate"), build_nulls())
+        failures = [n for n, r in results.items() if not r["ok"]]
+        print(f"\n{len(failures)} failures: {failures}" if failures
+              else "\nALL OK")
+        if mode == "nulls" or failures:
+            return 1 if failures else 0
         mode = "both"
     sizes = {"empty": [0], "one": [1], "both": [0, 1]}[mode]
-
-    import bench
-
     spark = bench._session(app="degenerate-sweep")
-
-    import __spark_entry__ as entrymod
-
-    failures: list[str] = []
+    failures = []
     for n in sizes:
         sf_dir = build(spark, n)
         print(f"--- n={n} rows/table ({sf_dir}) ---")

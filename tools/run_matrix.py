@@ -6,23 +6,21 @@ exact set the round-end discipline requires — and writes a committed
 output tail, so any leg failure is visible without log archaeology:
 
     pytest        python -m pytest tests/ -q
-    oracle_sf0001 tools/check_oracle.py sf0.001
-    oracle_sf001  tools/check_oracle.py sf0.01   (the driver's t2 scale)
+    oracle_sf001  tools/check_oracle.py sf0.01   (the driver's t2 scale;
+                  value and dtype verdicts from one Spark run per query)
     oracle_sf01   tools/check_oracle.py sf0.1    (boundary-precision bugs)
     oracle_tz     tools/check_oracle.py --tz=America/New_York sf0.01
-    dtypes        tools/check_dtypes.py sf0.01
     degenerate    tools/degenerate_sweep.py both (empty + single-row)
     nulls         tools/degenerate_sweep.py nulls (full NULL-parity gate)
-    hostile       tools/degenerate_sweep.py hostile (NaN/±Inf, boundary
-                  timestamps, adversarial vectors — full parity gate)
+    hostile       tools/degenerate_sweep.py hostile <round> (the oracle
+                  gate on clean sf0.001 and on the hostile fixture —
+                  NaN/±Inf, boundary timestamps, adversarial vectors —
+                  in one session, then the injection-reachability audit
+                  from those two results: FAILS when a declared query's
+                  hostile output is value-identical to its clean output
+                  while it reads a mutated table)
     unicode       tools/unicode_probe.py <round> (multilingual parity
-                  gate — the probe exits nonzero on failure; without a
-                  matrix leg nothing ran it automatically, ADVICE r12)
-    reach         tools/degenerate_sweep.py reach <round> (injection-
-                  reachability audit, VERDICT r12 item 1: FAILS when a
-                  declared query's hostile-fixture output is value-
-                  identical to its clean output — the hostile gate
-                  never reached it)
+                  gate)
     bench         python bench.py --wait-clean, once (solo — never
                   concurrent with other Spark work; the compact JSON
                   line is recorded). bench.py owns the clean-window
@@ -52,16 +50,14 @@ REPO = os.path.dirname(HERE)
 PY = sys.executable
 
 def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
-    """Leg list for round ``rnd`` — a function because the unicode and
-    reach legs stamp their committed artifacts with the round number."""
+    """Leg list for round ``rnd`` — a function because the hostile and
+    unicode legs stamp their committed artifacts with the round number."""
     return [
         # -rs: print skip REASONS in the summary so the two permanent
         # environment gates (protobuf TWS, Kafka live broker) are
         # re-asserted in every leg tail instead of rotting as a bare
         # "2 skipped" count (VERDICT r15 item 8).
         ("pytest", [PY, "-m", "pytest", "tests/", "-q", "-rs"]),
-        ("oracle_sf0001",
-         [PY, "tools/check_oracle.py", "/root/testdata/sf0.001"]),
         ("oracle_sf001",
          [PY, "tools/check_oracle.py", "/root/testdata/sf0.01"]),
         ("oracle_sf01",
@@ -71,12 +67,10 @@ def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
             [PY, "tools/check_oracle.py", "--tz=America/New_York",
              "/root/testdata/sf0.01"],
         ),
-        ("dtypes", [PY, "tools/check_dtypes.py", "/root/testdata/sf0.01"]),
         ("degenerate", [PY, "tools/degenerate_sweep.py", "both"]),
         ("nulls", [PY, "tools/degenerate_sweep.py", "nulls"]),
-        ("hostile", [PY, "tools/degenerate_sweep.py", "hostile"]),
+        ("hostile", [PY, "tools/degenerate_sweep.py", "hostile", str(rnd)]),
         ("unicode", [PY, "tools/unicode_probe.py", str(rnd)]),
-        ("reach", [PY, "tools/degenerate_sweep.py", "reach", str(rnd)]),
         # --wait-clean: start the sweep in a steal-free gap at low load
         ("bench", [PY, "bench.py", "--wait-clean"]),
     ]
@@ -247,34 +241,6 @@ def is_round_artifact(rel: str) -> bool:
     return any(base.startswith(p) for p in ARTIFACT_PREFIXES)
 
 
-#: Markers bounding generated-from-artifacts blocks inside otherwise
-#: hand-written tracked files (the README bench-trend table). Content
-#: between the markers is stripped before digesting so an artifact
-#: commit that also refreshes the table preserves the attested digest
-#: (ADVICE r14: README.md is in the digest but embeds a table
-#: regenerated from BENCH_r*.json each round).
-GENERATED_BEGIN = b"<!-- generated:"
-GENERATED_END = b"<!-- end generated -->"
-
-
-def strip_generated_blocks(data: bytes) -> bytes:
-    """Drop every GENERATED_BEGIN..GENERATED_END span (markers
-    inclusive). An unterminated begin marker strips to EOF — safer
-    than digesting a half-regenerated table."""
-    out = []
-    pos = 0
-    while True:
-        b = data.find(GENERATED_BEGIN, pos)
-        if b < 0:
-            out.append(data[pos:])
-            return b"".join(out)
-        out.append(data[pos:b])
-        e = data.find(GENERATED_END, b)
-        if e < 0:
-            return b"".join(out)
-        pos = e + len(GENERATED_END)
-
-
 def untracked_artifacts() -> list[str]:
     """Round artifacts (per is_round_artifact) that exist in the
     working tree but are untracked or modified-unstaged — the exact
@@ -354,8 +320,6 @@ def code_digest() -> str | None:
                     data = f.read()
             except OSError:  # deleted-but-tracked
                 data = b""
-            if GENERATED_BEGIN in data:
-                data = strip_generated_blocks(data)
             h.update(rel.encode())
             h.update(b"\0")
             h.update(data)

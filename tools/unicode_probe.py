@@ -1,4 +1,4 @@
-"""Unicode parity probe (r11: report-only; r12: a GATE).
+"""Unicode parity gate.
 
 A 100 TB training corpus is overwhelmingly multilingual, so unicode
 parity between Spark and DuckDB is a correctness surface, not a
@@ -9,20 +9,15 @@ on non-ASCII keys, JSON serde escaping of astral-plane characters.
 This tool builds a unicode-bearing twin of the sf0.001 fixtures
 (documents text in accented Latin / CJK / emoji / RTL Arabic /
 combining marks; unicode event_type group keys; unicode JSON string
-values in props) and runs the full check_oracle parity gate on it.
-
-History: in r11 the multimodal fake-codec oracles were derived from an
-ASCII ``n_bytes == n_chars`` contract, so the five multimodal queries
-failed this probe BY CONSTRUCTION and the tool was report-only. In r12
-the fake codec's oracles were rewritten to recompute from the UTF-8
-payload BYTES (DuckDB ``strlen``/hex-nibble histogram — see
-``oracle_sql()`` in ``__spark_entry__.py``), retiring that contract:
-every declared query must now hold full value-level parity on
-multilingual input, and the probe exits nonzero on ANY failure.
-Unicode shapes also run inside the gated hostile sweep
-(``tools/degenerate_sweep.py hostile``); this probe is kept as the
-denser, documents-focused fixture and writes its per-query outcome to
-``UNICODE_PROBE_r{N}.json``.
+values in props) and runs the full oracle gate (``check_oracle.gate``)
+on it in-process. The multimodal fake-codec oracles recompute from the
+UTF-8 payload BYTES (DuckDB ``strlen``/hex-nibble histogram — see
+``oracle_sql()`` in ``__spark_entry__.py``), so every declared query
+must hold full value-level parity on multilingual input, and the probe
+exits nonzero on ANY failure. Unicode shapes also run inside the gated
+hostile sweep (``tools/degenerate_sweep.py hostile``); this probe is
+the denser, documents-focused fixture and writes its per-query outcome
+to ``UNICODE_PROBE_r{N}.json``.
 
 Usage: python tools/unicode_probe.py <round>
 """
@@ -31,8 +26,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
-import subprocess
 import sys
 import time
 
@@ -87,24 +80,16 @@ def main() -> int:
         return 2
     rnd = int(sys.argv[1])
     fixture = build()
-    proc = subprocess.run(
-        [sys.executable, os.path.join(HERE, "check_oracle.py"), fixture],
-        capture_output=True,
-        text=True,
-        timeout=3600,
-    )
-    out = proc.stdout + proc.stderr
-    results: dict[str, dict] = {}
-    for raw in out.splitlines():
-        for seg in raw.split("\r"):
-            m = re.match(r"\s*(OK|FAIL)\s+(\w+):\s*(.*)", seg.strip())
-            if not m:
-                continue
-            status, name, detail = m.groups()
-            rec: dict = {"status": status.lower()}
-            if status == "FAIL":
-                rec["detail"] = detail.strip()[:200]
-            results[name] = rec
+
+    import bench
+    from check_oracle import gate
+
+    results = {
+        name: {"status": "ok"} if r["ok"]
+        else {"status": "fail",
+              "detail": r["lines"][0].removeprefix("FAIL  ")[:200]}
+        for name, r in gate(bench._session(app="unicode-probe"), fixture).items()
+    }
     failures = sorted(
         n for n, r in results.items() if r["status"] == "fail"
     )
