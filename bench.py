@@ -489,10 +489,9 @@ def ingest(spark, sf_dir: str) -> tuple[int, float, dict]:
     from iotstream.config import EngineConfig
     from iotstream.operators.parse import to_sensor_json
     from iotstream.pipeline import run_sensor_pipeline_stream
-    from iotstream.schemas import load_table, use_utc
+    from iotstream.schemas import load_table
     from iotstream.sensorize import sensorize
 
-    use_utc(spark)
     events = sensorize(load_table(spark, sf_dir, "events"))
     n = events.count()
     tmp = tempfile.mkdtemp(prefix="iotstream-ingest-")

@@ -56,9 +56,8 @@ def _estimated_splits(df: DataFrame, files: list[str]) -> int:
     from urllib.parse import unquote, urlparse
 
     spark = df.sparkSession
-    max_bytes = _parse_byte_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
+    # the conf as Spark parsed it (byte-string suffixes and all)
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     splits = 0
     try:
         for uri in files:
@@ -78,28 +77,6 @@ def _estimated_splits(df: DataFrame, files: list[str]) -> int:
     except Exception:  # noqa: BLE001 — probe only; fall back to count
         return len(files)
     return splits
-
-
-def _parse_byte_conf(s: str, default: int = 128 * 1024 * 1024) -> int:
-    """Spark byte-string conf → bytes, the same grammar as
-    ``JavaUtils.byteStringAsBytes`` (binary units: ``128m`` == ``128mb``
-    == 128 MiB; bare integers are bytes). A human-set value like
-    ``64MB`` must not fall through to the default — the split estimate
-    would then be wrong in whichever direction the conf moved (a conf
-    LOWER than default makes fan_out see too few splits and fire a
-    spurious full-corpus repartition)."""
-    try:
-        v = s.strip().lower()
-        if v.endswith("b"):
-            v = v[:-1]
-        units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-        mult = 1
-        if v and v[-1] in units:
-            mult = units[v[-1]]
-            v = v[:-1]
-        return int(v) * mult
-    except (ValueError, AttributeError):
-        return default
 
 
 def dedup_exact(docs: DataFrame, key: str = "text") -> DataFrame:

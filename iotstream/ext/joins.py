@@ -23,6 +23,20 @@ from pyspark.sql.window import Window
 from iotstream.schemas import finite_lineitem, finite_measures, load_table
 
 
+def dec(col: Column | str) -> Column:
+    """``col`` as DECIMAL(12,4): fixture doubles carry ≤2 decimals, so
+    the cast is lossless, and a product of three such factors (12,4 ×
+    12,4 → 25,8; × 12,4 → 38,12) stays within the 38-digit cap in both
+    engines, so every intermediate is exact at any row count."""
+    c = F.col(col) if isinstance(col, str) else col
+    return c.cast("decimal(12,4)")
+
+
+def volume() -> Column:
+    """l_extendedprice * (1 - l_discount), exact decimal."""
+    return dec("l_extendedprice") * (dec(F.lit(1)) - dec("l_discount"))
+
+
 def dec_sum(col: Column | str, alias: str) -> Column:
     """Exact sum: cast to DECIMAL(18,4) first (fixture doubles carry ≤2
     decimals → lossless), sum exactly, return as double. Bit-identical
@@ -71,15 +85,10 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = finite_lineitem(spark, sf_dir).filter(
         F.col("l_shipdate") <= F.lit("1998-09-02")
     )
-    # DECIMAL(12,4) inputs keep the 3-factor product within the 38-digit
-    # cap in BOTH engines (12,4 × 12,4 → 25,8; × 12,4 → 38,12) so every
-    # intermediate stays exact — no float drift at any row count.
-    d = lambda c: F.col(c).cast("decimal(12,4)")  # noqa: E731
-    one = F.lit(1).cast("decimal(12,4)")
-    disc_price = d("l_extendedprice") * (one - d("l_discount"))
-    charge = disc_price * (one + d("l_tax"))
+    disc_price = volume()
+    charge = disc_price * (dec(F.lit(1)) + dec("l_tax"))
     n = F.count(F.lit(1))
-    sum_qty_d = F.sum(d("l_quantity"))
+    sum_qty_d = F.sum(dec("l_quantity"))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -128,14 +137,12 @@ def shipping_priority(
     li = finite_lineitem(spark, sf_dir).filter(
         F.col("l_shipdate") > F.lit(cutoff)
     )
-    d = lambda c: F.col(c).cast("decimal(12,4)")  # noqa: E731
-    one = F.lit(1).cast("decimal(12,4)")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("o_orderkey", "o_orderdate")
         .agg(
-            F.sum(d("l_extendedprice") * (one - d("l_discount")))
+            F.sum(volume())
             .cast("double")
             .alias("revenue")
         )
@@ -150,7 +157,6 @@ def revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the plan is scan → partial agg → single-row exchange. The
     benchmark shape for 'filters reached the scan'."""
     li = finite_lineitem(spark, sf_dir)
-    d = lambda c: F.col(c).cast("decimal(12,4)")  # noqa: E731
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -160,7 +166,7 @@ def revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(d("l_extendedprice") * d("l_discount"))
+            F.sum(dec("l_extendedprice") * dec("l_discount"))
             .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
@@ -208,8 +214,6 @@ def local_supplier_volume(
             "s_suppkey", "s_nationkey", "n_name"
         )
     )
-    d = lambda c: F.col(c).cast("decimal(12,4)")  # noqa: E731
-    one = F.lit(1).cast("decimal(12,4)")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -220,9 +224,7 @@ def local_supplier_volume(
         )
         .groupBy("n_name")
         .agg(
-            F.sum(d("l_extendedprice") * (one - d("l_discount")))
-            .cast("double")
-            .alias("revenue"),
+            F.sum(volume()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -241,7 +243,7 @@ def large_quantity_orders(
     qty = (
         li.groupBy("l_orderkey")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(12,4)"))
+            F.sum(dec("l_quantity"))
             .cast("double")
             .alias("total_qty")
         )

@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iotstream.schemas import event_time_only
+
 
 def asof_last_purchase(events: DataFrame) -> DataFrame:
     """For every click, the most recent purchase by the same user
@@ -160,7 +162,7 @@ def _gapfill_segments(
     sees the densified output."""
     bucket, secs = _bucket(bucket_width)
     obs = (
-        sensor.filter(F.col("ts").isNotNull())
+        event_time_only(sensor)
         .groupBy(F.col("id"), bucket.alias("bucket"))
         .agg(F.round(F.avg(value), 6).alias("obs_v"))
     )
@@ -263,9 +265,9 @@ def ewma_smooth(sensor: DataFrame, alpha: float = 0.2) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # event_time_only contract: a recursive smoother is order-defined;
-    # rows with NULL event time have no position in the recursion.
-    flat = sensor.filter(F.col("ts").isNotNull()).select(
+    # A recursive smoother is order-defined: rows with NULL event time
+    # have no position in the recursion.
+    flat = event_time_only(sensor).select(
         "id", "messageId", "ts", F.col("metrics.temperature").alias("temperature")
     )
     spark = sensor.sparkSession

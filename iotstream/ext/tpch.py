@@ -27,10 +27,11 @@ Scale discipline (100 TB rules, same as ext/joins.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iotstream.ext.joins import dec, volume
 from iotstream.schemas import finite_lineitem, finite_measures, load_table
 
 __all__ = [
@@ -51,17 +52,6 @@ __all__ = [
     "min_cost_supplier",
     "important_stock",
 ]
-
-
-def _d(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(12,4)")
-
-
-def _volume() -> Column:
-    """l_extendedprice * (1 - l_discount), exact decimal."""
-    one = F.lit(1).cast("decimal(12,4)")
-    return _d("l_extendedprice") * (one - _d("l_discount"))
 
 
 def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,7 +116,7 @@ def cross_nation_volume(
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .filter(pair | rev_pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(_volume()).cast("double").alias("revenue"))
+        .agg(F.sum(volume()).cast("double").alias("revenue"))
     )
 
 
@@ -166,7 +156,7 @@ def market_share(
         )
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    vol = _volume()
+    vol = volume()
     zero = F.lit(0).cast("decimal(26,8)")
     rows = (
         li.join(F.broadcast(part.select("p_partkey")), F.col("l_partkey") == F.col("p_partkey"))
@@ -217,8 +207,8 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "n_name")
     )
-    cost = _d("p_retailprice") * _d("l_quantity") * F.lit("0.1").cast("decimal(2,1)")
-    profit = (_volume().cast("decimal(30,9)") - cost.cast("decimal(30,9)")).alias(
+    cost = dec("p_retailprice") * dec("l_quantity") * F.lit("0.1").cast("decimal(2,1)")
+    profit = (volume().cast("decimal(30,9)") - cost.cast("decimal(30,9)")).alias(
         "_amount"
     )
     return (
@@ -250,7 +240,7 @@ def returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy("o_custkey")
-        .agg(F.sum(_volume()).cast("double").alias("revenue"))
+        .agg(F.sum(volume()).cast("double").alias("revenue"))
     )
     return (
         per_cust.join(
@@ -323,7 +313,7 @@ def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-10-01"))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    vol = _volume().cast("decimal(26,8)")
+    vol = volume().cast("decimal(26,8)")
     zero = F.lit(0).cast("decimal(26,8)")
     return (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
@@ -355,7 +345,7 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
     per_supp = li.groupBy("l_suppkey").agg(
-        F.sum(_volume()).alias("_rev")
+        F.sum(volume()).alias("_rev")
     )
     mx = per_supp.agg(F.max("_rev").alias("_mx"))
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -419,17 +409,17 @@ def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     )
     per_part = li.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        F.sum(_d("l_quantity")).alias("_sq"),
+        F.sum(dec("l_quantity")).alias("_sq"),
         F.count(F.lit(1)).alias("_cnt"),
     )
     # l_quantity < 0.5 * (_sq/_cnt)  ⇔  2·qty·cnt < sq   (all exact)
     small = li.join(F.broadcast(per_part), F.col("l_partkey") == F.col("_pk")).filter(
-        _d("l_quantity") * F.lit(2).cast("decimal(2,0)") * F.col("_cnt").cast("decimal(12,0)")
+        dec("l_quantity") * F.lit(2).cast("decimal(2,0)") * F.col("_cnt").cast("decimal(12,0)")
         < F.col("_sq")
     )
     return small.agg(
         F.round(
-            F.sum(_d("l_extendedprice")).cast("double") / F.lit(7.0), 6
+            F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0), 6
         ).alias("avg_yearly")
     )
 
@@ -463,7 +453,7 @@ def disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .filter(b1 | b2 | b3)
         .agg(
-            F.sum(_volume()).cast("double").alias("revenue"),
+            F.sum(volume()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -491,7 +481,7 @@ def excess_supply_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
     )
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum(_d("l_quantity")).alias("_sq")
+        F.sum(dec("l_quantity")).alias("_sq")
     )
     tot = ps.groupBy(F.col("l_partkey").alias("_pk")).agg(
         F.sum("_sq").alias("_tq")
@@ -628,7 +618,7 @@ def important_stock(
         F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi"
     )
     per_part = li.groupBy("l_partkey").agg(
-        F.sum(_volume()).alias("_val")
+        F.sum(volume()).alias("_val")
     )
     total = per_part.agg(F.sum("_val").alias("_tot"))
     # fraction as exact decimal: 0.001 → 1/1000

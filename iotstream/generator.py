@@ -19,17 +19,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# mqttgen.py:38-45 branch structure; ranges inclusive like randint.
-_TEMP = (
-    "CASE WHEN loop % 100 = 0 THEN CAST(0 AS BIGINT) "
-    "WHEN loop % 10 = 0 THEN 50 + (loop * 7) % 31 "
-    "ELSE 10 + (loop * 7) % 41 END"
+#: The 1/9/90 quality mix (mqttgen.py:38-45 branch structure; ranges
+#: inclusive like randint) as ANSI SQL, valid verbatim in Spark SQL and
+#: DuckDB: every 100th key an empty (0, 0) reading, else every 10th an
+#: out-of-range one, else a valid one.
+_MIX = (
+    "CASE WHEN {key} % 100 = 0 THEN CAST(0 AS BIGINT) "
+    "WHEN {key} % 10 = 0 THEN {bad} + ({key} * {mul}) % 31 "
+    "ELSE {ok} + ({key} * {mul}) % {span} END"
 )
-_HUM = (
-    "CASE WHEN loop % 100 = 0 THEN CAST(0 AS BIGINT) "
-    "WHEN loop % 10 = 0 THEN 100 + (loop * 13) % 31 "
-    "ELSE 50 + (loop * 13) % 31 END"
-)
+
+
+def quality_mix_sql(key: str) -> tuple[str, str]:
+    """(temperature, humidity) CASE expressions of the mix, keyed on the
+    integer column ``key``: temperature 10..50 valid and 50..80 bad,
+    humidity 50..80 valid and 100..130 bad."""
+    return (
+        _MIX.format(key=key, bad=50, mul=7, ok=10, span=41),
+        _MIX.format(key=key, bad=100, mul=13, ok=50, span=31),
+    )
+
+
+_TEMP, _HUM = quality_mix_sql("loop")
 
 
 def _sensor_columns(loop: Column, n_sensors: int, ts: Column) -> list[Column]:

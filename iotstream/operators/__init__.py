@@ -10,4 +10,4 @@ from iotstream.operators.parse import (  # noqa: F401
     to_sensor_json,
 )
 from iotstream.operators.project import raw_archive_projection  # noqa: F401
-from iotstream.operators.windows import tumbling_agg  # noqa: F401
+from iotstream.operators.windows import window_agg  # noqa: F401

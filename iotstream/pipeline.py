@@ -22,7 +22,7 @@ from iotstream.config import EngineConfig
 from iotstream.operators.filters import validity_filter
 from iotstream.operators.parse import parse_sensor_json
 from iotstream.operators.project import raw_archive_projection
-from iotstream.operators.windows import tumbling_agg
+from iotstream.operators.windows import window_agg
 from iotstream.schemas import normalize_event_time
 from iotstream.sinks import dual_sink_writer
 from iotstream.streaming import run_available_now
@@ -39,13 +39,14 @@ def run_sensor_pipeline_batch(payloads: DataFrame, conf: EngineConfig | None = N
     """Full reference pipeline over a batch of raw JSON payload strings.
 
     Returns the three observable frames: pre-filter raw archive, post-
-    filter clean stream, and the windowed aggregates — the contents of
-    the reference's ``raw`` / ``mongodb-connect`` / ``max`` collections.
+    filter clean stream, and the windowed aggregates (``window_agg``,
+    avg rounded to 6 places) — the contents of the reference's ``raw``
+    / ``mongodb-connect`` / ``max`` collections.
     """
     conf = conf or EngineConfig()
     events = normalize_event_time(parse_sensor_json(payloads))
     clean = validity_filter(events)
-    aggs = tumbling_agg(
+    aggs = window_agg(
         clean,
         "ts",
         ["id"],

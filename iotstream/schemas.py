@@ -94,24 +94,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     selects/filters, and building it fires no Spark job (no schema
     inference). ``events.ts`` comes back as TimestampType.
 
+    Pins the session to UTC (``use_utc``), as ``load_events_stream``
+    does, so a builder that reads a fixture table needs no pin of its
+    own: only a builder that reads no fixture sets it itself.
+
     The declaration is the contract: a file whose column types differ
     from it fails at read time with ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``
     (it is never re-inferred), and a declared column missing from the
     file reads as NULL."""
     if name not in FIXTURE_SCHEMAS:
         raise KeyError(f"unknown fixture table {name!r}; one of {FIXTURE_TABLES}")
-    if name == "events":
-        return normalize_ns_timestamp(load_events_raw(spark, sf_dir))
-    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(table_path(sf_dir, name))
-
-
-def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet under its declared schema, ``ts`` as stored:
-    TIMESTAMP(MICROS) read as ``timestamp_ntz``; ``normalize_ns_timestamp``
-    turns ``ts`` into the TimestampType event-time operators need."""
-    return spark.read.schema(FIXTURE_SCHEMAS["events"]).parquet(
-        table_path(sf_dir, "events")
-    )
+    use_utc(spark)
+    df = spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(table_path(sf_dir, name))
+    return normalize_ns_timestamp(df) if name == "events" else df
 
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,17 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ANSI SQL, valid verbatim in both Spark SQL and DuckDB.
-TEMP_SQL = (
-    "CASE WHEN event_id % 100 = 0 THEN CAST(0 AS BIGINT) "
-    "WHEN event_id % 10 = 0 THEN 50 + (event_id * 7) % 31 "
-    "ELSE 10 + (event_id * 7) % 41 END"
-)
-HUM_SQL = (
-    "CASE WHEN event_id % 100 = 0 THEN CAST(0 AS BIGINT) "
-    "WHEN event_id % 10 = 0 THEN 100 + (event_id * 13) % 31 "
-    "ELSE 50 + (event_id * 13) % 31 END"
-)
+from iotstream.generator import quality_mix_sql
+
+TEMP_SQL, HUM_SQL = quality_mix_sql("event_id")
 ID_SQL = "'sensor-' || CAST(user_id AS STRING)"
 MSGID_SQL = "'sensor-' || CAST(user_id AS STRING) || '-' || CAST(event_id AS STRING)"
 

@@ -5,8 +5,11 @@ The reference registers a schema over the Kafka topic
 'JSON')``, reference README.md:76-83) and then runs persistent SQL
 queries against it (``CREATE TABLE MAX_TABLE AS SELECT …``,
 README.md:87-92). The Spark equivalent: register the parsed stream as a
-temp view and run ``spark.sql`` — the same Catalyst plan as the
-DataFrame API, so everything here works over batch or streaming frames.
+temp view (``create_stream_view``) and run the reference's statements
+through the dialect translator (``run_ksql``) — the same Catalyst plan
+as the DataFrame API, so everything here works over batch or streaming
+frames. The KSQL MAX_TABLE is spelled once, as the statement the
+``ksql_max_table`` query runs.
 """
 
 from __future__ import annotations
@@ -15,33 +18,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iotstream.operators.filters import VALID_SQL
-
-#: KSQL `CREATE TABLE MAX_TABLE AS SELECT ID, MAX(metrics->temperature)
-#: … WINDOW TUMBLING (SIZE 1 MINUTES) GROUP BY ID` (README.md:87-92),
-#: restated in Spark SQL: WINDOW TUMBLING → window(ts, '1 minute'),
-#: metrics->temperature → metrics.temperature, plus the validity filter
-#: that the reference applies upstream in the Flink job.
-MAX_TABLE_SQL = f"""
-SELECT window(ts, '1 minute').start AS window_start,
-       window(ts, '1 minute').end   AS window_end,
-       id,
-       max(metrics.temperature)     AS max_temperature
-FROM json
-WHERE {VALID_SQL.replace("temperature", "metrics.temperature").replace("humidity", "metrics.humidity")}
-GROUP BY window(ts, '1 minute'), id
-"""
-
 
 def create_stream_view(sensor_events: DataFrame, name: str = "json") -> None:
     """``CREATE STREAM json`` equivalent: register the typed event frame
     under the KSQL stream's name."""
     sensor_events.createOrReplaceTempView(name)
-
-
-def max_table(spark: SparkSession) -> DataFrame:
-    """``CREATE TABLE MAX_TABLE AS SELECT …`` equivalent."""
-    return spark.sql(MAX_TABLE_SQL)
 
 
 # ------------------------------------------------------- KSQL translator

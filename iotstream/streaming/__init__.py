@@ -1,13 +1,14 @@
 """Streaming execution policy (SURVEY.md §2.8 T1-T7).
 
-- T1: tumbling windows via ``F.window`` (operators.windows).
+- T1: tumbling windows via ``operators.windows.window_agg``.
 - T2: event-time domain — payload timestamps, not broker ROWTIME
   (documented deviation; deterministic + testable).
 - T3: watermarks bound state; the reference has no late-data policy
   (KSQL 0.6 retains windows indefinitely), so correctness runs use an
   effectively-unbounded watermark and production runs a finite one.
 - T4: every query gets a ``checkpointLocation`` → restartable
-  (the reference checkpoints nothing, StreamProcessor.java:126). What
+  (the reference checkpoints nothing, StreamProcessor.java:126); a
+  one-shot drain's own checkpoint is removed when it ends. What
   a replayed micro-batch leaves behind depends on the output mode of
   ``drain``: append drains are exactly-once through the file sink's
   ``_spark_metadata`` log; update drains deduplicate a replayed epoch
@@ -27,10 +28,10 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 #: Don't place scratch on tmpfs unless this much is free: drain sinks
@@ -59,7 +60,7 @@ def ephemeral_dir(prefix: str) -> str:
             pass
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
-from iotstream.operators.windows import tumbling_agg
+from iotstream.operators.windows import window_agg
 from iotstream.sinks import ParquetUpsertSink
 
 #: Correctness-mode watermark: large enough that no fixture row is ever
@@ -69,28 +70,38 @@ UNBOUNDED_WATERMARK = "3650 days"
 
 def run_available_now(writer, checkpoint: str | None = None):
     """Start a writeStream with availableNow trigger and block until all
-    available input is processed. Returns the finished query."""
-    if checkpoint is None:
-        checkpoint = ephemeral_dir("iotstream-ckpt-")
-    q = (
-        writer.option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # One-shot drain: this checkpoint is never revisited, so unload its
-    # state-store providers now. Long sessions that drain many ad-hoc
-    # streams (the correctness gate runs ~8) otherwise accumulate
-    # providers that the maintenance thread keeps snapshotting.
-    try:
-        from pyspark.sql import SparkSession
+    available input is processed. Returns the finished query.
 
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:  # noqa: BLE001 — internal API; hygiene only
-        pass
-    return q
+    Without a ``checkpoint`` the query checkpoints into a fresh
+    ``ephemeral_dir``, which is removed when the query ends, whether it
+    finished or failed; a checkpoint the caller passes is kept."""
+    own = checkpoint is None
+    if own:
+        checkpoint = ephemeral_dir("iotstream-ckpt-")
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        # One-shot drain: this checkpoint is never revisited, so unload
+        # its state-store providers now. Long sessions that drain many
+        # ad-hoc streams (the correctness gate runs ~8) otherwise
+        # accumulate providers that the maintenance thread keeps
+        # snapshotting.
+        try:
+            from pyspark.sql import SparkSession
+
+            spark = SparkSession.getActiveSession()
+            if spark is not None:
+                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        except Exception:  # noqa: BLE001 — internal API; hygiene only
+            pass
+        if own:
+            shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def drain(
@@ -135,17 +146,16 @@ def windowed_agg_final_state(
     value,
     width: str = "1 minute",
     watermark: str = UNBOUNDED_WATERMARK,
-    round_avg: int | None = 6,
 ) -> DataFrame:
-    """Run the A1-A3 windowed aggregate as a REAL streaming query and
-    return its final state: an update-mode ``drain`` keyed on
-    (window_start, keys).
+    """Run the A1-A3 windowed aggregate (``window_agg``) as a REAL
+    streaming query and return its final state: an update-mode
+    ``drain`` keyed on (window_start, keys).
 
     With the unbounded correctness watermark the final state equals the
     batch aggregate bit-for-bit — the batch-stream equivalence that
     Structured Streaming's design guarantees.
     """
-    agg = tumbling_agg(
+    agg = window_agg(
         stream.withWatermark(ts_col, watermark),
         ts_col,
         keys,
@@ -153,6 +163,4 @@ def windowed_agg_final_state(
         width=width,
         prefix="temperature",
     )
-    if round_avg is not None:
-        agg = agg.withColumn("avg_temperature", F.round("avg_temperature", round_avg))
     return drain(spark, agg, "update", ["window_start", *keys])

@@ -65,3 +65,36 @@ def test_update_drain_ignores_a_replayed_epoch(spark):
     assert merged == [("a", 2), ("b", 1)]
     write(batch1, 1)
     assert sorted(map(tuple, sink.to_df(spark).collect())) == merged
+
+
+def test_drain_removes_the_checkpoint_it_made(spark, tmp_path, monkeypatch):
+    """A drain makes its own checkpoint and removes it when the query
+    ends, whether the query finished or failed; the output directory
+    stays, since the returned table reads it lazily."""
+    import os
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    import iotstream.streaming as streaming
+
+    made: list[str] = []
+
+    def under_tmp(prefix: str) -> str:
+        made.append(tempfile.mkdtemp(prefix=prefix, dir=tmp_path))
+        return made[-1]
+
+    monkeypatch.setattr(streaming, "ephemeral_dir", under_tmp)
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(7, dt.datetime(2024, 1, 1))], SCHEMA).write.parquet(src)
+    stream = FileStreamSource(src, SCHEMA).load(spark)
+    assert drain(spark, stream, "append").count() == 1
+    with pytest.raises(StreamingQueryException):
+        drain(spark, stream.select(F.raise_error(F.lit("boom"))), "append")
+
+    def named(prefix: str) -> list[str]:
+        return [d for d in made if os.path.basename(d).startswith(prefix)]
+
+    assert len(named("iotstream-ckpt-")) == 2
+    assert not [d for d in named("iotstream-ckpt-") if os.path.exists(d)]
+    assert all(os.path.isdir(d) for d in named("iotstream-append-"))

@@ -265,21 +265,6 @@ def test_fan_out_size_aware_for_compacted_large_files(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_parse_byte_conf_suffix_forms():
-    """ADVICE r6: human-set maxPartitionBytes forms ('128m', '64MB')
-    must parse, not silently fall back to the 128 MiB default."""
-    from iotstream.ext.dedup import _parse_byte_conf
-
-    assert _parse_byte_conf("134217728b") == 128 * 1024 * 1024
-    assert _parse_byte_conf("134217728") == 128 * 1024 * 1024
-    assert _parse_byte_conf("128m") == 128 * 1024 * 1024
-    assert _parse_byte_conf("64MB") == 64 * 1024 * 1024
-    assert _parse_byte_conf("1g") == 1024**3
-    assert _parse_byte_conf("512k") == 512 * 1024
-    assert _parse_byte_conf("garbage") == 128 * 1024 * 1024
-    assert _parse_byte_conf("") == 128 * 1024 * 1024
-
-
 def test_fan_out_no_file_frames_respect_existing_width(spark):
     """r8 (VERDICT r7 item 6) — the external-caller contract is now
     enforced instead of documented: a frame with NO scan files (in-

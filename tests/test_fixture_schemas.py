@@ -64,3 +64,16 @@ def test_declared_schema_contract_on_divergent_files(spark, tmp_path):
     )
     rows = load_table(spark, partial, "region").collect()
     assert [tuple(r) for r in rows] == [(1, None)]
+
+
+def test_load_table_pins_the_session_to_utc(spark):
+    """A builder that reads a fixture table needs no time-zone pin of
+    its own: ``load_table`` sets the session to UTC."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/New_York")
+        load_table(spark, SF_DIR, "orders")
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, old)

@@ -4,7 +4,7 @@ through the dialect translator and matches the DataFrame-API flagship."""
 from pyspark.sql import functions as F
 
 from iotstream.operators.filters import validity_filter
-from iotstream.operators.windows import tumbling_agg
+from iotstream.operators.windows import window_agg
 from iotstream.schemas import load_table, use_utc
 from iotstream.sensorize import sensorize
 from iotstream.sql import create_stream_view, ksql_to_spark_sql, run_ksql
@@ -26,7 +26,7 @@ def test_reference_statement_translates_and_matches_flagship(spark):
     create_stream_view(clean, "json")
     out = run_ksql(spark, REFERENCE_STMT)
 
-    expect = tumbling_agg(
+    expect = window_agg(
         clean, "ts", ["id"], F.col("metrics.temperature"), "1 minute",
         aggs=("max",), prefix="temperature",
     )
@@ -57,13 +57,11 @@ HOPPING_STMT = (
 
 
 def test_hopping_translates_and_matches_native(spark):
-    from iotstream.operators.windows import hopping_agg
-
     use_utc(spark)
     clean = validity_filter(sensorize(load_table(spark, SF_DIR, "events")))
     create_stream_view(clean, "json")
     out = run_ksql(spark, HOPPING_STMT)
-    expect = hopping_agg(
+    expect = window_agg(
         clean, "ts", ["id"], F.col("metrics.temperature"),
         width="2 minutes", slide="1 minutes", aggs=("max",), prefix="temperature",
     )

@@ -690,6 +690,36 @@ def test_spark_session_builder_only_in_bench_session():
     assert sites == ["bench.py:_session"], sites
 
 
+def test_explain_audit_skips_every_streaming_builder():
+    """``explain_audit.SKIP`` (also ``plan_dump``'s skip list) names
+    exactly the builders that start a stream, so neither tool drains a
+    stream and then audits a parquet read. Found by scanning every
+    ``q_*`` builder in ``__spark_entry__.py`` for a call that drains or
+    reads a stream, whether or not protobuf is installed."""
+    import ast
+
+    from explain_audit import SKIP
+
+    streaming = {
+        "drain", "windowed_agg_final_state", "enrich_against_dim_final",
+        "interval_join_pairs", "load_events_stream",
+    }
+    with open(os.path.join(REPO, "__spark_entry__.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    drains = set()
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and fn.name.startswith("q_"):
+            called = {
+                getattr(n.func, "id", getattr(n.func, "attr", None))
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+            }
+            if called & streaming:
+                drains.add(fn.name[2:])
+    assert "streaming_status_change" in drains
+    assert SKIP == drains
+
+
 def test_session_cpus_reads_env_else_host_cpus(monkeypatch):
     """SPARK_GRAFT_CPUS wins when set; unset (or empty) it falls back to
     the CPUs this process may run on, never a fixed count."""

@@ -756,7 +756,7 @@ def test_hopping_agg_matches_bruteforce(spark, rows, slide_min, extra_min):
     width_min = slide_min + extra_min
     import datetime as dt
 
-    from iotstream.operators.windows import hopping_agg
+    from iotstream.operators.windows import window_agg
 
     t0 = dt.datetime(2024, 1, 1)
     df = spark.createDataFrame(
@@ -765,13 +765,14 @@ def test_hopping_agg_matches_bruteforce(spark, rows, slide_min, extra_min):
     )
     got = {
         (r.id, int((r.window_start - t0).total_seconds())): r["max"]
-        for r in hopping_agg(
+        for r in window_agg(
             df,
             "ts",
             ["id"],
             "v",
             width=f"{width_min} minutes",
             slide=f"{slide_min} minutes",
+            aggs=("max",),
         ).collect()
     }
     width, slide = width_min * 60, slide_min * 60

@@ -215,13 +215,13 @@ def test_transform_with_state_status_changes_match_batch_lag(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from iotstream.schemas import load_events_raw, load_events_stream, normalize_ns_timestamp
+    from iotstream.schemas import load_events_stream, load_table
     from iotstream.sensorize import sensorize
     from iotstream.streaming.stateful import status_changes
 
     stream = sensorize(load_events_stream(spark, SF_DIR))
     got = drain(spark, status_changes(stream), "append")
-    sensor = sensorize(load_events_raw(spark, SF_DIR).transform(normalize_ns_timestamp))
+    sensor = sensorize(load_table(spark, SF_DIR, "events"))
     t, h = F.col("metrics.temperature"), F.col("metrics.humidity")
     status = F.when(
         ((t == 0) & (h == 0)) | ((t >= 50) & (h >= 100)), "invalid"

@@ -8,7 +8,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from iotstream.operators.windows import tumbling_agg
+from iotstream.operators.windows import window_agg
 from iotstream.streaming import drain
 
 SCHEMA = "id string, ts timestamp, value double"
@@ -46,7 +46,7 @@ def test_late_row_beyond_watermark_is_dropped(spark, tmp_path):
         .parquet(src)
         .withWatermark("ts", "10 minutes")
     )
-    agg = tumbling_agg(
+    agg = window_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
     final = drain(spark, agg, "update", ["window_start", "id"])
@@ -75,7 +75,7 @@ def test_same_data_with_unbounded_watermark_keeps_late_row(spark, tmp_path):
         .parquet(src)
         .withWatermark("ts", "3650 days")
     )
-    agg = tumbling_agg(
+    agg = window_agg(
         stream, "ts", ["id"], F.col("value"), "1 minute", aggs=("max",), prefix="value"
     )
     final = drain(spark, agg, "update", ["window_start", "id"])

@@ -23,7 +23,9 @@ The gate is all queries at sf0.001, sf0.01 and sf0.1, plus sf0.01 under
 ``--tz=America/New_York``. Sweep at MULTIPLE scale factors:
 boundary-precision bugs hide below data density (a seconds-truncated
 RANGE frame key diverged from its full-precision oracle only at
-sf0.1), and ``--tz`` smokes out queries missing ``use_utc``. Exit code 1
+sf0.1). ``--tz`` runs every query under a non-UTC session: the fixture
+loaders pin UTC themselves, so it guards the builders that read no
+fixture table and must call ``use_utc`` on their own. Exit code 1
 on any failure — don't pipe through filters that mask it.
 
 ``gate(spark, sf_dir, tz, only)`` is the same gate in-process, for the
@@ -141,8 +143,8 @@ def gate(spark, sf_dir, tz="UTC", only=()) -> dict[str, dict]:
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        # Re-pin the requested TZ before EVERY query: use_utc from an
-        # earlier query would otherwise mask a missing use_utc here.
+        # Re-pin the requested TZ before EVERY query: the UTC pin of an
+        # earlier query would otherwise mask a missing one here.
         spark.conf.set("spark.sql.session.timeZone", tz)
         res = results[name] = {"digest": None, "df": None}
         try:
@@ -174,7 +176,8 @@ def gate(spark, sf_dir, tz="UTC", only=()) -> dict[str, dict]:
 
 def main() -> int:
     # --tz=ZONE runs the Spark session under a hostile timezone (the
-    # driver's is unknown); queries must self-normalize via use_utc.
+    # driver's is unknown); queries must self-normalize via use_utc,
+    # which the fixture loaders call.
     args = sys.argv[1:]
     tz = "UTC"
     for a in list(args):
