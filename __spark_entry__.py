@@ -1237,9 +1237,12 @@ def q_multimodal_frame_sample(spark, sf_dir):
 
 def q_pydatasource_sensor(spark, sf_dir):
     """S1 on the Spark 4 Python DataSource API: the registered
-    'sensorgen' source, partition-sharded with range-filter pushdown
-    into the source (PushedFilters reaches the BatchScan). Emits the
-    exact rows of synthetic_sensor_events — same oracle."""
+    'sensorgen' source, partition-sharded. Emits the exact rows of
+    synthetic_sensor_events — same oracle. The query has no filter, so
+    nothing is pushed (tests/test_generator.py covers pushdown), but
+    Spark refuses to plan a reader that implements ``pushFilters``
+    while ``spark.sql.python.filterPushdown.enabled`` is false
+    (DATA_SOURCE_PUSHDOWN_DISABLED), so the flag is set."""
     from iotstream.sources.pydatasource import register
 
     use_utc(spark)

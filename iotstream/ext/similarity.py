@@ -216,15 +216,15 @@ def _pairs_above(ids_a, mat_a, nrm_a, ids_b, mat_b, nrm_b, threshold: float):
 #: executor-sized at ANY corpus size.
 NEARDUP_EXACT_MAX_ROWS = 500_000
 
+#: ``neardup_embedding_lsh`` takes the broadcast regime when the
+#: measured corpus (rows × dim × element width) fits in this many bytes.
+NEARDUP_LSH_BROADCAST_BYTES = 256 << 20
 
-def neardup_embedding(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    max_broadcast_rows: int = NEARDUP_EXACT_MAX_ROWS,
-) -> DataFrame:
+
+def neardup_embedding(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Embedding-cosine near-dup pairs (exact): all pairs with cosine ≥
     ``threshold`` through ``_pairs_above``. The corpus is collected
-    once (limit-guarded: past ``max_broadcast_rows`` it raises with a
+    once (limit-guarded: past ``NEARDUP_EXACT_MAX_ROWS`` it raises with a
     pointer at ``neardup_embedding_lsh``, so it never pulls an
     unbounded table onto the driver). Up to 4096 rows the driver
     verifies it in one matmul; above that it is broadcast and the
@@ -233,11 +233,11 @@ def neardup_embedding(
     """
     spark = emb.sparkSession
     emb = drop_null_vectors(emb).select("vec_id", "embedding")
-    pdf = emb.limit(max_broadcast_rows + 1).toPandas()
-    if len(pdf) > max_broadcast_rows:
+    pdf = emb.limit(NEARDUP_EXACT_MAX_ROWS + 1).toPandas()
+    if len(pdf) > NEARDUP_EXACT_MAX_ROWS:
         raise ValueError(
             f"neardup_embedding broadcasts the corpus as a dense matrix and "
-            f"is capped at {max_broadcast_rows} rows; this input exceeds it. "
+            f"is capped at {NEARDUP_EXACT_MAX_ROWS} rows; this input exceeds it. "
             f"Use neardup_embedding_lsh (bucketed, executor-sized blocks) "
             f"for large corpora."
         )
@@ -341,7 +341,6 @@ def neardup_embedding_lsh(
     target_bucket: int = 512,
     recall: float = 0.9,
     max_tables: int = 128,
-    vec_broadcast_bytes: int = 256 << 20,
     guard_stats: dict | None = None,
 ) -> DataFrame:
     """E2/E3 scale path for embedding near-dup: never all-pairs.
@@ -363,7 +362,7 @@ def neardup_embedding_lsh(
 
     Two execution regimes give the same pairs:
 
-    - broadcast (when the corpus fits ``vec_broadcast_bytes`` at its
+    - broadcast (when the corpus fits ``NEARDUP_LSH_BROADCAST_BYTES`` at its
       source element width): one bounded driver collect builds the
       vector and signature matrices, both broadcast. One stage over
       (table, shard) units verifies each kept bucket with a float32
@@ -431,7 +430,7 @@ def neardup_embedding_lsh(
         if isinstance(emb.schema["embedding"].dataType.elementType, DoubleType)
         else 4
     )
-    use_broadcast = n_vecs * dim * elem_bytes <= vec_broadcast_bytes
+    use_broadcast = n_vecs * dim * elem_bytes <= NEARDUP_LSH_BROADCAST_BYTES
     if use_broadcast and tables * (1 << nbits) > (1 << 28):
         warnings.warn(
             f"neardup_embedding_lsh: dense broadcast bookkeeping for "

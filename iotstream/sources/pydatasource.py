@@ -12,8 +12,10 @@ Scale design: the generator is partition-range sharded (each task
 produces its own loop-counter slice — embarrassingly parallel, no
 driver materialization), and range predicates on ``loop`` narrow the
 generated range *before* any row exists (``pushFilters``), which is
-the Python-source equivalent of parquet scan pruning. Row production
-is vectorized with numpy per partition, not a per-row Python loop.
+the Python-source equivalent of parquet scan pruning. Spark refuses to
+plan this reader unless ``spark.sql.python.filterPushdown.enabled`` is
+set. Each partition computes its quality mix with numpy, then
+``read`` yields one Python tuple per row.
 
 The emitted rows reproduce ``generator.synthetic_sensor_events``
 bit-for-bit (same modular-arithmetic quality mix from
@@ -79,7 +81,6 @@ class SensorGenReader(DataSourceReader):
                     self.hi = min(self.hi, f.value)
                 else:
                     yield f
-                    continue
                 continue
             yield f
 

@@ -27,6 +27,7 @@
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -39,6 +40,17 @@ from pyspark.sql import DataFrame, SparkSession
 #: 64 MB /dev/shm would ENOSPC queries that worked fine on /tmp.
 _SHM_MIN_FREE = 8 << 30
 
+#: Every dir ``ephemeral_dir`` made. A drained frame reads its output
+#: dir lazily, so nothing earlier owns these dirs; the ones still there
+#: are removed when the interpreter exits.
+_MADE: set[str] = set()
+
+
+@atexit.register
+def _remove_made() -> None:
+    for d in _MADE:
+        shutil.rmtree(d, ignore_errors=True)
+
 
 def ephemeral_dir(prefix: str) -> str:
     """Scratch dir for ONE-SHOT drains (checkpoints/spill sinks that
@@ -48,17 +60,18 @@ def ephemeral_dir(prefix: str) -> str:
     per-batch cost on every drained test/bench query. Falls back to
     the normal temp dir when /dev/shm is missing, read-only, or too
     small (Docker defaults it to 64 MB). Durable production queries
-    pass their own ``checkpointLocation`` and are unaffected."""
-    shm = "/dev/shm"
-    base = None
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        try:
-            st = os.statvfs(shm)
-            if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE:
-                base = shm
-        except OSError:
-            pass
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    pass their own ``checkpointLocation`` and are unaffected. The dir
+    is removed at interpreter exit at the latest."""
+    shm, base = "/dev/shm", None
+    try:  # statvfs raises when /dev/shm is missing
+        st = os.statvfs(shm)
+        if os.access(shm, os.W_OK) and st.f_bavail * st.f_frsize >= _SHM_MIN_FREE:
+            base = shm
+    except OSError:
+        pass
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    _MADE.add(path)
+    return path
 
 from iotstream.operators.windows import window_agg
 from iotstream.sinks import ParquetUpsertSink
@@ -93,8 +106,6 @@ def run_available_now(writer, checkpoint: str | None = None):
         # accumulate providers that the maintenance thread keeps
         # snapshotting.
         try:
-            from pyspark.sql import SparkSession
-
             spark = SparkSession.getActiveSession()
             if spark is not None:
                 spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()

@@ -7,7 +7,7 @@ phantom negative ids on docs shorter than the window; ANSI mode turns
 /0 into a stage-killing ArithmeticException on empty docs; NULL
 payloads crashed the multimodal UDFs. Each fix is locked here at the
 kernel level — the full Spark≡DuckDB parity on a NULL-bearing corpus
-runs via `python tools/degenerate_sweep.py nulls`.
+runs inside the hostile fixture's gate, `python tools/degenerate_sweep.py`.
 """
 
 from __future__ import annotations

@@ -98,3 +98,23 @@ def test_drain_removes_the_checkpoint_it_made(spark, tmp_path, monkeypatch):
     assert len(named("iotstream-ckpt-")) == 2
     assert not [d for d in named("iotstream-ckpt-") if os.path.exists(d)]
     assert all(os.path.isdir(d) for d in named("iotstream-append-"))
+
+
+def test_ephemeral_dirs_are_removed_at_interpreter_exit():
+    """A drained frame reads its output dir lazily, so the dirs
+    ``ephemeral_dir`` makes live until the interpreter exits, and no
+    longer."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import iotstream.streaming as s; "
+         "print(s.ephemeral_dir('iotstream-test-'))"],
+        cwd=repo, capture_output=True, text=True, check=True,
+    )
+    made = out.stdout.strip()
+    assert os.path.basename(made).startswith("iotstream-test-")
+    assert not os.path.exists(made)

@@ -73,19 +73,22 @@ def test_lsh_blocked_neardup_recall(spark):
     assert len(lsh & exact) / len(exact) >= 0.9
 
 
-def test_neardup_embedding_exact_kernel_is_bounded(spark):
+def test_neardup_embedding_exact_kernel_is_bounded(spark, monkeypatch):
     """The exact kernel must refuse to broadcast an unbounded corpus:
-    past max_broadcast_rows it raises with a pointer at the LSH path
+    past NEARDUP_EXACT_MAX_ROWS it raises with a pointer at the LSH path
     instead of silently collecting the table to the driver."""
     import pytest
 
+    from iotstream.ext import similarity
     from iotstream.ext.similarity import neardup_embedding
     from iotstream.schemas import load_table
     from tests.conftest import SF_DIR
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    with pytest.raises(ValueError, match="neardup_embedding_lsh"):
-        neardup_embedding(emb, max_broadcast_rows=10)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "NEARDUP_EXACT_MAX_ROWS", 10)
+        with pytest.raises(ValueError, match="neardup_embedding_lsh"):
+            neardup_embedding(emb)
     # under the cap the kernel still runs
     assert neardup_embedding(emb, threshold=0.99).count() >= 0
 
@@ -284,19 +287,19 @@ def test_embedding_lsh_capped_regime_delivers_achievable_recall(spark):
     assert got <= got2
 
 
-def test_embedding_lsh_regimes_agree(spark):
+def test_embedding_lsh_regimes_agree(spark, monkeypatch):
     """r8: the broadcast regime (first-collision ownership, NO distinct
     pass) and the ship regime (narrow shuffle + distinct) must produce
     identical verified pairs — ownership exactness is what lets the
     broadcast path skip dedup entirely."""
+    from iotstream.ext import similarity
     from iotstream.ext.similarity import neardup_embedding_lsh
 
     emb = load_table(spark, SF_DIR, "embeddings")
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     base = rows(neardup_embedding_lsh(emb, 0.4, recall=0.99999))
-    ship = rows(
-        neardup_embedding_lsh(emb, 0.4, recall=0.99999, vec_broadcast_bytes=0)
-    )
+    monkeypatch.setattr(similarity, "NEARDUP_LSH_BROADCAST_BYTES", 0)
+    ship = rows(neardup_embedding_lsh(emb, 0.4, recall=0.99999))
     assert ship == base
 
 
@@ -338,13 +341,14 @@ def test_embedding_lsh_dense_bookkeeping_falls_back_to_ship(spark):
     assert got <= sane
 
 
-def test_embedding_lsh_guard_stats_observable(spark):
+def test_embedding_lsh_guard_stats_observable(spark, monkeypatch):
     """ADVICE r7: max_bucket drops must be observable, not silent. A
     mass-duplicated vector overflows the cap in EVERY table (identical
     vectors collide at any nbits); guard_stats reports the dropped row
     mass — eagerly on the broadcast path (exact driver-side
     histogram), via a pyspark Observation on the ship path — and both
     regimes suppress the same pairs."""
+    from iotstream.ext import similarity
     from iotstream.ext.similarity import neardup_embedding_lsh
 
     rows_in = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(300)] + [
@@ -366,9 +370,10 @@ def test_embedding_lsh_guard_stats_observable(spark):
     assert all(not (a < 300 and b < 300) for a, b in got)
 
     stats2 = {}
+    monkeypatch.setattr(similarity, "NEARDUP_LSH_BROADCAST_BYTES", 0)
     out2 = neardup_embedding_lsh(
         emb, threshold=0.9, nbits=4, tables=8, max_bucket=64,
-        guard_stats=stats2, vec_broadcast_bytes=0,
+        guard_stats=stats2,
     )
     got2 = {(r.id_a, r.id_b) for r in out2.collect()}
     assert got2 == got

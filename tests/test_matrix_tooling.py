@@ -2,8 +2,8 @@
 
 No Spark session — these pin the pure-Python plumbing: the bench
 leg's contamination parsing, bench.py's clean-window policy
-(``certified``) and verdicts, the per-round leg
-list (hostile + unicode gates actually wired in), the oracle gate's
+(``certified``) and verdicts, the per-round leg list, the hostile
+fixture's spec (every NULL and unicode shape in one fixture), the oracle gate's
 dtype verdict and the hostile leg's reach verdict, and the digest-keyed
 fixture markers that stop edited mutation specs from silently serving
 stale cached fixtures.
@@ -56,9 +56,25 @@ def test_code_digest_excludes_round_artifacts_only():
 
 def test_build_legs_wires_round_stamped_gates():
     legs = dict(rm.build_legs(13))
-    assert "unicode" in legs and legs["unicode"][-1] == "13"
-    assert "hostile" in legs and legs["hostile"][-1] == "13"
-    assert list(dict(rm.build_legs(13)))[-1] == "bench"  # bench runs last
+    assert list(legs) == [
+        "pytest", "oracle_sf001", "oracle_sf01", "oracle_tz", "degenerate",
+        "bench",  # bench runs last
+    ]
+    assert legs["degenerate"][-1] == "13"
+
+
+def test_plan_dump_strips_run_dependent_ids():
+    from plan_dump import stable_plan
+
+    run = lambda e, p: (  # noqa: E731 — one plan, two runs' ids
+        f"Output [2]: [doc_id#{e}L, p_brand#{e + 1}]\n"
+        f"Exchange hashpartitioning(doc_id#{e}L, 4), ENSURE_REQUIREMENTS, "
+        f"[plan_id={p}]\n"
+    )
+    assert stable_plan(run(1705, 88)) == stable_plan(run(31, 7)) == (
+        "Output [2]: [doc_id, p_brand]\n"
+        "Exchange hashpartitioning(doc_id, 4), ENSURE_REQUIREMENTS\n"
+    )
 
 
 def test_spec_digest_keys_fixture_markers(tmp_path):
@@ -183,6 +199,32 @@ def test_boundary_class_targets_are_declared_queries():
     assert math.isnan(twin["l_extendedprice"])
     for k in ("l_shipdate", "l_discount", "l_quantity"):
         assert twin[k] == surv[k], k
+
+
+def test_hostile_spec_carries_every_null_and_unicode_shape():
+    """One adversarial fixture: every table's NULL_MUTS rows come last
+    in its hostile rows (same pk), and the documents and events carry
+    every multilingual shape."""
+    spec = ds.hostile_muts()
+    for t, (pk, rows) in ds.NULL_MUTS.items():
+        assert spec[t][0] == pk, t
+        assert spec[t][1][-len(rows):] == rows, t
+    texts = {r["text"] for r in spec["documents"][1]}
+    for doc in (
+        "café résumé naïve déjà vu über straße",           # accented Latin
+        "这是 一个 测试 文本 分析 的 例子 你好 世界",          # CJK
+        "hello \U0001f44b world \U0001f30d emoji test",     # astral emoji
+        "مرحبا بالعالم",                                   # RTL Arabic
+        "élégant combining marks café",                     # NFD combining
+        "ΑΛΦΑ βήτα ΓΆΜΜΑ mixed ΚΕΦΑΛΑΙΑ greek case",       # case folding
+    ):
+        assert doc in texts, doc
+    for row in (
+        {"event_type": "café_click"},
+        {"event_type": "购买"},
+        {"props": '{"k": 1, "s": "emoji \U0001f680 café"}'},
+    ):
+        assert row in spec["events"][1], row
 
 
 def test_hostile_doc_twins_shape():

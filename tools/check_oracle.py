@@ -28,9 +28,9 @@ loaders pin UTC themselves, so it guards the builders that read no
 fixture table and must call ``use_utc`` on their own. Exit code 1
 on any failure — don't pipe through filters that mask it.
 
-``gate(spark, sf_dir, tz, only)`` is the same gate in-process, for the
-sweeps that run it on derived fixtures (``degenerate_sweep.py``,
-``unicode_probe.py``).
+``gate(spark, sf_dir, tz, only)`` is the same gate in-process, for
+``degenerate_sweep.py``, which runs it on clean sf0.001 and on the
+hostile fixture (NULL, unicode and hostile-value rows) in one session.
 """
 
 from __future__ import annotations

@@ -1,62 +1,55 @@
-"""Degenerate-input sweep: every declared query against EMPTY and
-SINGLE-ROW fixtures.
+"""The adversarial sweep: every declared query on degenerate and
+hostile fixtures, in one Spark session.
 
-At 100 TB scale, empty partitions, empty filter results, and
-single-row groups are routine — a date-range filter that matches
-nothing, a brand-new tenant with one event, an empty replica after
-partition pruning. The oracle gate only exercises the populated
-fixtures, so division-by-zero, head()-on-empty, `.first()[0]`
-unwraps, variance-of-one, and empty-codebook edge cases hide from it
-entirely. This sweep derives schema-identical fixture dirs with
-``limit 0`` and ``limit 1`` from sf0.001 and requires every declared
-query to EXECUTE (collect) without raising; row counts are free to be
-zero.
+The oracle gate on the populated fixtures never sees the rows a
+100 TB corpus guarantees somewhere: NULLs, IEEE specials, boundary
+times, multilingual text, empty tables. This command runs, in order:
 
-Streaming queries run too — their sources read the same parquet dirs
-through FileStreamSource, so an empty dir exercises the
-no-files/no-batches path that a real deployment hits on a quiet
-topic.
+1. The full oracle gate (``check_oracle.gate``, value and dtype
+   verdicts) on clean sf0.001 (``SRC``) and on the hostile fixture:
+   sf0.001 with rows appended to every table. The hostile rows are
+   IEEE NaN/±Inf measures (NaN at both extremes of a group, an all-NaN
+   group, NaN ties), pre-epoch and far-future event times, empty-string
+   and unicode group keys, quote/newline/control characters and unicode
+   values through the JSON serde, extreme-but-valid JSON,
+   whitespace-only / punctuation-only / one-enormous-token /
+   multilingual documents (accented Latin, CJK, emoji, RTL, combining
+   marks, Greek case folding), adversarial embedding vectors (NaN
+   component, +Inf component, all-zero, exact duplicate of a real
+   vector), rows placed into each query's filter lineage, and every
+   ``NULL_MUTS`` row (NULL event times, keys, measures, group keys and
+   JSON payloads, malformed JSON, NULL and empty documents, NULL
+   vectors). The NULL shapes found the descending-sequence shingle
+   crash on <n-word docs, the NOT IN vs left_anti NULL divergence in
+   decontaminate, gopher_quality's ANSI divide-by-zero on empty docs,
+   doc_chunks' phantom negative chunk ids, and the multimodal NULL
+   payload crashes.
+2. The injection-reachability audit from those two results: the
+   hostile gate is only as strong as the rows that SURVIVE each
+   query's filter lineage, so a query whose hostile output is
+   value-identical (same ``frame_key``) to its clean output while
+   reading at least one mutated table FAILS as UNREACHED. Queries
+   reading only unmutated tables are exempt (attributed via
+   ``DataFrame.inputFiles``); anything else identical must either get
+   a placement-engineered hostile row or a documented ``REACH_EXEMPT``
+   entry. A boundary-class sub-audit (epoch, nandec, zerodiv) then
+   runs every class target on that class's incremental fixture: its
+   output must move from its clean digest (a ``survives`` target must
+   only not raise).
+3. The execute sweep: every declared query on schema-identical
+   fixtures holding the first 0 and the first 1 row of each sf0.001
+   table must EXECUTE (collect) without raising; row counts are free
+   to be zero. Empty partitions, empty filter results and single-row
+   groups are routine at scale, and division-by-zero, head()-on-empty,
+   ``.first()[0]`` unwraps, variance-of-one and empty-codebook edges
+   hide from the populated fixtures. Streaming queries run too: an
+   empty dir exercises the no-files/no-batches path of a quiet topic.
 
-A third mode, ``nulls``, builds a NULL-bearing fixture dir (documents
-extended with NULL-text "failed fetch" rows — n_chars NULL too, since
-a failed fetch has no known length — and zero-length rows with
-n_chars 0) and runs the FULL oracle gate (``check_oracle.gate``, value
-and dtype verdicts) on it: not just "doesn't crash" but value-level
-Spark≡DuckDB parity on a corpus with NULL and empty documents. This
-is the sweep that found the descending-sequence shingle crash on
-<n-word docs, the NOT IN vs left_anti NULL divergence in
-decontaminate, gopher_quality's ANSI divide-by-zero on empty docs,
-doc_chunks' phantom negative chunk ids, and the multimodal NULL
-payload crashes.
+With a round, the reach audit is written to ``REACH_AUDIT_r{round}.json``.
 
-A fourth mode, ``hostile [round]``, injects hostile VALUES rather than
-NULLs — IEEE NaN/±Inf measures (NaN at both extremes of a group, an
-all-NaN group, NaN ties), pre-epoch and far-future event times,
-empty-string and unicode group keys, quote/newline/control characters
-and unicode values through the JSON serde, extreme-but-valid JSON,
-whitespace-only / punctuation-only / one-enormous-token / multilingual
-documents, and adversarial embedding vectors (NaN component, +Inf
-component, all-zero = no direction, exact duplicate of a real vector).
-In one Spark session it runs the full oracle gate on clean sf0.001
-(``SRC``) and on the hostile fixture, then takes the
-injection-reachability audit from those two results: the hostile gate
-is only as strong as the rows that SURVIVE each query's filter
-lineage, so a query whose hostile output is value-identical (same
-``frame_key``) to its clean output while reading at least one
-hostile-mutated table FAILS as UNREACHED — "the gate reached nothing".
-Queries reading only unmutated tables are exempt (attributed via
-``DataFrame.inputFiles``); anything else identical must either get a
-placement-engineered hostile row or a documented ``REACH_EXEMPT``
-entry. A boundary-class sub-audit (epoch, nandec, zerodiv) then runs
-every class target on that class's incremental fixture: its output
-must move from its clean digest (a ``survives`` target must only not
-raise). With a round, the audit is written to
-``REACH_AUDIT_r{round}.json``.
-
-Usage: python tools/degenerate_sweep.py [empty|one|both|nulls|all]
-       python tools/degenerate_sweep.py hostile [round]
-Exit 1 on any raising query (empty/one), any gate failure
-(nulls/hostile), or any unreached query or class target (hostile).
+Usage: python tools/degenerate_sweep.py [round]
+Exit 1 on any gate failure, raising, unreached query or class target,
+or raising query in the execute sweep.
 """
 
 from __future__ import annotations
@@ -116,9 +109,11 @@ def build(spark, n: int) -> str:
 #: appended rows never collide with real entities. The shapes mirror what
 #: a 100 TB corpus guarantees: NULL event times (late/raw ingest), NULL
 #: entity/join keys (orphaned references), NULL measures (failed
-#:_enrichment), NULL group keys (uncategorized rows), NULL/malformed JSON
+#: enrichment), NULL group keys (uncategorized rows), NULL/malformed JSON
 #: payloads (lenient-parse contract, SURVEY §1.4 / reference
 #: StreamProcessor.java:66 NPE case), and NULL dimension attributes.
+#: ``hostile_muts`` appends them after every hostile row of each table,
+#: so the pk offsets ``_derive_placements`` relies on still hold.
 NULL_MUTS: dict[str, tuple[str | None, list[dict]]] = {
     "events": (
         "event_id",
@@ -273,15 +268,7 @@ def _mutated_fixture(
     return out
 
 
-def build_nulls() -> str:
-    """NULL-bearing fixture: sf0.001 plus consistent degenerate rows in
-    EVERY table (NULL_MUTS; r10 verdict item 1 — the r9 sweep covered
-    only documents/embeddings and found 9 real defects on that one
-    table)."""
-    return _mutated_fixture(f"{ROOT}/nulls", "nulls-v2", NULL_MUTS)
-
-
-#: Hostile-VALUES mutations (r11, the step after NULLs): rows whose
+#: Hostile-VALUES mutations: rows whose
 #: values are legal for the schema but adversarial for the semantics —
 #: what a 100 TB corpus guarantees somewhere. IEEE specials (NaN/±Inf
 #: from failed enrichments and overflow), boundary event times
@@ -803,6 +790,9 @@ HOSTILE_DOC_ROWS: list[dict] = [
     {"text": _TWIN_A, "source": "src0"},
     {"text": _TWIN_B, "source": "src0"},
     {"text": " ".join(["café", "rocket"] * 6), "source": "src1"},
+    # Greek case folding: upper()/lower() of non-ASCII letters with
+    # tonos marks must agree on both engines
+    {"text": "ΑΛΦΑ βήτα ΓΆΜΜΑ mixed ΚΕΦΑΛΑΙΑ greek case"},
 ]
 
 #: Hostile documents. Since r12 this includes MULTILINGUAL text as a
@@ -1140,16 +1130,17 @@ def _derive_placements(
     return out
 
 
-def build_hostile() -> str:
-    """Hostile-VALUES fixture: sf0.001 plus HOSTILE_MUTS rows (IEEE
-    specials with r12 NaN-density/all-NaN-group shapes, boundary times,
-    empty and unicode group keys, hostile JSON) in the relational
-    tables, HOSTILE_DOCS (degenerate ASCII + multilingual unicode) in
-    documents, and three adversarial embeddings — a vector with a NaN
-    component, one with +Inf, the all-zero vector (no direction: cosine
-    divides by ‖v‖ = 0), plus an exact duplicate of a real vector
-    (top-k tie-breaking must be deterministic). The full check_oracle
-    parity gate runs on it."""
+def hostile_muts() -> dict[str, tuple[str | None, list[dict]]]:
+    """The hostile fixture's spec ({table: (pk, rows)}): HOSTILE_MUTS
+    rows (IEEE specials with NaN-density/all-NaN-group shapes, boundary
+    times, empty and unicode group keys, hostile JSON) plus the derived
+    placements and zero-divisor shapes in the relational tables,
+    HOSTILE_DOCS and HOSTILE_DOC_ROWS (degenerate ASCII + multilingual
+    unicode) in documents, and four adversarial embeddings — a vector
+    with a NaN component, one with +Inf, the all-zero vector (no
+    direction: cosine divides by ‖v‖ = 0), plus an exact duplicate of a
+    real vector (top-k tie-breaking must be deterministic). Every
+    table's ``NULL_MUTS`` rows come last."""
     import pyarrow.parquet as pq
 
     # ALL-NaN USER group (r12): the `all_nan` event_type covers type-
@@ -1173,24 +1164,24 @@ def build_hostile() -> str:
     # so hostile stays a superset and the oracle leg owns value parity
     zd = _zerodiv_muts(SRC)
     events_extra += zd["events"]
-    hostile_muts = dict(HOSTILE_MUTS)
-    hostile_muts["events"] = (HOSTILE_MUTS["events"][0], events_extra)
+    spec = dict(HOSTILE_MUTS)
+    spec["events"] = (HOSTILE_MUTS["events"][0], events_extra)
     for t in ("lineitem", "customer", "supplier"):
-        pk, muts = hostile_muts[t]
-        hostile_muts[t] = (pk, list(muts) + placed[t])
+        pk, muts = spec[t]
+        spec[t] = (pk, list(muts) + placed[t])
     for t in ("region", "nation", "customer", "orders"):
-        pk, muts = hostile_muts[t]
-        hostile_muts[t] = (pk, list(muts) + zd[t])
+        pk, muts = spec[t]
+        spec[t] = (pk, list(muts) + zd[t])
 
     doc_rows = [{"text": d} for d in HOSTILE_DOCS] + HOSTILE_DOC_ROWS
-    hostile_muts["documents"] = (
+    spec["documents"] = (
         "doc_id", [{"n_chars": len(d["text"]), **d} for d in doc_rows],
     )
     dim = len(
         pq.read_table(os.path.join(SRC, "embeddings.parquet"),
                       columns=["embedding"]).column(0)[0].as_py()
     )
-    hostile_muts["embeddings"] = (
+    spec["embeddings"] = (
         "vec_id",
         [
             {"embedding": [_NAN] + [0.25] * (dim - 1)},
@@ -1199,8 +1190,15 @@ def build_hostile() -> str:
             {},  # keeps its copied REAL embedding → exact duplicate
         ],
     )
+    for t, (pk, rows) in NULL_MUTS.items():
+        spec[t] = (pk, list(spec[t][1]) + rows)
+    return spec
+
+
+def build_hostile() -> str:
+    """The hostile fixture: SRC extended by ``hostile_muts()``."""
     return _mutated_fixture(
-        f"{ROOT}/hostile", "hostile-v5-zerodiv", hostile_muts
+        f"{ROOT}/hostile", "hostile-v6-nulls", hostile_muts()
     )
 
 
@@ -1259,26 +1257,24 @@ def reach_status(name: str, touched: bool, tables: list[str],
     return "UNREACHED"
 
 
-def run_hostile(rnd: int | None) -> int:
-    """The hostile leg: the oracle gate on clean sf0.001 and on the
-    hostile fixture in one session, then the injection-reachability
-    audit from those two results. A query whose two outputs are
-    value-identical (same ``frame_key`` digest) while its plan scans
-    at least one hostile-mutated table is UNREACHED: every injected
-    shape died in its filter lineage, so the hostile parity gate was
-    vacuous for it. The boundary-class sub-audit then runs each class target on
-    its class fixture against the clean digest. Writes
-    REACH_AUDIT_r{rnd}.json when a round is given; exits 1 on any gate
-    failure, raising or unreached query, or unreached class target."""
+def run_hostile(spark, rnd: int | None) -> tuple[bool, str]:
+    """Steps 1 and 2: the oracle gate on clean sf0.001 and on the
+    hostile fixture, then the injection-reachability audit from those
+    two results. A query whose two outputs are value-identical (same
+    ``frame_key`` digest) while its plan scans at least one mutated
+    table is UNREACHED: every injected shape died in its filter
+    lineage, so the hostile parity gate was vacuous for it. The
+    boundary-class sub-audit then runs each class target on its class
+    fixture against the clean digest. Writes REACH_AUDIT_r{rnd}.json
+    when a round is given. Returns (no gate failure, raising or
+    unreached query, or unreached class target; the summary lines)."""
     import json
 
     import __spark_entry__ as entrymod
-    import bench
     from check_oracle import frame_key, gate, key_digest
 
     hostile_dir = build_hostile()
-    mutated = set(HOSTILE_MUTS) | {"documents", "embeddings"}
-    spark = bench._session(app="hostile-gate")
+    mutated = set(HOSTILE_MUTS) | set(NULL_MUTS)
 
     print(f"--- oracle gate: clean {SRC} ---")
     clean = gate(spark, SRC)
@@ -1399,8 +1395,8 @@ def run_hostile(rnd: int | None) -> int:
         print(f"wrote {path}")
     n_ok = {fx: sum(r["ok"] for r in res.values())
             for fx, res in (("clean", clean), ("hostile", host))}
-    print(
-        f"\noracle gate: clean {n_ok['clean']}/{len(clean)}, "
+    text = (
+        f"oracle gate: clean {n_ok['clean']}/{len(clean)}, "
         f"hostile {n_ok['hostile']}/{len(host)}"
         + (f"\nGATE FAILURES: {gate_failures}" if gate_failures else "")
         + f"\nreach audit: {summary['touched']} touched, "
@@ -1414,36 +1410,17 @@ def run_hostile(rnd: int | None) -> int:
         + (f"\nUNREACHED: {unreached}" if unreached else "")
         + (f"\nBOUNDARY: {boundary_unreached}" if boundary_unreached else "")
     )
-    return 1 if gate_failures or unreached or raising or boundary_unreached else 0
+    return not (gate_failures or unreached or raising or boundary_unreached), text
 
 
-def main() -> int:
+def run_execute(spark) -> tuple[bool, str]:
+    """Step 3: every declared query on the first 0 and the first 1 row
+    of each table must collect without raising. Returns (none raised;
+    the verdict line)."""
     import __spark_entry__ as entrymod
-    import bench
-    from check_oracle import gate
 
-    mode = sys.argv[1] if len(sys.argv) > 1 else "both"
-    if mode in ("hostile", "all"):
-        rnd = (
-            int(sys.argv[2])
-            if mode == "hostile" and len(sys.argv) > 2 and sys.argv[2].isdigit()
-            else None
-        )
-        rc = run_hostile(rnd)
-        if mode == "hostile" or rc != 0:
-            return rc
-    if mode in ("nulls", "all"):
-        results = gate(bench._session(app="nulls-gate"), build_nulls())
-        failures = [n for n, r in results.items() if not r["ok"]]
-        print(f"\n{len(failures)} failures: {failures}" if failures
-              else "\nALL OK")
-        if mode == "nulls" or failures:
-            return 1 if failures else 0
-        mode = "both"
-    sizes = {"empty": [0], "one": [1], "both": [0, 1]}[mode]
-    spark = bench._session(app="degenerate-sweep")
     failures = []
-    for n in sizes:
+    for n in (0, 1):
         sf_dir = build(spark, n)
         print(f"--- n={n} rows/table ({sf_dir}) ---")
         for name, fn in entrymod.queries().items():
@@ -1453,9 +1430,26 @@ def main() -> int:
             except Exception as e:  # noqa: BLE001
                 failures.append(f"n={n} {name}")
                 print(f"RAISE n={n} {name}: {type(e).__name__}: {e}"[:300])
-    print(f"\n{len(failures)} raising queries: {failures}" if failures
-          else "\nALL EXECUTE CLEAN")
-    return 1 if failures else 0
+    return not failures, (
+        f"{len(failures)} raising queries: {failures}" if failures
+        else "ALL EXECUTE CLEAN"
+    )
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    if len(args) > 1 or (args and not args[0].isdigit()):
+        print(__doc__)
+        return 2
+    import bench
+
+    spark = bench._session(app="degenerate-sweep")
+    verdicts = [
+        run_hostile(spark, int(args[0]) if args else None),
+        run_execute(spark),
+    ]
+    print("\n" + "\n".join(text for _, text in verdicts))
+    return 0 if all(ok for ok, _ in verdicts) else 1
 
 
 if __name__ == "__main__":

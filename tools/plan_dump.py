@@ -4,7 +4,12 @@ Writes plans/<tag>/<query>_<suffix>.txt with the FINAL AQE plan
 (plan_text executes the frame first) of each query in the record
 session (``bench._session``), so before/after plan diffs are
 committable evidence. Streaming-only queries (explain_audit.SKIP) are
-skipped.
+skipped. Expression ids (``#N``, ``#NL``) and ``[plan_id=N]`` are
+stripped before writing (``stable_plan``), so two runs of the same code
+dump the same files, except where the AQE final plan numbers its
+``codegen id`` stages in the order they finished (seen on a query with
+two HashAggregate branches). A literal spelled like an id (``Brand#1``)
+loses its digits too.
 
 Usage:
     python tools/plan_dump.py --tag r17 --suffix before [--sf DIR] q [q ...]
@@ -13,11 +18,17 @@ Usage:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.explain_audit import SKIP, plan_text  # noqa: E402
+
+
+def stable_plan(text: str) -> str:
+    """``text`` without the run-dependent expression ids and plan ids."""
+    return re.sub(r",?\s*\[plan_id=\d+\]", "", re.sub(r"#\d+L?\b", "", text))
 
 
 def main() -> int:
@@ -56,7 +67,7 @@ def main() -> int:
                   file=sys.stderr)
             continue
         try:
-            text = plan_text(qs[name](spark, sf_dir))
+            text = stable_plan(plan_text(qs[name](spark, sf_dir)))
         except Exception as e:  # noqa: BLE001
             print(f"plan_dump error in {name}: {e}", file=sys.stderr)
             continue

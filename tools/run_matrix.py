@@ -10,17 +10,15 @@ output tail, so any leg failure is visible without log archaeology:
                   value and dtype verdicts from one Spark run per query)
     oracle_sf01   tools/check_oracle.py sf0.1    (boundary-precision bugs)
     oracle_tz     tools/check_oracle.py --tz=America/New_York sf0.01
-    degenerate    tools/degenerate_sweep.py both (empty + single-row)
-    nulls         tools/degenerate_sweep.py nulls (full NULL-parity gate)
-    hostile       tools/degenerate_sweep.py hostile <round> (the oracle
-                  gate on clean sf0.001 and on the hostile fixture —
-                  NaN/±Inf, boundary timestamps, adversarial vectors —
-                  in one session, then the injection-reachability audit
-                  from those two results: FAILS when a declared query's
-                  hostile output is value-identical to its clean output
-                  while it reads a mutated table)
-    unicode       tools/unicode_probe.py <round> (multilingual parity
-                  gate)
+    degenerate    tools/degenerate_sweep.py <round> (one session: the
+                  oracle gate on clean sf0.001 and on the hostile
+                  fixture — NaN/±Inf, boundary timestamps, unicode keys
+                  and documents, NULL rows, adversarial vectors — then
+                  the injection-reachability audit from those two
+                  results, which FAILS when a declared query's hostile
+                  output is value-identical to its clean output while
+                  it reads a mutated table, then every query on empty
+                  and single-row fixtures)
     bench         python bench.py --wait-clean, once (solo — never
                   concurrent with other Spark work; the compact JSON
                   line is recorded). bench.py owns the clean-window
@@ -50,8 +48,8 @@ REPO = os.path.dirname(HERE)
 PY = sys.executable
 
 def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
-    """Leg list for round ``rnd`` — a function because the hostile and
-    unicode legs stamp their committed artifacts with the round number."""
+    """Leg list for round ``rnd`` — a function because the degenerate
+    leg stamps its committed reach audit with the round number."""
     return [
         # -rs: print skip REASONS in the summary so the two permanent
         # environment gates (protobuf TWS, Kafka live broker) are
@@ -67,10 +65,7 @@ def build_legs(rnd: int) -> list[tuple[str, list[str]]]:
             [PY, "tools/check_oracle.py", "--tz=America/New_York",
              "/root/testdata/sf0.01"],
         ),
-        ("degenerate", [PY, "tools/degenerate_sweep.py", "both"]),
-        ("nulls", [PY, "tools/degenerate_sweep.py", "nulls"]),
-        ("hostile", [PY, "tools/degenerate_sweep.py", "hostile", str(rnd)]),
-        ("unicode", [PY, "tools/unicode_probe.py", str(rnd)]),
+        ("degenerate", [PY, "tools/degenerate_sweep.py", str(rnd)]),
         # --wait-clean: start the sweep in a steal-free gap at low load
         ("bench", [PY, "bench.py", "--wait-clean"]),
     ]
