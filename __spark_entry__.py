@@ -1238,15 +1238,11 @@ def q_multimodal_frame_sample(spark, sf_dir):
 def q_pydatasource_sensor(spark, sf_dir):
     """S1 on the Spark 4 Python DataSource API: the registered
     'sensorgen' source, partition-sharded. Emits the exact rows of
-    synthetic_sensor_events — same oracle. The query has no filter, so
-    nothing is pushed (tests/test_generator.py covers pushdown), but
-    Spark refuses to plan a reader that implements ``pushFilters``
-    while ``spark.sql.python.filterPushdown.enabled`` is false
-    (DATA_SOURCE_PUSHDOWN_DISABLED), so the flag is set."""
+    synthetic_sensor_events — same oracle. Spark plans the source
+    with its default config; the builder sets only the UTC pin."""
     from iotstream.sources.pydatasource import register
 
     use_utc(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register(spark)
     return (
         spark.read.format("sensorgen")

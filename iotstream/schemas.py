@@ -131,10 +131,10 @@ def normalize_ns_timestamp(df: DataFrame, col: str = "ts") -> DataFrame:
 
 def normalize_event_time(df: DataFrame, epoch_str_col: str = "timestamp") -> DataFrame:
     """Add TimestampType ``ts`` from the reference's stringly epoch-seconds
-    column (SensorEvent.java:8 stores epoch seconds as String)."""
-    return df.withColumn(
-        "ts", F.to_timestamp(F.from_unixtime(F.col(epoch_str_col).cast("long")))
-    )
+    column (SensorEvent.java:8 stores epoch seconds as String). The
+    instant is exact in every session time zone: no string round trip,
+    so no DST fall-back hour is read twice."""
+    return df.withColumn("ts", F.timestamp_seconds(F.col(epoch_str_col).cast("long")))
 
 
 def event_time_only(df: DataFrame, ts_col: str = "ts") -> DataFrame:

@@ -5,17 +5,14 @@ The reference's source is a hand-rolled Java SourceFunction polling an
 MQTT broker (HiveMQSource.java:24-106). Spark's modern answer is a
 registered data source: ``spark.dataSource.register(SensorGenDataSource)``
 then ``spark.read.format("sensorgen").option(...)`` — the engine plans
-it like any table, including PARTITIONED parallel reads and FILTER
-PUSHDOWN into the source itself.
+it like any table, with PARTITIONED parallel reads, in a session with
+Spark's default config. The reader pushes no filter down: Spark applies
+every filter above the scan.
 
 Scale design: the generator is partition-range sharded (each task
 produces its own loop-counter slice — embarrassingly parallel, no
-driver materialization), and range predicates on ``loop`` narrow the
-generated range *before* any row exists (``pushFilters``), which is
-the Python-source equivalent of parquet scan pruning. Spark refuses to
-plan this reader unless ``spark.sql.python.filterPushdown.enabled`` is
-set. Each partition computes its quality mix with numpy, then
-``read`` yields one Python tuple per row.
+driver materialization). Each partition computes its quality mix with
+numpy, then ``read`` yields one Python tuple per row.
 
 The emitted rows reproduce ``generator.synthetic_sensor_events``
 bit-for-bit (same modular-arithmetic quality mix from
@@ -24,16 +21,7 @@ mqttgen.py:36-45), so the same DuckDB oracle covers both paths.
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 #: epoch seconds of the default generator start (2024-01-01 00:00:00 UTC)
@@ -58,41 +46,15 @@ class SensorGenReader(DataSourceReader):
         self.start_epoch = int(options.get("startEpoch", str(_DEFAULT_START)))
         self.interval = int(options.get("secondsBetween", "2"))
         self.n_parts = int(options.get("numPartitions", "8"))
-        self.lo, self.hi = 1, self.n  # inclusive loop range
-
-    def pushFilters(self, filters):
-        """Handle range/equality predicates on ``loop`` by narrowing the
-        generated range (rows are never produced, the Python-source
-        version of scan pruning); everything else stays with Spark."""
-        for f in filters:
-            if getattr(f, "attribute", None) == ("loop",) and isinstance(
-                getattr(f, "value", None), int
-            ):
-                if isinstance(f, EqualTo):
-                    self.lo = max(self.lo, f.value)
-                    self.hi = min(self.hi, f.value)
-                elif isinstance(f, GreaterThan):
-                    self.lo = max(self.lo, f.value + 1)
-                elif isinstance(f, GreaterThanOrEqual):
-                    self.lo = max(self.lo, f.value)
-                elif isinstance(f, LessThan):
-                    self.hi = min(self.hi, f.value - 1)
-                elif isinstance(f, LessThanOrEqual):
-                    self.hi = min(self.hi, f.value)
-                else:
-                    yield f
-                continue
-            yield f
 
     def partitions(self):
-        span = self.hi - self.lo + 1
-        if span <= 0:
+        """Inclusive slices of the loop range 1..n, one per task."""
+        if self.n <= 0:
             return [_LoopRange(1, 0)]
-        n_parts = max(1, min(self.n_parts, span))
-        step = -(-span // n_parts)
+        step = -(-self.n // max(1, min(self.n_parts, self.n)))
         return [
-            _LoopRange(lo, min(lo + step - 1, self.hi))
-            for lo in range(self.lo, self.hi + 1, step)
+            _LoopRange(lo, min(lo + step - 1, self.n))
+            for lo in range(1, self.n + 1, step)
         ]
 
     def read(self, partition: _LoopRange):

@@ -15,12 +15,17 @@
   when the upsert table is read; complete drains overwrite, so a
   replay is harmless. ``sinks.dual_sink_writer`` is still
   at-least-once: a replayed epoch appends its raw and clean rows again.
+  A drain's checkpoint logs one offset and one commit per micro-batch
+  it ran; only an append drain runs (and logs) the trailing no-data
+  batch, the one that emits what the final watermark closes.
 - T5: streaming aggregation state lives in the state store, in as many
   partitions as the session's ``spark.sql.shuffle.partitions`` when the
   query first starts; a restarted checkpoint keeps its recorded width.
 - T6: pacing via triggers (availableNow in tests, processingTime in
   production) instead of the reference's 100 ms sleep poll
-  (HiveMQSource.java:86-93).
+  (HiveMQSource.java:86-93). An availableNow drain runs one micro-batch
+  per input slice, plus one without input only in append mode (an
+  update or complete result cannot change without input).
 - T7: restart-from-checkpoint replaces swallow-and-continue error
   handling (MongoDBRawData.java:46-52).
 """
@@ -81,36 +86,48 @@ from iotstream.sinks import ParquetUpsertSink
 UNBOUNDED_WATERMARK = "3650 days"
 
 
-def run_available_now(writer, checkpoint: str | None = None):
+#: Spark's switch for micro-batches that read no input and run only to
+#: advance the watermark (evict state, close windows, fire timeouts).
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def run_available_now(
+    writer, checkpoint: str | None = None, no_data_batch: bool = True
+):
     """Start a writeStream with availableNow trigger and block until all
     available input is processed. Returns the finished query.
 
     Without a ``checkpoint`` the query checkpoints into a fresh
     ``ephemeral_dir``, which is removed when the query ends, whether it
-    finished or failed; a checkpoint the caller passes is kept."""
+    finished or failed; a checkpoint the caller passes is kept.
+
+    With ``no_data_batch=False`` the query runs no micro-batch without
+    input: ``NO_DATA_BATCHES`` is off only across ``start()`` (the query
+    clones the session conf when it starts), and the session's prior
+    value, set or unset, is restored after."""
     own = checkpoint is None
     if own:
         checkpoint = ephemeral_dir("iotstream-ckpt-")
     try:
-        q = (
-            writer.option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        writer = writer.option("checkpointLocation", checkpoint).trigger(
+            availableNow=True
         )
+        if no_data_batch:
+            q = writer.start()
+        else:
+            conf = SparkSession.active().conf
+            prior = conf.get(NO_DATA_BATCHES, None)
+            conf.set(NO_DATA_BATCHES, "false")
+            try:
+                q = writer.start()
+            finally:
+                if prior is None:
+                    conf.unset(NO_DATA_BATCHES)
+                else:
+                    conf.set(NO_DATA_BATCHES, prior)
         q.awaitTermination()
         return q
     finally:
-        # One-shot drain: this checkpoint is never revisited, so unload
-        # its state-store providers now. Long sessions that drain many
-        # ad-hoc streams (the correctness gate runs ~8) otherwise
-        # accumulate providers that the maintenance thread keeps
-        # snapshotting.
-        try:
-            spark = SparkSession.getActiveSession()
-            if spark is not None:
-                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:  # noqa: BLE001 — internal API; hygiene only
-            pass
         if own:
             shutil.rmtree(checkpoint, ignore_errors=True)
 
@@ -128,13 +145,22 @@ def drain(
     - ``"complete"``: the result table of the last micro-batch (each
       batch overwrites the previous one).
 
+    Only an append drain runs the trailing no-data micro-batch that
+    advances the watermark past the last input: in append mode that
+    batch emits the windows, sessions and join rows it closes. An
+    update or complete drain skips it, because there it emits nothing:
+    update mode emits a row when its input changes it, and a complete
+    table does not change without input. An operator that emits when
+    a state timeout or timer fires may need that batch, so it drains in
+    append mode.
+
     With no input at all, every mode returns an empty table with
     ``df``'s columns. The query keeps its state in as many partitions
     as the session's ``spark.sql.shuffle.partitions``."""
     writer = df.writeStream.outputMode(output_mode)
     if output_mode == "update":
         sink = ParquetUpsertSink(df.schema, keys)
-        run_available_now(writer.foreachBatch(sink.writer()))
+        run_available_now(writer.foreachBatch(sink.writer()), no_data_batch=False)
         return sink.to_df(spark)
     path = ephemeral_dir(f"iotstream-{output_mode}-")
     if output_mode == "append":
@@ -145,7 +171,7 @@ def drain(
         )
     else:
         raise ValueError(f"unknown output mode {output_mode!r}")
-    run_available_now(writer)
+    run_available_now(writer, no_data_batch=output_mode == "append")
     return spark.read.schema(df.schema).parquet(path)
 
 

@@ -46,32 +46,10 @@ def test_python_datasource_matches_expression_generator(spark):
     from iotstream.sources.pydatasource import register
 
     use_utc(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register(spark)
     ds = spark.read.format("sensorgen").option("n", "500").load()
     gen = synthetic_sensor_events(spark, 500)
     assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, gen.collect()))
-
-
-def test_python_datasource_filter_pushdown_reaches_scan(spark):
-    import io
-    from contextlib import redirect_stdout
-
-    from iotstream.sources.pydatasource import register
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    register(spark)
-    df = (
-        spark.read.format("sensorgen")
-        .option("n", "1000")
-        .load()
-        .filter("loop > 900")
-    )
-    assert df.count() == 100
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    assert "PushedFilters: [GreaterThan(loop,900)]" in buf.getvalue()
 
 
 def test_python_datasource_partitions_shard_the_range(spark):

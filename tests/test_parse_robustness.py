@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from iotstream.operators.filters import validity_filter
 from iotstream.operators.parse import parse_sensor_json
+from iotstream.schemas import normalize_event_time
 
 PAYLOADS = [
     # well-formed
@@ -58,3 +59,19 @@ def test_corrupt_rows_flow_through_validity_filter(spark):
     # (0,0) readings — including normalized garbage — are dropped by the
     # empty-reading branch; real readings survive
     assert ids == {"sensor1", "sensor4"}
+
+
+def test_event_time_is_exact_across_a_dst_fall_back(spark):
+    """1699162200 and 1699165800 are both 01:30 local time in New York
+    on 2023-11-05 (EDT, then EST). The epoch seconds map to their own
+    instants whatever the session time zone."""
+    epochs = [1699162200, 1699165800]
+    key = "spark.sql.session.timeZone"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        df = spark.createDataFrame([(str(e),) for e in epochs], "timestamp string")
+        got = normalize_event_time(df).select(F.unix_seconds("ts")).collect()
+        assert [r[0] for r in got] == epochs
+    finally:
+        spark.conf.set(key, prior)
